@@ -30,6 +30,18 @@ All methods take the same absolute path strings the engine builds with
 (:class:`MemoryFS` keeps a dict). Data-plane writes (Spark parquet jobs)
 do NOT go through this seam — they ride Spark's own Hadoop FileSystem;
 the seam owns only the driver-side control files around them.
+
+Two primitives built on the seam carry every persisted store:
+
+- **Committed stores** (ANN indexes, band/substring indexes, SemDeDup
+  reference, gram state, corpus sketch) publish a meta JSON marker last
+  — :mod:`gluestick_spark.llm.index_commit` owns that protocol and the
+  per-store marker names.
+- **Directory rewrites** (``compact_files``, bucketed stream-state and
+  sketch-log/fingerprint compaction, per-cell vacuum) publish a rewritten
+  tree with :func:`swap_dir`: ``renameat2(RENAME_EXCHANGE)`` on the local
+  default, else three renames through a ``.__old__`` parking name, which
+  :func:`heal_swap` rolls back after a crash between them.
 """
 
 from __future__ import annotations
@@ -40,7 +52,7 @@ import shutil
 import time
 from collections.abc import Iterator
 
-__all__ = ["StateFS", "LocalFS", "MemoryFS", "LOCAL_FS"]
+__all__ = ["StateFS", "LocalFS", "MemoryFS", "LOCAL_FS", "heal_swap", "swap_dir"]
 
 
 class StateFS:
@@ -357,3 +369,67 @@ class MemoryFS(StateFS):
         for d in [d for d in self.dirs if d == p or d.startswith(pre)]:
             self.dirs.discard(d)
             self.mtimes.pop(d, None)
+
+
+def _exchange_dirs(a: str, b: str) -> bool:
+    """Atomically swap two directories with Linux ``renameat2(…,
+    RENAME_EXCHANGE)`` — readers see the old tree or the new tree, never
+    an absent path. Returns False when the libc/filesystem doesn't
+    support the exchange (:func:`swap_dir` then falls back to renames)."""
+    import ctypes
+
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        renameat2 = libc.renameat2
+    except (OSError, AttributeError):
+        return False
+    renameat2.argtypes = [
+        ctypes.c_int, ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p,
+        ctypes.c_uint,
+    ]
+    renameat2.restype = ctypes.c_int
+    AT_FDCWD = -100
+    RENAME_EXCHANGE = 2
+    r = renameat2(
+        AT_FDCWD, os.fsencode(a), AT_FDCWD, os.fsencode(b), RENAME_EXCHANGE
+    )
+    return r == 0
+
+
+def _parking(dst: str, old: str | None) -> str:
+    return old or dst.rstrip("/") + ".__old__"
+
+
+def heal_swap(dst: str, old: str | None = None, fs: StateFS = LOCAL_FS) -> None:
+    """Undo a :func:`swap_dir` fallback that crashed between its renames.
+    ``dst`` absent with the parking dir present means the live tree was
+    moved aside and never replaced: move it back. Both present means the
+    swap completed and the parking dir holds the superseded tree: drop
+    it. Call it before reading ``dst`` for a rewrite."""
+    old = _parking(dst, old)
+    if not fs.exists(old):
+        return
+    if fs.exists(dst):
+        fs.rmtree(old, ignore_errors=True)
+    else:
+        fs.rename(old, dst)
+
+
+def swap_dir(
+    new: str, dst: str, old: str | None = None, fs: StateFS = LOCAL_FS
+) -> None:
+    """Publish the directory tree at ``new`` as ``dst`` and delete the
+    tree it replaces; ``new`` is gone afterwards. On the local default
+    this is one ``RENAME_EXCHANGE`` (``dst`` is never absent). Otherwise
+    — no kernel support, or a non-local backend — it is three renames
+    (``dst`` → ``old``, ``new`` → ``dst``, ``old`` → ``new``) whose
+    crash window :func:`heal_swap` closes; it runs on entry here too.
+    ``old`` defaults to ``dst + ".__old__"``; pass a hidden name when
+    ``dst`` sits where a reader lists siblings (partition discovery)."""
+    old = _parking(dst, old)
+    heal_swap(dst, old, fs)
+    if not (fs is LOCAL_FS and _exchange_dirs(new, dst)):
+        fs.rename(dst, old)
+        fs.rename(new, dst)
+        fs.rename(old, new)
+    fs.rmtree(new, ignore_errors=True)

@@ -988,17 +988,18 @@ def materialize_sq_ivf(
        holding the 4×-smaller codes instead of raw floats. A
        ``repartition(cid)`` coalesces each cell into whole files.
     4. Publish the router state (centroid sums/counts + scale) as
-       ``_ROUTER.json``, written LAST via temp + atomic ``os.replace``
-       — it is the commit marker: a crash mid-build leaves no router
-       and :func:`sq_ivf_topk_indexed` refuses the torn index loudly
-       (the band-index lesson, ADVICE r8).
+       ``_ROUTER.json``, written LAST — it is the commit marker
+       (:mod:`gluestick_spark.llm.index_commit`): a crash mid-build
+       leaves no router and :func:`sq_ivf_topk_indexed` refuses the
+       torn index loudly (the band-index lesson, ADVICE r8).
 
     Serving cost is then ∝ probed cells × codes size: partition pruning
     skips the unprobed directories entirely and the probed bytes are
     quantized. At 100 TB this is the difference between scanning the
     corpus per query and scanning ~nprobe/k of a 4×-compressed index."""
-    import json as _json
     import os as _os
+
+    from .index_commit import SQ_IVF, begin_rebuild, publish
 
     _, state = kmeans(
         df, vec_col, id_col, k=n_clusters, iters=iters, scale=scale,
@@ -1006,17 +1007,7 @@ def materialize_sq_ivf(
     )
     from .similarity import sq_quantize_exprs
 
-    _os.makedirs(path, exist_ok=True)
-    from .index_commit import rollback_torn_append
-
-    # A full rebuild supersedes any torn append (ADVICE r11): clear the
-    # stale _APPEND_INPROGRESS sidecar NOW, or its manifest — naming only
-    # pre-rebuild part files — would make the NEXT append's rollback
-    # delete every rebuilt cell file (silent data loss).
-    rollback_torn_append(path)
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if _os.path.isfile(router_path):
-        _os.remove(router_path)  # invalidate before the rewrite
+    begin_rebuild(SQ_IVF, path)
     if state:
         sc_expr, q_expr = sq_quantize_exprs(F.col(vec_col))
         enc = df.select(
@@ -1042,10 +1033,7 @@ def materialize_sq_ivf(
         "id_col": id_col,
         "state": [[list(map(int, s)), int(n)] for s, n in state],
     }
-    tmp = router_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(router, f)
-    _os.replace(tmp, router_path)
+    publish(SQ_IVF, path, router)
 
 
 def sq_ivf_append(
@@ -1079,20 +1067,18 @@ def sq_ivf_append(
     Under distribution drift the cells skew over time; monitor cell
     sizes and rebuild with a retrained router when imbalance hurts probe
     cost. Id uniqueness across batches is the caller's contract."""
-    import json as _json
     import os as _os
 
-    from .index_commit import begin_append, commit_append, rollback_torn_append
+    from .index_commit import (
+        SQ_IVF,
+        begin_append,
+        commit_append,
+        load_meta,
+        rollback_torn_append,
+    )
 
     rollback_torn_append(path)  # self-heal: a retried append rolls back first
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if not _os.path.isfile(router_path):
-        raise ValueError(
-            f"sq-ivf index at {path} is uncommitted (torn build or "
-            "mid-rebuild) — re-run materialize_sq_ivf"
-        )
-    with open(router_path) as f:
-        router = _json.load(f)
+    router = load_meta(SQ_IVF, path)
     state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
     dead = set(router.get("dead", []))
     live = [(cid, sn) for cid, sn in enumerate(state) if cid not in dead]
@@ -1148,22 +1134,13 @@ def sq_ivf_topk_indexed(
     plan-gated) and only the int8 codes; then one
     TakeOrderedAndProject. Query cost ∝ probed cells, independent of
     corpus size — the 100 TB serving shape."""
-    import json as _json
     import os as _os
+
+    from .index_commit import SQ_IVF, load_meta
 
     if nprobe < 1 or k < 1:
         raise ValueError("nprobe >= 1 and k >= 1 required")
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if not _os.path.isfile(router_path):
-        raise ValueError(
-            f"sq-ivf index at {path} is uncommitted (torn build or "
-            "mid-rebuild) — re-run materialize_sq_ivf"
-        )
-    from .index_commit import require_committed
-
-    require_committed(path, "sq-ivf")
-    with open(router_path) as f:
-        router = _json.load(f)
+    router = load_meta(SQ_IVF, path, serving=True)
     state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
     dead = set(router.get("dead", []))
     out_id = id_col or router["id_col"]
@@ -1232,24 +1209,15 @@ def sq_ivf_topk_indexed_batch(
     contract to filter, as everywhere in the family. Query-id
     uniqueness is the caller's contract; duplicate ids collapse into
     one ranking."""
-    import json as _json
     import os as _os
 
     from pyspark.sql import Window
 
+    from .index_commit import SQ_IVF, load_meta
+
     if nprobe < 1 or k < 1:
         raise ValueError("nprobe >= 1 and k >= 1 required")
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if not _os.path.isfile(router_path):
-        raise ValueError(
-            f"sq-ivf index at {path} is uncommitted (torn build or "
-            "mid-rebuild) — re-run materialize_sq_ivf"
-        )
-    from .index_commit import require_committed
-
-    require_committed(path, "sq-ivf")
-    with open(router_path) as f:
-        router = _json.load(f)
+    router = load_meta(SQ_IVF, path, serving=True)
     state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
     dead = set(router.get("dead", []))
     out_id = id_col or router["id_col"]

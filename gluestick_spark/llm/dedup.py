@@ -1223,16 +1223,17 @@ def materialize_band_index(
 ) -> None:
     """Persist ``df_ref``'s LSH index at ``path``: ``bands/`` holds the
     (``__id__``, band, bucket) rows, ``shingles/`` the per-doc distinct
-    shingle sets, ``_META.json`` the geometry. ``mode="append"`` adds a
-    NEW reference batch to an existing index (O(batch) — nothing is
-    re-signed; geometry must match the stored meta).
+    shingle sets, the ``_INDEX_COMMIT`` marker the geometry.
+    ``mode="append"`` adds a NEW reference batch to an existing
+    committed index (O(batch) — nothing is re-signed; geometry must
+    match the stored meta).
 
-    Crash safety (ADVICE r8): the multi-step rewrite (shingles, then
-    bands, then meta) is bracketed by a ``_INDEX_COMMIT`` marker —
-    removed FIRST, re-written (atomic ``os.replace``) only after every
-    component landed. A crash mid-rebuild leaves no marker, and
-    ``_read_band_index`` refuses to serve the torn index loudly instead
-    of silently mixing band and shingle tables from different corpora.
+    Crash safety (ADVICE r8, :mod:`gluestick_spark.llm.index_commit`):
+    the marker is removed FIRST and re-published only after every
+    component landed. A crash mid-rebuild leaves no marker, and both
+    ``_read_band_index`` and a later append refuse the torn index loudly
+    instead of silently mixing band and shingle tables from different
+    corpora.
 
     One corpus pass (overwrite mode): the shingle sets are written
     FIRST, and the band signatures are derived from the just-written
@@ -1243,24 +1244,14 @@ def materialize_band_index(
     mode keeps the direct two-read form — the batch is small by the
     O(batch) contract, and the stored dir then holds OLD batches the
     band derivation must not re-emit."""
-    import json as _json
     import os as _os
 
+    from .index_commit import BAND_INDEX, begin_rebuild, publish
+
     meta = {"num_perm": num_perm, "bands": bands, "shingle_n": shingle_n}
-    meta_path = _os.path.join(path, "_META.json")
-    commit_path = _os.path.join(path, "_INDEX_COMMIT")
-    if mode == "append" and _os.path.isfile(meta_path):
-        with open(meta_path) as f:
-            stored = _json.load(f)
-        if stored != meta:
-            raise ValueError(
-                f"band-index geometry mismatch: stored {stored}, got {meta}"
-            )
-    _os.makedirs(path, exist_ok=True)
     # invalidate BEFORE touching any component: readers fail loudly on a
     # mid-rebuild index rather than joining mismatched halves
-    if _os.path.isfile(commit_path):
-        _os.remove(commit_path)
+    begin_rebuild(BAND_INDEX, path, meta if mode == "append" else None)
     sh_path = _os.path.join(path, "shingles")
     _shingle_sets(df_ref, text_col, id_col, shingle_n, "__id__").withColumnRenamed(
         "__sh___id____", "__sh__"
@@ -1280,25 +1271,15 @@ def materialize_band_index(
             df_ref, text_col, id_col, num_perm, bands, shingle_n
         )
     bb.write.mode(mode).parquet(_os.path.join(path, "bands"))
-    with open(meta_path, "w") as f:
-        _json.dump(meta, f)
-    tmp = commit_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, commit_path)
+    publish(BAND_INDEX, path, meta)
 
 
 def _read_band_index(spark, path: str):
-    import json as _json
     import os as _os
 
-    if not _os.path.isfile(_os.path.join(path, "_INDEX_COMMIT")):
-        raise ValueError(
-            f"band index at {path} is uncommitted (torn write or "
-            "mid-rebuild) — re-run materialize_band_index"
-        )
-    with open(_os.path.join(path, "_META.json")) as f:
-        meta = _json.load(f)
+    from .index_commit import BAND_INDEX, load_meta
+
+    meta = load_meta(BAND_INDEX, path)
     bands_df = spark.read.parquet(_os.path.join(path, "bands"))
     sh_ref = spark.read.parquet(_os.path.join(path, "shingles")).select(
         F.col("__id__").alias("ref_id"), F.col("__sh__").alias("__sh_ref_id__")
@@ -1318,8 +1299,8 @@ def cross_corpus_near_dup_pairs_indexed(
     """:func:`cross_corpus_near_dup_pairs` against a materialized
     reference index — identical result (the candidate+verify tail is the
     same code path); only the new side is signed this run. Geometry comes
-    from the index's ``_META.json``, so a drifted caller can't silently
-    compare incompatible signatures."""
+    from the index's ``_INDEX_COMMIT`` meta, so a drifted caller can't
+    silently compare incompatible signatures."""
     br, sh_ref, meta = _read_band_index(spark, index_path)
     bn = minhash_band_buckets(
         df_new, text_col, id_col, meta["num_perm"], meta["bands"], meta["shingle_n"]

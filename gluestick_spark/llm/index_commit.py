@@ -1,20 +1,46 @@
-"""Crash-safe APPEND protocol for persisted ANN indexes (ADVICE r10).
+"""One commit protocol for every persisted store.
 
-Rounds ≤10 bracketed an index append by DELETING the ``_ROUTER.json``
-commit marker before the cell write and atomically rewriting it after.
-That refuses torn appends loudly, but any transient Spark job failure —
-not just a crash — left the index permanently uncommitted with no
-recovery path short of a full ``materialize_*`` over the entire corpus,
-and the partially appended cell files were never cleaned up.
+A committed store is a directory of Spark-written parts plus one meta
+JSON, its **marker**, published last. The marker holds the store's
+geometry (router state, codebooks, shingle or n-gram sizes, ...), so a
+reader that finds it has everything it needs and a reader that does not
+refuses. The protocol is three calls, all through the ``fs=`` seam:
 
-This module replaces the delete-the-marker bracket with an
-``_APPEND_INPROGRESS`` sidecar (a batch manifest):
+- :func:`begin_rebuild` opens a build: it rolls back any open
+  ``_APPEND_INPROGRESS`` sidecar (below), in append mode checks the
+  caller's geometry against the committed meta, then drops the marker.
+  From here until :func:`publish`, readers refuse the store.
+- :func:`publish` writes the marker atomically (``write_text_atomic``)
+  — the commit point.
+- :func:`load_meta` is the one reader: it raises a single message
+  ("uncommitted … torn or absent") when the marker is missing and
+  returns the meta otherwise; ``serving=True`` also refuses a store
+  with an open append (:func:`require_committed`).
+
+Stores and their markers (:class:`Store`; names and JSON schemas are
+stable on-disk contracts):
+
+- sq-ivf / pq-ivf index (``materialize_sq_ivf`` / ``materialize_pq_ivf``):
+  ``_ROUTER.json``
+- band index (``materialize_band_index``) and substring index
+  (``materialize_substring_index``): ``_INDEX_COMMIT``
+- semdedup reference (``materialize_semdedup_ref``):
+  ``_SEMDEDUP_META.json``
+- gram state (``materialize_gram_state``): ``_GRAM_META.json``
+- reference sketch (``materialize_corpus_sketch``): ``_SKETCH_META.json``
+
+Band and substring indexes written before this layout also carry a
+``_META.json`` copy of the same JSON; it is ignored.
+
+Appends to the routered families (``sq_ivf_append``, ``pq_ivf_append``,
+``append_semdedup_ref``, deletes, rebalance sub-cells, the router-less
+``ivf_append``) do not drop the marker. They are bracketed by an
+``_APPEND_INPROGRESS`` sidecar (a batch manifest, ADVICE r10):
 
 - :func:`begin_append` snapshots the current cell-file listing into the
-  sidecar (atomic tmp+replace) BEFORE the append writes anything. If a
-  prior sidecar exists, the torn batch is first rolled back.
-- :func:`commit_append` removes the sidecar after the append job
-  commits — the grown index is live.
+  sidecar (atomic) BEFORE the append writes anything, rolling back any
+  prior torn batch first.
+- :func:`commit_append` removes the sidecar — the grown index is live.
 - :func:`rollback_torn_append` deletes every cell file NOT named in the
   manifest (parquet appends only ever ADD uniquely-named part files, so
   "not in the manifest" exactly identifies the torn batch), prunes any
@@ -23,31 +49,104 @@ This module replaces the delete-the-marker bracket with an
 - :func:`require_committed` is the serving-side guard: an index with a
   sidecar present is mid-append or torn and must not be probed.
 
-``_ROUTER.json`` stays in place throughout: it still commits the BUILD
-(a missing router refuses as before); the sidecar owns append-torn
-state. A retried append therefore self-heals — roll back, re-append —
-and the worst-case loss is the one unacknowledged batch, never the
-index.
+A retried append therefore self-heals — roll back, re-append — and the
+worst-case loss is the one unacknowledged batch, never the index. A
+rebuild rolls the sidecar back too (:func:`begin_rebuild`): a stale
+manifest naming only pre-rebuild files would otherwise make the next
+append's rollback delete every rebuilt cell file. The manifest is file
+METADATA (relative paths only), O(part files) not O(rows).
 
-Scale note: the manifest is file METADATA (relative paths only), O(part
-files) not O(rows); listing and rollback touch the index directory
-tree, never the data.
+Directory rewrites (compaction, vacuum) are the other primitive:
+:func:`gluestick_spark.fsio.swap_dir`.
 
-All state-file operations go through the injectable ``fs=`` seam
-(:mod:`gluestick_spark.fsio`, VERDICT r11 #3) — the default is the
-local filesystem; an object-store backend must provide ATOMIC
-``replace`` (the sidecar publish) or the bracket's crash-safety claim
-is void. See the fsio module docstring for the per-backend contract.
+The default seam is the local filesystem; an object-store backend must
+provide ATOMIC ``replace`` (the marker and sidecar publish) or the
+crash-safety claims are void. See the fsio module docstring for the
+per-backend contract.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from ..fsio import LOCAL_FS, StateFS
 
 SIDECAR = "_APPEND_INPROGRESS"
+
+
+class Store(NamedTuple):
+    """A committed store kind: how errors name it, its marker file, and
+    the function that (re)creates it."""
+
+    what: str
+    marker: str
+    build_fn: str
+
+
+ROUTER = "_ROUTER.json"
+SQ_IVF = Store("sq-ivf index", ROUTER, "materialize_sq_ivf")
+PQ_IVF = Store("pq-ivf index", ROUTER, "materialize_pq_ivf")
+BAND_INDEX = Store("band index", "_INDEX_COMMIT", "materialize_band_index")
+SUBSTRING_INDEX = Store(
+    "substring index", "_INDEX_COMMIT", "materialize_substring_index"
+)
+SEMDEDUP_REF = Store(
+    "semdedup reference", "_SEMDEDUP_META.json", "materialize_semdedup_ref"
+)
+GRAM_STATE = Store("gram state", "_GRAM_META.json", "materialize_gram_state")
+CORPUS_SKETCH = Store(
+    "reference sketch", "_SKETCH_META.json", "materialize_corpus_sketch"
+)
+
+
+def load_meta(
+    store: Store, path: str, fs: StateFS = LOCAL_FS, serving: bool = False
+) -> dict:
+    """The committed meta of the store at ``path``; raises when the
+    marker is missing (a crashed or running build). ``serving=True``
+    also refuses an open append (:func:`require_committed`)."""
+    marker = os.path.join(path, store.marker)
+    if not fs.isfile(marker):
+        raise ValueError(
+            f"{store.what} at {path} is uncommitted: {store.marker} is torn "
+            f"or absent (crashed or running build) — run {store.build_fn}"
+        )
+    if serving:
+        require_committed(path, store.what, fs)
+    return json.loads(fs.read_text(marker))
+
+
+def begin_rebuild(
+    store: Store,
+    path: str,
+    append_geometry: dict | None = None,
+    fs: StateFS = LOCAL_FS,
+) -> None:
+    """Open a (re)build of the store at ``path``: roll back any torn
+    append, check ``append_geometry`` against the committed meta when
+    appending (the store must then be committed), and drop the marker so
+    readers refuse until :func:`publish`."""
+    fs.makedirs(path)
+    rollback_torn_append(path, fs=fs)
+    if append_geometry is not None:
+        stored = load_meta(store, path, fs)
+        if stored != append_geometry:
+            raise ValueError(
+                f"{store.what} geometry mismatch: stored {stored}, "
+                f"got {append_geometry}"
+            )
+    marker = os.path.join(path, store.marker)
+    if fs.isfile(marker):
+        fs.remove(marker)
+
+
+def publish(
+    store: Store, path: str, meta: dict, fs: StateFS = LOCAL_FS
+) -> None:
+    """Commit the store: write its marker atomically."""
+    fs.write_text_atomic(os.path.join(path, store.marker), json.dumps(meta))
 
 
 def _cells_root(path: str, cells: str) -> str:
@@ -130,7 +229,7 @@ def require_committed(path: str, what: str, fs: StateFS = LOCAL_FS) -> None:
     never committed (or is running right now — single-writer contract)."""
     if fs.isfile(os.path.join(path, SIDECAR)):
         raise ValueError(
-            f"{what} index at {path} has an in-progress or torn append "
+            f"{what} at {path} has an in-progress or torn append "
             f"({SIDECAR} present) — retry the append (it rolls the torn "
             "batch back and re-appends), or remove the sidecar after "
             "rolling back manually. Serving a half-appended index would "

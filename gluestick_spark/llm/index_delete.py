@@ -49,7 +49,16 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index_commit import begin_append, commit_append, rollback_torn_append
+from ..fsio import heal_swap, swap_dir
+from .index_commit import (
+    ROUTER,
+    SQ_IVF,
+    Store,
+    begin_append,
+    commit_append,
+    load_meta,
+    rollback_torn_append,
+)
 
 __all__ = [
     "ivf_delete",
@@ -114,16 +123,7 @@ def sq_ivf_delete(spark, path: str, ids_df: DataFrame) -> int:
     materialize_sq_ivf` index (id column taken from the router).
     Serving excludes them immediately; :func:`vacuum_deleted` purges
     physically. Returns the batch's distinct id count."""
-    import json
-
-    router_path = os.path.join(path, "_ROUTER.json")
-    if not os.path.isfile(router_path):
-        raise ValueError(
-            f"sq-ivf index at {path} is uncommitted (torn build) — re-run "
-            "materialize_sq_ivf"
-        )
-    with open(router_path) as f:
-        id_col = json.load(f)["id_col"]
+    id_col = load_meta(SQ_IVF, path)["id_col"]
     return _delete_core(spark, path, ids_df, id_col)
 
 
@@ -145,6 +145,13 @@ def ivf_delete(
 
 
 _VACUUM_TMP = "_vacuum.__rewriting__"  # underscore: invisible to Spark
+# vacuum serves both routered families; the router-less plain family has
+# no marker and must name its id column
+_ROUTERED = Store(
+    "routered index", ROUTER,
+    "materialize_sq_ivf/materialize_pq_ivf (router-less plain family: "
+    "pass id_col explicitly)",
+)
 
 
 def _recover_vacuum_leftovers(root: str, part_col: str) -> None:
@@ -169,13 +176,8 @@ def _recover_vacuum_leftovers(root: str, part_col: str) -> None:
             base = name[: -len(".__old__")]
             if base.startswith("_" + part_col + "="):
                 base = base[1:]
-            if not base.startswith(part_col + "="):
-                continue
-            live = os.path.join(root, base)
-            if os.path.isdir(live):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.rename(full, live)
+            if base.startswith(part_col + "="):
+                heal_swap(os.path.join(root, base), full)
         elif name.endswith(".__rewriting__"):
             shutil.rmtree(full, ignore_errors=True)
 
@@ -213,20 +215,9 @@ def vacuum_deleted(
     fallback renames. Idempotent at every window: an unrewritten cell's
     tombstones are still active; a rewritten-but-uncleared tombstone
     anti-joins rows already gone."""
-    from ..sinks.layout import _exchange_dirs
-
     rollback_torn_append(path, cells=cells)
     if id_col is None:
-        import json
-
-        router_path = os.path.join(path, "_ROUTER.json")
-        if not os.path.isfile(router_path):
-            raise ValueError(
-                f"index at {path} has no router — pass id_col explicitly "
-                "for the router-less plain family"
-            )
-        with open(router_path) as f:
-            id_col = json.load(f)["id_col"]
+        id_col = load_meta(_ROUTERED, path)["id_col"]
     if batch_cells < 1:
         raise ValueError(f"batch_cells must be >= 1, got {batch_cells}")
     report: dict = {"cells_rewritten": [], "cells_dropped": [], "rows_purged": 0}
@@ -279,13 +270,11 @@ def vacuum_deleted(
                 shutil.rmtree(cell_dir, ignore_errors=True)
                 report["cells_dropped"].append(cid)
                 continue
-            tmp = os.path.join(stage, f"{part_col}={cid}")
-            if not _exchange_dirs(tmp, cell_dir):
-                old = os.path.join(root, f"_{part_col}={cid}.__old__")
-                shutil.rmtree(old, ignore_errors=True)
-                os.rename(cell_dir, old)
-                os.rename(tmp, cell_dir)
-                os.rename(old, tmp)
+            swap_dir(
+                os.path.join(stage, f"{part_col}={cid}"),
+                cell_dir,
+                os.path.join(root, f"_{part_col}={cid}.__old__"),
+            )
             report["cells_rewritten"].append(cid)
         shutil.rmtree(stage, ignore_errors=True)
     # LAST: every affected cell is rewritten, so clearing is pure cleanup

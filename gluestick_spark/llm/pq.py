@@ -502,9 +502,9 @@ def materialize_pq_ivf(
        per row — at m=4, k≤256 that is 4 bytes of payload where the
        raw vector was 256, the compression that lets a 1000-executor
        cluster keep the whole index hot.
-    4. Publish router + codebooks as ``_ROUTER.json``, written LAST via
-       temp + atomic ``os.replace`` — the commit marker: a torn build
-       has no router and serving/append refuse loudly.
+    4. Publish router + codebooks as ``_ROUTER.json``, written LAST —
+       the commit marker (:mod:`gluestick_spark.llm.index_commit`): a
+       torn build has no router and serving/append refuse loudly.
 
     ``store_vectors=True`` additionally persists the integer-quantized
     full vector per row (``qvec``) — the refinement payload IVFADC+R
@@ -515,21 +515,12 @@ def materialize_pq_ivf(
 
     Serving cost is then ∝ probed cells × code bytes — see
     :func:`pq_ivf_topk_indexed`."""
-    import json as _json
     import os as _os
 
-    router = _train_router(df, vec_col, id_col, n_clusters, iters, scale)
-    _os.makedirs(path, exist_ok=True)
-    from .index_commit import rollback_torn_append
+    from .index_commit import PQ_IVF, begin_rebuild, publish
 
-    # A full rebuild supersedes any torn append (ADVICE r11): clear the
-    # stale _APPEND_INPROGRESS sidecar NOW, or its manifest — naming only
-    # pre-rebuild part files — would make the NEXT append's rollback
-    # delete every rebuilt cell file (silent data loss).
-    rollback_torn_append(path)
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if _os.path.isfile(router_path):
-        _os.remove(router_path)  # invalidate before the rewrite
+    router = _train_router(df, vec_col, id_col, n_clusters, iters, scale)
+    begin_rebuild(PQ_IVF, path)
     books: list[Codebook] = []
     if router:
         books = train_pq(
@@ -558,27 +549,13 @@ def materialize_pq_ivf(
             [[list(map(int, s)), int(n)] for s, n in book] for book in books
         ],
     }
-    tmp = router_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, router_path)
+    publish(PQ_IVF, path, meta)
 
 
 def _load_pq_router(path: str) -> dict:
-    import json as _json
-    import os as _os
+    from .index_commit import PQ_IVF, load_meta
 
-    router_path = _os.path.join(path, "_ROUTER.json")
-    if not _os.path.isfile(router_path):
-        raise ValueError(
-            f"pq-ivf index at {path} is uncommitted (torn build or torn "
-            "append) — re-run materialize_pq_ivf"
-        )
-    from .index_commit import require_committed
-
-    require_committed(path, "pq-ivf")
-    with open(router_path) as f:
-        meta = _json.load(f)
+    meta = load_meta(PQ_IVF, path, serving=True)
     meta["router"] = [(list(map(int, s)), int(n)) for s, n in meta["router"]]
     meta["codebooks"] = [
         [(list(map(int, s)), int(n)) for s, n in book]

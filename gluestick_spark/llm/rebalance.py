@@ -24,8 +24,9 @@ for. ``*_rebalance(path)`` bounds it without a rebuild:
      rolls back by the normal path and the old router still serves the
      intact old cells;
    - the new router (split cids tombstoned in ``dead``, sub-centroid
-     states appended) is then published atomically (tmp + ``replace``)
-     — THE commit point of the rebalance;
+     states appended) is then published atomically
+     (:func:`~gluestick_spark.llm.index_commit.publish`) — THE commit
+     point of the rebalance;
    - the dead cell directories are dropped last, best-effort (routered
      families only; the router-less plain family defers this to
      :func:`ivf_vacuum` / the next rebalance, because ITS durable
@@ -57,7 +58,6 @@ happens.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
@@ -68,7 +68,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cluster import _assign_expr, int_dot_expr, kmeans, quantize_vec_expr
-from .index_commit import begin_append, commit_append, rollback_torn_append
+from .index_commit import (
+    PQ_IVF,
+    SQ_IVF,
+    begin_append,
+    commit_append,
+    load_meta,
+    publish,
+    rollback_torn_append,
+)
 
 __all__ = [
     "cell_sizes",
@@ -287,14 +295,6 @@ def _rebalance_core(
     return report
 
 
-def _publish_router(path: str, meta: dict) -> None:
-    router_path = os.path.join(path, "_ROUTER.json")
-    tmp = router_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, router_path)
-
-
 def sq_ivf_rebalance(
     spark,
     path: str,
@@ -310,27 +310,20 @@ def sq_ivf_rebalance(
     from .similarity import dequantize_expr
 
     rollback_torn_append(path)
-    router_path = os.path.join(path, "_ROUTER.json")
-    if not os.path.isfile(router_path):
-        raise ValueError(
-            f"sq-ivf index at {path} is uncommitted (torn build) — re-run "
-            "materialize_sq_ivf"
-        )
-    with open(router_path) as f:
-        meta = json.load(f)
+    meta = load_meta(SQ_IVF, path)
     state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
     dead = set(meta.get("dead", []))
 
-    def publish(new_state, new_dead):
+    def commit_router(new_state, new_dead):
         meta["state"] = [[list(map(int, s)), int(n)] for s, n in new_state]
         meta["dead"] = new_dead
-        _publish_router(path, meta)
+        publish(SQ_IVF, path, meta)
 
     return _rebalance_core(
         spark, path, os.path.join(path, "cells"), state, dead,
         lambda cells: dequantize_expr(F.col("qvec"), F.col("scale")),
         meta["id_col"], [meta["id_col"], "scale", "qvec"], meta["scale"],
-        max_cell_rows, split_factor, publish,
+        max_cell_rows, split_factor, commit_router,
     )
 
 
@@ -384,7 +377,7 @@ def pq_ivf_rebalance(
     else:
         recon = lambda cells: _pq_decode_expr(meta)  # noqa: E731
 
-    def publish(new_state, new_dead):
+    def commit_router(new_state, new_dead):
         out = dict(meta)
         out["router"] = [[list(map(int, s)), int(n)] for s, n in new_state]
         out["codebooks"] = [
@@ -392,12 +385,12 @@ def pq_ivf_rebalance(
             for book in meta["codebooks"]
         ]
         out["dead"] = new_dead
-        _publish_router(path, out)
+        publish(PQ_IVF, path, out)
 
     return _rebalance_core(
         spark, path, os.path.join(path, "cells"), meta["router"], dead,
         recon, meta["id_col"], payload, meta["scale"],
-        max_cell_rows, split_factor, publish,
+        max_cell_rows, split_factor, commit_router,
     )
 
 
@@ -456,7 +449,7 @@ def ivf_rebalance(
         # sub-centroid directions; zero vectors pass through unscaled
         return F.when(nrm > F.lit(0.0), F.transform(v, lambda x: x / nrm)).otherwise(v)
 
-    def publish(new_state, new_dead):
+    def commit_state(new_state, new_dead):
         new_out["state"] = new_state
         new_out["dead"] = set(new_dead)
 
@@ -464,7 +457,7 @@ def ivf_rebalance(
     payload = [c for c in payload_df.columns if c != "centroid_id"]
     report = _rebalance_core(
         spark, path, path, state, dead, recon, id_col, payload, scale,
-        max_cell_rows, split_factor, publish,
+        max_cell_rows, split_factor, commit_state,
         part_col="centroid_id", bracket=True, bracket_cells=".",
         drop_dead_dirs=False,
         assign_fn=lambda sub, labels: _cosine_assign_expr(sub, labels, scale),

@@ -598,7 +598,7 @@ def ivf_topk_indexed(
     cost is ~nprobe/n_centroids of the corpus instead of a full pass."""
     from .index_commit import require_committed
 
-    require_committed(path, "ivf")  # a torn append must not be probed
+    require_committed(path, "ivf index")  # a torn append must not be probed
     probe = _probe_centroids(query, centroids, nprobe)
     cand = spark.read.parquet(path).where(F.col("centroid_id").isin(probe))
     from .index_delete import filter_tombstoned
@@ -928,7 +928,7 @@ def ivf_topk_indexed_batch(
 
     if nprobe < 1 or k < 1:
         raise ValueError("nprobe >= 1 and k >= 1 required")
-    require_committed(path, "ivf")  # a torn append must not be probed
+    require_committed(path, "ivf index")  # a torn append must not be probed
     probes = _probe_centroids_expr(centroids, nprobe, vec_col)
     qx = queries_df.select(
         F.col(query_id_col).alias("__qid__"),

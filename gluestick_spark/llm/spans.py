@@ -562,36 +562,32 @@ def materialize_substring_index(
     """Persist the reference side of cross-corpus exact-substring
     matching: ``windows/`` holds every k-token rolling window's portable
     hash with (ref id, position), ``docs/`` the reference token arrays
-    (the verify stage needs them), ``_META.json`` the geometry. The
-    reference corpus is windowed ONCE; every incoming batch then joins
-    against the persisted hashes instead of re-tokenizing the reference
+    (the verify stage needs them), the ``_INDEX_COMMIT`` marker the
+    geometry. The reference corpus is windowed ONCE; every incoming
+    batch then joins against the persisted hashes instead of
+    re-tokenizing the reference
     — the recurring-crawl contract of ``materialize_band_index``, for
-    exact substrings. ``mode="append"`` adds a new reference batch in
-    O(batch) (geometry must match the stored meta).
+    exact substrings. ``mode="append"`` adds a new reference batch to a
+    committed index in O(batch) (geometry must match the stored meta).
 
-    Crash safety: the ``_INDEX_COMMIT`` marker is removed before the
-    multi-step rewrite and re-written last (atomic replace) —
-    :func:`substring_spans_against` refuses a torn index loudly."""
-    import json as _json
+    Crash safety (:mod:`gluestick_spark.llm.index_commit`): the marker
+    is removed before the multi-step rewrite and published last —
+    :func:`substring_spans_against` and a later append refuse a torn
+    index loudly."""
     import os as _os
+
+    from gluestick_spark.llm.index_commit import (
+        SUBSTRING_INDEX,
+        begin_rebuild,
+        publish,
+    )
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     from gluestick_spark.llm.sketch import kmv_hash_expr
 
     meta = {"k": k}
-    meta_path = _os.path.join(path, "_META.json")
-    commit_path = _os.path.join(path, "_INDEX_COMMIT")
-    if mode == "append" and _os.path.isfile(meta_path):
-        with open(meta_path) as f:
-            stored = _json.load(f)
-        if stored != meta:
-            raise ValueError(
-                f"substring-index geometry mismatch: stored {stored}, got {meta}"
-            )
-    _os.makedirs(path, exist_ok=True)
-    if _os.path.isfile(commit_path):
-        _os.remove(commit_path)
+    begin_rebuild(SUBSTRING_INDEX, path, meta if mode == "append" else None)
     toks = tokens_expr(F.col(text_col))
     docs = df_ref.select(F.col(id_col).alias("__rid__"), toks.alias("__rtoks__")).where(
         F.size("__rtoks__") >= k
@@ -608,12 +604,7 @@ def materialize_substring_index(
         "__rid__", F.col("__rpos__").cast("long").alias("__rpos__"), "__h__"
     ).write.mode(mode).parquet(_os.path.join(path, "windows"))
     docs.write.mode(mode).parquet(_os.path.join(path, "docs"))
-    with open(meta_path, "w") as f:
-        _json.dump(meta, f)
-    tmp = commit_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, commit_path)
+    publish(SUBSTRING_INDEX, path, meta)
 
 
 def substring_spans_against(
@@ -640,17 +631,12 @@ def substring_spans_against(
     surviving candidate pairs slice token arrays for the exact-string
     verify — O(batch windows + candidates), the reference is never
     re-tokenized."""
-    import json as _json
     import os as _os
 
-    if not _os.path.isfile(_os.path.join(index_path, "_INDEX_COMMIT")):
-        raise ValueError(
-            f"substring index at {index_path} is uncommitted (torn write "
-            "or mid-rebuild) — re-run materialize_substring_index"
-        )
-    with open(_os.path.join(index_path, "_META.json")) as f:
-        k = int(_json.load(f)["k"])
+    from gluestick_spark.llm.index_commit import SUBSTRING_INDEX, load_meta
     from gluestick_spark.llm.sketch import kmv_hash_expr
+
+    k = int(load_meta(SUBSTRING_INDEX, index_path)["k"])
 
     toks = tokens_expr(F.col(text_col))
     new_docs = df_new.select(F.col(id_col), toks.alias("__toks__")).where(

@@ -278,27 +278,6 @@ def write_hive_partitioned(
     part.write.mode(mode).format(fmt).partitionBy(*partition_cols).save(path)
 
 
-def _exchange_dirs(a: str, b: str) -> bool:
-    """Atomically swap two directories with Linux ``renameat2(…,
-    RENAME_EXCHANGE)`` — readers see the old tree or the new tree, never
-    an absent path. Returns False when the libc/filesystem doesn't
-    support the exchange (caller falls back to the two-rename swap)."""
-    import ctypes
-    import os
-
-    try:
-        libc = ctypes.CDLL(None, use_errno=True)
-        renameat2 = libc.renameat2
-    except (OSError, AttributeError):
-        return False
-    AT_FDCWD = -100
-    RENAME_EXCHANGE = 2
-    r = renameat2(
-        AT_FDCWD, os.fsencode(a), AT_FDCWD, os.fsencode(b), RENAME_EXCHANGE
-    )
-    return r == 0
-
-
 def compact_files(
     spark,
     path: str,
@@ -312,13 +291,10 @@ def compact_files(
     Returns the new file count.
 
     Commit protocol: the rewrite goes to a temp dir next to ``path``,
-    then an ATOMIC directory exchange (``renameat2(RENAME_EXCHANGE)``) —
-    readers always see the old tree or the new tree, and a crash leaves
-    one of them at ``path``. On filesystems without RENAME_EXCHANGE it
-    falls back to the two-rename swap (``path`` → ``.__old__``, temp →
-    ``path``), whose sub-millisecond absent-path window is self-healing:
-    the next ``compact_files`` call rolls a crashed swap back from
-    ``.__old__`` before doing anything else.
+    then :func:`~gluestick_spark.fsio.swap_dir` publishes it — an ATOMIC
+    directory exchange where the kernel has one, else the rename
+    fallback whose crash window the next call heals
+    (:func:`~gluestick_spark.fsio.heal_swap`) before doing anything else.
 
     Scope guards (not silent): raises on a hive-partitioned layout (no
     top-level data files but partition subdirectories — compacting that
@@ -335,17 +311,13 @@ def compact_files(
     import os
     import shutil
 
+    from ..fsio import heal_swap, swap_dir
+
     if target_rows_per_file < 1:
         raise ValueError("target_rows_per_file must be >= 1")
     import pyarrow.parquet as pq
 
-    norm = path.rstrip("/")
-    old = norm + ".__old__"
-    # self-heal a crashed fallback swap: the data is intact under
-    # .__old__, only the canonical name was lost
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-
+    heal_swap(path)
     entries = os.listdir(path)
     files = [f for f in entries if f.endswith(f".{fmt}")]
     subdirs = [
@@ -366,14 +338,8 @@ def compact_files(
         pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in files
     ) if fmt == "parquet" else spark.read.format(fmt).load(path).count()
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    tmp = norm + ".__compacting__"
+    tmp = path.rstrip("/") + ".__compacting__"
     shutil.rmtree(tmp, ignore_errors=True)
     spark.read.format(fmt).load(path).coalesce(n_files).write.format(fmt).save(tmp)
-    if _exchange_dirs(tmp, path):
-        shutil.rmtree(tmp)  # old data now lives at tmp
-    else:
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+    swap_dir(tmp, path)
     return n_files

@@ -747,27 +747,15 @@ def _compact_bucketed_state(
     existing catalog entry serves the swapped files unchanged — the
     zero-state-side-Exchange plan property survives compaction
     (pytest-pinned). Same commit protocol as ``compact_files``:
-    RENAME_EXCHANGE, two-rename fallback with ``.__old__`` self-heal.
-
-    State-file moves ride the ``fs=`` seam (:mod:`gluestick_spark.fsio`);
-    the RENAME_EXCHANGE fast path is attempted only on the local default
-    (it is a syscall, not a seam operation) — any other backend always
-    takes the three-rename fallback, whose ``rename`` must move whole
-    directory trees."""
-    import os
-
-    from ..fsio import LOCAL_FS
-    from ..sinks.layout import _exchange_dirs
+    :func:`~gluestick_spark.fsio.swap_dir` on the ``fs=`` seam, healed on
+    entry (any backend but the local default takes its rename fallback,
+    whose ``rename`` must move whole directory trees)."""
+    from ..fsio import LOCAL_FS, heal_swap, swap_dir
 
     if fs is None:
         fs = LOCAL_FS
-    norm = loc.rstrip("/")
-    old = norm + ".__old__"
-    if not fs.exists(loc) and fs.exists(old):
-        fs.rename(old, loc)  # self-heal a crashed fallback swap
-    elif fs.exists(old):
-        fs.rmtree(old, ignore_errors=True)  # stale leftover
-    tmp_loc = norm + ".__compacting__"
+    heal_swap(loc, fs=fs)
+    tmp_loc = loc.rstrip("/") + ".__compacting__"
     tmp_tbl = tbl + "__compacting__"
     if fs.exists(tmp_loc):
         fs.rmtree(tmp_loc, ignore_errors=True)
@@ -784,14 +772,8 @@ def _compact_bucketed_state(
         .option("path", tmp_loc)
         .saveAsTable(tmp_tbl)
     )
-    if not (fs is LOCAL_FS and _exchange_dirs(tmp_loc, loc)):
-        if fs.exists(old):
-            fs.rmtree(old, ignore_errors=True)
-        fs.rename(loc, old)
-        fs.rename(tmp_loc, loc)
-        fs.rename(old, tmp_loc)  # old files park at tmp for the cleanup
+    swap_dir(tmp_loc, loc, fs=fs)
     spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")  # external: files untouched
-    fs.rmtree(tmp_loc, ignore_errors=True)  # the pre-compaction files
     spark.catalog.refreshTable(tbl)
     return sum(
         1 for f in fs.listdir(loc) if f.endswith(".parquet")
@@ -833,7 +815,7 @@ def compact_stream_state(
     tables' compactions leaves each table individually consistent."""
     import os
 
-    from ..fsio import LOCAL_FS
+    from ..fsio import LOCAL_FS, heal_swap
     from ..sinks.layout import compact_files
 
     if fs is None:
@@ -849,8 +831,7 @@ def compact_stream_state(
         loc = os.path.join(state_dir, base)
         # a crashed fallback swap parks the data at .__old__ — still ours;
         # heal BEFORE the catalog checks so registration sees the files
-        if not fs.exists(loc) and fs.exists(loc + ".__old__"):
-            fs.rename(loc + ".__old__", loc)
+        heal_swap(loc, fs=fs)
         if not _has_data_files(loc):
             continue
         tbl = _state_table_name(state_dir, kind)
@@ -1311,9 +1292,10 @@ def compact_sketch_log(
     compaction (crash between its log append and the checkpoint commit)
     is dropped by :func:`read_sketch_log` instead of double-counting —
     the ADVICE r13 #2 window. The swap is atomic: write to a temp dir
-    (watermark included), RENAME_EXCHANGE (two-rename fallback), so a
-    concurrent trigger reads the old log or the new — never a
-    half-compacted one. Returns the row count after compaction.
+    (watermark included), then :func:`~gluestick_spark.fsio.swap_dir`,
+    so a concurrent trigger reads the old log or the new — never a
+    half-compacted one; a crashed rename fallback is healed before the
+    log is read. Returns the row count after compaction.
 
     ``kind``: ``'kmv'`` (merge idempotent — compaction is always safe)
     or ``'kll'`` (weights add — safe via the reader's distinct collapse
@@ -1333,12 +1315,13 @@ def compact_sketch_log(
     import os as _os
     import shutil as _shutil
 
+    from ..fsio import heal_swap, swap_dir
     from ..llm.sketch import kll_merge, kmv_merge
-    from ..sinks.layout import _exchange_dirs
 
     if kind not in ("kmv", "kll"):
         raise ValueError(f"kind must be 'kmv' or 'kll', got {kind!r}")
     gcols = list(group_cols or [])
+    heal_swap(log_dir)
     # read through the watermark filter: a stale replayed row must not be
     # baked into the merge either
     log = read_sketch_log(spark, log_dir).distinct()
@@ -1370,20 +1353,13 @@ def compact_sketch_log(
         if log.first() is None:
             merged = passthrough.select(*merged.columns).limit(0)
         merged = merged.unionByName(passthrough.select(*merged.columns))
-    norm = log_dir.rstrip("/")
-    tmp = norm + ".__compacting__"
-    old = norm + ".__old__"
+    tmp = log_dir.rstrip("/") + ".__compacting__"
     _shutil.rmtree(tmp, ignore_errors=True)
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
     if through is not None:
         with open(_os.path.join(tmp, _WATERMARK_FILE), "w") as f:
             _json.dump({"through": int(through)}, f)
-    if not _exchange_dirs(tmp, log_dir):
-        _shutil.rmtree(old, ignore_errors=True)
-        _os.rename(log_dir, old)
-        _os.rename(tmp, log_dir)
-        _os.rename(old, tmp)
-    _shutil.rmtree(tmp, ignore_errors=True)
+    swap_dir(tmp, log_dir)
     return spark.read.parquet(log_dir).count()
 
 
@@ -1396,18 +1372,19 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
     segments across batches; matching is SET semantics, so physical
     deduplication is exactly invariant. Surviving rows are re-tagged
     with the state's max ``__batch__`` and the swap is atomic
-    (RENAME_EXCHANGE, two-rename fallback) — a concurrent trigger reads
-    the old state or the new, never a torn one. A batch replayed AFTER
-    compaction re-appends rows the next compaction removes again;
-    matching is unaffected either way (set semantics — the kmv-style
-    idempotence argument, no watermark needed). Returns the row count
-    after compaction."""
+    (:func:`~gluestick_spark.fsio.swap_dir`, healed on entry) — a
+    concurrent trigger reads the old state or the new, never a torn
+    one. A batch replayed AFTER compaction re-appends rows the next
+    compaction removes again; matching is unaffected either way (set
+    semantics — the kmv-style idempotence argument, no watermark
+    needed). Returns the row count after compaction."""
     import os as _os
     import shutil as _shutil
 
-    from ..sinks.layout import _exchange_dirs
+    from ..fsio import heal_swap, swap_dir
 
     seg_path = _os.path.join(state_dir, "fp_segments.parquet")
+    heal_swap(seg_path)
     # mergeSchema (ADVICE r14 #3): a mixed tagged/untagged state dir must
     # deterministically surface __batch__ regardless of footer pick order;
     # untagged files' rows read as null and fall out of the max
@@ -1420,17 +1397,10 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
     compacted = state.dropDuplicates(["band", "seg", "__h__"]).withColumn(
         "__batch__", F.lit(int(max_batch)).cast("long")
     )
-    norm = seg_path.rstrip("/")
-    tmp = norm + ".__compacting__"
-    old = norm + ".__old__"
+    tmp = seg_path + ".__compacting__"
     _shutil.rmtree(tmp, ignore_errors=True)
     compacted.write.mode("overwrite").parquet(tmp)
-    if not _exchange_dirs(tmp, seg_path):
-        _shutil.rmtree(old, ignore_errors=True)
-        _os.rename(seg_path, old)
-        _os.rename(tmp, seg_path)
-        _os.rename(old, tmp)
-    _shutil.rmtree(tmp, ignore_errors=True)
+    swap_dir(tmp, seg_path)
     return spark.read.parquet(seg_path).count()
 
 
@@ -1799,7 +1769,7 @@ def streaming_decontam(
     return writer.start()
 
 
-_SEMDEDUP_META = "_SEMDEDUP_META.json"
+_SEMDEDUP_META = "_SEMDEDUP_META.json"  # SEMDEDUP_REF's marker
 
 
 def materialize_semdedup_ref(
@@ -1821,18 +1791,16 @@ def materialize_semdedup_ref(
     half. ``max_cluster_size`` is applied AT BUILD: oversized reference
     cells are dropped and their cids recorded in the meta, so serving
     knows corpus rows routed there are UNJUDGED (the semdedup cap
-    contract — never a silent keep). The meta JSON is written LAST
-    (tmp + atomic replace) — it is the commit marker; a torn build
-    refuses to serve."""
-    import json as _json
+    contract — never a silent keep). The meta JSON is written LAST —
+    it is the commit marker (:mod:`gluestick_spark.llm.index_commit`);
+    a torn build refuses to serve, and a rebuild first rolls back any
+    torn :func:`append_semdedup_ref` batch."""
     import os as _os
 
     from ..llm.cluster import _assign_df, _prepare, kmeans
+    from ..llm.index_commit import SEMDEDUP_REF, begin_rebuild, publish
 
-    _os.makedirs(path, exist_ok=True)
-    meta_path = _os.path.join(path, _SEMDEDUP_META)
-    if _os.path.isfile(meta_path):
-        _os.remove(meta_path)  # invalidate before the rewrite
+    begin_rebuild(SEMDEDUP_REF, path)
     _, state = kmeans(
         reference, vec_col, id_col, k=k, iters=iters, scale=scale,
         return_state=True, assign=assign,
@@ -1886,10 +1854,7 @@ def materialize_semdedup_ref(
         ),
         "state": [[list(map(int, s)), int(n)] for s, n in state],
     }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, meta_path)
+    publish(SEMDEDUP_REF, path, meta)
 
 
 _SSD_LEDGER = "_append_counts"  # inside cells/: underscore-hidden, manifested
@@ -1931,20 +1896,15 @@ def append_semdedup_ref(
 
     from ..llm.cluster import _assign_df, _prepare
     from ..llm.index_commit import (
+        SEMDEDUP_REF,
         begin_append,
         commit_append,
+        load_meta,
         rollback_torn_append,
     )
 
-    meta_path = _os.path.join(path, _SEMDEDUP_META)
-    if not _os.path.isfile(meta_path):
-        raise ValueError(
-            f"semdedup reference at {path} is torn or absent (no "
-            f"{_SEMDEDUP_META}) — run materialize_semdedup_ref first"
-        )
+    meta = load_meta(SEMDEDUP_REF, path)
     rollback_torn_append(path)  # self-heal: a retried append rolls back
-    with open(meta_path) as f:
-        meta = _json.load(f)
     state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
     if not state:
         raise ValueError(
@@ -2063,24 +2023,13 @@ def streaming_semdedup(
     bet on dynamic pruning; plan-gated) — Σ_c |batch_c|·|ref_c|, the
     reference is never rescanned in full when the batch touches few
     cells."""
-    import json as _json
-    import os as _os
     from math import gcd
 
     from ..llm.cluster import _assign_df, _prepare
+    from ..llm.index_commit import SEMDEDUP_REF, load_meta
 
-    meta_path = _os.path.join(ref_path, _SEMDEDUP_META)
-    if not _os.path.isfile(meta_path):
-        raise ValueError(
-            f"semdedup reference at {ref_path} is torn or absent (no "
-            f"{_SEMDEDUP_META}) — run materialize_semdedup_ref first"
-        )
-    from ..llm.index_commit import require_committed
-
-    # a torn append_semdedup_ref must not serve half a reference batch
-    require_committed(ref_path, "semdedup reference")
-    with open(meta_path) as f:
-        meta = _json.load(f)
+    # serving: a torn append_semdedup_ref must not serve half a batch
+    meta = load_meta(SEMDEDUP_REF, ref_path, serving=True)
     state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
     # capped set derived from TRUE totals (build counts + append
     # ledgers) — appends can cap a growing cell or uncap an empty one,
@@ -2163,9 +2112,6 @@ def streaming_semdedup(
 # its documents' n-gram novelty against it statelessly.
 # ---------------------------------------------------------------------------
 
-_GRAM_META = "_GRAM_META.json"
-
-
 def materialize_gram_state(
     reference: DataFrame,
     state_dir: str,
@@ -2183,21 +2129,22 @@ def materialize_gram_state(
     gram side with ZERO Exchange) plus the pre-aggregated Bloom bitmap
     (``bloom_words.parquet``, ≤ m/64 rows) so serving never rebuilds
     the filter. ``_GRAM_META.json`` (n, buckets, bloom geometry) is
-    written LAST via atomic replace — the commit marker: a crash
-    mid-materialize leaves no meta and :func:`streaming_novelty`
-    refuses the torn state loudly.
+    written LAST — the commit marker
+    (:mod:`gluestick_spark.llm.index_commit`): a crash mid-materialize
+    leaves no meta and :func:`streaming_novelty` refuses the torn state
+    loudly.
 
     ``mode="append"`` adds a NEW reference batch O(batch): only grams
     absent from the stored set are appended (left_anti probe), keeping
     the table duplicate-free — the invariant the seen-count join needs
     — and the bitmap is extended by OR-merging the new grams' words.
     Geometry must match the stored meta."""
-    import json as _json
     import os as _os
 
     from ..fsio import LOCAL_FS
     from ..llm.bloom import bloom_words
     from ..llm.decontam import ngram_hashes_expr
+    from ..llm.index_commit import GRAM_STATE, begin_rebuild, publish
 
     fs = fs or LOCAL_FS
     spark = reference.sparkSession
@@ -2207,7 +2154,6 @@ def materialize_gram_state(
         "bloom_m_bits": bloom_m_bits,
         "bloom_k": bloom_k,
     }
-    meta_path = _os.path.join(state_dir, _GRAM_META)
     grams_loc = _os.path.join(state_dir, "ref_grams")
     words_loc = _os.path.join(state_dir, "bloom_words.parquet")
     tbl = "gram_state_" + __import__("hashlib").md5(
@@ -2216,19 +2162,10 @@ def materialize_gram_state(
     grams = reference.select(
         F.explode(ngram_hashes_expr(F.col(text_col), n)).alias("__g__")
     ).distinct()
+    begin_rebuild(
+        GRAM_STATE, state_dir, meta if mode == "append" else None, fs=fs
+    )
     if mode == "append":
-        if not fs.isfile(meta_path):
-            raise ValueError(
-                f"gram state at {state_dir} is torn or absent (no "
-                f"{_GRAM_META}) — run materialize_gram_state(mode="
-                "'overwrite') to (re)build it"
-            )
-        stored = _json.loads(fs.read_text(meta_path))
-        if stored != meta:
-            raise ValueError(
-                f"gram-state geometry mismatch: stored {stored}, got {meta}"
-            )
-        fs.remove(meta_path)  # re-entering the commit bracket
         existing = _read_gram_state_table(spark, state_dir, buckets)
         fresh = grams.join(existing, "__g__", "left_anti").localCheckpoint()
         if buckets is not None:
@@ -2245,8 +2182,6 @@ def materialize_gram_state(
         )
         merged.write.mode("overwrite").parquet(words_loc)
     else:
-        if fs.isfile(meta_path):
-            fs.remove(meta_path)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         if fs.isdir(grams_loc):
             fs.rmtree(grams_loc)
@@ -2258,7 +2193,7 @@ def materialize_gram_state(
         bloom_words(grams, "__g__", bloom_m_bits, bloom_k).write.mode(
             "overwrite"
         ).parquet(words_loc)
-    fs.write_text_atomic(meta_path, _json.dumps(meta))
+    publish(GRAM_STATE, state_dir, meta, fs=fs)
 
 
 def _read_gram_state_table(spark, state_dir: str, buckets: int | None):
@@ -2304,20 +2239,13 @@ def streaming_novelty(
     exact join — the reference table is touched only by the surviving
     (seen + ~0.1% FP) gram stream; with a bucketed state the gram side
     joins with zero Exchange. Torn state (missing meta) raises."""
-    import json as _json
     import os as _os
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import novelty_scores_against
+    from ..llm.index_commit import GRAM_STATE, load_meta
 
-    fs = fs or LOCAL_FS
-    meta_path = _os.path.join(state_dir, _GRAM_META)
-    if not fs.isfile(meta_path):
-        raise ValueError(
-            f"gram state at {state_dir} is torn or absent (no {_GRAM_META})"
-            " — run materialize_gram_state first"
-        )
-    meta = _json.loads(fs.read_text(meta_path))
+    meta = load_meta(GRAM_STATE, state_dir, fs or LOCAL_FS)
     words_loc = _os.path.join(state_dir, "bloom_words.parquet")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -2350,27 +2278,25 @@ def materialize_corpus_sketch(
 ) -> None:
     """Persist a corpus's KMV gram sketch at ``path`` — ONE row
     (sorted array<long> of the k smallest portable md5 gram hashes,
-    ≤ 8k bytes) plus ``_SKETCH_META.json`` (n, k; written LAST via
-    atomic replace, the commit marker). The sketch-once half of
-    :func:`streaming_corpus_drift` and of any pairwise corpus
-    comparison (:func:`~gluestick_spark.llm.decontam.
+    ≤ 8k bytes) plus ``_SKETCH_META.json`` (n, k; written LAST, the
+    commit marker — :mod:`gluestick_spark.llm.index_commit`). The
+    sketch-once half of :func:`streaming_corpus_drift` and of any
+    pairwise corpus comparison (:func:`~gluestick_spark.llm.decontam.
     kmv_jaccard_from_sketches`)."""
-    import json as _json
     import os as _os
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import ngrams_expr
+    from ..llm.index_commit import CORPUS_SKETCH, begin_rebuild, publish
     from ..llm.sketch import kmv_sketch
 
     fs = fs or LOCAL_FS
-    meta_path = _os.path.join(path, "_SKETCH_META.json")
-    if fs.isfile(meta_path):
-        fs.remove(meta_path)
+    begin_rebuild(CORPUS_SKETCH, path, fs=fs)
     grams = df.select(F.explode(ngrams_expr(F.col(text_col), n)).alias("__g__"))
     kmv_sketch(grams, "__g__", k).write.mode("overwrite").parquet(
         _os.path.join(path, "sketch.parquet")
     )
-    fs.write_text_atomic(meta_path, _json.dumps({"n": n, "k": k}))
+    publish(CORPUS_SKETCH, path, {"n": n, "k": k}, fs=fs)
 
 
 def streaming_corpus_drift(
@@ -2407,21 +2333,14 @@ def streaming_corpus_drift(
     corpus size — the mergeable-sketch streaming posture (compare the
     bucketed-gram state of :func:`streaming_novelty`, which buys
     exactness at gram-table cost)."""
-    import json as _json
     import os as _os
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import kmv_jaccard_from_sketches, ngrams_expr
+    from ..llm.index_commit import CORPUS_SKETCH, load_meta
     from ..llm.sketch import kmv_merge, kmv_sketch
 
-    fs = fs or LOCAL_FS
-    meta_path = _os.path.join(ref_sketch_path, "_SKETCH_META.json")
-    if not fs.isfile(meta_path):
-        raise ValueError(
-            f"reference sketch at {ref_sketch_path} is torn or absent (no "
-            "_SKETCH_META.json) — run materialize_corpus_sketch first"
-        )
-    meta = _json.loads(fs.read_text(meta_path))
+    meta = load_meta(CORPUS_SKETCH, ref_sketch_path, fs or LOCAL_FS)
     n, k = int(meta["n"]), int(meta["k"])
     log_dir = _os.path.join(state_dir, "sketch_log.parquet")
 

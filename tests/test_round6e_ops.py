@@ -52,7 +52,7 @@ def test_compact_files_preserves_rows_atomically(spark, tmp_dir):
 def test_exchange_dirs_atomic_swap(tmp_dir):
     """renameat2(RENAME_EXCHANGE) works on this filesystem: both trees
     swap in one syscall — the path is never absent."""
-    from gluestick_spark.sinks.layout import _exchange_dirs
+    from gluestick_spark.fsio import _exchange_dirs
 
     a, b = os.path.join(tmp_dir, "a"), os.path.join(tmp_dir, "b")
     os.makedirs(a), os.makedirs(b)
