@@ -289,7 +289,11 @@ def main() -> None:
     # versa) silently corrupts both. The core count goes into the sidecar
     # FILENAME (a low-core run can never even overwrite the 32-core
     # floor) and is recorded in the result for cross-round pairing.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        # an empty or non-numeric value must not cost the round its line
+        cpus = 32
     try:
         _here = os.path.dirname(os.path.abspath(__file__))
         _side = os.path.join(
@@ -617,15 +621,20 @@ def _previous_round(
                 )
         except Exception:
             continue
+    # Low-core roots (BENCH_r16_c8.json) carry the round too; the current
+    # round's own roots are never its basis.
     def _root_round(p: str) -> int:
-        m = _re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p))
+        m = _re.match(r"BENCH_r(\d+)(?:_c\d+)?\.json$", os.path.basename(p))
         return int(m.group(1)) if m else -1
 
+    current = _round_number(here)
     for path in sorted(
         glob.glob(os.path.join(here, "BENCH_r*.json")),
         key=_root_round,
         reverse=True,
     ):
+        if not 0 <= _root_round(path) < current:
+            continue
         # A prior round's BENCH file can be arbitrarily malformed (crashed
         # harness → "parsed": null, truncated JSON, non-dict top level…);
         # none of that may ever kill the current round's bench.

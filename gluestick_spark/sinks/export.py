@@ -11,9 +11,10 @@ array (pandas ``orient="records"``), unknown formats fall through to csv.
 Spark shape: parquet/csv/jsonl are distributed writers (directory outputs —
 at 100 TB a single file is an anti-pattern; ``coalesce_single=True`` opts
 into the reference's one-file layout for protocol compatibility). ``json``
-(one JSON array) and ``singer`` are driver-streamed by nature: rows are
-rendered executor-side as JSON strings in one JVM projection and the driver
-only concatenates, so the Python loop never parses records.
+(one JSON array) and ``singer`` are single files by nature: rows are
+rendered executor-side as JSON strings in one JVM projection, written in
+one Spark job as text part files, and the driver only concatenates those
+files' bytes in partition order, so no Python loop touches a record.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import build_string_format_variables, format_str_safely
-from .singer import _TS_FORMAT, _DATE_FORMAT, to_singer
+from .singer import _DATE_FORMAT, _TS_FORMAT, _write_concatenated, to_singer
 
 __all__ = ["to_export"]
 
@@ -122,13 +123,6 @@ def _write_json_array(df: DataFrame, path: str) -> None:
         F.struct(*[F.col(f"`{c}`") for c in df.columns]),
         {"timestampFormat": _TS_FORMAT, "dateFormat": _DATE_FORMAT, "ignoreNullFields": "false"},
     )
-    lines = df.select(body.alias("j"))
-    with open(path, "w") as f:
-        f.write("[")
-        first = True
-        for row in lines.toLocalIterator(prefetchPartitions=True):
-            if not first:
-                f.write(",")
-            f.write(row["j"])
-            first = False
-        f.write("]")
+    _write_concatenated(
+        df.select(body.alias("j")), path, head="[", tail="]", sep=",", drop_last_sep=True
+    )

@@ -4,28 +4,37 @@ Parity targets (citations into /root/reference):
 - message primitives: gluestick/singer.py:20-70 (write_schema/record/state;
   key_properties string→list coercion; aware ``time_extracted`` only).
 - ``to_singer``: gluestick/singer.py:436-549 — drop all-null columns (unless
-  keeping nulls), schema precedence (explicit > catalog > inferred), chunked
-  record emission (env ``SINGER_CHUNK_SIZE``, default 20000, flush per
-  chunk), append mode when the file exists, per-record null dropping,
+  keeping nulls), schema precedence (explicit > catalog > inferred), record
+  emission, append mode when the file exists, per-record null dropping,
   ISO-µs UTC datetime rendering (``%Y-%m-%dT%H:%M:%S.%fZ``, singer.py:17).
+  The reference's ``SINGER_CHUNK_SIZE`` flush-per-chunk knob is not read:
+  the driver copies whole files, so there are no chunks to flush.
 - header generation: gluestick/singer.py:99-187 — typed columns map to
   Singer types; complex columns allowed as object/array schemas when
   ``allow_objects`` else stringified.
 
 Spark shape: the record body is built executor-side as one
 ``to_json(struct(*))`` projection (JVM, whole-stage codegen) with the Singer
-timestamp/date formats; the driver streams partitions via
-``toLocalIterator`` and wraps each JSON body in the RECORD envelope — the
-single-appendable-file contract of the Singer protocol is inherently
-driver-sequential (SURVEY §4.2.3). At cluster scale prefer
-``to_export(..., "jsonl")`` which writes distributed.
+timestamp/date formats, wrapped in the RECORD envelope in the same
+projection. ONE Spark job writes the rendered lines as uncompressed text
+part files into a hidden sibling directory; only after it succeeds does the
+driver open the Singer file, write SCHEMA, copy the part files' bytes in
+partition order (no per-row Python) and write STATE
+(:func:`_write_concatenated`). Record order is partition order, then row
+order within a partition — the order of ``collect()``. A failed render
+leaves the Singer file untouched. The parts directory must be visible to
+the driver's local filesystem (local mode or a shared mount).
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import re
+import shutil
 import sys
+import uuid
 from datetime import datetime
 from typing import Any, IO
 
@@ -47,6 +56,8 @@ __all__ = [
 _DATETIME_FMT = "%Y-%m-%dT%H:%M:%S.%fZ"
 _TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 _DATE_FORMAT = "yyyy-MM-dd"
+# Spark's text part file name: part-{partition:05d}-{job uuid}-c{file:03d}.txt
+_PART = re.compile(r"part-(\d+)-.*-c(\d+)")
 
 
 def _emit(msg: dict[str, Any], fp: IO[str] | None = None) -> None:
@@ -263,38 +274,62 @@ def to_singer(
 
     keep_nulls = use_catalog or include_all_unified or keep_null_fields
     prefix = json.dumps({"type": "RECORD", "stream": stream})[:-1] + ', "record": '
-    line = F.concat(
-        F.lit(prefix), _record_body(df, keep_nulls, trim_nested_nulls), F.lit("}\n")
-    )
+    line = F.concat(F.lit(prefix), _record_body(df, keep_nulls, trim_nested_nulls), F.lit("}"))
     lines = df.select(line.alias("line"))
 
-    # Block-concatenate executor-side: each Arrow batch of rendered lines is
-    # joined into ONE string on the workers (vectorized, all cores), so the
-    # driver loop handles ~rows/maxRecordsPerBatch writes instead of one per
-    # row. Measured on 600k×6-col lineitem: 100k → ~150k rows/s. Row order
-    # is preserved (mapInPandas is partition-local, toLocalIterator walks
-    # partitions in order).
-    import pandas as pd
-
-    def _blocks(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame({"block": ["".join(pdf["line"].tolist())], "n": [len(pdf)]})
-
-    blocks = lines.mapInPandas(_blocks, "block string, n long")
-
     os.makedirs(output_dir, exist_ok=True)
-    output = os.path.join(output_dir, filename)
-    mode = "a" if os.path.isfile(output) else "w"
-    chunk_size = int(os.environ.get("SINGER_CHUNK_SIZE", "20000"))
+    schema_msg, state_msg = io.StringIO(), io.StringIO()
+    write_schema(stream, header_map, keys, fp=schema_msg)
+    write_state({}, fp=state_msg)
+    _write_concatenated(
+        lines,
+        os.path.join(output_dir, filename),
+        head=schema_msg.getvalue(),
+        tail=state_msg.getvalue(),
+        append=True,
+    )
 
-    with open(output, mode) as f:
-        write_schema(stream, header_map, keys, fp=f)
-        since_flush = 0
-        for row in blocks.toLocalIterator(prefetchPartitions=True):
-            f.write(row["block"])
-            since_flush += row["n"]
-            if since_flush >= chunk_size:
-                f.flush()
-                since_flush = 0
-        write_state({}, fp=f)
+
+def _write_concatenated(
+    lines: DataFrame,
+    output: str,
+    head: str,
+    tail: str,
+    sep: str = "\n",
+    append: bool = False,
+    drop_last_sep: bool = False,
+) -> None:
+    """Write ``head``, every row of the one-string-column frame ``lines``
+    followed by ``sep``, then ``tail`` to the single file ``output``.
+
+    The rows are written in ONE Spark job as uncompressed text part files
+    into a hidden sibling directory; ``output`` is opened only after that
+    job succeeds (appending when ``append`` and it exists), and the part
+    files' bytes are copied in (partition, file) order — the row order of
+    ``collect()``. ``drop_last_sep`` removes the separator after the last
+    row. The parts directory is removed whether or not the job succeeds.
+    """
+    # absolute: the JVM resolves a relative path against its own working
+    # directory, which a later os.chdir in Python does not move
+    out_dir, name = os.path.split(os.path.abspath(output))
+    parts = os.path.join(out_dir, f".{name}.parts-{uuid.uuid4().hex}")
+    try:
+        lines.write.option("compression", "none").option("lineSep", sep).text(parts)
+        ordered = sorted(
+            (int(m.group(1)), int(m.group(2)), n)
+            for n in os.listdir(parts)
+            if (m := _PART.match(n))
+        )
+        mode = "ab" if append and os.path.isfile(output) else "wb"
+        with open(output, mode) as f:
+            f.write(head.encode())
+            body_start = f.tell()
+            for _, _, n in ordered:
+                with open(os.path.join(parts, n), "rb") as src:
+                    shutil.copyfileobj(src, f)
+            if drop_last_sep and f.tell() > body_start:
+                f.seek(-len(sep.encode()), os.SEEK_CUR)
+                f.truncate()
+            f.write(tail.encode())
+    finally:
+        shutil.rmtree(parts, ignore_errors=True)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -107,12 +109,6 @@ _SLOW_TESTS = {
     "test_streaming_url_dedup_state_and_nulls",
     "test_substring_dedup_matches_bruteforce",
     "test_substring_spans_matches_bruteforce",
-    "test_to_export_name_override_env",
-    "test_to_export_parquet_roundtrip",
-    "test_to_export_prefix_templating",
-    "test_to_singer_append_mode",
-    "test_to_singer_float32_upcast",
-    "test_to_singer_nested_nulls_kept_by_default",
     "test_triangle_cap_equivalent_on_bounded_graph",
     "test_unimax_matches_bruteforce",
     "test_unimax_weighted_matches_bruteforce",
@@ -120,8 +116,20 @@ _SLOW_TESTS = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+_TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def pytest_collection_modifyitems(session, config, items):
+    matched = set()
     for item in items:
         base = item.nodeid.split("::", 1)[-1].split("[", 1)[0]
         if base in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(base)
+    # A renamed slow test would silently rejoin the default run, and a
+    # stale entry could later swallow an unrelated new test of that name.
+    # Checkable only when this whole directory was collected cleanly.
+    whole = any(os.path.abspath(a) == _TESTS_DIR for a in config.args)
+    stale = sorted(_SLOW_TESTS - matched)
+    if whole and not session.testsfailed and stale:
+        raise pytest.UsageError(f"tests/conftest.py _SLOW_TESTS entries match no collected test: {stale}")

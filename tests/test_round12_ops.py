@@ -175,6 +175,36 @@ def test_previous_round_numeric_sort_and_unpadded_roots(tmp_dir, monkeypatch):
     assert qs == {"q": 100.0} and "BENCH_r100_full" in tag
 
 
+def test_previous_round_root_artifacts_by_round_and_cores(tmp_dir, monkeypatch):
+    """Root artifacts: low-core roots (BENCH_r15_c8.json) sort by their
+    round, unparseable names are skipped, and the current round's own
+    roots are never the basis."""
+    import json as _json
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+
+    monkeypatch.setattr(bench, "__file__", os.path.join(tmp_dir, "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "16")
+
+    def put(rel, q, cpus=None):
+        rec = {"sf": 0.1, "queries": {"q": q}}
+        if cpus:
+            rec["cpus"] = cpus
+        with open(os.path.join(tmp_dir, rel), "w") as f:
+            _json.dump(rec, f)
+
+    put("BENCH_r14.json", 14.0)
+    put("BENCH_r9_c8.json", 9.8, cpus=8)
+    put("BENCH_r15_c8.json", 15.8, cpus=8)
+    put("BENCH_r16_c8.json", 16.8, cpus=8)
+    put("BENCH_r16.json", 16.0)
+    put("BENCH_rX_c8.json", 99.0, cpus=8)
+    assert bench._previous_round(0.1, cpus=8)[:2] == ({"q": 15.8}, "BENCH_r15_c8.json")
+    assert bench._previous_round(0.1, cpus=32)[:2] == ({"q": 14.0}, "BENCH_r14.json")
+
+
 # -------------------- VERDICT 3: injectable filesystem seam ---------------
 
 

@@ -153,9 +153,13 @@ def test_compact_sketch_log_excludes_inflight_max_batch(spark, tmp_dir):
         read_sketch_log,
     )
 
+    # the two halves of batch 2 (doc_id < 1500 / >= 1500) get disjoint
+    # values, so their sketches differ and distinct() keeps both
     d = spark.createDataFrame(
-        [(i, float(i % 500)) for i in range(3000)], "doc_id long, v double"
+        [(i, float(i % 500 + (1000 if i >= 1500 else 0))) for i in range(3000)],
+        "doc_id long, v double",
     )
+    rows = d.count()
     log_dir = os.path.join(tmp_dir, "kll_log.parquet")
     for b in range(2):
         kll_sketch(d.where(F.col("doc_id") % 3 == b), "v", 200).withColumn(
@@ -188,24 +192,24 @@ def test_compact_sketch_log_excludes_inflight_max_batch(spark, tmp_dir):
     ).withColumn("__batch__", F.lit(2).cast("long")).write.mode("append").parquet(
         log_dir
     )
-    assert total_n() == 3000
+    assert total_n() == rows
     # a full replay of the half already seen still collapses (distinct)
     kll_sketch(
         d.where((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 1500)), "v", 200
     ).withColumn("__batch__", F.lit(2).cast("long")).write.mode("append").parquet(
         log_dir
     )
-    assert total_n() == 3000
+    assert total_n() == rows
     # and a replay of a FOLDED batch is dropped by the watermark
     kll_sketch(d.where(F.col("doc_id") % 3 == 0), "v", 200).withColumn(
         "__batch__", F.lit(0).cast("long")
     ).write.mode("append").parquet(log_dir)
-    assert total_n() == 3000
+    assert total_n() == rows
 
     # quiesced recompaction folds everything down to one row
     assert compact_sketch_log(spark, log_dir, "kll", 200, assume_quiesced=True) == 1
     assert _log_watermark(log_dir) == 2
-    assert total_n() == 3000
+    assert total_n() == rows
 
 
 def test_compact_sketch_log_single_batch_is_pure_passthrough(spark, tmp_dir):

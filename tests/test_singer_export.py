@@ -16,6 +16,36 @@ from gluestick_spark import to_export, to_singer
 from gluestick_spark.sinks.singer import write_record, write_schema, write_state
 
 
+_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'",
+    "dateFormat": "yyyy-MM-dd",
+    "ignoreNullFields": "false",
+}
+
+
+def _multi_partition_frame(spark, n=500, parts=64):
+    return (
+        spark.range(0, n, 1, 7)
+        .select(
+            F.col("id").alias("a"),
+            F.when(F.col("id") % 5 == 0, None)
+            .otherwise(F.concat(F.lit("ü\"\n"), F.col("id").cast("string")))
+            .alias("b"),
+        )
+        .repartition(parts, "a")
+        .sortWithinPartitions(F.col("a").desc())
+    )
+
+
+def _read_bytes(path):
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _parts_dirs(d):
+    return [n for n in os.listdir(d) if ".parts-" in n]
+
+
 def test_write_schema_coerces_key_properties():
     buf = io.StringIO()
     write_schema("s", {"type": "object"}, "id", fp=buf)
@@ -70,11 +100,18 @@ def test_to_singer_keep_null_fields(spark, tmp_dir):
 
 
 def test_to_singer_append_mode(spark, tmp_dir):
-    df = spark.createDataFrame([Row(a=1)])
+    """A second call appends a second SCHEMA, RECORDs, STATE run, byte
+    for byte the first one."""
+    df = spark.createDataFrame([Row(a=i, b=str(i)) for i in range(20)]).repartition(4)
+    path = os.path.join(tmp_dir, "data.singer")
     to_singer(df, "t", tmp_dir, keys=["a"])
+    with open(path, "rb") as f:
+        once = f.read()
     to_singer(df, "t", tmp_dir, keys=["a"])
-    lines = [json.loads(l) for l in open(os.path.join(tmp_dir, "data.singer"))]
-    assert [m["type"] for m in lines] == ["SCHEMA", "RECORD", "STATE"] * 2
+    with open(path, "rb") as f:
+        assert f.read() == once * 2
+    lines = [json.loads(l) for l in open(path)]
+    assert [m["type"] for m in lines] == (["SCHEMA"] + ["RECORD"] * 20 + ["STATE"]) * 2
 
 
 def test_to_singer_stringifies_complex_without_allow_objects(spark, tmp_dir):
@@ -169,6 +206,18 @@ def test_to_export_json_array(spark, tmp_dir):
         data = json.load(f)
     assert sorted(data, key=lambda r: r["a"]) == [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]
 
+    # byte for byte: '[' + the collect()-ordered rendered rows joined by
+    # ',' + ']', on many partitions and on none
+    multi = _multi_partition_frame(spark).cache()
+    body = F.to_json(F.struct(*[F.col(c) for c in multi.columns]), _JSON_OPTS)
+    rows = [r[0] for r in multi.select(body).collect()]
+    to_export(multi, "multi", tmp_dir, export_format="json")
+    assert _read_bytes(os.path.join(tmp_dir, "multi.json")) == ("[" + ",".join(rows) + "]").encode()
+    multi.unpersist()
+    to_export(df.limit(0), "none", tmp_dir, export_format="json")
+    assert _read_bytes(os.path.join(tmp_dir, "none.json")) == b"[]"
+    assert _parts_dirs(tmp_dir) == []
+
 
 def test_to_export_singer_pk_fallback(spark, tmp_dir, tmp_path):
     """Empty keys resolve via Reader.get_pk (reference etl_utils.py:646-647)."""
@@ -227,3 +276,64 @@ def test_pandas_compat_shims(spark, tmp_dir):
 
     with pytest.raises(NotImplementedError, match="not implemented"):
         pandas_df_to_singer({"not": "a frame"}, "t", tmp_dir)
+
+
+def test_to_singer_records_follow_collect_order(spark, tmp_dir):
+    df = _multi_partition_frame(spark).cache()
+    expected = [{k: v for k, v in r.asDict().items() if v is not None} for r in df.collect()]
+    to_singer(df, "t", tmp_dir, keys=["a"])
+    msgs = [json.loads(l) for l in open(os.path.join(tmp_dir, "data.singer"), encoding="utf-8")]
+    assert [m["type"] for m in msgs] == ["SCHEMA"] + ["RECORD"] * 500 + ["STATE"]
+    assert [m["record"] for m in msgs[1:-1]] == expected
+    df.unpersist()
+
+
+def test_to_singer_empty_frame_writes_schema_and_state(spark, tmp_dir):
+    df = spark.createDataFrame([], "a long, b string")
+    to_singer(df, "t", tmp_dir, keys=["a"])
+    text = open(os.path.join(tmp_dir, "data.singer")).read()
+    schema, state = io.StringIO(), io.StringIO()
+    write_schema("t", json.loads(text.splitlines()[0])["schema"], ["a"], fp=schema)
+    write_state({}, fp=state)
+    assert text == schema.getvalue() + state.getvalue()
+    assert _parts_dirs(tmp_dir) == []
+
+
+def test_to_singer_failed_render_leaves_file_untouched(spark, tmp_dir):
+    path = os.path.join(tmp_dir, "data.singer")
+    good = spark.createDataFrame([Row(a=1, b="x")])
+    to_singer(good, "t", tmp_dir, keys=["a"])
+    before = _read_bytes(path)
+    bad = spark.range(0, 50, 1, 4).select(
+        F.col("id").alias("a"),
+        F.when(F.col("id") == 37, F.raise_error(F.lit("boom"))).cast("string").alias("b"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        to_singer(bad, "t", tmp_dir, keys=["a"])
+    assert _read_bytes(path) == before
+    assert _parts_dirs(tmp_dir) == []
+
+
+def test_to_singer_runs_one_job(spark, tmp_dir):
+    sc = spark.sparkContext
+    df = spark.range(0, 1000, 1, 16).select(F.col("id").alias("a"), F.col("id").cast("string").alias("b"))
+    group = "to-singer-one-job"
+    sc.setJobGroup(group, "to_singer job count")
+    try:
+        to_singer(df, "t", tmp_dir, keys=["a"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    lines = open(os.path.join(tmp_dir, "data.singer")).read().splitlines()
+    assert len(lines) == 1002
+
+
+def test_to_singer_relative_dir_after_chdir(spark, tmp_dir, monkeypatch):
+    """A relative output_dir resolves against Python's working directory,
+    not the JVM's, for the part files as for the Singer file."""
+    monkeypatch.chdir(tmp_dir)
+    to_singer(spark.range(0, 3, 1, 2), "t", "out", keys=["id"])
+    lines = open(os.path.join(tmp_dir, "out", "data.singer")).read().splitlines()
+    assert [json.loads(l)["type"] for l in lines] == ["SCHEMA", "RECORD", "RECORD", "RECORD", "STATE"]
+    assert _parts_dirs(os.path.join(tmp_dir, "out")) == []
