@@ -494,64 +494,6 @@ def _round_number(here: str) -> int:
     return max(ns, default=0) + 1
 
 
-def _match_sidecar(here: str, recovered: dict[str, float]) -> dict | None:
-    """The newest full sidecar run (.bench/run_*.json) whose per-query
-    values agree with EVERY tail-recovered pair — i.e. the same run the
-    truncated driver artifact captured. None when no sidecar matches."""
-    import glob
-
-    for path in sorted(
-        glob.glob(os.path.join(here, ".bench", "run_*.json")), reverse=True
-    ):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-            qs = rec.get("queries") or {}
-            if all(
-                abs(qs.get(k, float("nan")) - v) < 1e-9 for k, v in recovered.items()
-            ):
-                return rec
-        except Exception:
-            continue
-    return None
-
-
-def _match_sidecar_by_delta(here: str, deltas: dict[str, float]) -> dict | None:
-    """Identify the run a tail-recovered DELTA dict came from (the r10
-    case: BENCH_r09's 2000-char tail landed inside delta_vs_prev, whose
-    values are drift-normalized ratios, often negative): the newest
-    (run, basis) sidecar pair whose recomputed per-query deltas
-    reproduce EVERY recovered pair at print precision."""
-    import glob
-
-    runs = []
-    for path in sorted(
-        glob.glob(os.path.join(here, ".bench", "run_*.json")), reverse=True
-    ):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-            if rec.get("queries"):
-                runs.append(rec)
-        except Exception:
-            continue
-    for i, s in enumerate(runs):  # newest first — same preference as values
-        sq = s["queries"]
-        for b in runs[i + 1 :]:
-            bq = b["queries"]
-            common = sorted(q for q in sq if bq.get(q))
-            if len(common) < 5 or not set(deltas) <= set(common):
-                continue
-            ratios = sorted(sq[q] / bq[q] for q in common)
-            drift = ratios[len(ratios) // 2]
-            if all(
-                abs(round(sq[q] / (bq[q] * drift) - 1, 3) - v) < 5e-4
-                for q, v in deltas.items()
-            ):
-                return s
-    return None
-
-
 def _previous_round(
     sf_val, cpus: int = 32
 ) -> tuple[dict[str, float], str | None, float | None]:
@@ -653,64 +595,6 @@ def _previous_round(
                 calib = parsed.get("calibration_sec")
                 calib = float(calib) if calib else None
                 return parsed["queries"], os.path.basename(path), calib
-            # Front-truncated driver capture ("parsed": null, last-2000-chars
-            # "tail"): recover what survives — the timing pairs before
-            # "cold_total" and the calibration scalar — so one corrupt
-            # artifact doesn't silently shift the comparison basis a round
-            # further back (it did in r06→r04).
-            tail = rec.get("tail")
-            if tail and rec.get("sf") == sf_val:
-                import re
-
-                cut = tail.find('"cold_total"')
-                if cut <= 0 and '"delta_vs_prev"' not in tail:
-                    # tail landed INSIDE or AFTER the delta_vs_prev dict
-                    # (r9's artifact): the recovered pairs are normalized
-                    # RATIO deltas (can be negative), which the value
-                    # matcher can never hit. Identify the run by
-                    # REPRODUCING the deltas from sidecar pairs instead.
-                    pairs = re.findall(
-                        r'"([a-z0-9_]+)": (-?[0-9.]+)[,}]', tail
-                    )
-                    meta = {
-                        "drift_ratio_vs_prev", "calibration_ratio_vs_prev",
-                        "global_slowdown_suspect", "calibration_sec",
-                        "cold_total", "value", "sf", "singer_rows_per_sec",
-                    }
-                    deltas = {
-                        k: float(v) for k, v in pairs if k not in meta
-                    }
-                    if len(deltas) >= 5:
-                        full = _match_sidecar_by_delta(here, deltas)
-                        if full:
-                            return (
-                                full["queries"],
-                                os.path.basename(path)
-                                + " (delta-sidecar-matched)",
-                                float(full.get("calibration_sec") or 0)
-                                or None,
-                            )
-                if cut > 0:
-                    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9.]+)[,}]', tail[:cut])
-                    m = re.search(r'"calibration_sec": ([0-9.]+)', tail)
-                    if len(pairs) >= 5:
-                        recovered = {k: float(v) for k, v in pairs}
-                        # Prefer a FULL sidecar run whose values agree
-                        # with every recovered pair — that identifies the
-                        # exact run the truncated artifact captured, so
-                        # the basis covers the whole query set again.
-                        full = _match_sidecar(here, recovered)
-                        if full:
-                            return (
-                                full["queries"],
-                                os.path.basename(path) + " (sidecar-matched)",
-                                float(full.get("calibration_sec") or 0) or None,
-                            )
-                        return (
-                            recovered,
-                            os.path.basename(path) + " (tail-recovered, partial)",
-                            float(m.group(1)) if m else None,
-                        )
         except Exception:
             continue
     return {}, None, None

@@ -3,7 +3,7 @@
 Every driver-side state-file operation in the engine's commit protocols
 — ANN index append manifests (:mod:`gluestick_spark.llm.index_commit`),
 versioned-table publication (:mod:`gluestick_spark.operators.versioned`),
-snapshot lock swaps (:mod:`gluestick_spark.operators.snapshot`), and
+snapshot swaps (:mod:`gluestick_spark.operators.snapshot`), and
 streaming bucketed-state healing — goes through ONE small interface
 instead of raw ``os.*`` calls, mirroring the codec-injection pattern of
 :mod:`gluestick_spark.llm.multimodal`. In this sandbox the default
@@ -38,8 +38,8 @@ Two primitives built on the seam carry every persisted store:
   — :mod:`gluestick_spark.llm.index_commit` owns that protocol and the
   per-store marker names.
 - **Directory rewrites** (``compact_files``, bucketed stream-state and
-  sketch-log/fingerprint compaction, per-cell vacuum) publish a rewritten
-  tree with :func:`swap_dir`: ``renameat2(RENAME_EXCHANGE)`` on the local
+  sketch-log/fingerprint compaction, per-cell vacuum, snapshot publish)
+  publish a rewritten tree with :func:`swap_dir`: ``renameat2(RENAME_EXCHANGE)`` on the local
   default, else three renames through a ``.__old__`` parking name, which
   :func:`heal_swap` rolls back after a crash between them.
 """

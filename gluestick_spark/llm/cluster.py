@@ -58,6 +58,11 @@ has two physical strategies (``assign=`` / auto by k·d):
 SemDeDup's pairwise stage is blocked by cluster id — cost ∝
 Σ_c |c|², the point of clustering first; pick k ∝
 N/target_cluster_size.
+
+The persisted IVF×SQ index (:func:`materialize_sq_ivf`) stores its cells
+through :mod:`gluestick_spark.llm.ivf_cells`, which owns the cell
+layout, the append bracket, router loading, the pruned probe read and
+batched top-k; this module keeps the router geometry and SQ scoring.
 """
 
 from __future__ import annotations
@@ -65,6 +70,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gluestick_spark.llm.ivf_cells import (
+    Cells,
+    Rank,
+    append_cells,
+    batch_topk,
+    check_topk,
+    empty_topk,
+    encode_state,
+    load_router,
+    read_probed,
+    write_cells,
+)
 from gluestick_spark.llm.sketch import kmv_hash_expr
 
 __all__ = [
@@ -846,8 +863,7 @@ def ivf_topk_exact(
     partition pruning; inline it prunes at the scan filter — →
     ``TakeOrderedAndProject``. No shuffle of the corpus.
     """
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
+    check_topk(nprobe, k)
     assigned_src, state = kmeans(
         df, vec_col, id_col, k=n_clusters, iters=iters, scale=scale,
         return_state=True, assign=assign,
@@ -905,8 +921,7 @@ def sq_ivf_topk(
     layout), SQ encoding of the survivors, TakeOrderedAndProject. No
     corpus shuffle.
     """
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
+    check_topk(nprobe, k)
     from .similarity import _sq_score_topk, quantize_embeddings, quantize_query
 
     _, state = kmeans(
@@ -963,6 +978,36 @@ def _select_probes(
     return probes, qq, qxx
 
 
+def _sq_cells(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    out_id: str,
+    scale: int,
+    live: list[tuple[int, tuple[list[int], int]]],
+) -> DataFrame:
+    """ONE narrow projection computing, per row, the int8 SQ codes
+    (:func:`~gluestick_spark.llm.similarity.sq_quantize_exprs`) AND the
+    router cell ``cid`` — the original vector is read once and never
+    joined back. Rows are assigned against the ``live`` router entries
+    under their TRUE cids, so a rebalanced index never routes a row into
+    a dead cell."""
+    from .similarity import sq_quantize_exprs
+
+    sc_expr, q_expr = sq_quantize_exprs(F.col(vec_col))
+    return df.select(
+        F.col(id_col).alias(out_id),
+        sc_expr.alias("scale"),
+        q_expr.alias("qvec"),
+        quantize_vec_expr(F.col(vec_col), scale).alias("__q__"),
+    ).withColumn(
+        "__xx__", int_dot_expr(F.col("__q__"), F.col("__q__"))
+    ).withColumn(
+        "cid",
+        _assign_expr([sn for _, sn in live], cids=[cid for cid, _ in live]),
+    ).select(out_id, "scale", "qvec", "cid")
+
+
 def materialize_sq_ivf(
     df: DataFrame,
     vec_col: str,
@@ -979,59 +1024,39 @@ def materialize_sq_ivf(
 
     1. Train the replayable integer-Lloyd router (:func:`kmeans`).
     2. ONE narrow projection computes, per row, the router assignment
-       (``cid``) AND the int8 SQ codes
-       (:func:`~gluestick_spark.llm.similarity.sq_quantize_exprs`) —
-       the original vector is read once and never joined back.
-    3. Write (id, ``scale``, ``qvec`` int8) parquet **partitioned by
-       cid** — the directory layout IS the inverted file (the
-       :func:`~gluestick_spark.llm.similarity.materialize_ivf` device),
-       holding the 4×-smaller codes instead of raw floats. A
-       ``repartition(cid)`` coalesces each cell into whole files.
+       (``cid``) AND the int8 SQ codes (:func:`_sq_cells`).
+    3. Write (id, ``scale``, ``qvec`` int8) cells partitioned by cid
+       (:mod:`gluestick_spark.llm.ivf_cells` owns the layout) — the
+       directory layout IS the inverted file, holding the 4×-smaller
+       codes instead of raw floats.
     4. Publish the router state (centroid sums/counts + scale) as
        ``_ROUTER.json``, written LAST — it is the commit marker
        (:mod:`gluestick_spark.llm.index_commit`): a crash mid-build
        leaves no router and :func:`sq_ivf_topk_indexed` refuses the
-       torn index loudly (the band-index lesson, ADVICE r8).
+       torn index loudly.
 
     Serving cost is then ∝ probed cells × codes size: partition pruning
     skips the unprobed directories entirely and the probed bytes are
     quantized. At 100 TB this is the difference between scanning the
     corpus per query and scanning ~nprobe/k of a 4×-compressed index."""
-    import os as _os
-
     from .index_commit import SQ_IVF, begin_rebuild, publish
 
     _, state = kmeans(
         df, vec_col, id_col, k=n_clusters, iters=iters, scale=scale,
         return_state=True,
     )
-    from .similarity import sq_quantize_exprs
-
     begin_rebuild(SQ_IVF, path)
     if state:
-        sc_expr, q_expr = sq_quantize_exprs(F.col(vec_col))
-        enc = df.select(
-            F.col(id_col),
-            sc_expr.alias("scale"),
-            q_expr.alias("qvec"),
-            quantize_vec_expr(F.col(vec_col), scale).alias("__q__"),
-        ).withColumn(
-            "__xx__", int_dot_expr(F.col("__q__"), F.col("__q__"))
-        ).withColumn("cid", _assign_expr(state)).select(
-            id_col, "scale", "qvec", "cid"
+        enc = _sq_cells(
+            df, vec_col, id_col, id_col, scale, list(enumerate(state))
         )
-        (
-            enc.repartition(F.col("cid"))
-            .write.partitionBy("cid")
-            .mode("overwrite")
-            .parquet(_os.path.join(path, "cells"))
-        )
+        write_cells(enc, Cells(path), "overwrite")
     router = {
         "scale": int(scale),
         "n_clusters": int(n_clusters),
         "iters": int(iters),
         "id_col": id_col,
-        "state": [[list(map(int, s)), int(n)] for s, n in state],
+        "state": encode_state(state),
     }
     publish(SQ_IVF, path, router)
 
@@ -1047,72 +1072,29 @@ def sq_ivf_append(
     assignment must stay consistent with what serving probes), SQ-encoded
     in the same narrow projection, and appended into the cell partition
     directories in place. The existing index is never read or rewritten,
-    so ingest costs O(batch), not O(corpus) — the
-    :func:`~gluestick_spark.llm.similarity.ivf_append` contract for the
-    quantized composed index. The resulting index serves identically to
-    a from-scratch build over the union (frozen router ⇒ same cell for
-    every vector; cells just gain files — pytest-pinned).
+    so ingest costs O(batch), not O(corpus). The resulting index serves
+    identically to a from-scratch build over the union (frozen router ⇒
+    same cell for every vector; cells just gain files — pytest-pinned).
 
-    Crash safety is the ``_APPEND_INPROGRESS`` manifest bracket (ADVICE
-    r10, :mod:`gluestick_spark.llm.index_commit`): the pre-append cell
-    listing is snapshotted before the write and the sidecar removed
-    after it. A torn append leaves the sidecar in place, so
-    :func:`sq_ivf_topk_indexed` refuses LOUDLY while a RETRIED append
-    rolls the torn batch back (deletes unmanifested cell files) and
-    re-appends — a transient job failure no longer costs a full
-    rebuild. (Spark's own job commit makes the parquet append
-    internally atomic-ish, but a kill between task commits can leave a
-    subset of cell files — the manifest closes that window.)
+    The write runs inside the append bracket
+    (:func:`~gluestick_spark.llm.ivf_cells.append_cells`): a torn append
+    is refused by serving and rolled back by the next append.
 
     Under distribution drift the cells skew over time; monitor cell
     sizes and rebuild with a retrained router when imbalance hurts probe
     cost. Id uniqueness across batches is the caller's contract."""
-    import os as _os
+    from .index_commit import SQ_IVF
 
-    from .index_commit import (
-        SQ_IVF,
-        begin_append,
-        commit_append,
-        load_meta,
-        rollback_torn_append,
-    )
-
-    rollback_torn_append(path)  # self-heal: a retried append rolls back first
-    router = load_meta(SQ_IVF, path)
-    state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
-    dead = set(router.get("dead", []))
-    live = [(cid, sn) for cid, sn in enumerate(state) if cid not in dead]
-    if not live:
+    router = load_router(SQ_IVF, path, serving=False)
+    if not router.live:
         raise ValueError(
             f"sq-ivf index at {path} has an empty router — rebuild with "
             "materialize_sq_ivf on a non-empty corpus before appending"
         )
-    from .similarity import sq_quantize_exprs
-
-    sc_expr, q_expr = sq_quantize_exprs(F.col(vec_col))
-    enc = df.select(
-        F.col(id_col).alias(router["id_col"]),
-        sc_expr.alias("scale"),
-        q_expr.alias("qvec"),
-        quantize_vec_expr(F.col(vec_col), router["scale"]).alias("__q__"),
-    ).withColumn(
-        "__xx__", int_dot_expr(F.col("__q__"), F.col("__q__"))
-    ).withColumn(
-        # assignment against the LIVE router entries with their TRUE cids
-        # — a rebalanced index never routes new rows into a dead cell
-        "cid",
-        _assign_expr([sn for _, sn in live], cids=[cid for cid, _ in live]),
-    ).select(
-        router["id_col"], "scale", "qvec", "cid"
+    append_cells(
+        _sq_cells(df, vec_col, id_col, router.id_col, router.scale, router.live),
+        Cells(path),
     )
-    begin_append(path)  # manifest bracket (ADVICE r10)
-    (
-        enc.repartition(F.col("cid"))
-        .write.partitionBy("cid")
-        .mode("append")
-        .parquet(_os.path.join(path, "cells"))
-    )
-    commit_append(path)
 
 
 def sq_ivf_topk_indexed(
@@ -1130,40 +1112,25 @@ def sq_ivf_topk_indexed(
 
     Plan: probe selection is driver-side arithmetic on the persisted
     k·(d+1)-int router; the scan reads ONLY the ``nprobe`` probed cell
-    directories (``cid IN (...)`` rides the scan as a PartitionFilter —
+    directories (:func:`~gluestick_spark.llm.ivf_cells.read_probed` —
     plan-gated) and only the int8 codes; then one
     TakeOrderedAndProject. Query cost ∝ probed cells, independent of
     corpus size — the 100 TB serving shape."""
-    import os as _os
-
-    from .index_commit import SQ_IVF, load_meta
-
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
-    router = load_meta(SQ_IVF, path, serving=True)
-    state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
-    dead = set(router.get("dead", []))
-    out_id = id_col or router["id_col"]
+    from .index_commit import SQ_IVF
     from .similarity import _sq_score_topk, quantize_query
 
-    if len(dead) >= len(state):
+    check_topk(nprobe, k)
+    router = load_router(SQ_IVF, path)
+    out_id = id_col or router.id_col
+    if not router.live:
         return spark.createDataFrame([], f"{out_id} long, score double")
     probes, _, _ = _select_probes(
-        state, query, router["scale"], nprobe, dead=dead
+        router.state, query, router.scale, nprobe, dead=router.dead
     )
-    enc = (
-        spark.read.parquet(_os.path.join(path, "cells"))
-        .where(F.col("cid").isin(probes))
-        .select(
-            F.col(router["id_col"]).alias(out_id),
-            F.col("scale").alias("__sc__"),
-            F.col("qvec").alias("__qv__"),
-        )
-    )
-    from .index_delete import filter_tombstoned
-
-    enc = filter_tombstoned(
-        spark, path, enc, out_id, stored_id_col=router["id_col"]
+    enc = read_probed(spark, Cells(path), probes, router.id_col).select(
+        F.col(router.id_col).alias(out_id),
+        F.col("scale").alias("__sc__"),
+        F.col("qvec").alias("__qv__"),
     )
     qscale, qcodes = quantize_query(query)
     return _sq_score_topk(enc, out_id, qscale, qcodes, k)
@@ -1181,113 +1148,61 @@ def sq_ivf_topk_indexed_batch(
 ) -> DataFrame:
     """Batched serving against a :func:`materialize_sq_ivf` index
     (VERDICT r14 #2 — the retrieval-scale gap): answer a whole QUERY
-    DATAFRAME in ONE job instead of a driver-side loop of per-query
-    jobs. Returns (``query_id_col``, id, ``score``) — per query,
-    row-for-row identical to :func:`sq_ivf_topk_indexed` with the same
-    ``k``/``nprobe`` (agreement pytest-pinned):
+    DATAFRAME in a bounded number of jobs instead of a driver-side loop
+    of per-query jobs. Returns (``query_id_col``, id, ``score``) — per
+    query, row-for-row identical to :func:`sq_ivf_topk_indexed` with the
+    same ``k``/``nprobe`` (agreement pytest-pinned).
 
-    1. ONE narrow projection over the queries computes, per row, the
-       router-scale quantization, the int8 SQ query codes
-       (:func:`~gluestick_spark.llm.similarity.sq_quantize_exprs` — the
-       Catalyst twin of the driver-side ``quantize_query``, bit-identical
-       by construction), and the ``nprobe`` probe cells against the
-       broadcast router literals (:func:`_probe_cids_expr`, the same
-       exact algebra as :func:`_select_probes`).
-    2. The union of all probed cids (collected — bounded by the router
-       size, never by query count) restricts the cells scan with a
-       LITERAL ``cid IN (...)`` partition filter, exactly the
-       single-query pruning.
-    3. One cid-keyed join scores every (query, candidate) pair with the
-       exact int64 code dot × the two scales — cost Σ_q |probed
-       cells_q|, ONE Spark job for the whole query set. AQE broadcasts
-       the (small) exploded query side in practice.
-    4. Per-query top-k via a ``query``-partitioned window (score desc,
-       id asc — the single-query tie rule).
+    ONE narrow projection over the queries computes, per row, the
+    router-scale quantization, the int8 SQ query codes
+    (:func:`~gluestick_spark.llm.similarity.sq_quantize_exprs` — the
+    Catalyst twin of the driver-side ``quantize_query``, bit-identical by
+    construction), and the ``nprobe`` probe cells against the router
+    literals (:func:`_probe_cids_expr`, the same exact algebra as
+    :func:`_select_probes`). The probe, join and per-query top-k
+    skeleton is :func:`~gluestick_spark.llm.ivf_cells.batch_topk`;
+    candidates score with the exact int64 code dot × the two scales
+    (score desc, id asc — the single-query tie rule).
 
-    Tombstoned ids are anti-joined out (delete propagation applies to
-    batch serving identically). NULL query vectors are the caller's
-    contract to filter, as everywhere in the family. Query-id
-    uniqueness is the caller's contract; duplicate ids collapse into
-    one ranking."""
-    import os as _os
-
-    from pyspark.sql import Window
-
-    from .index_commit import SQ_IVF, load_meta
-
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
-    router = load_meta(SQ_IVF, path, serving=True)
-    state = [(list(map(int, s)), int(n)) for s, n in router["state"]]
-    dead = set(router.get("dead", []))
-    out_id = id_col or router["id_col"]
-    live = [(cid, sn) for cid, sn in enumerate(state) if cid not in dead]
-
-    def _empty() -> DataFrame:
-        return (
-            queries_df.select(F.col(query_id_col))
-            .limit(0)
-            .withColumn(out_id, F.lit(None).cast("long"))
-            .withColumn("score", F.lit(None).cast("double"))
-        )
-
-    if not live:
-        return _empty()
+    Tombstoned ids are excluded as in single-query serving. NULL query
+    vectors are the caller's contract to filter, as everywhere in the
+    family. Query-id uniqueness is the caller's contract; duplicate ids
+    collapse into one ranking."""
+    from .index_commit import SQ_IVF
     from .similarity import sq_quantize_exprs
 
+    check_topk(nprobe, k)
+    router = load_router(SQ_IVF, path)
+    out_id = id_col or router.id_col
+    live = router.live
+    if not live:
+        return empty_topk(
+            queries_df.select(query_id_col), out_id, [("score", "double")]
+        )
     sc_e, qc_e = sq_quantize_exprs(F.col(vec_col))
     qprep = queries_df.select(
         F.col(query_id_col).alias("__qid__"),
         sc_e.alias("__qsc__"),
         qc_e.alias("__qcodes__"),
-        quantize_vec_expr(F.col(vec_col), router["scale"]).alias("__q__"),
+        quantize_vec_expr(F.col(vec_col), router.scale).alias("__q__"),
     ).withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
     probes = _probe_cids_expr(
         [sn for _, sn in live], nprobe, cids=[cid for cid, _ in live]
-    )
-    qx = qprep.select(
-        "__qid__", "__qsc__", "__qcodes__", F.explode(probes).alias("cid")
-    ).localCheckpoint(eager=False)  # pinned: feeds the probed-cid collect
-    # AND the join; lazy — the collect right below materializes it, an
-    # eager checkpoint would cost one extra scheduled job per call
-    probed = sorted({r["cid"] for r in qx.select("cid").distinct().collect()})
-    if not probed:
-        return _empty()
-    cells = spark.read.parquet(_os.path.join(path, "cells")).where(
-        F.col("cid").isin(probed)
-    )
-    cand = qx.join(cells, "cid").select(
-        "__qid__",
-        "__qsc__",
-        F.col(router["id_col"]).alias(out_id),
-        F.col("scale").alias("__sc__"),
-        F.col("qvec").alias("__qv__"),
-        F.col("__qcodes__"),
-    )
-    from .index_delete import filter_tombstoned
-
-    cand = filter_tombstoned(
-        spark, path, cand, out_id, stored_id_col=router["id_col"]
     )
     # exact int64 code dot × stored scale × query scale — the same IEEE
     # multiply order as _sq_score_topk, so scores are bit-identical
     idot = F.aggregate(
         F.zip_with(
-            F.col("__qv__"),
+            F.col("qvec"),
             F.col("__qcodes__"),
             lambda a, b: a.cast("long") * b.cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    score = idot.cast("double") * F.col("__sc__") * F.col("__qsc__")
-    w = Window.partitionBy("__qid__").orderBy(F.desc("score"), F.asc(out_id))
-    return (
-        cand.select(F.col("__qid__"), F.col(out_id), score.alias("score"))
-        .withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(
-            F.col("__qid__").alias(query_id_col), F.col(out_id), F.col("score")
-        )
-        .orderBy(F.asc(query_id_col), F.desc("score"), F.asc(out_id))
+    score = idot.cast("double") * F.col("scale") * F.col("__qsc__")
+    return batch_topk(
+        spark, Cells(path), router.id_col, qprep,
+        ["__qid__", "__qsc__", "__qcodes__"], probes, query_id_col, out_id,
+        [Rank("score", "double", score, False, k)],
     )

@@ -9,11 +9,12 @@ the same trade Delta/Iceberg make:
 
 - :func:`ivf_delete` / :func:`sq_ivf_delete` / :func:`pq_ivf_delete`
   append the doomed ids to a ``_tombstones.parquet`` sidecar under the
-  index root — **O(batch), never O(corpus)**, inside the existing
-  ``_APPEND_INPROGRESS`` manifest bracket (self-describing since r14:
-  the sidecar records which root it manifests, so a torn delete can
-  never be rolled back against the cell files). From the moment the
-  bracket commits, every ``*_topk_indexed`` probe anti-joins the
+  index root — **O(batch), never O(corpus)**, inside the append bracket
+  (:func:`~gluestick_spark.llm.ivf_cells.append_bracket`; the manifest
+  records that it covers the tombstones, so a torn delete can never be
+  rolled back against the cell files). From the moment the bracket
+  commits, every probe read
+  (:func:`~gluestick_spark.llm.ivf_cells.read_probed`) anti-joins the
   tombstones — deleted rows STOP SERVING immediately.
 - :func:`vacuum_deleted` physically purges: it rewrites ONLY the cell
   directories that actually contain tombstoned ids (found by one
@@ -27,9 +28,8 @@ the same trade Delta/Iceberg make:
   therefore the vacuum's contract; the delete's contract is
   serving-invisibility.
 
-The underscore-prefixed tombstone dir is invisible to Spark's partition
-discovery, so the plain family (whose cells live at the index root,
-``cells='.'``) reads undisturbed. Deleting an id that does not exist is
+The cell layout and the tombstone read belong to
+:mod:`gluestick_spark.llm.ivf_cells`. Deleting an id that does not exist is
 a no-op; re-deleting is idempotent (tombstones are a set under the
 anti-join). A fully-dead LIVE cell keeps its router entry — its region
 stays valid for future appends (unlike a rebalance tombstone, whose
@@ -51,14 +51,14 @@ from pyspark.sql import functions as F
 
 from ..fsio import heal_swap, swap_dir
 from .index_commit import (
+    PQ_IVF,
     ROUTER,
     SQ_IVF,
     Store,
-    begin_append,
-    commit_append,
     load_meta,
     rollback_torn_append,
 )
+from .ivf_cells import TOMBSTONES, Cells, append_bracket, tombstones, write_cells
 
 __all__ = [
     "ivf_delete",
@@ -67,36 +67,6 @@ __all__ = [
     "vacuum_deleted",
     "tombstones",
 ]
-
-TOMBSTONES = "_tombstones.parquet"
-
-
-def tombstones(spark, path: str, id_col: str) -> DataFrame | None:
-    """The index's tombstoned ids as a 1-column frame (``id_col``), or
-    None when nothing was ever deleted (or a vacuum cleared them)."""
-    root = os.path.join(path, TOMBSTONES)
-    if not os.path.isdir(root) or not any(
-        f.endswith(".parquet") for f in os.listdir(root)
-    ):
-        return None
-    return spark.read.parquet(root).select(id_col).distinct()
-
-
-def filter_tombstoned(
-    spark, path: str, df: DataFrame, id_col: str, stored_id_col: str | None = None
-) -> DataFrame:
-    """Serving-side gate: drop tombstoned ids from a candidate frame.
-    One anti-join against the (small) tombstone set — AQE broadcasts it
-    in practice; cost is O(candidates), never O(index).
-    ``stored_id_col`` names the tombstone column when the caller has
-    aliased the candidate id away from the index's own id column."""
-    t = tombstones(spark, path, stored_id_col or id_col)
-    if t is None:
-        return df
-    if stored_id_col and stored_id_col != id_col:
-        t = t.withColumnRenamed(stored_id_col, id_col)
-    return df.join(t, id_col, "left_anti")
-
 
 def _delete_core(
     spark, path: str, ids_df: DataFrame, id_col: str, fallback_cells: str = "cells"
@@ -110,11 +80,10 @@ def _delete_core(
     n = doomed.count()
     if n == 0:
         return 0
-    begin_append(path, cells=TOMBSTONES)
-    doomed.coalesce(1).write.mode("append").parquet(
-        os.path.join(path, TOMBSTONES)
-    )
-    commit_append(path)
+    with append_bracket(path, TOMBSTONES):
+        doomed.coalesce(1).write.mode("append").parquet(
+            os.path.join(path, TOMBSTONES)
+        )
     return n
 
 
@@ -130,9 +99,8 @@ def sq_ivf_delete(spark, path: str, ids_df: DataFrame) -> int:
 def pq_ivf_delete(spark, path: str, ids_df: DataFrame) -> int:
     """Tombstone ids out of a :func:`~gluestick_spark.llm.pq.
     materialize_pq_ivf` index — same contract as :func:`sq_ivf_delete`."""
-    from .pq import _load_pq_router
-
-    return _delete_core(spark, path, ids_df, _load_pq_router(path)["id_col"])
+    id_col = load_meta(PQ_IVF, path)["id_col"]
+    return _delete_core(spark, path, ids_df, id_col)
 
 
 def ivf_delete(
@@ -221,7 +189,8 @@ def vacuum_deleted(
     if batch_cells < 1:
         raise ValueError(f"batch_cells must be >= 1, got {batch_cells}")
     report: dict = {"cells_rewritten": [], "cells_dropped": [], "rows_purged": 0}
-    root = path if cells == "." else os.path.join(path, cells)
+    layout = Cells(path, cells, part_col)
+    root = layout.root
     _recover_vacuum_leftovers(root, part_col)
     t = tombstones(spark, path, id_col)
     if t is None:
@@ -252,13 +221,7 @@ def vacuum_deleted(
         }
         report["rows_purged"] += sum(purged.values())
         shutil.rmtree(stage, ignore_errors=True)
-        (
-            gdf.join(t, id_col, "left_anti")
-            .repartition(F.col(part_col))
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(stage)
-        )
+        write_cells(gdf.join(t, id_col, "left_anti"), layout, "overwrite", stage)
         survived = {
             d.split("=", 1)[1]
             for d in os.listdir(stage)

@@ -39,6 +39,12 @@ Scale posture (100 TB):
 * **Search** is scan + ``TakeOrderedAndProject``: per-partition
   partial top-k, only k rows per partition reach the driver — no
   global sort, no shuffle of the corpus.
+
+The persisted IVF×PQ index (:func:`materialize_pq_ivf`) stores its cells
+through :mod:`gluestick_spark.llm.ivf_cells`, which owns the cell
+layout, the append bracket, router loading, the pruned probe read and
+batched top-k; this module keeps the codebooks, the encoder, the ADC
+table and the IVFADC+R re-rank.
 """
 
 from __future__ import annotations
@@ -53,6 +59,21 @@ from gluestick_spark.llm.cluster import (
     int_dot_expr,
     kmeans,
     quantize_vec_expr,
+)
+from gluestick_spark.llm.index_commit import PQ_IVF
+from gluestick_spark.llm.ivf_cells import (
+    Cells,
+    Rank,
+    Router,
+    append_cells,
+    batch_topk,
+    check_topk,
+    decode_state,
+    empty_topk,
+    encode_state,
+    load_router,
+    read_probed,
+    write_cells,
 )
 
 __all__ = [
@@ -335,13 +356,27 @@ def _rerank_dist_expr(qq: list[int], vec_col: str = "qvec"):
     return F.expr(terms)
 
 
-def _rerank_tail(cand: DataFrame, id_col: str, qq: list[int], k: int):
-    """Shared IVFADC+R tail: candidates (id, pq_dist, qvec) → exact
-    refinement distance → top-k by (rerank_dist, id). ``cand`` is
-    already LIMITed to R rows, so the refinement runs on R rows, never
-    the probed cells."""
+def _adc_topk(
+    enc: DataFrame,
+    id_col: str,
+    tab: list[list[int]],
+    k: int,
+    rerank: int | None = None,
+    qq: list[int] | None = None,
+) -> DataFrame:
+    """Shared ADC ranking over (id, ``code``[, ``qvec``]) rows: top-k by
+    (``pq_dist``, id). With ``rerank=R`` (IVFADC+R) the top-R ADC
+    candidates are re-scored with the exact int64 L2 against the
+    quantized query ``qq`` and the top-k ordered by (``rerank_dist``,
+    id); the refinement runs on R rows, never the probed cells."""
+    by_adc = [F.col("pq_dist").asc(), F.col(id_col).asc()]
+    dist = _adc_dist_expr(tab).alias("pq_dist")
+    if rerank is None:
+        return enc.select(F.col(id_col), dist).orderBy(*by_adc).limit(k)
+    cand = enc.select(F.col(id_col), dist, F.col("qvec")).orderBy(*by_adc)
     return (
-        cand.select(
+        cand.limit(rerank)
+        .select(
             F.col(id_col),
             F.col("pq_dist"),
             _rerank_dist_expr(qq).alias("rerank_dist"),
@@ -349,6 +384,11 @@ def _rerank_tail(cand: DataFrame, id_col: str, qq: list[int], k: int):
         .orderBy(F.col("rerank_dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
+
+
+def _check_rerank(rerank: int | None, k: int) -> None:
+    if rerank is not None and rerank < k:
+        raise ValueError(f"rerank must be >= k, got {rerank} < {k}")
 
 
 def pq_ivf_topk(
@@ -388,34 +428,17 @@ def pq_ivf_topk(
     R."""
     from gluestick_spark.llm.cluster import _select_probes
 
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank must be >= k, got {rerank} < {k}")
+    check_topk(nprobe, k)
+    _check_rerank(rerank, k)
     router = _train_router(df, vec_col, id_col, n_clusters, iters, scale)
     if not router:
         return df.sparkSession.createDataFrame([], f"{id_col} long, pq_dist long")
     books = train_pq(df, vec_col, id_col, m=m, k=n_codes, iters=iters, scale=scale)
-    probes, _, _ = _select_probes(router, query, scale, nprobe)
-    tab = adc_table(query, books, scale)
+    probes, qq, _ = _select_probes(router, query, scale, nprobe)
     enc = _encode_cells(
         df, vec_col, id_col, router, books, scale, keep_qvec=rerank is not None
     ).where(F.col("cid").isin(probes))
-    if rerank is None:
-        return (
-            enc.select(F.col(id_col), _adc_dist_expr(tab).alias("pq_dist"))
-            .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-            .limit(k)
-        )
-    qq = [floor(x * scale + 0.5) for x in query]
-    cand = (
-        enc.select(
-            F.col(id_col), _adc_dist_expr(tab).alias("pq_dist"), F.col("qvec")
-        )
-        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    return _rerank_tail(cand, id_col, qq, k)
+    return _adc_topk(enc, id_col, adc_table(query, books, scale), k, rerank, qq)
 
 
 def _train_router(
@@ -497,8 +520,9 @@ def materialize_pq_ivf(
     2. ONE narrow projection computes router assignment and the m PQ
        codes per row (:func:`_encode_cells`) — raw vectors are read
        once, never joined back, and never stored.
-    3. Write (id, ``code`` array<int>) parquet **partitioned by cid**:
-       the directory layout is the inverted file, holding m small ints
+    3. Write (id, ``code`` array<int>) cells partitioned by cid
+       (:mod:`gluestick_spark.llm.ivf_cells` owns the layout): the
+       directory layout is the inverted file, holding m small ints
        per row — at m=4, k≤256 that is 4 bytes of payload where the
        raw vector was 256, the compression that lets a 1000-executor
        cluster keep the whole index hot.
@@ -515,9 +539,7 @@ def materialize_pq_ivf(
 
     Serving cost is then ∝ probed cells × code bytes — see
     :func:`pq_ivf_topk_indexed`."""
-    import os as _os
-
-    from .index_commit import PQ_IVF, begin_rebuild, publish
+    from .index_commit import begin_rebuild, publish
 
     router = _train_router(df, vec_col, id_col, n_clusters, iters, scale)
     begin_rebuild(PQ_IVF, path)
@@ -530,12 +552,7 @@ def materialize_pq_ivf(
         enc = _encode_cells(
             df, vec_col, id_col, router, books, scale, keep_qvec=store_vectors
         )
-        (
-            enc.repartition(F.col("cid"))
-            .write.partitionBy("cid")
-            .mode("overwrite")
-            .parquet(_os.path.join(path, "cells"))
-        )
+        write_cells(enc, Cells(path), "overwrite")
     meta = {
         "scale": int(scale),
         "m": int(m),
@@ -544,25 +561,25 @@ def materialize_pq_ivf(
         "iters": int(iters),
         "store_vectors": bool(store_vectors),
         "id_col": id_col,
-        "router": [[list(map(int, s)), int(n)] for s, n in router],
-        "codebooks": [
-            [[list(map(int, s)), int(n)] for s, n in book] for book in books
-        ],
+        "router": encode_state(router),
+        "codebooks": [encode_state(book) for book in books],
     }
     publish(PQ_IVF, path, meta)
 
 
-def _load_pq_router(path: str) -> dict:
-    from .index_commit import PQ_IVF, load_meta
+def _codebooks(router: Router) -> list[Codebook]:
+    return [decode_state(book) for book in router.meta["codebooks"]]
 
-    meta = load_meta(PQ_IVF, path, serving=True)
-    meta["router"] = [(list(map(int, s)), int(n)) for s, n in meta["router"]]
-    meta["codebooks"] = [
-        [(list(map(int, s)), int(n)) for s, n in book]
-        for book in meta["codebooks"]
-    ]
-    meta["dead"] = sorted(set(meta.get("dead", [])))
-    return meta
+
+def _refuse_rerank_without_vectors(
+    router: Router, path: str, rerank: int | None
+) -> None:
+    if rerank is not None and not router.meta.get("store_vectors"):
+        raise ValueError(
+            f"pq-ivf index at {path} was built without store_vectors=True "
+            "— rerank needs the quantized full vectors in the cells; "
+            "rebuild with materialize_pq_ivf(..., store_vectors=True)"
+        )
 
 
 def pq_ivf_append(
@@ -575,46 +592,25 @@ def pq_ivf_append(
     batch is assigned and encoded against the PERSISTED router and
     codebooks (never retrained — assignment and codes must stay
     consistent with what serving probes and the ADC table scores) and
-    appended into the cell partition directories in place. The existing
-    index is never read or rewritten — ingest costs O(batch).
-
-    Crash safety is the ``_APPEND_INPROGRESS`` manifest bracket (ADVICE
-    r10, :mod:`gluestick_spark.llm.index_commit`): the pre-append cell
-    listing is snapshotted before the write and the sidecar removed
-    after it, so a torn append is refused loudly by serving while a
-    RETRIED append rolls the torn batch back and re-appends — a
-    transient job failure no longer costs a full rebuild. Id uniqueness
-    across batches is the caller's contract; under drift, rebuild when
-    cell skew hurts probe cost."""
-    import os as _os
-
-    from .index_commit import begin_append, commit_append, rollback_torn_append
-
-    rollback_torn_append(path)  # self-heal: a retried append rolls back first
-    meta = _load_pq_router(path)
-    dead = set(meta["dead"])
-    live = [
-        (cid, sn) for cid, sn in enumerate(meta["router"]) if cid not in dead
-    ]
+    appended into the cell partition directories in place, inside the
+    append bracket (:func:`~gluestick_spark.llm.ivf_cells.append_cells`).
+    The existing index is never read or rewritten — ingest costs
+    O(batch). Id uniqueness across batches is the caller's contract;
+    under drift, rebuild when cell skew hurts probe cost."""
+    router = load_router(PQ_IVF, path, serving=False)
+    live = router.live
     if not live:
         raise ValueError(
             f"pq-ivf index at {path} has an empty router — rebuild with "
             "materialize_pq_ivf on a non-empty corpus before appending"
         )
     enc = _encode_cells(
-        df.select(F.col(id_col).alias(meta["id_col"]), F.col(vec_col)),
-        vec_col, meta["id_col"], [sn for _, sn in live], meta["codebooks"],
-        meta["scale"], keep_qvec=bool(meta.get("store_vectors", False)),
+        df.select(F.col(id_col).alias(router.id_col), F.col(vec_col)),
+        vec_col, router.id_col, [sn for _, sn in live], _codebooks(router),
+        router.scale, keep_qvec=bool(router.meta.get("store_vectors", False)),
         router_cids=[cid for cid, _ in live],
     )
-    begin_append(path)  # rolls back any torn prior batch first
-    (
-        enc.repartition(F.col("cid"))
-        .write.partitionBy("cid")
-        .mode("append")
-        .parquet(_os.path.join(path, "cells"))
-    )
-    commit_append(path)
+    append_cells(enc, Cells(path))
 
 
 def pq_ivf_topk_indexed(
@@ -629,13 +625,13 @@ def pq_ivf_topk_indexed(
     """Serve top-k from a :func:`materialize_pq_ivf` index — identical
     results to in-query :func:`pq_ivf_topk` with the same geometry (the
     router and codebooks are persisted verbatim; probe selection and the
-    ADC distance are the same code — indexed ≡ direct is structural,
+    ADC ranking are the same code — indexed ≡ direct is structural,
     oracle-checked).
 
     Plan: probe selection + ADC table are driver-side arithmetic on the
     persisted integer state; the scan reads ONLY the ``nprobe`` probed
-    cell directories (``cid IN (...)`` rides the scan as a
-    PartitionFilter — plan-gated) and only the m-int codes; then one
+    cell directories (:func:`~gluestick_spark.llm.ivf_cells.read_probed`
+    — plan-gated) and only the m-int codes; then one
     ``TakeOrderedAndProject``. Query cost ∝ probed cells × code bytes,
     independent of corpus size — the 100 TB serving shape.
 
@@ -644,56 +640,28 @@ def pq_ivf_topk_indexed(
     ADC candidates are re-scored with the exact int64 L2 on the stored
     quantized vectors and the final top-k ordered by (``rerank_dist``,
     id). Identical to the direct :func:`pq_ivf_topk` with the same
-    ``rerank`` (shared :func:`_rerank_tail` — indexed ≡ direct stays
-    structural; oracle-checked via the ``pq_ivf_rerank`` registry
-    row). Recall lift is measured by
+    ``rerank`` (oracle-checked via the ``pq_ivf_rerank`` registry row).
+    Recall lift is measured by
     :func:`~gluestick_spark.llm.similarity.ann_recall_audit`."""
     from gluestick_spark.llm.cluster import _select_probes
 
-    import os as _os
-
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank must be >= k, got {rerank} < {k}")
-    meta = _load_pq_router(path)
-    out_id = id_col or meta["id_col"]
-    if len(meta["dead"]) >= len(meta["router"]):
+    check_topk(nprobe, k)
+    _check_rerank(rerank, k)
+    router = load_router(PQ_IVF, path)
+    out_id = id_col or router.id_col
+    if not router.live:
         return spark.createDataFrame([], f"{out_id} long, pq_dist long")
-    if rerank is not None and not meta.get("store_vectors"):
-        raise ValueError(
-            f"pq-ivf index at {path} was built without store_vectors=True "
-            "— rerank needs the quantized full vectors in the cells; "
-            "rebuild with materialize_pq_ivf(..., store_vectors=True)"
-        )
-    probes, _, _ = _select_probes(
-        meta["router"], query, meta["scale"], nprobe, dead=set(meta["dead"])
+    _refuse_rerank_without_vectors(router, path, rerank)
+    probes, qq, _ = _select_probes(
+        router.state, query, router.scale, nprobe, dead=router.dead
     )
-    tab = adc_table(query, meta["codebooks"], meta["scale"])
-    cells = spark.read.parquet(_os.path.join(path, "cells")).where(
-        F.col("cid").isin(probes)
+    tab = adc_table(query, _codebooks(router), router.scale)
+    enc = read_probed(spark, Cells(path), probes, router.id_col).select(
+        F.col(router.id_col).alias(out_id),
+        F.col("code"),
+        *([] if rerank is None else [F.col("qvec")]),
     )
-    from .index_delete import filter_tombstoned
-
-    cells = filter_tombstoned(spark, path, cells, meta["id_col"])
-    if rerank is None:
-        enc = cells.select(F.col(meta["id_col"]).alias(out_id), F.col("code"))
-        return (
-            enc.select(F.col(out_id), _adc_dist_expr(tab).alias("pq_dist"))
-            .orderBy(F.col("pq_dist").asc(), F.col(out_id).asc())
-            .limit(k)
-        )
-    qq = [floor(x * meta["scale"] + 0.5) for x in query]
-    cand = (
-        cells.select(
-            F.col(meta["id_col"]).alias(out_id),
-            _adc_dist_expr(tab).alias("pq_dist"),
-            F.col("qvec"),
-        )
-        .orderBy(F.col("pq_dist").asc(), F.col(out_id).asc())
-        .limit(rerank)
-    )
-    return _rerank_tail(cand, out_id, qq, k)
+    return _adc_topk(enc, out_id, tab, k, rerank, qq)
 
 
 def pq_ivf_topk_indexed_batch(
@@ -719,11 +687,11 @@ def pq_ivf_topk_indexed_batch(
     Plan shape — everything scales with Σ_q |probed cells_q|, never
     query count × corpus:
 
-    1. ONE narrow projection quantizes every query to the router grid
-       and selects its ``nprobe`` probe cells against the broadcast
-       router literals (:func:`~gluestick_spark.llm.cluster.
-       _probe_cids_expr` — the exact :func:`~gluestick_spark.llm.
-       cluster._select_probes` algebra).
+    1. ONE narrow projection quantizes every query to the router grid;
+       its ``nprobe`` probe cells come from the router literals
+       (:func:`~gluestick_spark.llm.cluster._probe_cids_expr` — the
+       exact :func:`~gluestick_spark.llm.cluster._select_probes`
+       algebra).
     2. The per-query ADC tables are built IN CATALYST: per-subspace
        query slices (``posexplode``) joined against the broadcast
        (m × n_codes)-row codebook frame compute every entry with the
@@ -732,66 +700,41 @@ def pq_ivf_topk_indexed_batch(
        queries×m×n_codes-row aggregates nest them into one
        ``array<array<long>>`` per query — rows ∝ queries, independent
        of the corpus.
-    3. The union of probed cids (collected, bounded by the router size)
-       prunes the cells scan with a literal ``cid IN (...)`` partition
-       filter; ONE cid-keyed join scores candidates with the stored
-       code array folded through the query's table
-       (``Σ_j tab[j][code[j]]`` — exact int64, the
-       :func:`_adc_dist_expr` lookup as a column fold).
-    4. Per-query top-k via a query-partitioned window (pq_dist asc, id
-       asc); with ``rerank`` the top-R ADC candidates per query are
-       re-scored with the exact int64 L2 against the stored quantized
-       vectors (:func:`_rerank_dist_expr` column twin) before the final
-       top-k by (rerank_dist, id).
+    3. The probe, join and per-query ranking skeleton is
+       :func:`~gluestick_spark.llm.ivf_cells.batch_topk`: candidates
+       score with the stored code array folded through the query's
+       table (``Σ_j tab[j][code[j]]`` — exact int64, the
+       :func:`_adc_dist_expr` lookup as a column fold), top-k by
+       (pq_dist, id); with ``rerank`` the top-R per query are re-scored
+       with the exact int64 L2 against the stored quantized vectors
+       (:func:`_rerank_dist_expr` column twin) before the final top-k by
+       (rerank_dist, id).
 
-    Tombstoned ids are anti-joined out. NULL query vectors are the
-    caller's contract to filter, as everywhere in the family."""
-    from pyspark.sql import Window
+    Tombstoned ids are excluded as in single-query serving. NULL query
+    vectors are the caller's contract to filter, as everywhere in the
+    family."""
+    from .cluster import _probe_cids_expr
 
-    from .cluster import _probe_cids_expr, int_dot_expr, quantize_vec_expr
-
-    import os as _os
-
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank must be >= k, got {rerank} < {k}")
-    meta = _load_pq_router(path)
-    out_id = id_col or meta["id_col"]
-    dead = set(meta["dead"])
-    live = [
-        (cid, sn) for cid, sn in enumerate(meta["router"]) if cid not in dead
-    ]
-
-    def _empty() -> DataFrame:
-        base = (
-            queries_df.select(F.col(query_id_col))
-            .limit(0)
-            .withColumn(out_id, F.lit(None).cast("long"))
-            .withColumn("pq_dist", F.lit(None).cast("long"))
-        )
-        if rerank is not None:
-            base = base.withColumn("rerank_dist", F.lit(None).cast("long"))
-        return base
-
+    check_topk(nprobe, k)
+    _check_rerank(rerank, k)
+    router = load_router(PQ_IVF, path)
+    out_id = id_col or router.id_col
+    live = router.live
     if not live:
-        return _empty()
-    if rerank is not None and not meta.get("store_vectors"):
-        raise ValueError(
-            f"pq-ivf index at {path} was built without store_vectors=True "
-            "— rerank needs the quantized full vectors in the cells; "
-            "rebuild with materialize_pq_ivf(..., store_vectors=True)"
-        )
-    books = meta["codebooks"]
+        cols = [("pq_dist", "long")]
+        if rerank is not None:
+            cols.append(("rerank_dist", "long"))
+        return empty_topk(queries_df.select(query_id_col), out_id, cols)
+    _refuse_rerank_without_vectors(router, path, rerank)
+    books = _codebooks(router)
     m = len(books)
     ds = len(books[0][0][0])
-    scale = meta["scale"]
 
     qprep = queries_df.select(
         F.col(query_id_col).alias("__qid__"),
-        quantize_vec_expr(F.col(vec_col), scale).alias("__q__"),
+        quantize_vec_expr(F.col(vec_col), router.scale).alias("__q__"),
     ).withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
-    # lazy: materialized transitively by qx's probed-cid collect below —
+    # lazy: materialized transitively by the probed-cid collect —
     # an eager checkpoint here costs an extra scheduled job per call
     qprep = qprep.localCheckpoint(eager=False)  # feeds probes, ADC build, rerank
 
@@ -840,31 +783,7 @@ def pq_ivf_topk_indexed_batch(
     )
 
     probes = _probe_cids_expr(
-        [sn for _, sn in live],
-        nprobe,
-        cids=[cid for cid, _ in live],
-    )
-    qx_cols = ["__qid__"] + (["__q__"] if rerank is not None else [])
-    qx = (
-        qprep.select(*qx_cols, F.explode(probes).alias("cid"))
-        .join(qtab, "__qid__")
-        .localCheckpoint(eager=False)  # pinned: feeds the probed-cid
-        # collect + join; lazy — the collect below materializes it
-    )
-    probed = sorted({r["cid"] for r in qx.select("cid").distinct().collect()})
-    if not probed:
-        return _empty()
-    cells = spark.read.parquet(_os.path.join(path, "cells")).where(
-        F.col("cid").isin(probed)
-    )
-    cand = qx.join(cells, "cid")
-    from .index_delete import filter_tombstoned
-
-    if out_id != meta["id_col"]:
-        cand = cand.withColumnRenamed(meta["id_col"], out_id)
-    cand = filter_tombstoned(
-        spark, path, cand, out_id,
-        stored_id_col=meta["id_col"] if out_id == meta["id_col"] else out_id,
+        [sn for _, sn in live], nprobe, cids=[cid for cid, _ in live]
     )
     # Σ_j tab[j][code[j]] — exact int64; F.get is 0-based on both levels
     dist = F.aggregate(
@@ -876,59 +795,18 @@ def pq_ivf_topk_indexed_batch(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    w_adc = Window.partitionBy("__qid__").orderBy(
-        F.col("pq_dist").asc(), F.col(out_id).asc()
-    )
-    if rerank is None:
-        scored = cand.select(
-            F.col("__qid__"), F.col(out_id), dist.alias("pq_dist")
+    ranks = [Rank("pq_dist", "long", dist, True, k if rerank is None else rerank)]
+    if rerank is not None:
+        rr = F.aggregate(
+            F.zip_with(
+                F.col("qvec"), F.col("__q__"), lambda a, b: (a - b) * (a - b)
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
         )
-        return (
-            scored.withColumn("__rn__", F.row_number().over(w_adc))
-            .where(F.col("__rn__") <= k)
-            .select(
-                F.col("__qid__").alias(query_id_col),
-                F.col(out_id),
-                F.col("pq_dist"),
-            )
-            .orderBy(
-                F.asc(query_id_col), F.col("pq_dist").asc(), F.col(out_id).asc()
-            )
-        )
-    rr = F.aggregate(
-        F.zip_with(
-            F.col("qvec"), F.col("__q__"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    cand_r = (
-        cand.select(
-            F.col("__qid__"), F.col(out_id), dist.alias("pq_dist"),
-            F.col("qvec"), F.col("__q__"),
-        )
-        .withColumn("__rn__", F.row_number().over(w_adc))
-        .where(F.col("__rn__") <= rerank)
-    )
-    w_rr = Window.partitionBy("__qid__").orderBy(
-        F.col("rerank_dist").asc(), F.col(out_id).asc()
-    )
-    return (
-        cand_r.select(
-            F.col("__qid__"), F.col(out_id), F.col("pq_dist"),
-            rr.alias("rerank_dist"),
-        )
-        .withColumn("__rk__", F.row_number().over(w_rr))
-        .where(F.col("__rk__") <= k)
-        .select(
-            F.col("__qid__").alias(query_id_col),
-            F.col(out_id),
-            F.col("pq_dist"),
-            F.col("rerank_dist"),
-        )
-        .orderBy(
-            F.asc(query_id_col),
-            F.col("rerank_dist").asc(),
-            F.col(out_id).asc(),
-        )
+        ranks.append(Rank("rerank_dist", "long", rr, True, k))
+    carry = ["__qid__", "__tab__"] + (["__q__"] if rerank is not None else [])
+    return batch_topk(
+        spark, Cells(path), router.id_col, qprep.join(qtab, "__qid__"), carry,
+        probes, query_id_col, out_id, ranks,
     )

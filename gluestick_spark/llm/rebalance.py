@@ -16,17 +16,17 @@ for. ``*_rebalance(path)`` bounds it without a rebuild:
    the build used, and re-route only that cell's rows among the new
    sub-centroids. Rows are moved VERBATIM (payload columns unchanged —
    never re-encoded, so quantization error does not compound).
-3. **Commit** under the existing crash-safety machinery
-   (:mod:`gluestick_spark.llm.index_commit`):
+3. **Commit** through the cell store
+   (:mod:`gluestick_spark.llm.ivf_cells`, which owns the cell layout):
 
    - sub-cell rows are APPENDED into brand-new ``cid`` directories
-     inside the ``_APPEND_INPROGRESS`` manifest bracket — a torn write
-     rolls back by the normal path and the old router still serves the
-     intact old cells;
+     with :func:`~gluestick_spark.llm.ivf_cells.append_cells` — a torn
+     write rolls back by the normal path and the old router still
+     serves the intact old cells;
    - the new router (split cids tombstoned in ``dead``, sub-centroid
      states appended) is then published atomically
-     (:func:`~gluestick_spark.llm.index_commit.publish`) — THE commit
-     point of the rebalance;
+     (:func:`~gluestick_spark.llm.ivf_cells.publish_router`) — THE
+     commit point of the rebalance;
    - the dead cell directories are dropped last, best-effort (routered
      families only; the router-less plain family defers this to
      :func:`ivf_vacuum` / the next rebalance, because ITS durable
@@ -68,14 +68,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cluster import _assign_expr, int_dot_expr, kmeans, quantize_vec_expr
-from .index_commit import (
-    PQ_IVF,
-    SQ_IVF,
-    begin_append,
-    commit_append,
-    load_meta,
-    publish,
-    rollback_torn_append,
+from .index_commit import PQ_IVF, SQ_IVF, Store, rollback_torn_append
+from .ivf_cells import (
+    Cells,
+    append_cells,
+    load_router,
+    plain_cells,
+    publish_router,
 )
 
 __all__ = [
@@ -214,35 +213,34 @@ def _split_one(
 
 def _rebalance_core(
     spark,
-    path: str,
-    cells_root: str,
+    cells: Cells,
     state: list[tuple[list[int], int]],
     dead: set[int],
-    recon_for,
+    recon,
     id_col: str,
     payload_cols: list[str],
     scale: int,
     max_cell_rows: int | None,
     split_factor: int,
-    publish,
-    part_col: str = "cid",
-    bracket: bool = True,
-    bracket_cells: str = "cells",
+    commit,
     drop_dead_dirs: bool = True,
     assign_fn=None,
 ) -> dict:
-    """Shared rebalance engine; ``publish(new_state, new_dead)`` commits
-    the router atomically (or, for the router-less plain-IVF family,
-    records the caller-visible centroid update). ``drop_dead_dirs=False``
-    defers split-cell directory removal to the next maintenance call —
-    required when ``publish`` is NOT the durable commit point (plain IVF:
-    the caller persisting the returned list is), because deleting the old
-    dirs before that would strand the moved rows if the caller crashes
+    """Shared rebalance engine over the index's ``cells``; ``recon`` is
+    the vector reconstruction expression over a stored row, and
+    ``commit(new_state, new_dead)`` commits the router atomically (or,
+    for the router-less plain-IVF family, records the caller-visible
+    centroid update). ``drop_dead_dirs=False`` defers split-cell
+    directory removal to the next maintenance call — required when
+    ``commit`` is NOT the durable commit point (plain IVF: the caller
+    persisting the returned list is), because deleting the old dirs
+    before that would strand the moved rows if the caller crashes
     first."""
     if split_factor < 2:
         raise ValueError(f"split_factor must be >= 2, got {split_factor}")
-    _prune_stale_cells(cells_root, len(state), dead, part_col)
-    sizes = cell_sizes(spark, cells_root, part_col)
+    part_col = cells.part
+    _prune_stale_cells(cells.root, len(state), dead, part_col)
+    sizes = cell_sizes(spark, cells.root, part_col)
     oversized, threshold = _pick_oversized(sizes, dead, max_cell_rows)
     report = {
         "cells": sizes,
@@ -253,14 +251,14 @@ def _rebalance_core(
     }
     if not oversized:
         return report
-    cells = spark.read.parquet(cells_root)
+    rows = spark.read.parquet(cells.root)
     next_cid = len(state)
     frames, new_states, split_cids = [], [], []
     for cid in oversized:
-        cell = cells.where(F.col(part_col) == cid)  # partition-pruned
+        cell = rows.where(F.col(part_col) == cid)  # partition-pruned
         labels = list(range(next_cid, next_cid + split_factor))
         moved, sub = _split_one(
-            cell, recon_for(cells), id_col, payload_cols, part_col, scale,
+            cell, recon, id_col, payload_cols, part_col, scale,
             split_factor, labels, assign_fn=assign_fn,
         )
         if moved is None:
@@ -273,26 +271,38 @@ def _rebalance_core(
         next_cid += len(sub)
     if not frames:
         return report
-    moved_all = reduce(lambda a, b: a.unionByName(b), frames)
-    if bracket:
-        begin_append(path, cells=bracket_cells)
-    (
-        moved_all.repartition(F.col(part_col))
-        .write.partitionBy(part_col)
-        .mode("append")
-        .parquet(cells_root)
-    )
-    if bracket:
-        commit_append(path)
-    publish(state + new_states, sorted(dead | set(split_cids)))
+    append_cells(reduce(lambda a, b: a.unionByName(b), frames), cells)
+    commit(state + new_states, sorted(dead | set(split_cids)))
     if drop_dead_dirs:
         for cid in split_cids:  # best-effort; _prune_stale_cells self-heals
             shutil.rmtree(
-                os.path.join(cells_root, f"{part_col}={cid}"),
+                os.path.join(cells.root, f"{part_col}={cid}"),
                 ignore_errors=True,
             )
     report["split"] = split_cids
     return report
+
+
+def _rebalance_routered(
+    spark,
+    store: Store,
+    path: str,
+    max_cell_rows: int | None,
+    split_factor: int,
+    layout,
+) -> dict:
+    """Rebalance an sq-ivf or pq-ivf index: ``layout(meta)`` gives the
+    family's vector reconstruction over a stored row and its payload
+    columns besides the id."""
+    rollback_torn_append(path)  # never bake a torn batch into the split
+    router = load_router(store, path, serving=False)
+    recon, payload = layout(router.meta)
+    return _rebalance_core(
+        spark, Cells(path), router.state, set(router.dead), recon,
+        router.id_col, [router.id_col, *payload], router.scale,
+        max_cell_rows, split_factor,
+        lambda state, dead: publish_router(store, path, router, state, dead),
+    )
 
 
 def sq_ivf_rebalance(
@@ -309,21 +319,11 @@ def sq_ivf_rebalance(
     new_cids}``."""
     from .similarity import dequantize_expr
 
-    rollback_torn_append(path)
-    meta = load_meta(SQ_IVF, path)
-    state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
-    dead = set(meta.get("dead", []))
-
-    def commit_router(new_state, new_dead):
-        meta["state"] = [[list(map(int, s)), int(n)] for s, n in new_state]
-        meta["dead"] = new_dead
-        publish(SQ_IVF, path, meta)
-
-    return _rebalance_core(
-        spark, path, os.path.join(path, "cells"), state, dead,
-        lambda cells: dequantize_expr(F.col("qvec"), F.col("scale")),
-        meta["id_col"], [meta["id_col"], "scale", "qvec"], meta["scale"],
-        max_cell_rows, split_factor, commit_router,
+    return _rebalance_routered(
+        spark, SQ_IVF, path, max_cell_rows, split_factor,
+        lambda meta: (
+            dequantize_expr(F.col("qvec"), F.col("scale")), ["scale", "qvec"]
+        ),
     )
 
 
@@ -360,37 +360,18 @@ def pq_ivf_rebalance(
     the stored codes via the persisted codebooks (or from ``qvec`` when
     the index was built with ``store_vectors=True`` — exacter, free);
     payload columns move verbatim, codes are never re-encoded."""
-    from .pq import _load_pq_router
-    from .similarity import dequantize_expr  # noqa: F401  (qvec path)
 
-    rollback_torn_append(path)
-    meta = _load_pq_router(path)
-    dead = set(meta["dead"])
-    payload = [meta["id_col"], "code"] + (
-        ["qvec"] if meta.get("store_vectors") else []
-    )
-    if meta.get("store_vectors"):
-        scale = meta["scale"]
-        recon = lambda cells: F.transform(  # noqa: E731
-            F.col("qvec"), lambda x: x.cast("double") / F.lit(float(scale))
+    def layout(meta: dict):
+        if not meta.get("store_vectors"):
+            return _pq_decode_expr(meta), ["code"]
+        scale = float(meta["scale"])
+        recon = F.transform(
+            F.col("qvec"), lambda x: x.cast("double") / F.lit(scale)
         )
-    else:
-        recon = lambda cells: _pq_decode_expr(meta)  # noqa: E731
+        return recon, ["code", "qvec"]
 
-    def commit_router(new_state, new_dead):
-        out = dict(meta)
-        out["router"] = [[list(map(int, s)), int(n)] for s, n in new_state]
-        out["codebooks"] = [
-            [[list(map(int, s)), int(n)] for s, n in book]
-            for book in meta["codebooks"]
-        ]
-        out["dead"] = new_dead
-        publish(PQ_IVF, path, out)
-
-    return _rebalance_core(
-        spark, path, os.path.join(path, "cells"), meta["router"], dead,
-        recon, meta["id_col"], payload, meta["scale"],
-        max_cell_rows, split_factor, commit_router,
+    return _rebalance_routered(
+        spark, PQ_IVF, path, max_cell_rows, split_factor, layout
     )
 
 
@@ -440,26 +421,25 @@ def ivf_rebalance(
     dead = {i for i, c in enumerate(cents) if c is None}
     new_out: dict = {}
 
-    def recon(cells):
-        v = F.col(vec_col).cast("array<double>")
-        nrm = F.sqrt(
-            F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
-        )
-        # unit sphere: spherical-kmeans training + cosine-faithful
-        # sub-centroid directions; zero vectors pass through unscaled
-        return F.when(nrm > F.lit(0.0), F.transform(v, lambda x: x / nrm)).otherwise(v)
+    v = F.col(vec_col).cast("array<double>")
+    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+    # unit sphere: spherical-kmeans training + cosine-faithful
+    # sub-centroid directions; zero vectors pass through unscaled
+    recon = F.when(
+        nrm > F.lit(0.0), F.transform(v, lambda x: x / nrm)
+    ).otherwise(v)
 
     def commit_state(new_state, new_dead):
         new_out["state"] = new_state
         new_out["dead"] = set(new_dead)
 
-    payload_df = spark.read.parquet(path)
-    payload = [c for c in payload_df.columns if c != "centroid_id"]
+    cells = plain_cells(path)
+    payload = [
+        c for c in spark.read.parquet(path).columns if c != cells.part
+    ]
     report = _rebalance_core(
-        spark, path, path, state, dead, recon, id_col, payload, scale,
-        max_cell_rows, split_factor, commit_state,
-        part_col="centroid_id", bracket=True, bracket_cells=".",
-        drop_dead_dirs=False,
+        spark, cells, state, dead, recon, id_col, payload, scale,
+        max_cell_rows, split_factor, commit_state, drop_dead_dirs=False,
         assign_fn=lambda sub, labels: _cosine_assign_expr(sub, labels, scale),
     )
     if not report["split"]:

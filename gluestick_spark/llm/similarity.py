@@ -13,8 +13,10 @@ Scale design:
   the corpus.
 - **IVF (inverted file)**: k centroid seeds chosen deterministically; each
   vector assigned to nearest centroid (one pass); queries probe the nearest
-  ``nprobe`` centroids. Partition-prunable when the table is written
-  partitioned by centroid id.
+  ``nprobe`` centroids. The persisted index (:func:`materialize_ivf`) keeps
+  its cells in the layout :mod:`gluestick_spark.llm.ivf_cells` owns, which
+  also carries the append bracket, the pruned probe read and batched
+  top-k; this module keeps the float-cosine geometry.
 """
 
 from __future__ import annotations
@@ -24,6 +26,16 @@ import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .ivf_cells import (
+    Rank,
+    append_cells,
+    batch_topk,
+    check_topk,
+    plain_cells,
+    read_probed,
+    write_cells,
+)
 
 __all__ = [
     "train_pca",
@@ -531,13 +543,7 @@ def materialize_ivf(
     partition — the small-files problem at 1000 executors); AQE splits
     skewed lists back out.
     """
-    assigned = ivf_assign(df, vec_col, centroids)
-    (
-        assigned.repartition(F.col("centroid_id"))
-        .write.partitionBy("centroid_id")
-        .mode("overwrite")
-        .parquet(path)
-    )
+    write_cells(ivf_assign(df, vec_col, centroids), plain_cells(path), "overwrite")
 
 
 def ivf_append(
@@ -562,25 +568,11 @@ def ivf_append(
     rebuild with retrained centroids. Id uniqueness is the caller's
     contract (pre-dedupe against the index for upsert semantics).
 
-    Crash safety (r13 — parity with ``sq_ivf_append``/``pq_ivf_append``):
-    the append runs inside the ``_APPEND_INPROGRESS`` manifest bracket
-    (:mod:`gluestick_spark.llm.index_commit`, ``cells='.'`` — this
-    family's partition dirs live directly under ``path``). A torn
-    append leaves the sidecar in place so :func:`ivf_topk_indexed`
-    refuses loudly, and a RETRIED append rolls the torn batch back
-    (deletes unmanifested part files) before re-appending."""
-    from .index_commit import begin_append, commit_append, rollback_torn_append
-
-    rollback_torn_append(path, cells=".")  # self-heal a torn prior batch
-    assigned = ivf_assign(df, vec_col, centroids)
-    begin_append(path, cells=".")
-    (
-        assigned.repartition(F.col("centroid_id"))
-        .write.partitionBy("centroid_id")
-        .mode("append")
-        .parquet(path)
-    )
-    commit_append(path)
+    The write runs inside the append bracket
+    (:func:`~gluestick_spark.llm.ivf_cells.append_cells`), as for the
+    sq/pq families: a torn append is refused by
+    :func:`ivf_topk_indexed` and rolled back by the next append."""
+    append_cells(ivf_assign(df, vec_col, centroids), plain_cells(path))
 
 
 def ivf_topk_indexed(
@@ -600,10 +592,7 @@ def ivf_topk_indexed(
 
     require_committed(path, "ivf index")  # a torn append must not be probed
     probe = _probe_centroids(query, centroids, nprobe)
-    cand = spark.read.parquet(path).where(F.col("centroid_id").isin(probe))
-    from .index_delete import filter_tombstoned
-
-    cand = filter_tombstoned(spark, path, cand, id_col)
+    cand = read_probed(spark, plain_cells(path), probe, id_col)
     return cosine_topk(cand.drop("centroid_id"), vec_col, query, k, id_col)
 
 
@@ -712,7 +701,13 @@ def ann_recall_audit(
         kmeans,
         quantize_vec_expr,
     )
-    from gluestick_spark.llm.pq import adc_table, encode_pq, train_pq
+    from gluestick_spark.llm.pq import (
+        _adc_topk,
+        _check_rerank,
+        adc_table,
+        encode_pq,
+        train_pq,
+    )
 
     spark = df.sparkSession
     sample = (
@@ -789,8 +784,7 @@ def ann_recall_audit(
     )
     enc_pqr = None
     if rerank is not None:
-        if rerank < k:
-            raise ValueError(f"rerank must be >= k, got {rerank} < {k}")
+        _check_rerank(rerank, k)
         enc_pqr = enc_pq.join(
             sample.select(
                 F.col(id_col),
@@ -818,31 +812,12 @@ def ann_recall_audit(
             hits["sq_ivf"][0] += len(ex_dot)
             hits["sq_ivf"][1] += len(set(ex_dot) & set(got_ivf))
         tab = adc_table(q, books, scale)
-        from gluestick_spark.llm.pq import _adc_dist_expr
-
-        got_pq = _ids(
-            enc_pq.select(F.col(id_col), _adc_dist_expr(tab).alias("__d__"))
-            .orderBy(F.asc("__d__"), F.asc(id_col))
-            .limit(k)
-        )
+        got_pq = _ids(_adc_topk(enc_pq, id_col, tab, k))
         hits["pq"][0] += len(ex_l2)
         hits["pq"][1] += len(set(ex_l2) & set(got_pq))
         if enc_pqr is not None:
-            from math import floor as _floor
-
-            from gluestick_spark.llm.pq import _rerank_tail
-
-            qq = [_floor(x * scale + 0.5) for x in q]
-            cand = (
-                enc_pqr.select(
-                    F.col(id_col),
-                    _adc_dist_expr(tab).alias("pq_dist"),
-                    F.col("qvec"),
-                )
-                .orderBy(F.asc("pq_dist"), F.asc(id_col))
-                .limit(rerank)
-            )
-            got_pqr = _ids(_rerank_tail(cand, id_col, qq, k))
+            qq = [math.floor(x * scale + 0.5) for x in q]
+            got_pqr = _ids(_adc_topk(enc_pqr, id_col, tab, k, rerank, qq))
             hits["pq_r"][0] += len(ex_l2)
             hits["pq_r"][1] += len(set(ex_l2) & set(got_pqr))
 
@@ -916,57 +891,21 @@ def ivf_topk_indexed_batch(
 
     Plan: ONE narrow pass selects each query's ``nprobe`` probe lists
     against the float centroid literals (:func:`_probe_centroids_expr`);
-    the union of probed ids (collected, bounded by the centroid count)
-    prunes the partitioned scan; one ``centroid_id``-keyed join scores
-    candidates with the column-to-column :func:`cosine_expr`; per-query
-    top-k via a window (similarity desc, id asc). Tombstoned ids are
-    anti-joined out. Cost Σ_q |probed lists_q| — one job, no driver
-    loop."""
-    from pyspark.sql import Window
-
+    the probe, join and per-query top-k skeleton is
+    :func:`~gluestick_spark.llm.ivf_cells.batch_topk`, scoring
+    candidates with the column-to-column :func:`cosine_expr`
+    (similarity desc, id asc). Tombstoned ids are excluded as in
+    single-query serving. Cost Σ_q |probed lists_q|, no driver loop."""
     from .index_commit import require_committed
 
-    if nprobe < 1 or k < 1:
-        raise ValueError("nprobe >= 1 and k >= 1 required")
+    check_topk(nprobe, k)
     require_committed(path, "ivf index")  # a torn append must not be probed
-    probes = _probe_centroids_expr(centroids, nprobe, vec_col)
-    qx = queries_df.select(
-        F.col(query_id_col).alias("__qid__"),
-        F.col(vec_col).alias("__qv__"),
-        F.explode(probes).alias("centroid_id"),
-    ).localCheckpoint(eager=False)  # pinned: feeds the probed-id collect
-    # AND the join; lazy — the collect below materializes it
-    probed = sorted(
-        {r["centroid_id"] for r in qx.select("centroid_id").distinct().collect()}
+    queries = queries_df.select(
+        F.col(query_id_col).alias("__qid__"), F.col(vec_col).alias("__qv__")
     )
-    if not probed:
-        return (
-            queries_df.select(F.col(query_id_col))
-            .limit(0)
-            .withColumn(id_col, F.lit(None).cast("long"))
-            .withColumn("similarity", F.lit(None).cast("double"))
-        )
-    cand = qx.join(
-        spark.read.parquet(path).where(F.col("centroid_id").isin(probed)),
-        "centroid_id",
-    )
-    from .index_delete import filter_tombstoned
-
-    cand = filter_tombstoned(spark, path, cand, id_col)
     sim = cosine_expr(F.col(vec_col), F.col("__qv__"))
-    w = Window.partitionBy("__qid__").orderBy(
-        F.col("similarity").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.select(F.col("__qid__"), F.col(id_col), sim.alias("similarity"))
-        .withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
-        .select(
-            F.col("__qid__").alias(query_id_col),
-            F.col(id_col),
-            F.col("similarity"),
-        )
-        .orderBy(
-            F.asc(query_id_col), F.col("similarity").desc(), F.asc(id_col)
-        )
+    return batch_topk(
+        spark, plain_cells(path), id_col, queries, ["__qid__", "__qv__"],
+        _probe_centroids_expr(centroids, nprobe, "__qv__"), query_id_col,
+        id_col, [Rank("similarity", "double", sim, False, k)],
     )

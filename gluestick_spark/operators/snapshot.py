@@ -13,7 +13,8 @@ Parity targets (citations into /root/reference):
 - ``merge_id_from_snapshot``: gluestick/etl_utils.py:855-922 — left join
   df.externalId = snapshot.InputId, project RemoteId → pk.
 - atomic writes: gluestick/snapshot_lock.py:13-47 — here: write the merged
-  result to a temp dir, atomically swap into place (rename protocol).
+  result to a temp dir, atomically swap it into place
+  (:func:`gluestick_spark.fsio.swap_dir`).
 
 Keep-last ordering contract (SURVEY §4.2.1): snapshot rows get source
 priority 0, incoming rows 1; within the incoming batch, later rows win via
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..fsio import LOCAL_FS, StateFS
+from ..fsio import LOCAL_FS, StateFS, heal_swap, swap_dir
 from ..functions.hashing import row_hash_expr
 from ..sources.reader import read_snapshots
 from .union import union_relaxed
@@ -65,30 +66,33 @@ def _write_snapshot(
     use_csv: bool = False,
     fs: StateFS = LOCAL_FS,
 ) -> None:
-    """Materialize to a temp dir, then atomically swap into place.
+    """Materialize to a temp dir, then publish it with
+    :func:`~gluestick_spark.fsio.swap_dir` (a plain rename for the first
+    snapshot).
 
     Mirrors the crash-safety intent of the reference's lock-file rename
     protocol (snapshot_lock.py:13-47): a killed job leaves either the old
-    snapshot or the new one, never a torn file. The swap rides the
-    injectable ``fs=`` seam (:mod:`gluestick_spark.fsio`) — its backend
-    must provide POSIX-rename atomicity or the protocol degrades to
-    torn-window semantics (see the fsio docstring for object stores).
+    snapshot or the new one, never a torn file. A crash between the
+    renames of the swap's fallback parks the old snapshot under
+    swap_dir's ``.__old__`` name, and :func:`read_snapshots` (like the
+    next write) moves it back with :func:`~gluestick_spark.fsio.heal_swap`
+    — the history is never dropped. The swap rides the injectable ``fs=``
+    seam (:mod:`gluestick_spark.fsio`).
     """
     fs.makedirs(snapshot_dir, exist_ok=True)
     final = _snapshot_path(snapshot_dir, stream, use_csv)
     tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    lock = f"{final}.hg.partial_written.lock"
     writer = df.write.mode("overwrite")
     if use_csv:
         # RFC 4180 quote-escaping to match read_snapshots' csv reader
         writer.option("header", "true").option("escape", '"').csv(tmp)
     else:
         writer.option("compression", "zstd").parquet(tmp)
+    heal_swap(final, fs=fs)
     if fs.exists(final):
-        fs.rename(final, lock)
-    fs.rename(tmp, final)
-    if fs.exists(lock):
-        fs.rmtree(lock, ignore_errors=True)
+        swap_dir(tmp, final, fs=fs)
+    else:
+        fs.rename(tmp, final)
 
 
 LOCK_SUFFIX = ".hg.partial_written.lock"
@@ -97,9 +101,9 @@ LOCK_SUFFIX = ".hg.partial_written.lock"
 def prepare_snapshot_write(canonical_path: str, fs: StateFS = LOCAL_FS) -> str:
     """Public lock-rename protocol, step 1 (reference snapshot_lock.py:13-29):
     move any existing snapshot (file OR Spark output directory) aside to the
-    ``.lock`` path and return the path to write to. ``_write_snapshot``
-    applies the same protocol internally; this is the standalone API for
-    callers doing their own writes."""
+    ``.lock`` path and return the path to write to. This is the standalone
+    API for callers doing their own writes; ``_write_snapshot`` publishes
+    through :func:`~gluestick_spark.fsio.swap_dir` instead."""
     lock_path = canonical_path + LOCK_SUFFIX
     if fs.exists(canonical_path):
         fs.rename(canonical_path, lock_path)

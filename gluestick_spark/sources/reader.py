@@ -23,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..fsio import heal_swap
 from ..functions.casting import cast_df_to_schema
 from ..schema import json_schema_to_struct
 
@@ -357,9 +358,12 @@ def read_snapshots(
     spark: SparkSession, stream: str, snapshot_dir: str
 ) -> DataFrame | None:
     """Read `{dir}/{stream}.snapshot.parquet` (preferred) else `.csv`
-    (etl_utils.py:152-178)."""
+    (etl_utils.py:152-178). A snapshot left parked by a crashed swap
+    (``snapshot._write_snapshot``) is moved back first."""
     pq_path = os.path.join(snapshot_dir, f"{stream}.snapshot.parquet")
     csv_path = os.path.join(snapshot_dir, f"{stream}.snapshot.csv")
+    heal_swap(pq_path)
+    heal_swap(csv_path)
     if os.path.exists(pq_path):
         return spark.read.parquet(pq_path)
     if os.path.exists(csv_path):

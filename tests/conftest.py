@@ -66,8 +66,6 @@ _SLOW_TESTS = {
     "test_minhash_near_dup_pairs_matches_brute_force",
     "test_multi_explode_order_independence",
     "test_novelty_scores_matches_bruteforce",
-    "test_plain_ivf_batch_equals_single_query_serving",
-    "test_pq_batch_equals_single_query_serving",
     "test_pq_ivf_append_serves_like_frozen_rebuild",
     "test_pq_ivf_delete_and_vacuum",
     "test_pq_ivf_rebalance_splits_and_serves",
@@ -81,7 +79,6 @@ _SLOW_TESTS = {
     "test_sessionize_closes_on_gap",
     "test_sessionize_state_survives_micro_batches",
     "test_simhash_identical_and_near",
-    "test_sq_batch_equals_single_query_serving",
     "test_sq_ivf_append_commit_bracket",
     "test_sq_ivf_delete_serves_survivors_and_vacuum_purges",
     "test_sq_ivf_rebalance_splits_and_serves",

@@ -330,96 +330,109 @@ def test_semdedup_ref_cell_pruning_is_structural(spark, tmp_dir):
 # ---------------- batched retrieval serving (VERDICT r14 #2/#3) ----------
 
 
-def test_sq_batch_equals_single_query_serving(spark, tmp_dir):
-    """sq_ivf_topk_indexed_batch ≡ per-query sq_ivf_topk_indexed at
-    PARTIAL and exhaustive nprobe, tombstones active — probe selection,
-    scoring, and tie rules are shared term-for-term."""
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_topk_indexed,
-        sq_ivf_topk_indexed_batch,
-    )
-    from gluestick_spark.llm.index_delete import sq_ivf_delete
+def _served_index(spark, family, path, emb, id_col="vec_id"):
+    """Build an index of ``family`` over ``emb`` (ids in ``id_col``),
+    tombstone a slice of it, and return (batch, single) serving calls
+    plus the nprobe that probes every live cell."""
+    from gluestick_spark.llm import cluster, index_delete, pq, similarity
 
-    emb = _emb(spark, n=300)
-    path = os.path.join(tmp_dir, "bidx")
-    materialize_sq_ivf(emb, "embedding", "vec_id", path, n_clusters=5)
-    sq_ivf_delete(spark, path, emb.where("vec_id % 7 = 3").select("vec_id"))
-    qids = [0, 3, 17, 29, 100]
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    qvecs = {r["vec_id"]: list(r["embedding"]) for r in emb.where(
-        F.col("vec_id").isin(qids)
-    ).collect()}
-    for nprobe in (2, 5):
-        batch = sq_ivf_topk_indexed_batch(
-            spark, path, queries, "embedding", "query_id", k=7, nprobe=nprobe
+    emb = emb.withColumnRenamed("vec_id", id_col)
+    doomed = emb.where(f"{id_col} % 7 = 3").select(id_col)
+    if family == "sq":
+        cluster.materialize_sq_ivf(emb, "embedding", id_col, path, n_clusters=4)
+        index_delete.sq_ivf_delete(spark, path, doomed)
+        batch, single = (
+            cluster.sq_ivf_topk_indexed_batch,
+            cluster.sq_ivf_topk_indexed,
         )
-        got: dict = {q: [] for q in qids}
-        for r in batch.collect():
-            got[r["query_id"]].append((r["vec_id"], r["score"]))
-        for qid in qids:
-            single = [
-                (r["vec_id"], r["score"])
-                for r in sq_ivf_topk_indexed(
-                    spark, path, qvecs[qid], k=7, nprobe=nprobe
-                ).collect()
-            ]
-            assert got[qid] == single, (nprobe, qid)
-
-
-def test_pq_batch_equals_single_query_serving(spark, tmp_dir):
-    """pq_ivf_topk_indexed_batch ≡ per-query pq_ivf_topk_indexed —
-    plain ADC at partial/exhaustive nprobe AND the IVFADC+R rerank
-    path; the per-query Catalyst ADC tables are entry-for-entry the
-    driver-side adc_table."""
-    from gluestick_spark.llm.index_delete import pq_ivf_delete
-    from gluestick_spark.llm.pq import (
-        materialize_pq_ivf,
-        pq_ivf_topk_indexed,
-        pq_ivf_topk_indexed_batch,
-    )
-
-    emb = _emb(spark, n=300)
-    path = os.path.join(tmp_dir, "pqb")
-    materialize_pq_ivf(
-        emb, "embedding", "vec_id", path, m=4, n_codes=8, n_clusters=4,
-        store_vectors=True,
-    )
-    pq_ivf_delete(spark, path, emb.where("vec_id % 9 = 2").select("vec_id"))
-    qids = [0, 3, 17, 29]
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    qvecs = {r["vec_id"]: list(r["embedding"]) for r in emb.where(
-        F.col("vec_id").isin(qids)
-    ).collect()}
-    for nprobe, rerank in ((2, None), (4, None), (2, 12)):
-        batch = pq_ivf_topk_indexed_batch(
-            spark, path, queries, "embedding", "query_id",
-            k=6, nprobe=nprobe, rerank=rerank,
+    elif family == "pq":
+        pq.materialize_pq_ivf(
+            emb, "embedding", id_col, path, m=4, n_codes=8, n_clusters=4,
+            store_vectors=True,
         )
+        index_delete.pq_ivf_delete(spark, path, doomed)
+        batch, single = pq.pq_ivf_topk_indexed_batch, pq.pq_ivf_topk_indexed
+    else:
+        # a None slot: a rebalanced-away centroid is never assigned or probed
+        cents = similarity.random_hyperplanes(8, 4, seed=7)
+        cents.insert(1, None)
+        similarity.materialize_ivf(emb, "embedding", cents, path, id_col=id_col)
+        index_delete.ivf_delete(spark, path, doomed, id_col=id_col)
+        return (
+            lambda q, **kw: similarity.ivf_topk_indexed_batch(
+                spark, path, q, cents, "query_id", **kw
+            ),
+            lambda v, **kw: similarity.ivf_topk_indexed(
+                spark, path, v, cents, **kw
+            ),
+            4,
+        )
+    return (
+        lambda q, **kw: batch(spark, path, q, "embedding", "query_id", **kw),
+        lambda v, **kw: single(spark, path, v, **kw),
+        4,
+    )
+
+
+@pytest.mark.parametrize("family", ["sq", "pq", "plain"])
+def test_batch_equals_single_query_serving(spark, tmp_dir, family):
+    """Batched serving ≡ per-query single serving for each IVF family
+    at PARTIAL and exhaustive nprobe with tombstones active: probe
+    selection, scoring and tie rules agree term-for-term, to the exact
+    (id, score) per query. Also with an ``id_col=`` override under
+    tombstones (the tombstone read must use the STORED id column) and,
+    for PQ, the IVFADC+R rerank path and its store_vectors refusal."""
+    emb = _emb(spark, n=160)
+    qids = [0, 3, 17]
+    qrows = emb.where(F.col("vec_id").isin(qids)).collect()
+    qvecs = {r["vec_id"]: list(r["embedding"]) for r in qrows}
+    queries = spark.createDataFrame(
+        [(r["vec_id"], r["embedding"]) for r in qrows],
+        "query_id long, embedding array<double>",
+    )
+
+    def check(batch, single, **kw):
+        res = batch(queries, **kw)
         got: dict = {q: [] for q in qids}
-        for r in batch.collect():
+        for r in res.collect():
             got[r["query_id"]].append(tuple(r)[1:])
         for qid in qids:
-            single = [
-                tuple(r)
-                for r in pq_ivf_topk_indexed(
-                    spark, path, qvecs[qid], k=6, nprobe=nprobe, rerank=rerank
-                ).collect()
-            ]
-            assert got[qid] == single, (nprobe, rerank, qid)
-    # rerank without stored vectors refuses loudly
-    path2 = os.path.join(tmp_dir, "pqb2")
-    materialize_pq_ivf(
-        emb, "embedding", "vec_id", path2, m=4, n_codes=8, n_clusters=4
+            one = single(qvecs[qid], **kw)
+            assert one.columns == res.columns[1:], (kw, one.columns)
+            assert got[qid] == [tuple(r) for r in one.collect()], (kw, qid)
+            assert got[qid], (kw, qid)
+
+    k = 6
+    batch, single, n_live = _served_index(
+        spark, family, os.path.join(tmp_dir, "idx"), emb
     )
-    with pytest.raises(ValueError, match="store_vectors"):
-        pq_ivf_topk_indexed_batch(
-            spark, path2, queries, "embedding", "query_id", k=3, rerank=5
+    for nprobe in (2, n_live):
+        check(batch, single, k=k, nprobe=nprobe)
+    if family == "pq":
+        check(batch, single, k=k, nprobe=2, rerank=12)
+
+    # the caller's id column name differs from the one the index stores
+    if family == "plain":
+        # the plain family serves under its stored id column: store "doc"
+        batch, single, _ = _served_index(
+            spark, family, os.path.join(tmp_dir, "doc"), emb, id_col="doc"
         )
+    check(batch, single, k=k, nprobe=2, id_col="doc")
+
+    if family == "pq":
+        from gluestick_spark.llm.pq import (
+            materialize_pq_ivf,
+            pq_ivf_topk_indexed_batch,
+        )
+
+        path2 = os.path.join(tmp_dir, "no_vectors")
+        materialize_pq_ivf(
+            emb, "embedding", "vec_id", path2, m=4, n_codes=8, n_clusters=4
+        )
+        with pytest.raises(ValueError, match="store_vectors"):
+            pq_ivf_topk_indexed_batch(
+                spark, path2, queries, "embedding", "query_id", k=3, rerank=5
+            )
 
 
 def test_bm25_batch_equals_single_query(spark):
@@ -788,44 +801,3 @@ def test_luhn_and_iban_validation_known_vectors(spark):
         "order 1234-5678-9012-3456 card <CARD> "
         "wire <IBAN> not DE89370400440532013001"
     )
-
-
-def test_plain_ivf_batch_equals_single_query_serving(spark, tmp_dir):
-    """ivf_topk_indexed_batch ≡ per-query ivf_topk_indexed for the
-    plain float family — probe selection (incl. the larger-index tie
-    rule and tombstoned None slots), cosine scoring, delete gating."""
-    from gluestick_spark.llm.index_delete import ivf_delete
-    from gluestick_spark.llm.similarity import (
-        ivf_topk_indexed,
-        ivf_topk_indexed_batch,
-        materialize_ivf,
-        train_ivf_centroids,
-    )
-
-    emb = _emb(spark, n=250)
-    cents = train_ivf_centroids(emb, "embedding", 4)
-    path = os.path.join(tmp_dir, "pivf")
-    materialize_ivf(emb, "embedding", cents, path)
-    ivf_delete(spark, path, emb.where("vec_id % 8 = 5").select("vec_id"))
-    qids = [0, 7, 33, 101]
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    qvecs = {r["vec_id"]: list(r["embedding"]) for r in emb.where(
-        F.col("vec_id").isin(qids)
-    ).collect()}
-    for nprobe in (2, 4):
-        batch = ivf_topk_indexed_batch(
-            spark, path, queries, cents, "query_id", k=6, nprobe=nprobe
-        )
-        got: dict = {q: [] for q in qids}
-        for r in batch.collect():
-            got[r["query_id"]].append((r["vec_id"], r["similarity"]))
-        for qid in qids:
-            single = [
-                (r["vec_id"], r["similarity"])
-                for r in ivf_topk_indexed(
-                    spark, path, qvecs[qid], cents, k=6, nprobe=nprobe
-                ).collect()
-            ]
-            assert got[qid] == single, (nprobe, qid)

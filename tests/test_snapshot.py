@@ -110,3 +110,32 @@ def test_atomic_write_leaves_no_partial(spark, tmp_dir):
     leftovers = [f for f in os.listdir(tmp_dir) if ".tmp-" in f or ".lock" in f]
     assert leftovers == []
     assert read_snapshots(spark, "at", tmp_dir).count() == 100
+
+
+def test_crash_between_swap_renames_keeps_history(spark, tmp_dir):
+    """A crash between the renames of the swap fallback (a non-default
+    ``fs`` takes it) must not lose the snapshot: the next
+    snapshot_records reads the parked history back and upserts onto it."""
+    import pytest
+
+    from gluestick_spark.fsio import LocalFS
+    from gluestick_spark.operators.snapshot import _write_snapshot
+
+    class CrashOnSecondRename(LocalFS):
+        renames = 0
+
+        def rename(self, src, dst):
+            self.renames += 1
+            if self.renames == 2:
+                raise OSError("killed between renames")
+            super().rename(src, dst)
+
+    def ids(*vals):
+        return spark.createDataFrame([Row(id=i, v=str(i)) for i in vals])
+
+    snapshot_records(spark, ids(1, 2), "cr", tmp_dir, pk="id")
+    with pytest.raises(OSError, match="killed"):
+        _write_snapshot(ids(9), "cr", tmp_dir, fs=CrashOnSecondRename())
+    out = snapshot_records(spark, ids(3), "cr", tmp_dir, pk="id")
+    assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
+    assert not any(f.endswith(".__old__") for f in os.listdir(tmp_dir))
