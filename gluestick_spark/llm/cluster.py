@@ -43,8 +43,11 @@ embeddings at S=1000 (margin ~900×), loud overflow otherwise.
 
 Scale posture (100 TB): the classic MLlib shape — points are
 quantized once and persisted; each iteration is ONE map-side-combined
-aggregate (k·(d+1) output values collected to the driver, the
-iterative-algorithm state, like any MLlib driver loop). Assignment
+aggregate over the exploded vectors (``posexplode`` → ``groupBy(cid,
+i)`` → count and sum: k·d small rows collected to the driver, the
+iterative-algorithm state, like any MLlib driver loop). The narrow
+two-key aggregate keeps the generated code O(1) in d; one sum column
+per position would grow it O(d). Assignment
 has two physical strategies (``assign=`` / auto by k·d):
 
 * ``literal`` — a pure narrow map against centroid LITERALS (no
@@ -309,6 +312,34 @@ def _assign_df(
     )
 
 
+def _update_centroids(
+    assigned: DataFrame, cents: list[tuple[list[int], int]], dim: int
+) -> list[tuple[list[int], int]]:
+    """One Lloyd update: the new (sum-vector, count) per cluster from ONE
+    map-side-combined ``groupBy(cid, i)`` over the exploded vectors
+    (module docstring); empty clusters keep their previous state. Each
+    point has exactly one row at ``i = 0`` — at ``i = NULL`` when its
+    vector is empty or NULL — so those rows count every point once."""
+    rows = (
+        assigned.select("cid", F.posexplode_outer("__q__").alias("__i__", "__x__"))
+        .groupBy("cid", "__i__")
+        .agg(F.count("*").alias("__n__"), F.sum("__x__").alias("__s__"))
+        .collect()
+    )
+    counts: dict[int, int] = {}
+    sums: dict[int, list[int]] = {}
+    for r in rows:
+        c, i = int(r["cid"]), r["__i__"]
+        if i is None or i == 0:
+            counts[c] = counts.get(c, 0) + int(r["__n__"])
+        if i is not None and i < dim:  # state keeps the seeds' dimension
+            sums.setdefault(c, [0] * dim)[i] = int(r["__s__"])
+    return [
+        (sums.get(c, [0] * dim), counts[c]) if c in counts else cents[c]
+        for c in range(len(cents))
+    ]
+
+
 def kmeans(
     df: DataFrame,
     vec_col: str,
@@ -327,10 +358,10 @@ def kmeans(
     (sum, count) state. With ``return_state=True`` also returns the
     centroid state ``[(sum_vector, count), ...]`` indexed by cid.
 
-    Each iteration runs ONE Spark job: a map-side-combined
-    ``groupBy(cid)`` aggregate producing k rows of (count, d column
-    sums) — the k·(d+1) integers collected per step are the driver-side
-    algorithm state (MLlib pattern), not a data collect. ``assign``
+    Each iteration runs ONE Spark job: a map-side-combined aggregate
+    over the exploded vectors, ``groupBy(cid, i)`` → (count, sum) — the
+    k·d small rows collected per step are the driver-side algorithm
+    state (MLlib pattern), not a data collect. ``assign``
     picks the assignment strategy (module docstring): ``literal`` /
     ``join`` / ``auto`` (by k·d); both produce IDENTICAL assignments —
     the choice is purely physical.
@@ -353,26 +384,8 @@ def kmeans(
         cents = [(list(r["__q__"]), 1) for r in seed_rows]
         dim = len(cents[0][0])
 
-        # the k·(d+1) ints of driver-side state per step, fetched as ONE
-        # array-of-sums aggregate expression (a single F.expr parse —
-        # d separate sum() Columns cost ~6 py4j roundtrips each)
-        sums_sql = ", ".join(
-            f"sum(element_at(__q__, {i + 1}))" for i in range(dim)
-        )
         for _ in range(iters):
-            assigned = _assign_df(pts, cents, assign)
-            rows = assigned.groupBy("cid").agg(
-                F.count("*").alias("__n__"),
-                F.expr(f"array({sums_sql}) AS __sums__"),
-            ).collect()
-            state = {
-                int(r["cid"]): (
-                    [int(v) for v in r["__sums__"]],
-                    int(r["__n__"]),
-                )
-                for r in rows
-            }
-            cents = [state.get(c, cents[c]) for c in range(len(cents))]
+            cents = _update_centroids(_assign_df(pts, cents, assign), cents, dim)
 
         out = _assign_df(pts, cents, assign).select(
             F.col("__id__").alias(id_col), "cid"

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bloom import bloom_prefilter, bloom_words, should_prefilter
-from .text import tokens_expr
+from .text import bind_row, tokens_expr
 
 __all__ = [
     "ngrams_expr",
@@ -69,7 +69,7 @@ def ngrams_expr(col, n: int = 8, lowercase: bool = True):
         grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
         return F.array_distinct(grams)
 
-    return F.element_at(F.transform(F.array(toks0), body), 1)
+    return bind_row(toks0, body)
 
 
 def ngram_hashes_expr(col, n: int = 8, lowercase: bool = True):

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..partitioning import ensure_min_partitions as _parallelize
-from .text import shingles_expr, tokens_expr
+from .text import bind_row, shingles_expr, tokens_expr
 
 __all__ = [
     "exact_dedup",
@@ -249,7 +249,7 @@ def minhash_signature_expr(shingles: Column, num_perm: int = 64) -> Column:
             ),
         )
 
-    return F.element_at(F.transform(F.array(hs), per_row), 1)
+    return bind_row(hs, per_row)
 
 
 def minhash_signatures(

@@ -64,7 +64,7 @@ import shutil
 from fractions import Fraction
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cluster import _assign_expr, int_dot_expr, kmeans, quantize_vec_expr
@@ -76,6 +76,7 @@ from .ivf_cells import (
     plain_cells,
     publish_router,
 )
+from .text import bind_row
 
 __all__ = [
     "cell_sizes",
@@ -375,6 +376,21 @@ def pq_ivf_rebalance(
     )
 
 
+def _unit_vectors(vec: Column) -> Column:
+    """``vec`` scaled onto the unit sphere (spherical-kmeans training +
+    cosine-faithful sub-centroid directions); zero vectors pass through
+    unscaled. The norm is bound once per row — referenced inside the
+    per-element lambda it would re-fold the vector for every element."""
+    v = vec.cast("array<double>")
+    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+    return bind_row(
+        nrm,
+        lambda n: F.when(
+            n > F.lit(0.0), F.transform(v, lambda x: x / n)
+        ).otherwise(v),
+    )
+
+
 def ivf_rebalance(
     spark,
     path: str,
@@ -421,13 +437,7 @@ def ivf_rebalance(
     dead = {i for i, c in enumerate(cents) if c is None}
     new_out: dict = {}
 
-    v = F.col(vec_col).cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    # unit sphere: spherical-kmeans training + cosine-faithful
-    # sub-centroid directions; zero vectors pass through unscaled
-    recon = F.when(
-        nrm > F.lit(0.0), F.transform(v, lambda x: x / nrm)
-    ).otherwise(v)
+    recon = _unit_vectors(F.col(vec_col))
 
     def commit_state(new_state, new_dead):
         new_out["state"] = new_state

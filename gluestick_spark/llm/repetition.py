@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens_expr
+from .text import bind_row, tokens_expr
 
 __all__ = ["repetition_stats"]
 
@@ -68,7 +68,7 @@ def repetition_stats(
         ).otherwise(F.array().cast("array<int>"))
         return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
-    grams = F.element_at(F.transform(F.array(toks0), gram_body), 1)
+    grams = bind_row(toks0, gram_body)
     g = d.select("__id__", F.length(F.col("__t__")).alias("__chars__"), F.explode(grams).alias("__g__"))
     per_gram = g.groupBy("__id__", "__g__").agg(
         F.count("*").alias("__c__"), F.first("__chars__").alias("__chars__")

@@ -36,6 +36,7 @@ from .ivf_cells import (
     read_probed,
     write_cells,
 )
+from .text import bind_row
 
 __all__ = [
     "train_pca",
@@ -119,21 +120,31 @@ def sq_quantize_exprs(vec: Column) -> tuple[Column, Column]:
     """The (scale, int8-codes) expression pair behind
     :func:`quantize_embeddings`, exposed so composers (the IVF×SQ index
     build) can ride the quantization alongside other columns in ONE
-    narrow projection instead of a join-back."""
+    narrow projection instead of a join-back.
+
+    The row max ``amax`` is bound ONCE per row
+    (:func:`~gluestick_spark.llm.text.bind_row`): lambda bodies get no
+    common-subexpression elimination, so an ``amax`` referenced inside
+    the per-element ``transform`` would re-fold the whole vector for
+    every element — O(d²) per row. Codes and scales are bit-identical to
+    :func:`quantize_query`."""
     v = _as_double(vec)
     amax = F.array_max(F.transform(v, F.abs))
     scale = amax / F.lit(127.0)
-    q = F.when(
-        amax > 0,
-        F.transform(
-            v,
-            lambda x: F.greatest(
-                F.lit(-127),
-                F.least(F.lit(127), F.floor(x / (amax / 127.0) + 0.5)),
-            ).cast("tinyint"),
-        ),
-    ).otherwise(F.transform(v, lambda x: F.lit(0).cast("tinyint")))
-    return scale, q
+
+    def codes(m: Column) -> Column:
+        return F.when(
+            m > 0,
+            F.transform(
+                v,
+                lambda x: F.greatest(
+                    F.lit(-127),
+                    F.least(F.lit(127), F.floor(x / (m / 127.0) + 0.5)),
+                ).cast("tinyint"),
+            ),
+        ).otherwise(F.transform(v, lambda x: F.lit(0).cast("tinyint")))
+
+    return scale, bind_row(amax, codes)
 
 
 def dequantize_expr(qvec: Column, scale: Column) -> Column:

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gluestick_spark.llm.text import tokens_expr
+from gluestick_spark.llm.text import bind_row, tokens_expr
 
 __all__ = [
     "segment_occurrences",
@@ -84,7 +84,7 @@ def segment_occurrences(
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    segs = F.element_at(F.transform(F.array(toks0), segs_body), 1)
+    segs = bind_row(toks0, segs_body)
     return df.select(
         F.col(id_col), F.posexplode(segs).alias("pos", "seg")
     ).select(id_col, F.col("pos").cast("long").alias("pos"), "seg")

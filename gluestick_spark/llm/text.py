@@ -13,6 +13,7 @@ the DuckDB correctness oracle.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -112,6 +113,17 @@ def tokens_expr(col: Column, normalize: bool = False) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda x: x != "")
 
 
+def bind_row(expr: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(v)`` with ``v`` bound to ``expr`` evaluated ONCE per row.
+
+    Spark does no common-subexpression elimination inside
+    higher-order-function lambda bodies: a per-row value (a tokenization,
+    a row max, a norm) referenced from a per-element lambda is recomputed
+    for every element — O(n²) per row. ``transform`` over the 1-element
+    ``array(expr)`` makes the value a bound lambda variable instead."""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
 def word_count_expr(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens_expr(col))
@@ -164,7 +176,7 @@ def chunk_documents(
             ),
         )
 
-    per_doc = F.element_at(F.transform(F.array(toks), windows), 1)
+    per_doc = bind_row(toks, windows)
     return df.select(
         F.col(id_col), F.explode(per_doc).alias("__c__")
     ).select(
@@ -249,7 +261,7 @@ def lang_id_expr(col: Column) -> Column:
         ).otherwise(F.lit("und"))
 
     # bind the scores array once (lambda variable — no CSE inside lambdas)
-    return F.element_at(F.transform(F.array(scores_arr), pick), 1)
+    return bind_row(scores_arr, pick)
 
 
 def quality_score_expr(col: Column) -> Column:
@@ -460,7 +472,7 @@ def shingles_expr(col: Column, n: int = 3) -> Column:
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i + 1, n))),
         ).otherwise(F.array(F.concat_ws(" ", tk)))
 
-    return F.element_at(F.transform(F.array(toks), per_row), 1)
+    return bind_row(toks, per_row)
 
 
 # Karp-Rabin parameters. Char fold: acc*31+ascii stays < 2^35; word-level
@@ -512,7 +524,7 @@ def rolling_hashes_expr(col: Column, n: int = 3) -> Column:
             F.array(combine(F.coalesce(F.nullif(wh, F.array()), F.array(F.lit(0).cast("long")))))
         )
 
-    return F.element_at(F.transform(F.array(whs), per_row), 1)
+    return bind_row(whs, per_row)
 
 
 def winnow_fingerprint_expr(col: Column, n: int = 3, p: int = 8) -> Column:
@@ -605,7 +617,7 @@ def bpe_pair_counts(
 
     # lambda-bind the token array (chunk_documents pattern) so the split
     # runs once per row, not once per element reference
-    pairs = F.element_at(F.transform(F.array(toks), adjacent), 1)
+    pairs = bind_row(toks, adjacent)
     ex = df.select(F.explode(pairs).alias("p")).select("p.left", "p.right")
     out = ex.groupBy("left", "right").agg(F.count(F.lit(1)).alias("n"))
     if k is not None:
@@ -883,7 +895,7 @@ def bigram_nll(
             ),
         )
 
-    entries = F.element_at(F.transform(F.array(toks), _entries_body), 1)
+    entries = bind_row(toks, _entries_body)
     freq = (
         df.select(F.explode(entries).alias("__e__"))
         .select("__e__.__k__", "__e__.__a__", "__e__.__b__")
@@ -960,12 +972,8 @@ def char_ngrams_expr(col: Column, n: int = 3) -> Column:
         F.length(s) >= n, F.sequence(F.lit(1), F.length(s) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))
     # bind s once as a lambda variable (no CSE inside lambda bodies)
-    return F.element_at(
-        F.transform(
-            F.array(s),
-            lambda sv: F.transform(idx, lambda i: F.substr(sv, i, F.lit(n))),
-        ),
-        1,
+    return bind_row(
+        s, lambda sv: F.transform(idx, lambda i: F.substr(sv, i, F.lit(n)))
     )
 
 
@@ -1074,7 +1082,7 @@ def lang_id_ft_expr(col: Column, model: dict) -> Column:
     grams = hashed_char_ngrams_expr(col, nb, model["char_n"])
     # bind the gram array ONCE as a lambda variable (no CSE inside lambda
     # bodies — the md5 hashing must not re-run per class)
-    return F.element_at(F.transform(F.array(grams), pick), 1)
+    return bind_row(grams, pick)
 
 
 def lang_id_ft(

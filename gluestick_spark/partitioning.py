@@ -24,7 +24,14 @@ __all__ = ["ensure_min_partitions", "salted_join"]
 
 def ensure_min_partitions(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition to ``defaultParallelism`` iff the plan currently has fewer
-    partitions (checked on the physical plan, no job is launched)."""
+    partitions.
+
+    The count comes from ``df.rdd.getNumPartitions()``. On a plan without
+    a shuffle that launches no job. On a plan that contains a shuffle,
+    adaptive execution runs the shuffle stages first to size the final
+    partitions — one job before the caller's own action (measured on
+    ``exact_dedup`` output over the sf0.01 documents, 4 cores: 1 job,
+    0.14–0.32 s warm)."""
     p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df

@@ -349,6 +349,22 @@ def test_ivf_rebalance_plain_family(spark, tmp_dir):
     assert all(c not in sizes2 for c in rep["split"])
 
 
+def test_ivf_rebalance_unit_vectors_fold_norm_once(spark):
+    """The plain family's unit-sphere reconstruction binds the row norm
+    once: referenced inside the per-element lambda it would re-fold the
+    vector for every element (no CSE inside lambda bodies)."""
+    from gluestick_spark.llm.rebalance import _unit_vectors
+
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, None)], "id long, v array<double>"
+    )
+    out = df.select("id", _unit_vectors(F.col("v")).alias("u"))
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.count("aggregate(") == 1
+    got = {r["id"]: r["u"] for r in out.collect()}
+    assert got == {1: [0.6, 0.8], 2: [0.0, 0.0], 3: None}
+
+
 def test_ivf_rebalance_rolls_back_torn_append_first(spark, tmp_dir):
     """ADVICE r13 #1 (high): rebalancing a plain-IVF index with a TORN
     append must roll the unacknowledged batch back at entry — never bake

@@ -3,6 +3,8 @@ search, temperature (alpha) corpus sampling, centroid-distance outliers."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,7 @@ from gluestick_spark.llm.sampling import alpha_sample
 from gluestick_spark.llm.similarity import (
     quantize_embeddings,
     quantize_query,
+    sq_quantize_exprs,
     sq_topk,
 )
 from gluestick_spark.operators.graph import label_propagation
@@ -133,12 +136,41 @@ def test_sq_topk_zero_vectors_score_zero(spark):
 
 
 def test_quantize_query_matches_engine_quantizer(spark):
-    vec = [0.37, -1.92, 0.003, 1.92]
-    e = _emb(spark, [(7, vec)])
-    row = quantize_embeddings(e, "embedding", "vec_id").collect()[0]
-    scale, codes = quantize_query(vec)
-    assert row["scale"] == pytest.approx(scale, abs=0.0)  # bit-identical
-    assert [int(c) for c in row["qvec"]] == codes
+    rng = random.Random(5)
+    vecs = [
+        [0.37, -1.92, 0.003, 1.92],
+        [0.0] * 4,  # zero vector: scale 0, all-zero codes
+        [-0.5, -3.25, -1e-9, -2.0],  # all negative
+        [-2.5, 2.5, 1.25, -0.01],  # both ends of the ±127 clamp
+    ] + [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(200)]
+    e = _emb(spark, list(enumerate(vecs)))
+    rows = {
+        r["vec_id"]: r
+        for r in quantize_embeddings(e, "embedding", "vec_id").collect()
+    }
+    assert len(rows) == len(vecs)
+    for i, vec in enumerate(vecs):
+        scale, codes = quantize_query(vec)
+        assert rows[i]["scale"] == pytest.approx(scale, abs=0.0)  # bit-identical
+        assert [int(c) for c in rows[i]["qvec"]] == codes
+    assert quantize_query(vecs[1]) == (0.0, [0, 0, 0, 0])
+    assert min(quantize_query(vecs[2])[1]) == -127
+    assert quantize_query(vecs[3])[1][:2] == [-127, 127]
+
+
+def test_sq_encoder_folds_row_max_once(spark):
+    # Lambda bodies get no common-subexpression elimination: a row max
+    # referenced inside the per-element lambda is re-folded for every
+    # element (O(d²) per row). It must be bound once, outside it.
+    _, codes = sq_quantize_exprs(F.col("embedding"))
+    plan = (
+        _emb(spark, [(1, [1.0, -2.0])])
+        .select(codes.alias("q"))
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+    )
+    assert plan.count("array_max(") == 1
 
 
 def test_sq_topk_no_shuffle_plan(spark):
