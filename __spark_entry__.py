@@ -62,6 +62,7 @@ from gluestick_spark.llm.text import (  # noqa: E402
     word_count_expr,
 )
 from gluestick_spark.operators.snapshot import merge_id_df  # noqa: E402
+from gluestick_spark.partitioning import pin  # noqa: E402
 
 
 def _prep(spark: SparkSession) -> None:
@@ -5628,7 +5629,7 @@ def q_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # definition, so the scores are identical integers). The word-count
     # frame is vocabulary-sized — pinning it is the same bounded-state
     # call train_unigram_vocab already makes.
-    wc = _word_counts(d, "text").localCheckpoint(eager=False)
+    wc = pin(_word_counts(d, "text"))
     v = _vocab_from_word_counts(wc, _UNI_L, _UNI_MINC, _UNI_SCALE)
     seg = unigram_segment(
         d, "text", "doc_id", v,
@@ -7476,30 +7477,29 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = gopher_quality_flags(d, "text")
     # stage boundary (r15): line_dedup references its input ~6 times
     # (occurrence explode, election join-back, collision path, doc
-    # reattach) — un-checkpointed, each reference re-plans AND re-runs
-    # the mutation + gopher battery (at 100 TB: six corpus passes for
-    # one)
-    kept1 = (
-        g.where(F.col("gopher_pass"))
-        .select("doc_id", "text", "source")
-        .localCheckpoint(eager=False)
+    # reattach) — unpinned, each reference re-plans AND re-runs the
+    # mutation + gopher battery (at 100 TB: six corpus passes for one)
+    kept1 = pin(
+        g.where(F.col("gopher_pass")).select("doc_id", "text", "source")
     )
     ld = line_dedup(kept1, "doc_id", "text")
     # stage boundary: dsir derives its input 4+ times (two gram
     # aggregates, per-doc scoring, the weight-quantile pass) — without a
-    # checkpoint the WHOLE upstream chain (mutation + gopher battery +
-    # line election) re-runs per consumer
-    cleaned = (
+    # pin the WHOLE upstream chain (mutation + gopher battery + line
+    # election) re-runs per consumer
+    cleaned = pin(
         kept1.select("doc_id", "source")
         .join(ld.select("doc_id", "text_clean"), "doc_id")
-        .localCheckpoint(eager=False)
     )
     tgt = cleaned.where(F.col("source") == "src0")
     raw = cleaned.where(F.col("source") != "src0")
-    kept3 = dsir_sample(
-        raw, "doc_id", "text_clean", tgt, n_buckets=_DSIR_B,
-        w_cap_quantile=_CURATION_WCAPQ,
-    ).localCheckpoint(eager=False)  # feeds the embedding join AND the output join
+    # feeds the embedding join AND the output join
+    kept3 = pin(
+        dsir_sample(
+            raw, "doc_id", "text_clean", tgt, n_buckets=_DSIR_B,
+            w_cap_quantile=_CURATION_WCAPQ,
+        )
+    )
     e = _t(spark, sf_dir, "embeddings")
     emb_kept = e.join(kept3.select(F.col("doc_id").alias("vec_id")), "vec_id")
     bal = cluster_balanced_sample(
@@ -7783,13 +7783,9 @@ def q_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: mix_corpora unions filtered copies of each source (its
     # documented no-shuffle shape), so the hashed-gram classifier pass
     # would re-run once per replica branch (3 corpus scans measured) —
-    # the scored frame is (doc_id, double), cheap to pin, and the
-    # classifier plan is single-stage so the lazy checkpoint defers all
-    # work to the first action
-    scored = (
-        classifier_score(d, "text", _CLF_WEIGHTS)
-        .select("doc_id", "clf_score")
-        .localCheckpoint(eager=False)
+    # the scored frame is (doc_id, double), cheap to pin
+    scored = pin(
+        classifier_score(d, "text", _CLF_WEIGHTS).select("doc_id", "clf_score")
     )
     out = mix_corpora(
         {
@@ -9424,17 +9420,19 @@ def q_retrieval_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, qvecs, "embedding", "qid", k=50, nprobe=n_live
     ).withColumnRenamed("vec_id", "doc_id")
     # pinned: fused feeds BOTH the output join and dg's candidate-doc
-    # semi-join below — un-checkpointed, the physical plan duplicates the
-    # whole two-leg retrieval subtree (both legs ran twice; guide §7.2
+    # semi-join below — unpinned, the physical plan duplicates the whole
+    # two-leg retrieval subtree (both legs ran twice; guide §7.2
     # duplicated subtrees). k-bounded: ≤ k rows per eval question.
-    fused = rrf_fuse(
-        [(bm, "bm25r", False), (ann, "score", False)],
-        "doc_id",
-        k_const=60,
-        leg_k=50,
-        k=10,
-        query_col="qid",
-    ).localCheckpoint(eager=False)
+    fused = pin(
+        rrf_fuse(
+            [(bm, "bm25r", False), (ann, "score", False)],
+            "doc_id",
+            k_const=60,
+            leg_k=50,
+            k=10,
+            query_col="qid",
+        )
+    )
     # OVERLAP VERDICT: word-bigram containment of the eval question in
     # each fused candidate — n_hit = |q_bigrams ∩ doc_bigrams| (distinct
     # sets), contaminated iff ≥ half the question's bigrams appear.

@@ -21,7 +21,7 @@ device from public primitives, JVM-side end to end:
    map-side-combined aggregate, ≤ ``m_bits/64`` rows total (1 MiB at the
    default m=2²³), independent of reference size.
 2. **Probe** (:func:`bloom_prefilter`): the stream side takes ``k``
-   broadcast hash joins against the (tiny, lazily checkpointed) word
+   broadcast hash joins against the (tiny, pinned) word
    table — all map-side, zero shuffle of the stream — keeping a row only
    if every probed bit is set.
 
@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..partitioning import pin
 
 __all__ = ["bloom_words", "bloom_prefilter", "should_prefilter"]
 
@@ -108,8 +110,8 @@ def bloom_words(
 ) -> DataFrame:
     """Sparse Bloom bitmap over a long hash column: (``__bw__`` word
     index, ``__bb__`` 64-bit word). ≤ ``m_bits``/64 rows — broadcastable
-    regardless of input size. The frame is lazily ``localCheckpoint``-ed
-    so the ``k`` probe joins of :func:`bloom_prefilter` materialize the
+    regardless of input size. The frame is pinned so the ``k`` probe
+    joins of :func:`bloom_prefilter` materialize the
     reference-side aggregate ONCE, not k times."""
     if m_bits < 64 or m_bits % 64 != 0:
         raise ValueError(f"m_bits must be a positive multiple of 64, got {m_bits}")
@@ -130,7 +132,7 @@ def bloom_words(
         .groupBy("__bw__")
         .agg(F.bit_or("__bit__").alias("__bb__"))
     )
-    return words.localCheckpoint(eager=False)
+    return pin(words)
 
 
 def bloom_prefilter(

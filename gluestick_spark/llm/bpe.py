@@ -18,7 +18,7 @@ vocabulary-bounded) → ``TakeOrderedAndProject`` top-1 → a driver scalar.
 The merge application is a single regexp_replace (lookaround-anchored,
 literal-quoted) over the distinct-word table. The loop is inherently
 sequential (merge i+1's statistics depend on merge i — this is the
-textbook iterative-algorithm case, like k-means); ``localCheckpoint``
+textbook iterative-algorithm case, like k-means); an eager ``pin``
 every few iterations truncates the otherwise linearly growing lineage.
 
 ``apply_bpe`` encodes via the same distinct-word compression: segment
@@ -34,6 +34,8 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..partitioning import pin
 
 __all__ = ["train_bpe", "apply_bpe"]
 
@@ -80,10 +82,11 @@ def train_bpe(
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    words = (
-        _word_counts(df, text_col, lowercase)
-        .select(_syms_expr(F.col("word")).alias("__s__"), "__n__")
-        .localCheckpoint()
+    words = pin(
+        _word_counts(df, text_col, lowercase).select(
+            _syms_expr(F.col("word")).alias("__s__"), "__n__"
+        ),
+        eager=True,
     )
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
@@ -121,7 +124,7 @@ def train_bpe(
             "__s__", F.regexp_replace(F.col("__s__"), pat, repl)
         )
         if (i + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint()
+            words = pin(words, eager=True)
     return merges
 
 

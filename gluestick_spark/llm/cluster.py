@@ -42,7 +42,7 @@ by Cauchy-Schwarz (``dot² ≤ xx_a·xx_b``), giving
 embeddings at S=1000 (margin ~900×), loud overflow otherwise.
 
 Scale posture (100 TB): the classic MLlib shape — points are
-quantized once and persisted; each iteration is ONE map-side-combined
+quantized once and pinned; each iteration is ONE map-side-combined
 aggregate over the exploded vectors (``posexplode`` → ``groupBy(cid,
 i)`` → count and sum: k·d small rows collected to the driver, the
 iterative-algorithm state, like any MLlib driver loop). The narrow
@@ -86,6 +86,7 @@ from gluestick_spark.llm.ivf_cells import (
     write_cells,
 )
 from gluestick_spark.llm.sketch import kmv_hash_expr
+from gluestick_spark.partitioning import pin
 
 __all__ = [
     "quantize_vec_expr",
@@ -368,32 +369,29 @@ def kmeans(
     """
     if k < 1 or iters < 0:
         raise ValueError("k >= 1 and iters >= 0 required")
-    pts = _prepare(df, vec_col, id_col, scale).persist()
-    try:
-        seed_rows = (
-            pts.withColumn("__h__", kmv_hash_expr(F.col("__id__")))
-            .orderBy("__h__", "__id__")
-            .limit(k)
-            .collect()
-        )
-        if not seed_rows:
-            out = pts.select(
-                F.col("__id__").alias(id_col), F.lit(0).alias("cid")
-            ).where(F.lit(False))
-            return (out, []) if return_state else out
-        cents = [(list(r["__q__"]), 1) for r in seed_rows]
-        dim = len(cents[0][0])
+    # the seed collect, every update and the returned assignment read it
+    pts = pin(_prepare(df, vec_col, id_col, scale))
+    seed_rows = (
+        pts.withColumn("__h__", kmv_hash_expr(F.col("__id__")))
+        .orderBy("__h__", "__id__")
+        .limit(k)
+        .collect()
+    )
+    if not seed_rows:
+        out = pts.select(
+            F.col("__id__").alias(id_col), F.lit(0).alias("cid")
+        ).where(F.lit(False))
+        return (out, []) if return_state else out
+    cents = [(list(r["__q__"]), 1) for r in seed_rows]
+    dim = len(cents[0][0])
 
-        for _ in range(iters):
-            cents = _update_centroids(_assign_df(pts, cents, assign), cents, dim)
+    for _ in range(iters):
+        cents = _update_centroids(_assign_df(pts, cents, assign), cents, dim)
 
-        out = _assign_df(pts, cents, assign).select(
-            F.col("__id__").alias(id_col), "cid"
-        )
-        return (out, cents) if return_state else out
-    finally:
-        # lazy unpersist: blocking=False keeps the returned plan usable
-        pts.unpersist(False)
+    out = _assign_df(pts, cents, assign).select(
+        F.col("__id__").alias(id_col), "cid"
+    )
+    return (out, cents) if return_state else out
 
 
 def cluster_balanced_sample(

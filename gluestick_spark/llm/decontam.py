@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
 from .bloom import bloom_prefilter, bloom_words, should_prefilter
 from .text import bind_row, tokens_expr
 
@@ -523,13 +524,10 @@ def corpus_drift_matrix(
     grams = df.select(
         group_col, F.explode(ngrams_expr(F.col(text_col), n)).alias("__g__")
     )
-    # pin the S-row sketch frame (r16): it feeds BOTH sides of the pair
-    # join — un-pinned, the corpus gram explode + sketch aggregate ran
-    # twice in one plan (S·k longs; lazy localCheckpoint, the bounded-
-    # state pattern)
-    sk = kmv_sketch(grams, "__g__", k, [group_col]).localCheckpoint(
-        eager=False
-    )
+    # pin the S-row sketch frame (S·k longs): it feeds BOTH sides of the
+    # pair join — un-pinned, the corpus gram explode + sketch aggregate
+    # ran twice in one plan
+    sk = pin(kmv_sketch(grams, "__g__", k, [group_col]))
     a = sk.select(F.col(group_col).alias("src_a"), F.col("kmv").alias("__ka__"))
     b = sk.select(F.col(group_col).alias("src_b"), F.col("kmv").alias("__kb__"))
     pairs = a.join(F.broadcast(b), F.col("src_a") < F.col("src_b"))

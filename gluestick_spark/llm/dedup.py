@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..partitioning import ensure_min_partitions as _parallelize
+from ..partitioning import pin
 from .text import bind_row, shingles_expr, tokens_expr
 
 __all__ = [
@@ -396,13 +397,11 @@ def lsh_recall_audit(
     from .sampling import hash_sample
 
     s = hash_sample(df, id_col, sample_rate, seed)
-    sh = _shingle_sets(s, text_col, id_col, shingle_n, "a").localCheckpoint(
-        eager=False
-    )
+    sh = pin(_shingle_sets(s, text_col, id_col, shingle_n, "a"))
     shb = sh.select(
         F.col("a").alias("b"), F.col("__sh_a__").alias("__sh_b__")
     )
-    exact = (
+    exact = pin(
         sh.crossJoin(shb)
         .where(F.col("a") < F.col("b"))
         .where(
@@ -410,7 +409,6 @@ def lsh_recall_audit(
             >= F.lit(float(threshold))
         )
         .select("a", "b")
-        .localCheckpoint(eager=False)
     )
     cand = minhash_lsh_candidates(
         s, text_col, id_col, num_perm, bands, shingle_n, max_bucket
@@ -466,8 +464,8 @@ def containment_pairs(
 
     Scale posture (100 TB): explode → ONE doc-frequency aggregate
     (map-side combined) → frequency-capped inverted-index self-join
-    keyed by shingle → two keyed aggregates. The gram frame is
-    persisted once (reused by the DF count and the join); no all-pairs
+    keyed by shingle → two keyed aggregates. The capped gram frame is
+    pinned once (reused by the size count and both join sides); no all-pairs
     stage exists at any step.
     """
     if not 0 < tau_pct <= 100:
@@ -477,9 +475,8 @@ def containment_pairs(
     # grams is deliberately NOT materialized: it is evaluated twice (the
     # DF aggregate and the rare join) — at corpus scale recomputing the
     # shingle explosion twice is cheaper than storing it (several× the
-    # corpus in exploded strings). rare IS lazily localCheckpointed: it
-    # is post-cap (bounded), feeds three downstream uses, and a plain
-    # persist would be voided by any unpersist-before-return.
+    # corpus in exploded strings). rare IS pinned: it is post-cap
+    # (bounded) and feeds three downstream uses.
     grams = _parallelize(df, id_col).select(
         F.col(id_col).alias("src"),
         F.explode(
@@ -487,10 +484,9 @@ def containment_pairs(
         ).alias("__g__"),
     )
     gdf = grams.groupBy("__g__").agg(F.count("*").alias("__df__"))
-    rare = (
+    rare = pin(
         grams.join(gdf.where(F.col("__df__") <= max_doc_freq), "__g__")
         .select("src", "__g__")
-        .localCheckpoint(eager=False)
     )
     sizes = rare.groupBy("src").agg(F.count("*").alias("n_src"))
     common = (
@@ -545,9 +541,11 @@ def minhash_near_dup_pairs(
     # edge pattern — because the verify below references the candidate
     # set three times (two survivor semi-joins + the pair join) and the
     # signature/bucket chain must run once, not three times.
-    cand = minhash_lsh_candidates(
-        df, text_col, id_col, num_perm, bands, shingle_n, max_bucket
-    ).localCheckpoint(eager=False)
+    cand = pin(
+        minhash_lsh_candidates(
+            df, text_col, id_col, num_perm, bands, shingle_n, max_bucket
+        )
+    )
     # Exact-Jaccard verify: shingle once per candidate DOCUMENT per side
     # (corpus semi-joined to the pair ids), then hash-join the arrays to
     # the pairs. This dominates both alternatives in every regime:
@@ -635,7 +633,7 @@ the graph with driver-side union-find instead of the distributed star
 loop. The same size-adaptive strategy switch as a broadcast join: a
 verified near-dup pair graph is orders of magnitude smaller than its
 corpus, and when it fits comfortably on the driver (64k edges ≈ 1 MB),
-every distributed round — two aggregates, two joins, a checkpoint and a
+every distributed round — two aggregates, two joins, a pin and a
 convergence check of SUB-SECOND data — is pure scheduling floor (and at
 cluster scale, pure driver round-trips). Above the threshold the
 O(log n)-round star contraction runs unchanged. Both paths produce the
@@ -689,8 +687,8 @@ def connected_components(
     rounds regardless of diameter**, so a pathological edit-chain corpus
     can't blow the iteration budget. Convergence = the edge set reaching a
     fixpoint (a star forest centered on component minima), checked with two
-    cheap count jobs per round over the (shrinking) edge set;
-    ``localCheckpoint`` truncates lineage so plans stay flat across rounds.
+    cheap count jobs per round over the (shrinking) edge set; each
+    round's ``pin`` truncates lineage so plans stay flat across rounds.
 
     Graphs at or under :data:`_CC_LOCAL_MAX_EDGES` distinct edges skip
     the loop entirely: the collected edge list (bounded, ~1 MB) goes
@@ -699,17 +697,14 @@ def connected_components(
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # LAZY pin + one bounded limit-collect replaces the r15 eager
-    # checkpoint + count + collect (3 scheduled jobs → 1 for every graph
-    # at or under the local bound — the common case; the collect is
-    # bounded to _CC_LOCAL_MAX_EDGES+1 rows either way, so an oversized
-    # graph wastes at most ~1 MB of driver transfer before taking the
-    # distributed path)
-    edges = (
+    # pin + one bounded limit-collect: one job for every graph at or
+    # under the local bound (the common case); the collect is bounded to
+    # _CC_LOCAL_MAX_EDGES+1 rows, so an oversized graph wastes at most
+    # ~1 MB of driver transfer before taking the distributed path
+    edges = pin(
         pairs.where(F.col(a_col) != F.col(b_col))
         .select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     probe = edges.limit(_CC_LOCAL_MAX_EDGES + 1).collect()
     if len(probe) <= _CC_LOCAL_MAX_EDGES:
@@ -728,7 +723,7 @@ def connected_components(
             sorted(labels.items()), schema
         )
     n_edges = edges.count()
-    # Nodes come from the CHECKPOINTED edge set, not from `pairs`: the pairs
+    # Nodes come from the PINNED edge set, not from `pairs`: the pairs
     # frame is typically an expensive un-cached plan (LSH + verify), and
     # reading it a second time would re-run that whole pipeline when the
     # result is evaluated. Self-pair-only nodes (a == b) carry no edge and
@@ -739,10 +734,8 @@ def connected_components(
         .distinct()
     )
     for _ in range(max_iter):
-        # lazy pin: the convergence count right below materializes it
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=False
-        )
+        # the convergence count right below materializes the pin
+        new_edges = pin(_small_star(_large_star(edges)))
         n_new = new_edges.count()
         # Sets are distinct-deduped: equal counts + empty (new − old) ⇒ equal.
         if n_new == n_edges and new_edges.exceptAll(edges).isEmpty():
@@ -1150,7 +1143,7 @@ def _cross_pairs_core(
         .distinct()
     )
     if new_side[0] == "text" or ref_side[0] == "text":
-        cand = cand.localCheckpoint(eager=False)
+        cand = pin(cand)
 
     def _attach(j: DataFrame, side, key: str) -> DataFrame:
         if side[0] == "shingles":

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import ensure_min_partitions as _parallelize
+from ..partitioning import pin
 
 __all__ = ["edit_distance_pairs"]
 
@@ -81,19 +82,17 @@ def edit_distance_pairs(
     )
 
     # 1. exact-group compression: one row per distinct (text, blocks…).
-    # localCheckpoint: this frame is DISTINCT-STRINGS scale (small next to
-    # the corpus) and feeds every later stage — the within-group pairs,
-    # the gram/frequency/prefix chain, and both id joins. Without it each
+    # Pinned: this frame is DISTINCT-STRINGS scale (small next to the
+    # corpus) and feeds every later stage — the within-group pairs, the
+    # gram/frequency/prefix chain, and both id joins. Without it each
     # consumer re-runs the corpus aggregate (measured ~2.4× the whole
     # operator's wall time at sf0.1).
-    # LAZY pin (r16): under AQE the checkpoint call still executes the
-    # aggregate's upstream stages, but the final result stage is no
-    # longer a separately scheduled call-time job — the first consumer
-    # materializes it and every later stage reuses the pin
-    groups = base.groupBy("__t__", *blocks).agg(
-        F.min("__id__").alias("__gid__"),
-        F.collect_list("__id__").alias("__ids__"),
-    ).localCheckpoint(eager=False)
+    groups = pin(
+        base.groupBy("__t__", *blocks).agg(
+            F.min("__id__").alias("__gid__"),
+            F.collect_list("__id__").alias("__ids__"),
+        )
+    )
 
     # distance-0 pairs inside each duplicate group: all member pairs, no
     # Levenshtein. Output-bound (these rows ARE the result).
@@ -150,7 +149,7 @@ def edit_distance_pairs(
             F.col("__g__.pos").alias("__pos__"),
         )
     )
-    # `groups` is a checkpoint of an AQE-coalesced aggregate (1-2
+    # `groups` is a pin of an AQE-coalesced aggregate (1-2
     # partitions locally), so this whole gram chain — explode, frequency
     # join, prefix ranking — would otherwise run nearly serial. Keying
     # the respread on __gid__ satisfies the prefix window's required
@@ -168,14 +167,13 @@ def edit_distance_pairs(
         F.col("__gf__").asc(), F.col("__gram__").asc(), F.col("__pos__").asc()
     )
     # prefix is (q·k+1) rows per distinct string and feeds both join
-    # sides; checkpoint so the gram/frequency/rank chain runs once
-    # (LAZY — same rationale as `groups` above)
-    prefix = (
+    # sides; pin it so the gram/frequency/rank chain runs once
+    prefix = pin(
         grams.join(F.broadcast(freq), "__gram__")
         .withColumn("__rn__", F.row_number().over(wrank))
         .where(F.col("__rn__") <= q * max_dist + 1)
         .select("__gid__", "__lb__", *blocks, "__gram__", "__pos__")
-    ).localCheckpoint(eager=False)
+    )
     # The candidate join EXPLODES (each shared prefix gram emits a pair):
     # its input bytes are prefix-sized but its output is candidate-sized,
     # so AQE — which sizes post-shuffle partitions by INPUT bytes —

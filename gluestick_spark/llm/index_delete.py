@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..fsio import heal_swap, swap_dir
+from ..partitioning import pin
 from .index_commit import (
     PQ_IVF,
     ROUTER,
@@ -195,9 +196,7 @@ def vacuum_deleted(
     t = tombstones(spark, path, id_col)
     if t is None:
         return report
-    # reused per rewrite group; kilobytes. LAZY (r16): the `affected`
-    # collect right below materializes it — one fewer scheduled job
-    t = t.localCheckpoint(eager=False)
+    t = pin(t)  # reused per rewrite group; kilobytes
     affected = sorted(
         r[part_col]
         for r in spark.read.parquet(root)

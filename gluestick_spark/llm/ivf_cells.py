@@ -46,6 +46,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
 from .index_commit import (
     PQ_IVF,
     SQ_IVF,
@@ -247,9 +248,7 @@ def batch_topk(
         return F.col(r.col).asc() if r.ascending else F.col(r.col).desc()
 
     part = cells.part
-    qx = queries.select(*carry, F.explode(probes).alias(part)).localCheckpoint(
-        eager=False
-    )
+    qx = pin(queries.select(*carry, F.explode(probes).alias(part)))
     probed = sorted({r[part] for r in qx.select(part).distinct().collect()})
     if not probed:
         return empty_topk(

@@ -75,6 +75,7 @@ from gluestick_spark.llm.ivf_cells import (
     read_probed,
     write_cells,
 )
+from gluestick_spark.partitioning import pin
 
 __all__ = [
     "train_pq",
@@ -734,9 +735,7 @@ def pq_ivf_topk_indexed_batch(
         F.col(query_id_col).alias("__qid__"),
         quantize_vec_expr(F.col(vec_col), router.scale).alias("__q__"),
     ).withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
-    # lazy: materialized transitively by the probed-cid collect —
-    # an eager checkpoint here costs an extra scheduled job per call
-    qprep = qprep.localCheckpoint(eager=False)  # feeds probes, ADC build, rerank
+    qprep = pin(qprep)  # feeds probes, ADC build, rerank
 
     # per-query ADC tables, built by ONE broadcast join against the
     # (m × n_codes)-row codebook frame — the adc_table arithmetic

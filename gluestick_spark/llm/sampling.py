@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
 from .sketch import kmv_hash_expr
 
 __all__ = [
@@ -671,17 +672,15 @@ def dsir_sample(
             "__b__ int, __wppm__ long",
         )
     else:
-        nt = (
+        nt = pin(
             grams_of(df_target)
             .groupBy("__b__")
             .agg(F.count(F.lit(1)).alias("__nt__"))
-            .localCheckpoint(eager=False)
         )
-        nr = (
+        nr = pin(
             grams_of(df_raw)
             .groupBy("__b__")
             .agg(F.count(F.lit(1)).alias("__nr__"))
-            .localCheckpoint(eager=False)
         )
         t_tot = nt.agg(
             (F.coalesce(F.sum("__nt__"), F.lit(0)) + F.lit(n_buckets)).alias("__t_tot__")
@@ -728,7 +727,7 @@ def dsir_sample(
     )
     # NOT pinned: scored has two consumers (the cap aggregate and the
     # output), so the gram explode + literal-weight join re-runs once —
-    # one extra parallel pass, strictly cheaper than a localCheckpoint,
+    # one extra parallel pass, strictly cheaper than a pin,
     # which under AQE executes every upstream stage serially at call
     # time. With the weight table literal the duplicated subtree is ONLY
     # that pass (it was the full 12-scan bucket-statistics tree before).
@@ -845,8 +844,8 @@ def unimax_sample(
     undershoots by less than one document's weight). Per-group totals
     then satisfy ``quota − max_doc_weight < delivered ≤ quota``.
 
-    Scale shape: one map-side-combined count aggregate → lazily
-    checkpointed (one row per source) → window + two scalar aggregates
+    Scale shape: one map-side-combined count aggregate → pinned
+    (one row per source) → window + two scalar aggregates
     over that tiny frame → quota table broadcast onto the corpus → ONE
     keyed shuffle (rank within source) → explode. Nothing driver-side.
     """
@@ -861,7 +860,7 @@ def unimax_sample(
         if weight_col is not None
         else F.count(F.lit(1))
     )
-    counts = (
+    counts = pin(
         df.groupBy(group_col)
         .agg(unit.alias("__n__"))
         .select(
@@ -871,7 +870,6 @@ def unimax_sample(
             .cast("long")
             .alias("__cap__"),
         )
-        .localCheckpoint(eager=False)
     )
     wo = Window.orderBy(F.col("__cap__").asc(), F.col(group_col).asc())
     frame = counts.select(

@@ -27,6 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
 from .ivf_cells import (
     Rank,
     append_cells,
@@ -724,9 +725,7 @@ def ann_recall_audit(
     sample = (
         hash_sample(df, id_col, corpus_rate, seed) if corpus_rate < 1.0 else df
     )
-    sample = sample.select(F.col(id_col), F.col(vec_col)).localCheckpoint(
-        eager=False
-    )
+    sample = pin(sample.select(F.col(id_col), F.col(vec_col)))
     qrows = (
         sample.orderBy(_keyed_hash(F.col(id_col), seed + "|q"), F.col(id_col))
         .limit(n_queries)
@@ -774,35 +773,38 @@ def ann_recall_audit(
         )
 
     # shared trained state (train once, serve Q queries)
-    enc_sq = quantize_embeddings(
-        sample, vec_col, id_col, out_col="__qv__", scale_col="__sc__"
-    ).localCheckpoint(eager=False)
+    enc_sq = pin(
+        quantize_embeddings(
+            sample, vec_col, id_col, out_col="__qv__", scale_col="__sc__"
+        )
+    )
     _, router = kmeans(
         sample, vec_col, id_col, k=n_clusters, iters=iters, scale=scale,
         return_state=True,
     )
     pre = (
-        sample.withColumn("__q__", quantize_vec_expr(F.col(vec_col), scale))
-        .withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
-        .withColumn("cid", _assign_expr(router))
-        .localCheckpoint(eager=False)
+        pin(
+            sample.withColumn("__q__", quantize_vec_expr(F.col(vec_col), scale))
+            .withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
+            .withColumn("cid", _assign_expr(router))
+        )
         if router
         else None
     )
     books = train_pq(sample, vec_col, id_col, m=pq_m, k=pq_codes, iters=iters, scale=scale)
-    enc_pq = encode_pq(sample, vec_col, id_col, books, scale).localCheckpoint(
-        eager=False
-    )
+    enc_pq = pin(encode_pq(sample, vec_col, id_col, books, scale))
     enc_pqr = None
     if rerank is not None:
         _check_rerank(rerank, k)
-        enc_pqr = enc_pq.join(
-            sample.select(
-                F.col(id_col),
-                quantize_vec_expr(F.col(vec_col), scale).alias("qvec"),
-            ),
-            id_col,
-        ).localCheckpoint(eager=False)
+        enc_pqr = pin(
+            enc_pq.join(
+                sample.select(
+                    F.col(id_col),
+                    quantize_vec_expr(F.col(vec_col), scale).alias("qvec"),
+                ),
+                id_col,
+            )
+        )
 
     types = ["sq", "sq_ivf", "pq"] + (["pq_r"] if rerank is not None else [])
     hits = {t: [0, 0] for t in types}  # [n_exact, n_hit]

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..partitioning import pin
+
 __all__ = [
     "kmv_hash_expr",
     "kmv_distinct",
@@ -223,8 +225,8 @@ def heavy_hitters(
     summary is genuinely outside Catalyst's aggregate model — the
     JVM-side alternative (full groupBy count) shuffles the entire
     cardinality, which is exactly what this operator avoids at 100 TB.
-    The summary is ``localCheckpoint``-ed (capacity × partitions rows,
-    tiny) so its two consumers — the candidate join and the error-bound
+    The summary is pinned eagerly (capacity × partitions rows, tiny) so
+    its two consumers — the candidate join and the error-bound
     aggregate — cost ONE corpus scan, not two.
     """
     if k < 1 or capacity < 1:
@@ -281,9 +283,10 @@ def heavy_hitters(
             }
         )
 
-    summary = terms.mapInPandas(
-        _space_saving, "__t__ string, __err__ long"
-    ).localCheckpoint()
+    summary = pin(
+        terms.mapInPandas(_space_saving, "__t__ string, __err__ long"),
+        eager=True,
+    )
     candidates = summary.where(F.col("__t__").isNotNull()).select("__t__").distinct()
     bound_df = summary.agg(
         F.coalesce(F.sum("__err__"), F.lit(0)).alias("__bound__")

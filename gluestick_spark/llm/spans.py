@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gluestick_spark.llm.text import bind_row, tokens_expr
+from gluestick_spark.partitioning import pin
 
 __all__ = [
     "segment_occurrences",
@@ -195,15 +196,20 @@ def line_dedup(
 
     Election staging (VERDICT r15 #4): the per-hash election table —
     distinct-line scale, NO text (hash, nd, first, n_occ) — is pinned
-    ONCE (lazy localCheckpoint, the connected-components edge pattern;
-    not fault-tolerant, the repo-documented localCheckpoint trade-off)
+    ONCE (``partitioning.pin``, the connected-components edge pattern)
     and the collision branch is gated on a driver-side count over the
     pinned frame (the union-find/dsir size-adaptive strategy switch):
     with zero colliding hashes — every corpus until ~2^32 distinct
     lines, and every oracle SF — the exact-path subtree is never even
     planned, so the corpus is scanned exactly 3× (election, join-back,
     reassembly) instead of ~7×. When collisions exist the exact path
-    runs broadcast-filtered as before (identical decisions)."""
+    runs broadcast-filtered as before (identical decisions).
+
+    Call-time jobs: NOT lazy. The collision gate is a ``count()`` over
+    the pinned election table (``n_coll``), run when this function is
+    called: it evaluates the whole upstream chain of ``df`` through the
+    election aggregate and materializes the pin, which the returned
+    plan then reads."""
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
     occ = df.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
@@ -226,7 +232,7 @@ def line_dedup(
             F.count(F.lit(1)).alias("n_occ"),
         )
 
-    per_hash = (
+    per_hash = pin(
         _per_line(judged)
         .groupBy("__lh__")
         .agg(
@@ -234,7 +240,6 @@ def line_dedup(
             F.min("first").alias("first"),
             F.sum("n_occ").alias("n_occ"),
         )
-        .localCheckpoint(eager=False)
     )
     # one bounded driver action over the PINNED election table decides
     # whether the exact collision branch exists at all (materializes the
@@ -334,23 +339,21 @@ def substring_overlap_spans(
 
     Cost is ∝ corpus tokens (window projection) + ∝ matches (verify and
     merge touch only candidate positions). The corpus is tokenized ONCE:
-    the ``(id, tokens)`` relation is localCheckpointed and shared by the
+    the ``(id, tokens)`` relation is pinned and shared by the
     window projection AND the verify join-back (VERDICT r9 #3 — the
-    naive lineage re-read the source per consumer), at the documented
-    localCheckpoint trade-off (executor-local materialization ∝ corpus
-    tokens, not fault-tolerant; for recurring runs the persisted
-    :func:`materialize_substring_index` layout is the durable
-    amortization). DuckDB replays all four stages at fixed k
+    naive lineage re-read the source per consumer); the pin holds
+    executor-local blocks ∝ corpus tokens, and for recurring runs the
+    persisted :func:`materialize_substring_index` layout is the durable
+    amortization. DuckDB replays all four stages at fixed k
     (``__spark_entry__.py:q_substring_spans``)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     if max_occurrences < 2:
         raise ValueError(f"max_occurrences must be >= 2, got {max_occurrences}")
     toks = tokens_expr(F.col(text_col))
-    docs = (
+    docs = pin(
         df.select(F.col(id_col), toks.alias("__toks__"))
         .where(F.size("__toks__") >= k)
-        .localCheckpoint(eager=False)
     )
     return _spans_from_docs(docs, id_col, k, max_occurrences)
 
@@ -359,7 +362,7 @@ def _spans_from_docs(
     docs: DataFrame, id_col: str, k: int, max_occurrences: int
 ) -> DataFrame:
     """Span detection over a PRE-TOKENIZED ``(id_col, __toks__)``
-    relation (already filtered to >= k tokens and shared/checkpointed by
+    relation (already filtered to >= k tokens and shared/pinned by
     the caller) — stages 1-4 of :func:`substring_overlap_spans`. Every
     reference to ``docs`` below reuses the caller's materialization;
     this function itself never touches the source."""
@@ -473,7 +476,7 @@ def substring_dedup(
     of a passage another doc keeps, the same granularity the
     rolling-window construction detects at.
 
-    Plan: the corpus is tokenized ONCE — a single localCheckpointed
+    Plan: the corpus is tokenized ONCE — a single pinned
     ``(id, tokens)`` relation feeds span detection, the span-string
     election, and the cut (VERDICT r9 #3: the naive composition
     re-tokenized the source per consumer, a 15-scan plan; now the final
@@ -490,9 +493,7 @@ def substring_dedup(
     if max_occurrences < 2:
         raise ValueError(f"max_occurrences must be >= 2, got {max_occurrences}")
     toks = tokens_expr(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("__toks__")).localCheckpoint(
-        eager=False
-    )
+    docs = pin(df.select(F.col(id_col), toks.alias("__toks__")))
     spans = _spans_from_docs(
         docs.where(F.size("__toks__") >= k), id_col, k, max_occurrences
     )

@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
+
 __all__ = [
     "tokens_expr",
     "normalize_text_expr",
@@ -645,19 +647,16 @@ def collocations(
     is IEEE-identical everywhere.
 
     Plan: one tokenize+explode+hash-aggregate builds the pair table
-    (shuffle rows ∝ distinct pairs, never occurrences — persisted: it is
+    (shuffle rows ∝ distinct pairs, never occurrences — pinned: it is
     vocabulary-bounded and read three times for the margins), two
     vocabulary-sized margin aggregates join back, the 1-row total rides
     a broadcast crossJoin (never a global window). Top-k is
     TakeOrderedAndProject.
     """
-    # lazy localCheckpoint: pairs feeds FOUR consumers (both margins, the
-    # total, and the output row set); a persist followed by the
-    # unpersist-before-return would be voided on the lazy plan and the
-    # corpus-scan pair aggregation would run four times
-    pairs = bpe_pair_counts(df, text_col, lowercase=lowercase).localCheckpoint(
-        eager=False
-    )
+    # pairs feeds FOUR consumers (both margins, the total, and the
+    # output row set); unpinned, the corpus-scan pair aggregation would
+    # run four times
+    pairs = pin(bpe_pair_counts(df, text_col, lowercase=lowercase))
     left_tot = pairs.groupBy("left").agg(F.sum("n").alias("__lt__"))
     right_tot = pairs.groupBy("right").agg(F.sum("n").alias("__rt__"))
     total = pairs.agg(F.sum("n").alias("__N__"))
@@ -781,8 +780,8 @@ def unigram_nll(
     (id, ``nll`` double, ``n_tokens``); empty docs get NULL nll.
 
     Plan: the frequency table is computed by ONE tokenize pass and
-    PINNED (lazy localCheckpoint — it is vocabulary-sized: one row per
-    distinct token, executor-resident, no driver bound), so its two
+    PINNED (it is vocabulary-sized: one row per distinct token,
+    executor-resident, no driver bound), so its two
     consumers (the corpus-scalar aggregate and the per-doc scoring
     join) never re-run the tokenize; the scoring side tokenizes once
     more. Two corpus passes total — the lower bound for
@@ -792,11 +791,7 @@ def unigram_nll(
     """
     toks = F.transform(tokens_expr(F.col(text_col)), F.lower)
     ex = df.select(F.col(id_col).alias("__id__"), F.explode(toks).alias("token"))
-    freq = (
-        ex.groupBy("token")
-        .agg(F.count("*").alias("__c__"))
-        .localCheckpoint(eager=False)
-    )
+    freq = pin(ex.groupBy("token").agg(F.count("*").alias("__c__")))
     totals = freq.agg(
         F.sum("__c__").alias("__T__"), F.count("*").alias("__V__")
     )
@@ -846,8 +841,8 @@ def bigram_nll(
     frequency tables are built by ONE fused corpus pass — each document
     emits a discriminated union (kind 0 = token, kind 1 = adjacent
     pair) from a single bound tokenization, one explode, one keyed
-    aggregate — and that combined table is PINNED (lazy localCheckpoint
-    — model-table-sized: one row per distinct token + distinct pair),
+    aggregate — and that combined table is PINNED (model-table-sized:
+    one row per distinct token + distinct pair),
     so the V scalar and both scoring joins read the pin instead of
     re-tokenizing. The per-occurrence scoring explode stays corpus-
     scale and NOT pinned (storing it would cost several× the corpus).
@@ -896,12 +891,11 @@ def bigram_nll(
         )
 
     entries = bind_row(toks, _entries_body)
-    freq = (
+    freq = pin(
         df.select(F.explode(entries).alias("__e__"))
         .select("__e__.__k__", "__e__.__a__", "__e__.__b__")
         .groupBy("__k__", "__a__", "__b__")
         .agg(F.count(F.lit(1)).alias("__c__"))
-        .localCheckpoint(eager=False)
     )
     uni = freq.where(F.col("__k__") == 0).select(
         F.col("__a__").alias("prev"), F.col("__c__").alias("__c1__")

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
 from .text import tokens_expr
 
 __all__ = ["subword_vocab", "unigram_segment", "train_unigram_vocab"]
@@ -222,9 +223,9 @@ def unigram_segment(
     word counts for the vocabulary (``subword_vocab``'s input) pass the
     distinct words here so the DP input never re-derives them from the
     corpus — the train_pq shared-schedule device. When omitted, the
-    distinct-word frame is derived from ``df`` and pinned (lazy
-    localCheckpoint — vocabulary-sized; its two consumers, the DP input
-    and the long-word fallback, would otherwise each re-run the corpus
+    distinct-word frame is derived from ``df`` and pinned
+    (vocabulary-sized; its two consumers, the DP input and the
+    long-word fallback, would otherwise each re-run the corpus
     tokenize+distinct)."""
     if max_piece_len < 1 or max_word_len < 1:
         raise ValueError("max_piece_len and max_word_len must be >= 1")
@@ -238,9 +239,7 @@ def unigram_segment(
     if words is not None:
         dw = words.select(F.col(words.columns[0]).alias("__w__"))
     else:
-        dw = (
-            inst.select("__w__").distinct().localCheckpoint(eager=False)
-        )
+        dw = pin(inst.select("__w__").distinct())
     short = dw.where(F.length("__w__") <= W)
     long_ = dw.where(F.length("__w__") > W).select(
         "__w__",
@@ -342,11 +341,10 @@ def train_unigram_vocab(
     # ONE corpus tokenize: the word-count frame feeds the initial
     # vocabulary, the E-step's distinct-word input AND the M-step's
     # usage weights. It is vocabulary-sized (distinct words), so pinning
-    # it is the same bounded-state call the per-iteration vocabulary
-    # checkpoint below already makes; without the pin each of its three
-    # consumers re-runs the corpus aggregate.
-    # lazy pin (r16): the first E-step's vocab broadcast materializes it
-    w = _word_counts(df, text_col).localCheckpoint(eager=False)
+    # it is the same bounded-state call the per-iteration vocabulary pin
+    # below already makes; without the pin each of its three consumers
+    # re-runs the corpus aggregate.
+    w = pin(_word_counts(df, text_col))
     v = _vocab_from_word_counts(w, max_piece_len, min_count, scale)
     chars = v.where(F.length("piece") == 1).select("piece")
     for _ in range(iters):
@@ -385,10 +383,5 @@ def train_unigram_vocab(
                 f"greatest(CAST(__u__ AS BIGINT), CAST(1 AS BIGINT)))"
             ).alias("score"),
         )
-        # vocabulary-sized lineage truncation; LAZY since r16 — the next
-        # iteration's vocab broadcast (or the caller's first action)
-        # materializes it, so the eager form's one extra scheduled job
-        # per iteration disappears (the retrieval probe-checkpoint
-        # lesson)
-        v = v.localCheckpoint(eager=False)
+        v = pin(v)  # vocabulary-sized lineage truncation
     return v

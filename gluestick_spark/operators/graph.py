@@ -30,12 +30,9 @@ Scale posture (100 TB): the GraphX/Pregel shuffle pattern — each
 iteration is one hash join (ranks ⋈ edges on src, both sides keyed the
 same so AQE reuses the exchange) and one map-side-combined groupBy on
 dst; shuffle volume ∝ |E| per iteration, never |V|·|E|. Edges are
-derived once and lazily localCheckpointed — a plain persist would be
-voided by the unpersist needed before returning the (lazy) result
-plan, silently re-deriving the graph every round; the trade-off is
-that localCheckpoint is not fault-tolerant (an executor loss forces a
-job restart) — swap for a reliable checkpoint dir on long multi-hour
-runs. Iterations is a FIXED small constant (the
+derived once and pinned (``partitioning.pin``, which states the policy
+and its fault-tolerance trade-off; a later reliable checkpoint mode
+would attach there). Iterations is a FIXED small constant (the
 driver holds no per-node state, unlike kmeans — state stays
 distributed in the ranks frame).
 """
@@ -45,7 +42,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import pin
+
 __all__ = ["hits", "label_propagation", "pagerank", "triangle_count"]
+
+
+def _edge_frames(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """The pinned simple directed edge set (``__src__``, ``__dst__``; null
+    endpoints and duplicates dropped) and its pinned ``node`` set, which
+    every iteration of the label / score loops reuses."""
+    e = pin(
+        edges.select(F.col(src).alias("__src__"), F.col(dst).alias("__dst__"))
+        .where(F.col("__src__").isNotNull() & F.col("__dst__").isNotNull())
+        .distinct()
+    )
+    nodes = pin(
+        e.select(F.col("__src__").alias("node"))
+        .unionAll(e.select(F.col("__dst__").alias("node")))
+        .distinct()
+    )
+    return e, nodes
 
 
 def label_propagation(
@@ -74,29 +92,12 @@ def label_propagation(
     aggregates — ``groupBy(node, label).count()`` then the per-node
     argmax as ``min(struct(-n, label))`` (struct lexicographic min =
     highest count, ties to smallest label) — no window sort, no
-    row_number. Driver holds zero per-node state; edges are persisted
+    row_number. Driver holds zero per-node state; edges are pinned
     once and reused every round (GraphX/Pregel shuffle shape).
     """
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    # lazy localCheckpoint, not persist/unpersist: the returned plan is
-    # LAZY, so an unpersist-before-return would silently void the cache
-    # and every iteration would re-derive the edge frame from source
-    # (observed: 46 parquet scans in the 3-iter plan). A lazy local
-    # checkpoint materializes once at first action and is reused by all
-    # rounds; cleanup rides the RDD's GC.
-    e = (
-        edges.select(F.col(src).alias("__src__"), F.col(dst).alias("__dst__"))
-        .where(F.col("__src__").isNotNull() & F.col("__dst__").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("__src__").alias("node"))
-        .unionAll(e.select(F.col("__dst__").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _edge_frames(edges, src, dst)
     labels = nodes.withColumn("label", F.col("node"))
     for _ in range(iters):
         counts = (
@@ -148,7 +149,7 @@ def hits(
 
     Plan shape per iteration: two edge-keyed joins + two map-side-
     combined aggregates (shuffle ∝ |E|). Each half-step's node-keyed
-    score frame is pinned (lazy localCheckpoint) and its 1-row max
+    score frame is pinned and its 1-row max
     collected as driver algorithm state (the kmeans-loop pattern) and
     folded back as a literal: the earlier ``crossJoin(broadcast(max))``
     form read the un-pinned half-step frame TWICE (once under the
@@ -157,26 +158,13 @@ def hits(
     """
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    # lazy localCheckpoint (see label_propagation): a persist voided by
-    # unpersist-before-return would re-derive these frames every round
-    e = (
-        edges.select(F.col(src).alias("__src__"), F.col(dst).alias("__dst__"))
-        .where(F.col("__src__").isNotNull() & F.col("__dst__").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("__src__").alias("node"))
-        .unionAll(e.select(F.col("__dst__").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _edge_frames(edges, src, dst)
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         # pin the half-step frame, then fold its 1-row max back as a
         # literal — the same floor(int64·scale / int64) in double, with
         # the max read from driver state instead of a broadcast column
-        full = df.localCheckpoint(eager=False)
+        full = pin(df)
         mx = full.agg(F.max(col).alias("__mx__")).first()[0]
         if mx is None:
             mx = 1  # empty graph: `full` has no rows to normalize
@@ -261,8 +249,8 @@ def triangle_count(
     if max_degree is not None and max_degree < 1:
         raise ValueError(f"max_degree must be >= 1, got {max_degree}")
     # canonical edges feed three consumers (degrees, orientation join,
-    # closing-edge join) — materialize once (lazy localCheckpoint)
-    e = (
+    # closing-edge join) — pin them once
+    e = pin(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -270,7 +258,6 @@ def triangle_count(
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     if max_degree is not None:
         full_deg = (
@@ -280,12 +267,11 @@ def triangle_count(
             .agg(F.count("*").alias("__deg__"))
         )
         ok = full_deg.where(F.col("__deg__") <= max_degree).select("node")
-        # induced subgraph: both endpoints within the cap; re-checkpoint —
-        # the capped edge set again feeds three consumers
-        e = (
+        # induced subgraph: both endpoints within the cap; re-pin — the
+        # capped edge set again feeds three consumers
+        e = pin(
             e.join(ok.withColumnRenamed("node", "a"), "a")
             .join(ok.withColumnRenamed("node", "b"), "b")
-            .localCheckpoint(eager=False)
         )
     deg = (
         e.select(F.col("a").alias("node"))
@@ -300,10 +286,12 @@ def triangle_count(
     lower_first = (F.col("__da__") < F.col("__db__")) | (
         (F.col("__da__") == F.col("__db__")) & (F.col("a") < F.col("b"))
     )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint(eager=False)
+    oriented = pin(
+        ranked.select(
+            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+    )
     # wedges at apex u: (v, w) with v < w; the triangle closes iff the
     # canonical edge (v, w) exists
     # wedge generation (r15): ONE groupBy(u) aggregate collecting the
@@ -344,13 +332,13 @@ def triangle_count(
     # wedges → 1.9M triangles). Guide §3.2: drop definitely-non-closing
     # wedges BEFORE the exchange with a Bloom filter over the canonical
     # edge keys. The filter is map-side (bit_or bitmap + k broadcast
-    # word probes, llm/bloom.py), sized from the checkpointed edge
+    # word probes, llm/bloom.py), sized from the pinned edge
     # count, and exact-join-verified downstream, so false positives
     # only cost shuffle bytes and the result is unchanged. The edge
     # side then builds a per-partition hash table (shuffle_hash hint)
     # instead of sorting the wedge stream — the build side is the edge
     # set, ≤ the wedge stream by construction at any scale.
-    n_edges = e.count()  # e is localCheckpointed: one cheap job, and
+    n_edges = e.count()  # e is pinned: one cheap job, and
     # it both sizes the filter and decides whether it pays at all
     if n_edges >= 100_000:
         from ..llm.bloom import bloom_prefilter, bloom_words
@@ -410,20 +398,7 @@ def pagerank(
         raise ValueError("damping_pct must be in [0, 100]")
     base = (100 - damping_pct) * r0 // 100
 
-    # lazy localCheckpoint (see label_propagation): a persist voided by
-    # unpersist-before-return would re-derive these frames every round
-    e = (
-        edges.select(F.col(src).alias("__src__"), F.col(dst).alias("__dst__"))
-        .where(F.col("__src__").isNotNull() & F.col("__dst__").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("__src__").alias("node"))
-        .unionAll(e.select(F.col("__dst__").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _edge_frames(edges, src, dst)
     outdeg = e.groupBy("__src__").agg(F.count("*").alias("__deg__"))
 
     ranks = nodes.withColumn("rank", F.lit(int(r0)).cast("long"))

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from ..fsio import LOCAL_FS, StateFS, heal_swap, swap_dir
 from ..functions.hashing import row_hash_expr
+from ..partitioning import pin
 from ..sources.reader import read_snapshots
 from .union import union_relaxed
 
@@ -235,12 +236,11 @@ def drop_redundant(
                 "_updated", F.coalesce(F.col("_updated"), F.lit(False))
             )
 
-    # Materialize before the hash-snapshot swap: the result plan references
+    # Pin eagerly before the hash-snapshot swap: the result plan references
     # the OLD snapshot files, which the upsert below replaces. Without the
-    # persist, collecting the returned DataFrame later would hit
+    # pin, collecting the returned DataFrame later would hit
     # FAILED_READ_FILE on the swapped-out files.
-    result = result.persist()
-    result.count()
+    result = pin(result, eager=True)
 
     snap_cols = pk_list + ["hash"] if pk_list else ["hash"]
     snapshot_records(

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..partitioning import pin
+
 __all__ = [
     "stream_from_directory",
     "windowed_event_counts",
@@ -50,6 +52,23 @@ __all__ = [
     "materialize_corpus_sketch",
     "streaming_corpus_drift",
 ]
+
+
+def _start(
+    stream_df: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``handle`` as the ``foreachBatch`` sink of ``stream_df``,
+    checkpointed at ``checkpoint_dir``; ``available_now`` drains the
+    source once and stops (bounded runs), otherwise it runs continuously."""
+    writer = stream_df.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def streaming_dedup(
@@ -289,12 +308,7 @@ def streaming_agg_upsert(
             )
         _write_snapshot(part, stream, snapshot_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_topk(
@@ -382,12 +396,7 @@ def streaming_topk(
         )
         _write_snapshot(kept.unionByName(sentinel), name, snapshot_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def topk_from_snapshot(
@@ -631,12 +640,7 @@ def streaming_minhash_dedup(
             bb.write.mode("append").parquet(buckets_path)
             batch.write.mode("append").parquet(docs_path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def _state_table_name(state_dir: str, kind: str) -> str:
@@ -980,10 +984,8 @@ def streaming_url_dedup(
         # pin BEFORE the writes: the state append below targets the same
         # path the anti-join reads, and the second action would
         # otherwise re-evaluate the join against the just-updated state.
-        # LAZY (r16): the out_dir write — which strictly precedes the
-        # state append — materializes the pin, so the ordering guarantee
-        # holds without the eager form's extra scheduled job per trigger
-        survivors = survivors.localCheckpoint(eager=False)
+        # Lazy is enough: the out_dir write strictly precedes the append
+        survivors = pin(survivors)
         survivors.withColumn(
             "__batch_id__", F.lit(batch_id).cast("long")
         ).write.mode("append").parquet(out_dir)
@@ -997,12 +999,7 @@ def streaming_url_dedup(
         else:
             canon.write.mode("append").parquet(canon_path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_fingerprint_dedup(
@@ -1080,11 +1077,8 @@ def streaming_fingerprint_dedup(
         )
         judged = fp.where(F.col("__fp__").isNotNull())
         # the component contraction and the two joins below consume the
-        # codec output repeatedly — pin it once (small: batch-sized).
-        # LAZY (r16): the component contraction's first bounded collect
-        # materializes it, so the eager form's extra scheduled job per
-        # trigger disappears
-        judged = judged.localCheckpoint(eager=False)
+        # codec output repeatedly — pin it once (small: batch-sized)
+        judged = pin(judged)
         segs = fingerprint_segments(judged, id_col, "__fp__", bands)
 
         matched = None
@@ -1142,8 +1136,7 @@ def streaming_fingerprint_dedup(
             drops = comp.where(F.col("id") != F.col("component")).select("id")
         # no pin needed: survivors is consumed exactly once (the output
         # write below), and the state append it reads from (seg_path)
-        # happens strictly AFTER that write completes — the r15 eager
-        # checkpoint here was one dead scheduled job per trigger
+        # happens strictly AFTER that write completes
         survivors = batch_df.join(
             drops.withColumnRenamed("id", id_col), id_col, "left_anti"
         )
@@ -1158,12 +1151,7 @@ def streaming_fingerprint_dedup(
             "__batch__", F.lit(batch_id).cast("long")
         ).write.mode("append").parquet(seg_path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_quantiles(
@@ -1226,12 +1214,7 @@ def streaming_quantiles(
             "__batch_id__", F.lit(batch_id).cast("long")
         ).write.mode("append").parquet(out_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 _WATERMARK_FILE = "_COMPACTED_THROUGH"
@@ -1455,12 +1438,7 @@ def streaming_bin_counts(
             "batch_id", F.lit(int(batch_id))
         ).write.mode("append").parquet(path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def bin_counts_from_state(
@@ -1497,12 +1475,7 @@ def streaming_snapshot_upsert(
         if on_batch is not None:
             on_batch(batch_df, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_scd2(
@@ -1563,12 +1536,7 @@ def streaming_scd2(
         merged = scd2_merge(history, latest, keys, ts_col, tracked_cols)
         _write_snapshot(merged, name, snapshot_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_cdc(
@@ -1645,12 +1613,7 @@ def streaming_cdc(
         )
         snapshot_records(spark, batch_df, stream, snapshot_dir, pk=keys)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_quality_filter(
@@ -1692,12 +1655,14 @@ def streaming_quality_filter(
     from ..llm.classifier import classifier_score
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # lazy pin (r16 job fold): the passing-side write right below
-        # materializes it; the rejected-side write then reuses the pin
-        scored = classifier_score(
-            batch_df, text_col, weights, bias=bias, use_bigrams=use_bigrams,
-            weight_scale=weight_scale, out_col=score_col,
-        ).localCheckpoint(eager=False)
+        # the passing-side and rejected-side writes share one scoring
+        scored = pin(
+            classifier_score(
+                batch_df, text_col, weights, bias=bias,
+                use_bigrams=use_bigrams, weight_scale=weight_scale,
+                out_col=score_col,
+            )
+        )
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         passing = F.col(score_col) >= F.lit(float(threshold))
         scored.where(passing).select("*", tag).write.mode("append").parquet(
@@ -1707,12 +1672,7 @@ def streaming_quality_filter(
             rejected_dir
         )
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def streaming_decontam(
@@ -1750,23 +1710,19 @@ def streaming_decontam(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # lazy pin (r16 job fold): the clean-side write's anti-join
-        # materializes it; the flagged-side write then reuses the pin
-        spans = substring_spans_against(
-            spark, batch_df, index_path, id_col, text_col, max_occurrences
-        ).localCheckpoint(eager=False)
+        # the clean-side and flagged-side writes share one span search
+        spans = pin(
+            substring_spans_against(
+                spark, batch_df, index_path, id_col, text_col, max_occurrences
+            )
+        )
         dirty = spans.select(id_col).distinct()
         clean = batch_df.join(dirty, id_col, "left_anti")
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         clean.select("*", tag).write.mode("append").parquet(out_dir)
         spans.select("*", tag).write.mode("append").parquet(flagged_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 _SEMDEDUP_META = "_SEMDEDUP_META.json"  # SEMDEDUP_REF's marker
@@ -1917,13 +1873,14 @@ def append_semdedup_ref(
             "pre-append version (no per-cell counts in the meta) — "
             "rebuild once with materialize_semdedup_ref to record them"
         )
-    pts = _assign_df(
-        _prepare(new_ref_df, vec_col, id_col, meta["scale"]),
-        state,
-        meta["assign"],
-        # feeds the count aggregate AND the append write; LAZY — the
-        # count collect right below materializes it (r16 job fold)
-    ).localCheckpoint(eager=False)
+    # feeds the count aggregate AND the append write
+    pts = pin(
+        _assign_df(
+            _prepare(new_ref_df, vec_col, id_col, meta["scale"]),
+            state,
+            meta["assign"],
+        )
+    )
     appended = {
         int(r["cid"]): int(r["n"])
         for r in pts.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -2064,11 +2021,8 @@ def streaming_semdedup(
         if capped:
             pts = pts.where(~F.col("cid").isin(sorted(capped)))
         # pin the batch's assignment once (batch-sized): it feeds the cid
-        # collect below plus the matched/out branches. LAZY (r16): the
-        # cid collect right below materializes it — the eager form cost
-        # one extra scheduled job per trigger (the retrieval
-        # probe-checkpoint lesson)
-        pts = pts.localCheckpoint(eager=False)
+        # collect below plus the matched/out branches
+        pts = pin(pts)
         # STRUCTURAL cell pruning (VERDICT r14 #4): the batch's distinct
         # cids are bounded by the router size k — collect them and
         # restrict the reference scan explicitly, so partition pruning is
@@ -2096,12 +2050,7 @@ def streaming_semdedup(
         )
         out.write.mode("append").parquet(out_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -2167,25 +2116,25 @@ def materialize_gram_state(
     )
     if mode == "append":
         existing = _read_gram_state_table(spark, state_dir, buckets)
-        fresh = grams.join(existing, "__g__", "left_anti").localCheckpoint()
+        fresh = pin(grams.join(existing, "__g__", "left_anti"), eager=True)
         if buckets is not None:
             _append_bucketed_state(fresh, tbl, grams_loc, ["__g__"], buckets)
         else:
             fresh.write.mode("append").parquet(grams_loc)
         new_words = bloom_words(fresh, "__g__", bloom_m_bits, bloom_k)
-        merged = (
+        merged = pin(
             spark.read.parquet(words_loc)
             .unionByName(new_words)
             .groupBy("__bw__")
-            .agg(F.bit_or("__bb__").alias("__bb__"))
-            .localCheckpoint()
+            .agg(F.bit_or("__bb__").alias("__bb__")),
+            eager=True,
         )
         merged.write.mode("overwrite").parquet(words_loc)
     else:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         if fs.isdir(grams_loc):
             fs.rmtree(grams_loc)
-        grams = grams.localCheckpoint()
+        grams = pin(grams, eager=True)
         if buckets is not None:
             _append_bucketed_state(grams, tbl, grams_loc, ["__g__"], buckets)
         else:
@@ -2260,12 +2209,7 @@ def streaming_novelty(
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         scored.select("*", tag).write.mode("append").parquet(out_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
 def materialize_corpus_sketch(
@@ -2363,9 +2307,4 @@ def streaming_corpus_drift(
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         est.select("*", tag).write.mode("append").parquet(out_dir)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint_dir, available_now)

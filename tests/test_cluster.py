@@ -95,7 +95,7 @@ def test_kmeans_validates_args(spark):
 
 
 def test_kmeans_assignment_plan_is_narrow(spark):
-    # The returned assignment is a pure map over the persisted points —
+    # The returned assignment is a pure map over the pinned points —
     # no join/exchange (the 100 TB contract: k·(d+1) ints of driver state,
     # never a shuffle per assignment).
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

@@ -88,6 +88,18 @@ def test_drop_redundant_flow(spark, tmp_dir):
     assert got == {2: True, 3: False}  # id=1 dropped as redundant
 
 
+def test_drop_redundant_result_survives_cache_clear(spark, tmp_dir):
+    # the increment's result is pinned, not cached: clearing the cache must
+    # not send it back to the hash snapshot the increment swapped out
+    full = spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")])
+    drop_redundant(spark, full, "s", tmp_dir, pk="id").count()
+    incr = spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="B"), Row(id=3, v="c")])
+    out = drop_redundant(spark, incr, "s", tmp_dir, pk="id", updated_flag=True)
+    spark.catalog.clearCache()
+    assert out.count() == 2
+    assert {r["id"]: r["_updated"] for r in out.collect()} == {2: True, 3: False}
+
+
 def test_merge_id_df(spark):
     ids = spark.createDataFrame(
         [
