@@ -5844,9 +5844,11 @@ def q_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled reference rows) mismatches."""
     import tempfile
 
-    from gluestick_spark.streaming.pipeline import (
+    from gluestick_spark.llm.cluster import (
         append_semdedup_ref,
         materialize_semdedup_ref,
+    )
+    from gluestick_spark.streaming.pipeline import (
         read_streaming_dedup_output,
         stream_from_directory,
         streaming_semdedup,

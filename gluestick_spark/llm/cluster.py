@@ -66,19 +66,43 @@ The persisted IVF×SQ index (:func:`materialize_sq_ivf`) stores its cells
 through :mod:`gluestick_spark.llm.ivf_cells`, which owns the cell
 layout, the append bracket, router loading, the pruned probe read and
 batched top-k; this module keeps the router geometry and SQ scoring.
+
+This module is the only one that knows the SemDeDup rule. The four
+entry points — :func:`semdedup`, :func:`semdedup_against`, the persisted
+reference (:func:`materialize_semdedup_ref`,
+:func:`append_semdedup_ref`) and the per-batch judge behind
+``streaming/pipeline.py:streaming_semdedup`` — share one threshold
+rational (:func:`_semdedup_rational`), one cap check (:func:`_check_cap`),
+one cap rule (:func:`_capped_cells`), one empty-reference result
+(:func:`_keep_all`) and one cross-side verdict (:func:`_against_verdicts`).
+The reference's cells go through the same :mod:`ivf_cells` store.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gluestick_spark.fsio import LOCAL_FS
+from gluestick_spark.llm.index_commit import (
+    SEMDEDUP_REF,
+    begin_rebuild,
+    load_meta,
+    publish,
+    rollback_torn_append,
+)
 from gluestick_spark.llm.ivf_cells import (
     Cells,
     Rank,
+    append_bracket,
     append_cells,
     batch_topk,
     check_topk,
+    decode_state,
     empty_topk,
     encode_state,
     load_router,
@@ -659,6 +683,86 @@ def _semdedup_verdicts(pts: DataFrame, num: int, den: int, within: bool) -> Data
     )
 
 
+def _semdedup_rational(threshold: float) -> tuple[int, int]:
+    """``threshold²`` as the reduced exact rational ``num/den`` of the
+    SemDeDup rule, with ``threshold`` read at 2-decimal precision. The
+    raw float is range-checked first, so 1.004 and -0.004 raise instead
+    of rounding into range."""
+    from math import gcd
+
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError("threshold must be in [0, 1]")
+    t = round(threshold * 100)
+    g = gcd(t * t, 100 * 100)
+    return t * t // g, 100 * 100 // g
+
+
+def _check_cap(max_cluster_size: int | None) -> None:
+    """Refuse a cap below 1. Every entry point calls this before it
+    touches a store or runs a job."""
+    if max_cluster_size is not None and max_cluster_size < 1:
+        raise ValueError(f"max_cluster_size must be >= 1, got {max_cluster_size}")
+
+
+def _capped_cells(counts: list[int], cap: int) -> list[int]:
+    """The cap rule over per-cell row ``counts``: a cell is judged only
+    when it holds 1..``cap`` rows, so the empty and the oversized cells
+    are capped and their corpus rows emit no verdict."""
+    return [c for c, n in enumerate(counts) if n == 0 or n > cap]
+
+
+def _cap_join(
+    cap: int | None, ref_pts: DataFrame, *pts: DataFrame
+) -> list[DataFrame]:
+    """``ref_pts`` and each of ``pts`` restricted to the cells that
+    :func:`_capped_cells` judges, counted on ``ref_pts``. The cell list
+    is a lazy k-row frame joined by broadcast: no job, and never a
+    shuffle of the corpus."""
+    if cap is None:
+        return [ref_pts, *pts]
+    ok = F.broadcast(
+        ref_pts.groupBy("cid")
+        .agg(F.count(F.lit(1)).alias("__n__"))
+        .where(F.col("__n__") <= cap)
+        .select("cid")
+    )
+    return [p.join(ok, "cid") for p in (ref_pts, *pts)]
+
+
+def _keep_all(df: DataFrame, id_col: str) -> DataFrame:
+    """The verdicts against an empty reference: every row keeps, with a
+    NULL ``cid`` (there is no router to assign against)."""
+    return df.select(
+        F.col(id_col),
+        F.lit(None).cast("int").alias("cid"),
+        F.lit(True).alias("keep"),
+    )
+
+
+def _against_verdicts(
+    cor_pts: DataFrame, ref_pts: DataFrame, id_col: str, num: int, den: int
+) -> DataFrame:
+    """(``id_col``, cid, keep) per corpus row, judged against the
+    reference points of its cell: both sides go through one
+    :func:`_semdedup_verdicts` call, the corpus as side 1 and the
+    reference (``__q__``, ``__xx__``, cid, no id) as side 0."""
+    id_type = cor_pts.schema["__id__"].dataType
+    both = cor_pts.select(
+        "__id__", "__q__", "__xx__", "cid", F.lit(1).alias("__side__")
+    ).unionByName(
+        ref_pts.select(
+            F.lit(None).cast(id_type).alias("__id__"),
+            "__q__",
+            "__xx__",
+            "cid",
+            F.lit(0).alias("__side__"),
+        )
+    )
+    return _semdedup_verdicts(both, num, den, within=False).select(
+        F.col("__id__").alias(id_col), "cid", "keep"
+    )
+
+
 def semdedup(
     df: DataFrame,
     vec_col: str,
@@ -680,39 +784,28 @@ def semdedup(
         dot(q_a, q_b) > 0  AND  den·dot² > num·(q_a·q_a)(q_b·q_b)
 
     where num/den is threshold² as an exact rational (threshold read at
-    2-decimal precision), so the decision is pure int64 arithmetic —
-    no float cosine anywhere. Pairwise work is blocked by cluster id:
-    cost ∝ Σ_c |c|², never N².
+    2-decimal precision, :func:`_semdedup_rational`), so the decision is
+    pure int64 arithmetic — no float cosine anywhere. Pairwise work is
+    blocked by cluster id: cost ∝ Σ_c |c|², never N².
 
     ``max_cluster_size`` (VERDICT r10 #2) is the loud giant-cluster cap
     — :func:`~gluestick_spark.operators.graph.triangle_count`'s
     ``max_degree`` contract applied to the Σ|c|² surface: one
     degenerate cluster holding 10% of a 100 TB corpus squares into an
     unrunnable stage. With the cap set, clusters LARGER than it are
-    removed BEFORE the pairwise join and their member rows emit NO
+    removed BEFORE the pairwise stage and their member rows emit NO
     output rows (they were not judged — never a silent keep), exactly
     like hub nodes in the capped triangle count. The result is EXACT on
     the capped set: pairs never cross clusters, so judged rows carry
     the same verdicts the uncapped run would give them (pytest-pinned
     capped ≡ uncapped on bounded clusters). Deterministic and
     oracle-replayable — the cluster-size filter is one k-row broadcast
-    semi-join on the replayed kmeans assignment. Per-cluster pairwise
-    cost is then ≤ max_cluster_size², bounding the worst partition
-    regardless of embedding skew.
+    semi-join on the replayed kmeans assignment (:func:`_cap_join`).
+    Per-cluster pairwise cost is then ≤ max_cluster_size², bounding the
+    worst partition regardless of embedding skew.
     """
-    from math import gcd
-
-    t = round(threshold * 100)
-    if not 0 <= t <= 100:
-        raise ValueError("threshold must be in [0, 1]")
-    if max_cluster_size is not None and max_cluster_size < 1:
-        raise ValueError(
-            f"max_cluster_size must be >= 1, got {max_cluster_size}"
-        )
-    num, den = t * t, 100 * 100
-    g = gcd(num, den) or 1
-    num, den = num // g, den // g
-
+    num, den = _semdedup_rational(threshold)
+    _check_cap(max_cluster_size)
     _, cents = kmeans(
         df, vec_col, id_col, k=k, iters=iters, scale=scale, assign=assign,
         return_state=True,
@@ -728,18 +821,9 @@ def semdedup(
     # vector (guide §2.4: remove shuffles outright). Identical cids by
     # construction: kmeans' own output IS _assign_df(pts, final_state).
     pts = _assign_df(_prepare(df, vec_col, id_col, scale), cents, assign)
-    if max_cluster_size is not None:
-        ok = (
-            pts.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("__n__"))
-            .where(F.col("__n__") <= max_cluster_size)
-            .select("cid")
-        )
-        # k-bounded (≤ k rows): broadcast, never a shuffle of the corpus
-        pts = pts.join(F.broadcast(ok), "cid")
+    (pts,) = _cap_join(max_cluster_size, pts)
     # pairwise verdicts via the Arrow gram kernel (one cid-keyed
-    # exchange, per-cluster vectorized int64 matmul) — replaces the
-    # blocked self-join + per-pair fold dot + distinct + left join
+    # exchange, per-cluster vectorized int64 matmul)
     return _semdedup_verdicts(pts, num, den, within=True).select(
         F.col("__id__").alias(id_col), "cid", "keep"
     )
@@ -774,70 +858,240 @@ def semdedup_against(
     BOTH sides assign against the final centroids, so matches are
     judged within the shared cluster blocking exactly as SemDeDup
     defines them. Pairwise cost ∝ Σ_c |corpus_c|·|ref_c| — never N·M.
+    :func:`materialize_semdedup_ref` persists this reference half, and
+    :func:`~gluestick_spark.streaming.pipeline.streaming_semdedup`
+    judges a stream against it with the same verdicts.
 
     ``max_cluster_size`` caps the REFERENCE side of the block (the
     :func:`semdedup` giant-cluster contract): reference cells larger
-    than the cap are removed before the join and corpus rows assigned
-    to them emit NO output row (unjudged — never a silent keep).
+    than the cap are removed before the pairwise stage and corpus rows
+    assigned to them emit NO output row (unjudged — never a silent
+    keep).
 
     An EMPTY reference keeps every corpus row (``cid`` NULL — there is
     no router to assign against). Deterministic and oracle-replayable
     end-to-end (frozen integer-Lloyd router + rational decisions)."""
-    from math import gcd
-
     rv = ref_vec_col or vec_col
     rid = ref_id_col or id_col
-    t = round(threshold * 100)
-    if not 0 <= t <= 100:
-        raise ValueError("threshold must be in [0, 1]")
-    if max_cluster_size is not None and max_cluster_size < 1:
-        raise ValueError(
-            f"max_cluster_size must be >= 1, got {max_cluster_size}"
-        )
-    num, den = t * t, 100 * 100
-    g = gcd(num, den) or 1
-    num, den = num // g, den // g
-
+    num, den = _semdedup_rational(threshold)
+    _check_cap(max_cluster_size)
     _, state = kmeans(
         reference, rv, rid, k=k, iters=iters, scale=scale,
         return_state=True, assign=assign,
     )
     if not state:
-        return corpus.select(
-            F.col(id_col),
-            F.lit(None).cast("int").alias("cid"),
-            F.lit(True).alias("keep"),
-        )
+        return _keep_all(corpus, id_col)
     ref_pts = _assign_df(_prepare(reference, rv, rid, scale), state, assign)
     cor_pts = _assign_df(_prepare(corpus, vec_col, id_col, scale), state, assign)
-    if max_cluster_size is not None:
-        ok = (
-            ref_pts.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("__n__"))
-            .where(F.col("__n__") <= max_cluster_size)
-            .select("cid")
+    ref_pts, cor_pts = _cap_join(max_cluster_size, ref_pts, cor_pts)
+    return _against_verdicts(cor_pts, ref_pts, id_col, num, den)
+
+
+_SSD_LEDGER = "_append_counts"  # inside cells/: underscore-hidden, manifested
+
+
+def _cell_sizes(pts: DataFrame) -> dict[int, int]:
+    """Rows per ``cid`` of ``pts`` (one job; at most k rows collected)."""
+    return {
+        int(r["cid"]): int(r["n"])
+        for r in pts.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def _ref_rows(pts: DataFrame) -> DataFrame:
+    """Reference points as stored cell rows: (cid, ``qr``, ``xxr``)."""
+    return pts.select(
+        "cid", F.col("__q__").alias("qr"), F.col("__xx__").alias("xxr")
+    )
+
+
+def materialize_semdedup_ref(
+    reference: DataFrame,
+    vec_col: str,
+    id_col: str,
+    path: str,
+    k: int = 8,
+    iters: int = 2,
+    scale: int = 1000,
+    max_cluster_size: int | None = None,
+    assign: str = "auto",
+) -> None:
+    """Persist the FROZEN cross-corpus SemDeDup reference (VERDICT r13
+    #7): the integer-Lloyd router state plus the assigned+prepared
+    reference points (``cid``, quantized vector, squared norm) as IVF
+    cells partitioned by cid (:mod:`gluestick_spark.llm.ivf_cells`) —
+    the store-once/serve-many form of :func:`semdedup_against`'s
+    reference half. ``max_cluster_size`` is applied AT BUILD: capped
+    reference cells (:func:`_capped_cells`) are not written and their
+    cids are recorded in the meta, so serving knows corpus rows routed
+    there are UNJUDGED (the semdedup cap contract — never a silent
+    keep). A bad cap is refused before the committed reference is
+    touched. The meta JSON is written LAST — it is the commit marker
+    (:mod:`gluestick_spark.llm.index_commit`); a torn build refuses to
+    serve, and a rebuild first rolls back any torn
+    :func:`append_semdedup_ref` batch."""
+    _check_cap(max_cluster_size)
+    begin_rebuild(SEMDEDUP_REF, path)
+    _, state = kmeans(
+        reference, vec_col, id_col, k=k, iters=iters, scale=scale,
+        return_state=True, assign=assign,
+    )
+    capped: list[int] = []
+    counts: list[int] = []
+    if state:
+        pts = _assign_df(_prepare(reference, vec_col, id_col, scale), state, assign)
+        # per-cell TRUE counts (capped cells included) persist in the
+        # meta: append_semdedup_ref re-derives the capped set from
+        # counts + appended batches — capped cells' rows are physically
+        # absent, so disk can never be the count of record
+        sizes = _cell_sizes(pts)
+        counts = [sizes.get(c, 0) for c in range(len(state))]
+        if max_cluster_size is not None:
+            capped = _capped_cells(counts, max_cluster_size)
+            if capped:
+                pts = pts.where(~F.col("cid").isin(capped))
+        write_cells(_ref_rows(pts), Cells(path), "overwrite")
+    meta = {
+        "scale": int(scale),
+        "k": int(k),
+        "iters": int(iters),
+        "id_col": id_col,
+        "assign": assign,
+        "capped": capped,
+        "counts": counts,
+        "max_cluster_size": (
+            int(max_cluster_size) if max_cluster_size is not None else None
+        ),
+        "state": encode_state(state),
+    }
+    publish(SEMDEDUP_REF, path, meta)
+
+
+def append_semdedup_ref(
+    new_ref_df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    path: str,
+) -> int:
+    """Incrementally GROW a :func:`materialize_semdedup_ref` reference
+    (VERDICT r14 #6 — the lifecycle asymmetry vs the ANN index family):
+    the new reference rows are assigned against the FROZEN router
+    (geometry unchanged ⇒ every existing verdict's cell and cosine rule
+    unchanged), prepared in the same narrow projection, and appended
+    into the cell partition dirs — O(batch), never a router retrain or
+    cell rewrite. Returns the number of appended rows.
+
+    Cap re-derivation: the meta's per-cell build ``counts`` plus a
+    per-append count ledger (``cells/_append_counts/*.json``, written
+    INSIDE the append bracket so a torn batch rolls its ledger back
+    with its cell files) let :func:`_semdedup_capped` recompute the
+    capped set at serve time from TRUE totals — a cell crossing
+    ``max_cluster_size`` stops being judged, an empty cell that gains
+    rows starts, exactly as a rebuild over the union with the same
+    router would decide. (Build-capped cells' rows were never written,
+    so disk alone can never be the count of record.) A capped reference
+    whose meta predates the counts field refuses to append — rebuild
+    once to record them.
+
+    Crash safety is the shared ``_APPEND_INPROGRESS`` bracket
+    (:func:`~gluestick_spark.llm.ivf_cells.append_bracket`): a torn
+    append is rolled back (cells + ledger together) on the next append,
+    and serving refuses a torn reference loudly. The meta file is never
+    rewritten — the router IS frozen."""
+    meta = load_meta(SEMDEDUP_REF, path)
+    rollback_torn_append(path)  # self-heal: a retried append rolls back
+    state = decode_state(meta["state"])
+    if not state:
+        raise ValueError(
+            f"semdedup reference at {path} has an empty router — rebuild "
+            "with materialize_semdedup_ref on a non-empty reference"
         )
-        # k-bounded: broadcast, never a corpus shuffle
-        ref_pts = ref_pts.join(F.broadcast(ok), "cid")
-        cor_pts = cor_pts.join(F.broadcast(ok), "cid")
-    id_type = cor_pts.schema["__id__"].dataType
-    both = cor_pts.select(
-        "__id__", "__q__", "__xx__", "cid", F.lit(1).alias("__side__")
-    ).unionByName(
-        ref_pts.select(
-            F.lit(None).cast(id_type).alias("__id__"),
-            "__q__",
-            "__xx__",
-            "cid",
-            F.lit(0).alias("__side__"),
+    if meta.get("max_cluster_size") is not None and "counts" not in meta:
+        raise ValueError(
+            f"semdedup reference at {path} was built with a cap by a "
+            "pre-append version (no per-cell counts in the meta) — "
+            "rebuild once with materialize_semdedup_ref to record them"
+        )
+    # feeds the count aggregate AND the append write
+    pts = pin(
+        _assign_df(
+            _prepare(new_ref_df, vec_col, id_col, meta["scale"]),
+            state,
+            meta["assign"],
         )
     )
-    # cross-corpus verdicts via the Arrow gram kernel (one cid-keyed
-    # exchange over both sides) — replaces the blocked corpus×reference
-    # join + per-pair fold dot + distinct + left join
-    return _semdedup_verdicts(both, num, den, within=False).select(
-        F.col("__id__").alias(id_col), "cid", "keep"
-    )
+    appended = _cell_sizes(pts)
+    n_rows = sum(appended.values())
+    if n_rows == 0:
+        return 0
+    cells = Cells(path)
+    ledger = os.path.join(cells.root, _SSD_LEDGER)
+    with append_bracket(path):
+        write_cells(_ref_rows(pts), cells, "append")
+        LOCAL_FS.makedirs(ledger)
+        LOCAL_FS.write_text_atomic(
+            os.path.join(ledger, f"{uuid.uuid4().hex}.json"),
+            json.dumps({"counts": appended}),
+        )
+    return n_rows
+
+
+def _semdedup_capped(path: str, meta: dict) -> set[int]:
+    """The reference's CURRENT capped-cell set: build counts + every
+    committed append ledger, judged by :func:`_capped_cells` against
+    the persisted cap. A pre-counts meta (or an uncapped build) falls
+    back to the frozen build-time list."""
+    cap, counts = meta.get("max_cluster_size"), meta.get("counts")
+    if cap is None or counts is None:
+        return set(meta.get("capped", []))
+    totals = list(counts)
+    ledger = os.path.join(Cells(path).root, _SSD_LEDGER)
+    if LOCAL_FS.isdir(ledger):
+        for name in sorted(LOCAL_FS.listdir(ledger)):
+            if name.endswith(".json"):
+                doc = json.loads(LOCAL_FS.read_text(os.path.join(ledger, name)))
+                for cid, n in doc["counts"].items():
+                    totals[int(cid)] += n
+    return set(_capped_cells(totals, cap))
+
+
+def _semdedup_judge(path: str, vec_col: str, id_col: str, threshold: float):
+    """The per-batch judge against the committed reference at ``path``:
+    a function from a batch frame to (``id_col``, cid, keep) per judged
+    row — :func:`semdedup_against`'s verdicts with the reference read
+    from its cells. The threshold, the meta (refusing a torn build or
+    an open append) and the capped cells are read once, here.
+
+    Per batch: one narrow assignment against the frozen router, capped
+    cells dropped by a literal ``cid`` filter, then the reference cells
+    of the batch's own distinct cids (collected, ≤ k) read with a
+    LITERAL ``cid IN (...)``
+    (:func:`~gluestick_spark.llm.ivf_cells.read_probed`): partition
+    pruning is structural, never a bet on dynamic pruning inside a
+    foreachBatch plan (VERDICT r14 #4)."""
+    num, den = _semdedup_rational(threshold)
+    meta = load_meta(SEMDEDUP_REF, path, serving=True)
+    state = decode_state(meta["state"])
+    capped = sorted(_semdedup_capped(path, meta))
+
+    def judge(batch_df: DataFrame) -> DataFrame:
+        if not state:
+            return _keep_all(batch_df, id_col)
+        pts = _assign_df(
+            _prepare(batch_df, vec_col, id_col, meta["scale"]), state, meta["assign"]
+        )
+        if capped:
+            pts = pts.where(~F.col("cid").isin(capped))
+        # batch-sized; feeds the cid collect and the verdicts
+        pts = pin(pts)
+        cids = [r["cid"] for r in pts.select("cid").distinct().collect()]
+        cells = read_probed(batch_df.sparkSession, Cells(path), cids, meta["id_col"])
+        ref_pts = cells.select(
+            "cid", F.col("qr").alias("__q__"), F.col("xxr").alias("__xx__")
+        )
+        return _against_verdicts(pts, ref_pts, id_col, num, den)
+
+    return judge
 
 
 def ivf_topk_exact(

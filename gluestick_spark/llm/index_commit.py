@@ -24,7 +24,7 @@ stable on-disk contracts):
   ``_ROUTER.json``
 - band index (``materialize_band_index``) and substring index
   (``materialize_substring_index``): ``_INDEX_COMMIT``
-- semdedup reference (``materialize_semdedup_ref``):
+- semdedup reference (``llm/cluster.py:materialize_semdedup_ref``):
   ``_SEMDEDUP_META.json``
 - gram state (``materialize_gram_state``): ``_GRAM_META.json``
 - reference sketch (``materialize_corpus_sketch``): ``_SKETCH_META.json``

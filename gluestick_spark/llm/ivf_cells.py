@@ -1,5 +1,5 @@
-"""IVF cell store: how the three persisted ANN index families lay out,
-write and read their cells.
+"""IVF cell store: how the three persisted ANN index families and the
+SemDeDup reference lay out, write and read their cells.
 
 An IVF index is a directory of parquet cells partitioned by cell id,
 next to its protocol state (:mod:`gluestick_spark.llm.index_commit`):
@@ -10,6 +10,13 @@ next to its protocol state (:mod:`gluestick_spark.llm.index_commit`):
   ``cells/``, partition column ``cid``, committed by ``_ROUTER.json``.
   SQ keeps its centroid state under ``state``, PQ under ``router`` next
   to ``codebooks``; both list rebalanced-away cells under ``dead``.
+- SemDeDup reference (``llm/cluster.py:materialize_semdedup_ref``):
+  cells under ``cells/`` holding (``qr``, ``xxr``), partition column
+  ``cid``, committed by ``_SEMDEDUP_META.json``, which keeps the
+  centroid state under ``state`` (:func:`encode_state`) beside the
+  per-cell build ``counts`` and the ``capped`` cells. Appends add a
+  count ledger under ``cells/_append_counts/`` inside the append
+  bracket. It has no tombstones and no rebalance.
 
 Tombstoned ids (``_tombstones.parquet``, :mod:`.index_delete`) sit at
 the index root; the underscore keeps them and the ``_APPEND_INPROGRESS``

@@ -1725,227 +1725,6 @@ def streaming_decontam(
     return _start(stream_df, handle, checkpoint_dir, available_now)
 
 
-_SEMDEDUP_META = "_SEMDEDUP_META.json"  # SEMDEDUP_REF's marker
-
-
-def materialize_semdedup_ref(
-    reference: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    k: int = 8,
-    iters: int = 2,
-    scale: int = 1000,
-    max_cluster_size: int | None = None,
-    assign: str = "auto",
-) -> None:
-    """Persist the FROZEN cross-corpus SemDeDup reference (VERDICT r13
-    #7): the integer-Lloyd router state plus the assigned+prepared
-    reference points (``cid``, quantized vector, squared norm) written
-    parquet partitioned by cid — the store-once/serve-many form of
-    :func:`~gluestick_spark.llm.cluster.semdedup_against`'s reference
-    half. ``max_cluster_size`` is applied AT BUILD: oversized reference
-    cells are dropped and their cids recorded in the meta, so serving
-    knows corpus rows routed there are UNJUDGED (the semdedup cap
-    contract — never a silent keep). The meta JSON is written LAST —
-    it is the commit marker (:mod:`gluestick_spark.llm.index_commit`);
-    a torn build refuses to serve, and a rebuild first rolls back any
-    torn :func:`append_semdedup_ref` batch."""
-    import os as _os
-
-    from ..llm.cluster import _assign_df, _prepare, kmeans
-    from ..llm.index_commit import SEMDEDUP_REF, begin_rebuild, publish
-
-    begin_rebuild(SEMDEDUP_REF, path)
-    _, state = kmeans(
-        reference, vec_col, id_col, k=k, iters=iters, scale=scale,
-        return_state=True, assign=assign,
-    )
-    capped: list[int] = []
-    counts: list[int] = []
-    if state:
-        pts = _assign_df(_prepare(reference, vec_col, id_col, scale), state, assign)
-        # per-cell TRUE counts (capped cells included) persist in the
-        # meta: append_semdedup_ref re-derives the capped set from
-        # counts + appended batches — capped cells' rows are physically
-        # absent, so disk can never be the count of record
-        sizes = {
-            int(r["cid"]): int(r["n"])
-            for r in pts.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        counts = [sizes.get(c, 0) for c in range(len(state))]
-        if max_cluster_size is not None:
-            if max_cluster_size < 1:
-                raise ValueError(
-                    f"max_cluster_size must be >= 1, got {max_cluster_size}"
-                )
-            # mirror semdedup_against's capped join EXACTLY: cells kept are
-            # those with 0 < n <= cap; oversized AND empty cells both leave
-            # their corpus rows unjudged (the batch op's inner join on the
-            # ok-cell list has precisely that effect)
-            capped = sorted(
-                c
-                for c in range(len(state))
-                if sizes.get(c, 0) == 0 or sizes[c] > max_cluster_size
-            )
-            if capped:
-                pts = pts.where(~F.col("cid").isin(capped))
-        (
-            pts.select("cid", F.col("__q__").alias("qr"), F.col("__xx__").alias("xxr"))
-            .repartition(F.col("cid"))
-            .write.partitionBy("cid")
-            .mode("overwrite")
-            .parquet(_os.path.join(path, "cells"))
-        )
-    meta = {
-        "scale": int(scale),
-        "k": int(k),
-        "iters": int(iters),
-        "id_col": id_col,
-        "assign": assign,
-        "capped": capped,
-        "counts": counts,
-        "max_cluster_size": (
-            int(max_cluster_size) if max_cluster_size is not None else None
-        ),
-        "state": [[list(map(int, s)), int(n)] for s, n in state],
-    }
-    publish(SEMDEDUP_REF, path, meta)
-
-
-_SSD_LEDGER = "_append_counts"  # inside cells/: underscore-hidden, manifested
-
-
-def append_semdedup_ref(
-    new_ref_df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-) -> int:
-    """Incrementally GROW a :func:`materialize_semdedup_ref` reference
-    (VERDICT r14 #6 — the lifecycle asymmetry vs the ANN index family):
-    the new reference rows are assigned against the FROZEN router
-    (geometry unchanged ⇒ every existing verdict's cell and cosine rule
-    unchanged), prepared in the same narrow projection, and appended
-    into the cell partition dirs — O(batch), never a router retrain or
-    cell rewrite. Returns the number of appended rows.
-
-    Cap re-derivation: the meta's per-cell build ``counts`` plus a
-    per-append count ledger (``cells/_append_counts/*.json``, written
-    INSIDE the append bracket so a torn batch rolls its ledger back
-    with its cell files) let :func:`_semdedup_capped` recompute the
-    capped set at serve time from TRUE totals — a cell crossing
-    ``max_cluster_size`` stops being judged, an empty cell that gains
-    rows starts, exactly as a rebuild over the union with the same
-    router would decide. (Build-capped cells' rows were never written,
-    so disk alone can never be the count of record.) A capped reference
-    whose meta predates the counts field refuses to append — rebuild
-    once to record them.
-
-    Crash safety is the shared ``_APPEND_INPROGRESS`` bracket: a torn
-    append is rolled back (cells + ledger together) on the next append,
-    and serving (:func:`streaming_semdedup`) refuses a torn reference
-    loudly. The meta file is never rewritten — the router IS frozen."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    from ..llm.cluster import _assign_df, _prepare
-    from ..llm.index_commit import (
-        SEMDEDUP_REF,
-        begin_append,
-        commit_append,
-        load_meta,
-        rollback_torn_append,
-    )
-
-    meta = load_meta(SEMDEDUP_REF, path)
-    rollback_torn_append(path)  # self-heal: a retried append rolls back
-    state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
-    if not state:
-        raise ValueError(
-            f"semdedup reference at {path} has an empty router — rebuild "
-            "with materialize_semdedup_ref on a non-empty reference"
-        )
-    if meta.get("max_cluster_size") is not None and "counts" not in meta:
-        raise ValueError(
-            f"semdedup reference at {path} was built with a cap by a "
-            "pre-append version (no per-cell counts in the meta) — "
-            "rebuild once with materialize_semdedup_ref to record them"
-        )
-    # feeds the count aggregate AND the append write
-    pts = pin(
-        _assign_df(
-            _prepare(new_ref_df, vec_col, id_col, meta["scale"]),
-            state,
-            meta["assign"],
-        )
-    )
-    appended = {
-        int(r["cid"]): int(r["n"])
-        for r in pts.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_rows = sum(appended.values())
-    if n_rows == 0:
-        return 0
-    begin_append(path)
-    (
-        pts.select(
-            "cid", F.col("__q__").alias("qr"), F.col("__xx__").alias("xxr")
-        )
-        .repartition(F.col("cid"))
-        .write.partitionBy("cid")
-        .mode("append")
-        .parquet(_os.path.join(path, "cells"))
-    )
-    ledger_dir = _os.path.join(path, "cells", _SSD_LEDGER)
-    _os.makedirs(ledger_dir, exist_ok=True)
-    tmp = _os.path.join(ledger_dir, f".{_uuid.uuid4().hex}.tmp")
-    dst = _os.path.join(ledger_dir, f"{_uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        _json.dump({"counts": appended}, f)
-    _os.replace(tmp, dst)
-    commit_append(path)
-    return n_rows
-
-
-def _semdedup_capped(path: str, meta: dict) -> set[int]:
-    """The reference's CURRENT capped-cell set: build counts + every
-    committed append ledger, judged against the persisted cap. A
-    pre-counts meta (or an uncapped build) falls back to the frozen
-    build-time list."""
-    import json as _json
-    import os as _os
-
-    cap = meta.get("max_cluster_size")
-    counts = meta.get("counts")
-    if cap is None or counts is None:
-        return set(meta.get("capped", []))
-    totals = [int(v) for v in counts]
-    ledger_dir = _os.path.join(path, "cells", _SSD_LEDGER)
-    if _os.path.isdir(ledger_dir):
-        for name in sorted(_os.listdir(ledger_dir)):
-            if not name.endswith(".json"):
-                continue
-            with open(_os.path.join(ledger_dir, name)) as f:
-                for cid, n in _json.load(f)["counts"].items():
-                    totals[int(cid)] += int(n)
-    return {c for c, t in enumerate(totals) if t == 0 or t > cap}
-
-
-def _pruned_ref_cells(spark, ref_path: str, batch_cids: list) -> DataFrame:
-    """The reference-cell scan a :func:`streaming_semdedup` micro-batch
-    judges against, restricted to the batch's own distinct cids with a
-    LITERAL ``cid IN (...)`` — partition pruning is structural (the
-    filter rides the scan as a PartitionFilter, plan-gated), never a bet
-    on dynamic pruning inside a foreachBatch plan (VERDICT r14 #4)."""
-    import os as _os
-
-    return spark.read.parquet(_os.path.join(ref_path, "cells")).where(
-        F.col("cid").isin(list(batch_cids))
-    )
-
-
 def streaming_semdedup(
     stream_df: DataFrame,
     ref_path: str,
@@ -1958,12 +1737,13 @@ def streaming_semdedup(
 ) -> StreamingQuery:
     """Streaming cross-corpus SemDeDup (VERDICT r13 #7 — the last
     batch-only dedup family given streaming parity): every micro-batch
-    of embeddings is assigned against the PERSISTED frozen router
-    (:func:`materialize_semdedup_ref`) and judged against the persisted
-    reference cells with the exact int64 rational cosine rule; one
-    (id, ``cid``, ``keep``, ``__batch_id__``) row per JUDGED corpus row
-    appends to ``out_dir``. Rows assigned to a capped reference cell
-    emit no row (unjudged — the cap contract).
+    of embeddings is judged against the PERSISTED frozen reference
+    (:func:`~gluestick_spark.llm.cluster.materialize_semdedup_ref`) by
+    the shared per-batch judge in ``llm/cluster.py``, with the exact
+    int64 rational cosine rule; one (id, ``cid``, ``keep``,
+    ``__batch_id__``) row per JUDGED corpus row appends to ``out_dir``.
+    Rows assigned to a capped reference cell emit no row (unjudged —
+    the cap contract).
 
     **Stream ≡ batch EXACTLY, no caveats**: the reference is frozen and
     each batch's verdicts depend only on that batch's rows, so the
@@ -1974,81 +1754,17 @@ def streaming_semdedup(
     :func:`read_streaming_dedup_output`.
 
     Per-batch cost: one narrow assignment over the batch + one
-    cid-keyed join against the reference cells restricted to the
-    batch's own distinct cids (collected, ≤ router size k — the
-    ``cid IN (...)`` literal makes partition pruning STRUCTURAL, not a
-    bet on dynamic pruning; plan-gated) — Σ_c |batch_c|·|ref_c|, the
-    reference is never rescanned in full when the batch touches few
-    cells."""
-    from math import gcd
+    cid-keyed exchange against the reference cells of the batch's own
+    distinct cids (a literal ``cid IN (...)``, so partition pruning is
+    structural) — Σ_c |batch_c|·|ref_c|, the reference is never
+    rescanned in full when the batch touches few cells."""
+    from ..llm.cluster import _semdedup_judge
 
-    from ..llm.cluster import _assign_df, _prepare
-    from ..llm.index_commit import SEMDEDUP_REF, load_meta
-
-    # serving: a torn append_semdedup_ref must not serve half a batch
-    meta = load_meta(SEMDEDUP_REF, ref_path, serving=True)
-    state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
-    # capped set derived from TRUE totals (build counts + append
-    # ledgers) — appends can cap a growing cell or uncap an empty one,
-    # exactly as a rebuild over the union with the same router would
-    capped = _semdedup_capped(ref_path, meta)
-    scale = int(meta["scale"])
-    # validate the RAW float (ADVICE r14 #5): 1.004 / -0.004 must raise,
-    # not silently round into range
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError("threshold must be in [0, 1]")
-    t = round(threshold * 100)
-    num, den = t * t, 100 * 100
-    g = gcd(num, den) or 1
-    num, den = num // g, den // g
-    from ..llm.cluster import _semdedup_verdicts
+    judge = _semdedup_judge(ref_path, vec_col, id_col, threshold)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
-        if not state:  # empty reference: every row keeps, cid NULL
-            out = batch_df.select(
-                F.col(id_col),
-                F.lit(None).cast("int").alias("cid"),
-                F.lit(True).alias("keep"),
-                tag,
-            )
-            out.write.mode("append").parquet(out_dir)
-            return
-        pts = _assign_df(
-            _prepare(batch_df, vec_col, id_col, scale), state, meta["assign"]
-        )
-        if capped:
-            pts = pts.where(~F.col("cid").isin(sorted(capped)))
-        # pin the batch's assignment once (batch-sized): it feeds the cid
-        # collect below plus the matched/out branches
-        pts = pin(pts)
-        # STRUCTURAL cell pruning (VERDICT r14 #4): the batch's distinct
-        # cids are bounded by the router size k — collect them and
-        # restrict the reference scan explicitly, so partition pruning is
-        # guaranteed by the filter literal rather than left to dynamic
-        # pruning (which foreachBatch plan shapes don't promise)
-        batch_cids = [r["cid"] for r in pts.select("cid").distinct().collect()]
-        cells = _pruned_ref_cells(spark, ref_path, batch_cids)
-        # cross-corpus verdicts via the shared Arrow gram kernel (see
-        # llm/cluster.py:_semdedup_verdicts) — same exact int64 decision
-        # the per-pair fold join computed, one cid-keyed exchange
-        id_type = pts.schema["__id__"].dataType
-        both = pts.select(
-            "__id__", "__q__", "__xx__", "cid", F.lit(1).alias("__side__")
-        ).unionByName(
-            cells.select(
-                F.lit(None).cast(id_type).alias("__id__"),
-                F.col("qr").alias("__q__"),
-                F.col("xxr").alias("__xx__"),
-                "cid",
-                F.lit(0).alias("__side__"),
-            )
-        )
-        out = _semdedup_verdicts(both, num, den, within=False).select(
-            F.col("__id__").alias(id_col), "cid", "keep", tag
-        )
-        out.write.mode("append").parquet(out_dir)
+        judge(batch_df).select("*", tag).write.mode("append").parquet(out_dir)
 
     return _start(stream_df, handle, checkpoint_dir, available_now)
 

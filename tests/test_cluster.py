@@ -1,4 +1,5 @@
-"""llm/cluster.py — deterministic k-means + SemDeDup unit tests.
+"""llm/cluster.py — deterministic k-means and IVF unit tests (SemDeDup:
+tests/test_semdedup.py).
 
 Beyond-reference operators (the pandas reference has no vector ops);
 the determinism contract (integer quantization, exact int64 distance
@@ -15,7 +16,6 @@ from gluestick_spark.llm.cluster import (
     int_dot_expr,
     kmeans,
     quantize_vec_expr,
-    semdedup,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -140,89 +140,6 @@ def test_kmeans_assign_validated(spark):
     df = _vecs(spark, [(1, [1.0])])
     with pytest.raises(ValueError):
         kmeans(df, "v", "id", k=1, iters=0, assign="bogus").collect()
-
-
-def test_semdedup_known_geometry(spark):
-    # id=2 is a near-duplicate of id=1 (cos ~ 1); id=3 orthogonal, id=4
-    # antipodal. k=1 -> single cluster, pure pairwise semantics.
-    df = _vecs(
-        spark,
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.999, 0.01]),
-            (3, [0.0, 1.0]),
-            (4, [-1.0, 0.0]),
-        ],
-    )
-    out = semdedup(df, "v", "id", k=1, iters=1, threshold=0.9)
-    keep = {r["id"]: r["keep"] for r in out.collect()}
-    assert keep == {1: True, 2: False, 3: True, 4: True}
-
-
-def test_semdedup_leader_is_smallest_id(spark):
-    # Three mutual near-dups: only the smallest id survives.
-    df = _vecs(
-        spark,
-        [(7, [1.0, 0.0]), (9, [0.998, 0.002]), (5, [0.997, 0.001]), (2, [0.0, 1.0])],
-    )
-    out = semdedup(df, "v", "id", k=1, iters=1, threshold=0.9)
-    keep = {r["id"]: r["keep"] for r in out.collect()}
-    assert keep == {5: True, 7: False, 9: False, 2: True}
-
-
-def test_semdedup_threshold_validated(spark):
-    df = _vecs(spark, [(1, [1.0])])
-    with pytest.raises(ValueError):
-        semdedup(df, "v", "id", threshold=1.5)
-
-
-def test_semdedup_max_cluster_size_cap(spark):
-    """VERDICT r10 #2: the giant-cluster cap. On clusters within the
-    cap, capped ≡ uncapped; oversized clusters emit NO rows (unjudged,
-    never a silent keep); invalid caps raise."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    # two tight far-apart blobs: ids 0..19 around e1 (big), 100..104
-    # around e2 (small) — kmeans k=2 separates them deterministically
-    rows = [(i, [1.0 + float(rng.normal(0, 0.01)), float(rng.normal(0, 0.01))])
-            for i in range(20)]
-    rows += [(100 + i, [float(rng.normal(0, 0.01)), 1.0 + float(rng.normal(0, 0.01))])
-             for i in range(5)]
-    df = _vecs(spark, rows)
-
-    uncapped = {r["id"]: (r["cid"], r["keep"])
-                for r in semdedup(df, "v", "id", k=2, iters=2,
-                                  threshold=0.9).collect()}
-    sizes: dict[int, int] = {}
-    for cid, _ in uncapped.values():
-        sizes[cid] = sizes.get(cid, 0) + 1
-    big_cid = max(sizes, key=lambda c: sizes[c])
-    assert sorted(sizes.values()) == [5, 20]
-
-    capped = {r["id"]: (r["cid"], r["keep"])
-              for r in semdedup(df, "v", "id", k=2, iters=2, threshold=0.9,
-                                max_cluster_size=10).collect()}
-    # big cluster unjudged -> absent; small cluster identical verdicts
-    assert set(capped) == {i for i, (c, _) in uncapped.items() if c != big_cid}
-    assert all(capped[i] == uncapped[i] for i in capped)
-
-    # cap above every cluster -> capped ≡ uncapped exactly
-    loose = {r["id"]: (r["cid"], r["keep"])
-             for r in semdedup(df, "v", "id", k=2, iters=2, threshold=0.9,
-                               max_cluster_size=1000).collect()}
-    assert loose == uncapped
-
-    with pytest.raises(ValueError, match="max_cluster_size"):
-        semdedup(df, "v", "id", max_cluster_size=0)
-
-
-def test_semdedup_negative_cosine_never_drops(spark):
-    # dot <= 0 short-circuits: antipodal vectors are NOT near-dups even
-    # at threshold 0 (cos must be strictly positive to drop).
-    df = _vecs(spark, [(1, [1.0, 0.0]), (2, [-1.0, 0.0])])
-    out = semdedup(df, "v", "id", k=1, iters=0, threshold=0.0)
-    assert all(r["keep"] for r in out.collect())
 
 
 # ---------------------------------------------------------------------------

@@ -219,7 +219,7 @@ def test_semdedup_rebuild_over_torn_append_then_append(spark, tmp_dir):
     deletes every rebuilt cell file (the manifest names only the files
     of the build before)."""
     from gluestick_spark.llm.index_commit import _list_cell_files
-    from gluestick_spark.streaming.pipeline import (
+    from gluestick_spark.llm.cluster import (
         append_semdedup_ref,
         materialize_semdedup_ref,
     )

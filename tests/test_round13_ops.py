@@ -698,61 +698,6 @@ def test_audio_near_dups_chain_collapse(spark):
     assert fake_phash(b"same") != fake_audio_fingerprint(b"same")
 
 
-# ---------------- r13 extra: cross-corpus SemDeDup -----------------------
-
-
-def test_semdedup_against_contract(spark):
-    """Corpus rows near a reference row (same cluster, cosine above τ)
-    are flagged keep=false; far rows survive; empty reference keeps
-    everything; the reference-cell cap drops judgment loudly (no output
-    row), never silently keeps."""
-    from gluestick_spark.llm.cluster import semdedup_against
-
-    # two well-separated directions; corpus has near-copies of ref dir A
-    ref = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (1, [0.99, 0.01, 0.0, 0.0]),   # ~dup of ref 100
-            (2, [0.0, 0.0, 1.0, 0.0]),     # orthogonal to both
-            (3, [0.01, 0.98, 0.0, 0.0]),   # ~dup of ref 101
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        r["vec_id"]: r["keep"]
-        for r in semdedup_against(
-            corpus, ref, "embedding", "vec_id", k=2, iters=2, threshold=0.9
-        ).collect()
-    }
-    assert got[1] is False and got[3] is False and got[2] is True
-
-    # empty reference: everything kept, cid NULL
-    empty = ref.where("vec_id < 0")
-    all_keep = semdedup_against(
-        corpus, empty, "embedding", "vec_id", k=2, threshold=0.9
-    ).collect()
-    assert all(r["keep"] for r in all_keep)
-    assert all(r["cid"] is None for r in all_keep)
-
-    # reference-cell cap: cap=1 removes any ref cell with 2+ rows — rows
-    # assigned there emit NO output (unjudged), the loud contract
-    ref2 = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (102, [0.98, 0.02, 0.0, 0.0]),
-         (101, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    capped = semdedup_against(
-        corpus, ref2, "embedding", "vec_id", k=2, iters=2,
-        threshold=0.9, max_cluster_size=1,
-    ).collect()
-    judged = {r["vec_id"] for r in capped}
-    assert 1 not in judged  # its ref cell (two A-direction rows) was capped
-    assert {r["vec_id"]: r["keep"] for r in capped}.get(3) is False
-
-
 # ---------------- r13 extra: streaming fingerprint dedup -----------------
 
 

@@ -338,96 +338,6 @@ def test_unigram_segment_matches_bruteforce(spark):
         assert "".join(parts) == w
 
 
-# ---------------- VERDICT #7: streaming cross-corpus SemDeDup ------------
-
-
-def test_streaming_semdedup_equals_batch(spark, tmp_dir):
-    """Stream ≡ batch exactly (stateless per batch, frozen reference):
-    two micro-batches of corpus embeddings judged against the persisted
-    reference reproduce semdedup_against row-for-row; capped reference
-    cells leave their corpus rows UNJUDGED in both; a torn reference
-    (no meta) refuses loudly; an empty reference keeps everything."""
-    import os
-
-    from gluestick_spark.llm.cluster import semdedup_against
-    from gluestick_spark.streaming.pipeline import (
-        materialize_semdedup_ref,
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_semdedup,
-    )
-
-    import math
-
-    # skewed: 80% of vectors cluster tightly (one hot reference cell) so
-    # the max_cluster_size cap is guaranteed to bite
-    rows = []
-    for i in range(240):
-        if i % 5 != 0:
-            v = [1.0 + 0.001 * ((i * (j + 3)) % 7) for j in range(8)]
-        else:
-            v = [math.sin(0.7 * i + j) for j in range(8)]
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ref = emb.where("vec_id % 3 = 0")
-    cor = emb.where("vec_id % 3 != 0")
-    refp = os.path.join(tmp_dir, "ref")
-    materialize_semdedup_ref(
-        ref, "embedding", "vec_id", refp, k=4, iters=2, max_cluster_size=35
-    )
-
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    schema = cor.schema
-    for cond in ("vec_id <= 120", "vec_id > 120"):
-        cor.where(cond).coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_semdedup(
-            stream_from_directory(spark, stage, schema),
-            refp, "embedding", "vec_id", out, ckpt, threshold=0.9,
-        )
-        q.awaitTermination()
-    got = sorted(
-        map(tuple, read_streaming_dedup_output(spark, out).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            semdedup_against(
-                cor, ref, "embedding", "vec_id",
-                k=4, iters=2, threshold=0.9, max_cluster_size=35,
-            ).collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-    # the cap actually bit: some corpus rows are unjudged
-    assert len(got) < cor.count()
-
-    # torn reference refuses
-    os.remove(os.path.join(refp, "_SEMDEDUP_META.json"))
-    with pytest.raises(ValueError, match="torn or absent"):
-        streaming_semdedup(
-            stream_from_directory(spark, stage, schema),
-            refp, "embedding", "vec_id", out, ckpt,
-        )
-
-    # empty reference: all rows keep, cid NULL (stream matches batch)
-    refp2 = os.path.join(tmp_dir, "ref_empty")
-    materialize_semdedup_ref(
-        ref.where("vec_id < 0"), "embedding", "vec_id", refp2, k=4
-    )
-    out2 = os.path.join(tmp_dir, "out2")
-    ckpt2 = os.path.join(tmp_dir, "ckpt2")
-    q = streaming_semdedup(
-        stream_from_directory(spark, stage, schema),
-        refp2, "embedding", "vec_id", out2, ckpt2,
-    )
-    q.awaitTermination()
-    rows = read_streaming_dedup_output(spark, out2).collect()
-    assert len(rows) == cor.count()
-    assert all(r["keep"] and r["cid"] is None for r in rows)
-
-
 def test_tombstone_antijoin_keeps_partition_pruning(spark, tmp_dir):
     """The serving anti-join against tombstones must not disturb the
     probe's partition pruning: the cells FileSourceScan still carries a

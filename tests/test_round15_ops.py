@@ -4,7 +4,6 @@ Phase A — ADVICE r14 closures + VERDICT r14 plan-posture fixes:
 - vacuum_deleted: hidden swap dirs + crash recovery + batched rewrites
 - compact_sketch_log: in-flight max-batch exclusion (append race)
 - fp_segments mixed tagged/untagged schema determinism (mergeSchema)
-- streaming_semdedup raw-threshold validation + structural cell pruning
 """
 
 from __future__ import annotations
@@ -272,61 +271,6 @@ def test_fp_segments_mixed_schema_reads_deterministically(spark, tmp_dir):
     assert spark.read.parquet(seg_path).agg(F.max("__batch__")).first()[0] == 0
 
 
-# ---------------- streaming semdedup: validation + pruning ----------------
-
-
-def test_streaming_semdedup_validates_raw_threshold(spark, tmp_dir):
-    """ADVICE r14 #5: 1.004 / -0.004 must raise on the RAW float, not
-    silently round into range."""
-    from gluestick_spark.streaming.pipeline import (
-        materialize_semdedup_ref,
-        streaming_semdedup,
-    )
-
-    ref = _emb(spark, n=40)
-    ref_path = os.path.join(tmp_dir, "ref")
-    materialize_semdedup_ref(ref, "embedding", "vec_id", ref_path, k=2, iters=1)
-    src = os.path.join(tmp_dir, "src")
-    _emb(spark, n=10).write.parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    for bad in (1.004, -0.004, 1.5):
-        with pytest.raises(ValueError, match=r"\[0, 1\]"):
-            streaming_semdedup(
-                stream, ref_path, "embedding", "vec_id",
-                os.path.join(tmp_dir, "out"), os.path.join(tmp_dir, "ck"),
-                threshold=bad,
-            )
-
-
-def test_semdedup_ref_cell_pruning_is_structural(spark, tmp_dir):
-    """VERDICT r14 #4 plan gate: the handler's reference scan
-    (_pruned_ref_cells) carries the batch's cid literals as a
-    PartitionFilter — pruning is structural, not dynamic."""
-    from gluestick_spark.streaming.pipeline import (
-        _pruned_ref_cells,
-        materialize_semdedup_ref,
-    )
-
-    ref = _emb(spark, n=120)
-    ref_path = os.path.join(tmp_dir, "ref")
-    materialize_semdedup_ref(ref, "embedding", "vec_id", ref_path, k=4, iters=1)
-    cells = _pruned_ref_cells(spark, ref_path, [0, 2])
-    plan = cells._jdf.queryExecution().executedPlan().toString()
-    pruned = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln
-        and "PartitionFilters:" in ln
-        and "cid" in ln.split("PartitionFilters:")[1].split("]")[0]
-    ]
-    assert pruned, plan
-    # and only the probed cells' rows come back
-    assert set(
-        r["cid"] for r in cells.select("cid").distinct().collect()
-    ) <= {0, 2}
-
-
 # ---------------- batched retrieval serving (VERDICT r14 #2/#3) ----------
 
 
@@ -527,214 +471,6 @@ def test_sq_batch_keeps_partition_pruning(spark, tmp_dir):
         and "cid" in ln.split("PartitionFilters:")[1].split("]")[0]
     ]
     assert pruned, plan
-
-
-# ---------------- SemDeDup reference append (VERDICT r14 #6) ----------
-
-
-def test_append_semdedup_ref_equals_frozen_router_union(spark, tmp_dir):
-    """append_semdedup_ref grows the frozen reference: the cell contents
-    equal assigning the UNION against the frozen router (append ≡
-    rebuild-with-same-router), the capped set re-derives from true
-    totals (a cell crossing the cap stops being judged; an empty cell
-    gaining rows starts), and streaming verdicts against the appended
-    reference equal the union-reference brute semantics."""
-    import json
-
-    from gluestick_spark.llm.cluster import _assign_df, _prepare, int_dot_expr
-    from gluestick_spark.streaming.pipeline import (
-        _SEMDEDUP_META,
-        _semdedup_capped,
-        append_semdedup_ref,
-        materialize_semdedup_ref,
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_semdedup,
-    )
-
-    emb = _emb(spark, n=240)
-    ref1 = emb.where("vec_id % 3 = 0 AND vec_id % 6 = 0")
-    ref2 = emb.where("vec_id % 3 = 0 AND vec_id % 6 <> 0")
-    cor = emb.where("vec_id % 3 <> 0")
-    ref_path = os.path.join(tmp_dir, "ref")
-    # pick the cap ADAPTIVELY so the append provably crosses it on the
-    # fullest cell: build once uncapped to read the true counts, then
-    # rebuild with cap = max build count + 1 (deterministic build ⇒
-    # identical counts)
-    materialize_semdedup_ref(
-        ref1, "embedding", "vec_id", ref_path, k=4, iters=1
-    )
-    with open(os.path.join(ref_path, _SEMDEDUP_META)) as f:
-        cap = max(json.load(f)["counts"]) + 1
-    materialize_semdedup_ref(
-        ref1, "embedding", "vec_id", ref_path, k=4, iters=1,
-        max_cluster_size=cap,
-    )
-    with open(os.path.join(ref_path, _SEMDEDUP_META)) as f:
-        meta = json.load(f)
-    state = [(list(map(int, s)), int(n)) for s, n in meta["state"]]
-    capped_before = _semdedup_capped(ref_path, meta)
-
-    n2 = ref2.count()
-    assert append_semdedup_ref(ref2, "embedding", "vec_id", ref_path) == n2
-    capped_after = _semdedup_capped(ref_path, meta)
-
-    # union truth, frozen router
-    union_pts = _assign_df(
-        _prepare(ref1.unionByName(ref2), "embedding", "vec_id", meta["scale"]),
-        state, meta["assign"],
-    ).localCheckpoint()
-    sizes = {
-        int(r["cid"]): int(r["n"])
-        for r in union_pts.groupBy("cid").count().withColumnRenamed("count", "n").collect()
-    }
-    expect_capped = {
-        c for c in range(len(state)) if sizes.get(c, 0) == 0 or sizes[c] > cap
-    }
-    assert capped_after == expect_capped
-    # the append must actually CHANGE the capped set (cross or uncap) —
-    # otherwise this test isn't exercising re-derivation
-    assert capped_after != capped_before
-
-    # cells on disk == union assignment minus BUILD-capped cells (their
-    # build rows were never written; appended rows in capped cells are
-    # physically present but serving-excluded)
-    cells = spark.read.parquet(os.path.join(ref_path, "cells"))
-    ref1_pts = _assign_df(
-        _prepare(ref1, "embedding", "vec_id", meta["scale"]), state, meta["assign"]
-    )
-    kept_build = ref1_pts.where(~F.col("cid").isin(sorted(capped_before)))
-    ref2_pts = _assign_df(
-        _prepare(ref2, "embedding", "vec_id", meta["scale"]), state, meta["assign"]
-    )
-    expect_cells = kept_build.unionByName(ref2_pts).select(
-        F.col("cid").cast("int"),
-        F.col("__q__").alias("qr"),
-        F.col("__xx__").alias("xxr"),
-    )
-    cells = cells.select(F.col("cid").cast("int"), "qr", "xxr")
-    assert (
-        cells.exceptAll(expect_cells).count() == 0
-        and expect_cells.exceptAll(cells).count() == 0
-    )
-
-    # streaming verdicts over the corpus == union-reference semantics
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    cor.coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_semdedup(
-        stream_from_directory(spark, stage, cor.schema),
-        ref_path, "embedding", "vec_id", out, ckpt, threshold=0.9,
-    )
-    q.awaitTermination()
-    got = {
-        (r["vec_id"], r["cid"], r["keep"])
-        for r in read_streaming_dedup_output(spark, out).collect()
-    }
-    # brute: corpus assigned on frozen router; capped cells unjudged;
-    # match = exact int64 rational cosine vs any union-ref row in-cell
-    cpts = _assign_df(
-        _prepare(cor, "embedding", "vec_id", meta["scale"]), state, meta["assign"]
-    ).where(~F.col("cid").isin(sorted(expect_capped))).localCheckpoint()
-    rpts = union_pts.where(~F.col("cid").isin(sorted(expect_capped))).select(
-        "cid", F.col("__q__").alias("qr"), F.col("__xx__").alias("xxr")
-    )
-    dot = int_dot_expr(F.col("__q__"), F.col("qr"))
-    t = 90
-    matched = (
-        cpts.join(rpts, "cid")
-        .where(dot > 0)
-        .where(
-            F.lit(10000).cast("long") * dot * dot
-            > F.lit(t * t).cast("long") * F.col("__xx__") * F.col("xxr")
-        )
-        .select("__id__").distinct().withColumn("__m__", F.lit(True))
-    )
-    expect = {
-        (r["__id__"], r["cid"], r["keep"])
-        for r in cpts.select("__id__", "cid")
-        .join(matched, "__id__", "left")
-        .select(
-            "__id__", "cid",
-            F.coalesce(~F.col("__m__"), F.lit(True)).alias("keep"),
-        )
-        .collect()
-    }
-    assert got == expect
-
-
-def test_append_semdedup_ref_torn_append_refuses_and_heals(spark, tmp_dir):
-    """A torn reference append is refused by serving and rolled back
-    (cells AND count ledger together) by the next append — the ANN
-    bracket discipline applied to the semdedup reference."""
-    import json
-
-    from gluestick_spark.llm.index_commit import SIDECAR, begin_append
-    from gluestick_spark.streaming.pipeline import (
-        _SSD_LEDGER,
-        append_semdedup_ref,
-        materialize_semdedup_ref,
-        stream_from_directory,
-        streaming_semdedup,
-    )
-
-    emb = _emb(spark, n=120)
-    ref_path = os.path.join(tmp_dir, "ref")
-    materialize_semdedup_ref(
-        emb.where("vec_id % 2 = 0"), "embedding", "vec_id", ref_path,
-        k=2, iters=1,
-    )
-    pre_cells = {
-        (r["cid"], tuple(r["qr"]), r["xxr"])
-        for r in spark.read.parquet(os.path.join(ref_path, "cells")).collect()
-    }
-    # simulate a torn append: bracket opened, cell + ledger junk landed,
-    # no commit
-    begin_append(ref_path)
-    cdirs = [
-        d for d in os.listdir(os.path.join(ref_path, "cells"))
-        if d.startswith("cid=")
-    ]
-    junk = os.path.join(ref_path, "cells", cdirs[0], "part-torn.parquet")
-    spark.createDataFrame(
-        [([1, 2], 5)], "qr array<bigint>, xxr bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(junk + ".dir")
-    os.rename(
-        os.path.join(
-            junk + ".dir",
-            [f for f in os.listdir(junk + ".dir") if f.endswith(".parquet")][0],
-        ),
-        junk,
-    )
-    ldir = os.path.join(ref_path, "cells", _SSD_LEDGER)
-    os.makedirs(ldir, exist_ok=True)
-    with open(os.path.join(ldir, "torn.json"), "w") as f:
-        json.dump({"counts": {"0": 1}}, f)
-
-    src = os.path.join(tmp_dir, "src")
-    emb.where("vec_id % 2 = 1").coalesce(1).write.parquet(src)
-    with pytest.raises(ValueError, match="in-progress or torn append"):
-        streaming_semdedup(
-            stream_from_directory(
-                spark, src, spark.read.parquet(src).schema
-            ),
-            ref_path, "embedding", "vec_id",
-            os.path.join(tmp_dir, "out"), os.path.join(tmp_dir, "ck"),
-        )
-    # a retried append rolls the torn batch back first
-    n = append_semdedup_ref(
-        emb.where("vec_id % 2 = 1").limit(0), "embedding", "vec_id", ref_path
-    )
-    assert n == 0
-    assert not os.path.isfile(os.path.join(ref_path, SIDECAR))
-    assert not os.path.exists(os.path.join(ldir, "torn.json"))
-    assert not os.path.exists(junk)
-    post_cells = {
-        (r["cid"], tuple(r["qr"]), r["xxr"])
-        for r in spark.read.parquet(os.path.join(ref_path, "cells")).collect()
-    }
-    assert post_cells == pre_cells
 
 
 # ---------------- checksum-validated PII (VERDICT r14 #7) ----------

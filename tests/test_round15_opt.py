@@ -1,9 +1,6 @@
-"""Round-15 optimization pins: the Arrow gram kernel that replaced
-semdedup's pairwise join must reproduce the join form's semantics
-exactly — the null/ragged-vector null-dot behavior (zip_with pads the
-shorter array with null, so such pairs never match), the strict-id
-leader rule, and exactness past int64 (where the join form would have
-raised under ANSI, the kernel computes with Python ints)."""
+"""Round-15 optimization pins: the bounded RRF leg window and the
+minhash verify's once-per-document shingling. (The SemDeDup gram-kernel
+pins live in tests/test_semdedup.py.)"""
 
 from __future__ import annotations
 
@@ -11,97 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from gluestick_spark import get_spark
-from gluestick_spark.llm.cluster import _semdedup_verdicts, semdedup
 
 
 @pytest.fixture(scope="module")
 def spark():
     return get_spark("test-r15-opt")
-
-
-def _pts(spark, rows):
-    """(id, q, cid) -> the pts frame the kernel consumes; xx = q·q or
-    NULL exactly as int_dot_expr computes it (null element -> null)."""
-    def xx(q):
-        if q is None or any(v is None for v in q):
-            return None
-        return sum(v * v for v in q)
-
-    return spark.createDataFrame(
-        [(i, q, xx(q), c) for i, q, c in rows],
-        "__id__ long, __q__ array<long>, __xx__ long, cid int",
-    )
-
-
-def test_kernel_null_ragged_and_leader_rule(spark):
-    rows = [
-        (1, [1000, 0, 0], 0),
-        (2, [1000, 0, 0], 0),    # dup of 1 (earlier id) -> dropped
-        (3, [1000, 0], 0),       # shorter: never matches 3-dim rows
-        (4, [1000, 0], 0),       # dup of 3 -> dropped
-        (5, None, 0),            # null vector: inert
-        (6, [1000, None, 0], 0), # null element: inert
-        (7, [0, 1000, 0], 0),    # orthogonal: kept
-        (8, [1000, 0, 0], 1),    # other cluster: its own leader, kept
-    ]
-    got = {
-        r["__id__"]: r["keep"]
-        for r in _semdedup_verdicts(
-            _pts(spark, rows), num=81, den=100, within=True
-        ).collect()
-    }
-    assert got == {
-        1: True, 2: False, 3: True, 4: False,
-        5: True, 6: True, 7: True, 8: True,
-    }
-
-
-def test_kernel_against_sides(spark):
-    # side 0 = reference (id NULL, never emitted), side 1 = corpus
-    both = spark.createDataFrame(
-        [
-            (None, [1000, 0], 1000000, 0, 0),   # ref anchor
-            (None, None, None, 0, 0),           # null ref: matches nothing
-            (1, [1000, 10], 1000100, 0, 1),     # near anchor -> dropped
-            (2, [0, 1000], 1000000, 0, 1),      # orthogonal -> kept
-            (3, None, None, 0, 1),              # null corpus row: kept
-            (4, [1000, 0], 1000000, 1, 1),      # cluster with no ref -> kept
-        ],
-        "__id__ long, __q__ array<long>, __xx__ long, cid int, __side__ int",
-    )
-    got = {
-        r["__id__"]: r["keep"]
-        for r in _semdedup_verdicts(both, num=81, den=100, within=False).collect()
-    }
-    assert got == {1: False, 2: True, 3: True, 4: True}
-
-
-def test_kernel_object_fallback_past_int64(spark):
-    # magnitudes where den·dot² overflows int64: the kernel must fall
-    # back to exact Python-int arithmetic (the join form would raise
-    # under ANSI) and still decide the near-duplicate correctly —
-    # end-to-end through semdedup (clean vectors, so kmeans trains fine)
-    big = 2.0e4  # q = 2e7 after scale=1000 -> xx ~ 1.2e15, den*xx^2 ~ 1e32
-    rows = [
-        (1, [big, big, big]),
-        (2, [big, big, big]),          # exact dup of 1 -> dropped
-        (3, [big, -big, 0.0]),         # far from 1 -> kept
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        r["vec_id"]: r["keep"]
-        for r in semdedup(
-            df, "embedding", "vec_id", k=1, iters=0, threshold=0.9
-        ).collect()
-    }
-    assert got == {1: True, 2: False, 3: True}
-
-
-def test_kernel_empty_input_schema(spark):
-    empty = _pts(spark, []).where(F.lit(False))
-    out = _semdedup_verdicts(empty, num=81, den=100, within=True)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["__id__", "cid", "keep"]
 
 
 def test_rrf_leg_truncation_bounds_the_rank_window(spark):
