@@ -8584,7 +8584,7 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 streaming novelty guardrail (streaming/pipeline.py:
     streaming_novelty — r12, VERDICT r11 #8): the src0 reference corpus
-    is materialized ONCE as a bucketed gram-hash state table + persisted
+    is materialized ONCE as a flat gram-hash state + persisted
     Bloom bitmap (the L110 store-once shape), then the non-src0 docs
     arrive in two micro-batches and each batch's per-doc 3-gram novelty
     is scored statelessly against the stored set. The reference is
@@ -8605,7 +8605,7 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = d.where(F.col("source") == "src0")
     raw = d.where(F.col("source") != "src0").select("doc_id", "text")
     state = tempfile.mkdtemp(prefix="gs_nov_state_")
-    materialize_gram_state(ref, state, "text", n=3, buckets=8)
+    materialize_gram_state(ref, state, "text", n=3)
     mid = raw.agg(F.expr("percentile_approx(doc_id, 0.5)")).first()[0]
     stage = tempfile.mkdtemp(prefix="gs_nov_src_")
     out = tempfile.mkdtemp(prefix="gs_nov_out_")

@@ -431,7 +431,6 @@ def streaming_minhash_dedup(
     shingle_n: int = 3,
     max_bucket: int | None = None,
     available_now: bool = True,
-    state_buckets: int | None = None,
 ) -> StreamingQuery:
     """Streaming MinHash near-dup dedup: each micro-batch is deduplicated
     against everything seen so far, and surviving docs are appended to
@@ -466,21 +465,12 @@ def streaming_minhash_dedup(
     ``out_dir`` append itself is at-least-once — resume from the checkpoint
     only, or key the sink by batch_id, as with any foreachBatch sink.
 
-    **Bucketed state** (``state_buckets=N``, VERDICT r8 task 3): the band
-    index and the docs state become catalog tables bucketed on
-    (band, bucket) and ``__id__`` respectively, and the per-batch plan is
-    restructured so the STATE side never exchanges: the replay-guard
-    ``distinct``, the per-bucket width counts, the width filter join, the
-    state×batch candidate join, and the docs semi-join all run
-    bucket-locally (the union-then-repartition of the default path — a
-    full O(state) shuffle per trigger — is replaced by width arithmetic
-    ``total = state_width + batch_width`` and a split candidate join
-    ``state×batch ∪ batch×batch``, both provably emitting the same pairs).
-    Only batch-sized frames shuffle. Emitted rows are identical to the
-    default path (pytest-pinned equivalence). State tables are EXTERNAL
-    with files under ``state_dir`` (ADVICE r9 — delete ``state_dir`` to
-    reset; fresh sessions re-register from disk; layout toggles on
-    existing state raise loudly)."""
+    Both state tables are flat parquet under ``state_dir``
+    (``minhash_buckets.parquet``, ``minhash_docs.parquet``); delete
+    ``state_dir`` to reset. Band state without doc state (a crash between
+    the two state appends, or a partial wipe) raises a "torn state
+    layout" ``ValueError``, and so does state left in the retired
+    bucketed layout (see :func:`_refuse_legacy_state`)."""
     import os
 
     from ..llm.dedup import (
@@ -495,13 +485,7 @@ def streaming_minhash_dedup(
         max_bucket = DEFAULT_MAX_BUCKET
     buckets_path = os.path.join(state_dir, "minhash_buckets.parquet")
     docs_path = os.path.join(state_dir, "minhash_docs.parquet")
-    buckets_loc = os.path.join(state_dir, "minhash_buckets_bt")
-    docs_loc = os.path.join(state_dir, "minhash_docs_bt")
-    buckets_tbl = _state_table_name(state_dir, "mh_buckets")
-    docs_tbl = _state_table_name(state_dir, "mh_docs")
-    _guard_state_layout_toggle(
-        state_buckets, [buckets_path, docs_path], [buckets_loc, docs_loc]
-    )
+    _refuse_legacy_state(state_dir, ("minhash_buckets_bt", "minhash_docs_bt"))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -509,111 +493,44 @@ def streaming_minhash_dedup(
             F.col(id_col).alias("__id__"), F.col(text_col).alias("__text__")
         )
         bb = minhash_band_buckets(batch, "__text__", "__id__", num_perm, bands, shingle_n)
-        if state_buckets:
-            have_state = _ensure_bucketed_state(
-                spark, buckets_tbl, buckets_loc, ["band", "bucket"], state_buckets
-            )
-            if have_state and not _ensure_bucketed_state(
-                spark, docs_tbl, docs_loc, ["__id__"], state_buckets
-            ):
-                # ADVICE r10: a crash between the two state appends (or a
-                # partial wipe) can leave bucket state without doc state;
-                # without this check spark.table(docs_tbl) dies with an
-                # opaque TABLE_OR_VIEW_NOT_FOUND inside foreachBatch.
+        if os.path.exists(buckets_path):
+            if not os.path.exists(docs_path):
                 raise ValueError(
-                    "torn state layout: minhash bucket state exists under "
-                    f"{buckets_loc} but doc state is missing under "
-                    f"{docs_loc} — a crash between the two state appends "
-                    "or a partial wipe left the stream unresumable. Point "
-                    "the stream at a fresh state_dir, or restore/delete "
-                    "BOTH state tables together."
+                    "torn state layout: minhash bucket state exists at "
+                    f"{buckets_path} but doc state is missing at {docs_path} "
+                    "— a crash between the two state appends or a partial "
+                    "wipe left the stream unresumable. Point the stream at a "
+                    "fresh state_dir, or restore/delete BOTH state "
+                    "directories together."
                 )
+            all_bb = spark.read.parquet(buckets_path).distinct().unionByName(bb)
+            docs_all = spark.read.parquet(docs_path).distinct().unionByName(batch)
         else:
-            have_state = os.path.exists(buckets_path)
-        if state_buckets and have_state:
-            # state side stays on its bucket layout end-to-end: distinct,
-            # width count, width-filter join, and the candidate join all
-            # cluster on (band, bucket) with no Exchange
-            bb_state = spark.table(buckets_tbl).distinct()
-            docs_state = spark.table(docs_tbl).distinct()
-            ws = bb_state.groupBy("band", "bucket").agg(
-                F.count(F.lit(1)).alias("__ws__")
+            all_bb = bb
+            docs_all = batch
+        all_bb = _cap_buckets(
+            all_bb.repartition("band", "bucket"), ["band", "bucket"], max_bucket
+        )
+        new_ids = batch.select("__id__").distinct()
+        right = all_bb.join(new_ids, "__id__")
+        cand = (
+            all_bb.alias("l")
+            .join(
+                right.alias("r"),
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bucket") == F.col("r.bucket"))
+                & (F.col("l.__id__") < F.col("r.__id__")),
             )
-            wb = bb.groupBy("band", "bucket").agg(
-                F.count(F.lit(1)).alias("__wb__")
-            )
-            ok = (
-                ws.join(wb, ["band", "bucket"], "full_outer")
-                .where(
-                    F.coalesce(F.col("__ws__"), F.lit(0))
-                    + F.coalesce(F.col("__wb__"), F.lit(0))
-                    <= F.lit(max_bucket)
-                )
-                .select("band", "bucket")
-            )
-            state_ok = bb_state.join(ok, ["band", "bucket"])
-            batch_ok = bb.join(ok, ["band", "bucket"])
-
-            def _pairs(left):
-                return (
-                    left.alias("l")
-                    .join(
-                        batch_ok.alias("r"),
-                        (F.col("l.band") == F.col("r.band"))
-                        & (F.col("l.bucket") == F.col("r.bucket"))
-                        & (F.col("l.__id__") < F.col("r.__id__")),
-                    )
-                    .select(
-                        F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b")
-                    )
-                )
-
-            cand = _pairs(state_ok).unionByName(_pairs(batch_ok)).distinct()
-            cand_ids = cand.select(F.col("a").alias("__id__")).union(
-                cand.select(F.col("b").alias("__id__"))
-            ).distinct()
-            shingled = F.array_distinct(
-                shingles_expr(F.col("__text__"), shingle_n)
-            ).alias("__sh__")
-            sh = (
-                docs_state.join(cand_ids, "__id__")
-                .select("__id__", shingled)
-                .unionByName(
-                    batch.join(cand_ids, "__id__").select("__id__", shingled)
-                )
-            )
-        else:
-            if have_state and not state_buckets:
-                all_bb = spark.read.parquet(buckets_path).distinct().unionByName(bb)
-                old_docs = spark.read.parquet(docs_path).distinct()
-                docs_all = old_docs.unionByName(batch)
-            else:
-                all_bb = bb
-                docs_all = batch
-            all_bb = _cap_buckets(
-                all_bb.repartition("band", "bucket"), ["band", "bucket"], max_bucket
-            )
-            new_ids = batch.select("__id__").distinct()
-            right = all_bb.join(new_ids, "__id__")
-            cand = (
-                all_bb.alias("l")
-                .join(
-                    right.alias("r"),
-                    (F.col("l.band") == F.col("r.band"))
-                    & (F.col("l.bucket") == F.col("r.bucket"))
-                    & (F.col("l.__id__") < F.col("r.__id__")),
-                )
-                .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"))
-                .distinct()
-            )
-            cand_ids = cand.select(F.col("a").alias("__id__")).union(
-                cand.select(F.col("b").alias("__id__"))
-            ).distinct()
-            docs_src = docs_all
-            sh = docs_src.join(cand_ids, "__id__").select(
-                "__id__",
-                F.array_distinct(shingles_expr(F.col("__text__"), shingle_n)).alias("__sh__"),
-            )
+            .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"))
+            .distinct()
+        )
+        cand_ids = cand.select(F.col("a").alias("__id__")).union(
+            cand.select(F.col("b").alias("__id__"))
+        ).distinct()
+        sh = docs_all.join(cand_ids, "__id__").select(
+            "__id__",
+            F.array_distinct(shingles_expr(F.col("__text__"), shingle_n)).alias("__sh__"),
+        )
         drops = (
             cand.join(
                 sh.select(F.col("__id__").alias("a"), F.col("__sh__").alias("__sha__")), "a"
@@ -629,30 +546,10 @@ def streaming_minhash_dedup(
         kept.select(
             F.col("__id__").alias(id_col), F.col("__text__").alias(text_col)
         ).write.mode("append").parquet(out_dir)
-        if state_buckets:
-            _append_bucketed_state(
-                bb, buckets_tbl, buckets_loc, ["band", "bucket"], state_buckets
-            )
-            _append_bucketed_state(
-                batch, docs_tbl, docs_loc, ["__id__"], state_buckets
-            )
-        else:
-            bb.write.mode("append").parquet(buckets_path)
-            batch.write.mode("append").parquet(docs_path)
+        bb.write.mode("append").parquet(buckets_path)
+        batch.write.mode("append").parquet(docs_path)
 
     return _start(stream_df, handle, checkpoint_dir, available_now)
-
-
-def _state_table_name(state_dir: str, kind: str) -> str:
-    """Deterministic catalog name for a bucketed state table, derived
-    from the state directory path — a restarted stream resumes against
-    the same table, and two streams with different state dirs never
-    collide."""
-    import hashlib
-    import os
-
-    digest = hashlib.md5(os.path.abspath(state_dir).encode()).hexdigest()[:12]
-    return f"gs_state_{kind}_{digest}"
 
 
 def _has_data_files(loc: str) -> bool:
@@ -666,130 +563,46 @@ def _has_data_files(loc: str) -> bool:
     return False
 
 
-def _ensure_bucketed_state(
-    spark, tbl: str, loc: str, bucket_cols: list[str], n: int
-) -> bool:
-    """Resolve a bucketed state table that LIVES UNDER state_dir (ADVICE
-    r9: state must be where the docs say it is — deleting ``state_dir``
-    resets the stream, catalog or no catalog). Returns True iff prior
-    state exists. Three cases:
-
-    - catalog table exists AND its location still holds data → resume.
-    - catalog table exists but the location was wiped (user deleted
-      ``state_dir`` for a fresh start) → DROP the stale entry so the
-      stream genuinely restarts from empty instead of silently deduping
-      against a ghost table.
-    - data exists on disk but the catalog entry is gone (fresh Spark
-      session / new warehouse, persistent ``state_dir``) → re-register
-      an external bucketed table over the existing files so state is
-      never silently abandoned.
-    """
-    exists = spark.catalog.tableExists(tbl)
-    has_files = _has_data_files(loc)
-    if exists and has_files:
-        return True
-    if exists and not has_files:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        return False
-    if has_files:
-        schema_ddl = spark.read.parquet(loc).schema.toDDL()
-        cols = ", ".join(f"`{c}`" for c in bucket_cols)
-        spark.sql(
-            f"CREATE TABLE {tbl} ({schema_ddl}) USING PARQUET "
-            f"CLUSTERED BY ({cols}) INTO {n} BUCKETS "
-            f"LOCATION '{loc}'"
-        )
-        return True
-    return False
-
-
-def _append_bucketed_state(
-    df: DataFrame, tbl: str, loc: str, bucket_cols: list[str], n: int
-) -> None:
-    """Append a batch to a bucketed state table, creating it as an
-    EXTERNAL table at ``loc`` (under state_dir) on first write."""
-    w = df.write.mode("append").format("parquet").bucketBy(n, *bucket_cols)
-    if not df.sparkSession.catalog.tableExists(tbl):
-        w = w.option("path", loc)
-    w.saveAsTable(tbl)
-
-
-# The append-state layout this module writes, for compaction: flat
-# per-batch parquet dirs, and bucketed external-table locations mapped
-# to their catalog kind + bucket columns.
+# The append-state dirs this module writes (flat per-batch parquet), for
+# compaction.
 _STATE_FLAT_DIRS = (
     "minhash_buckets.parquet",
     "minhash_docs.parquet",
     "url_canon.parquet",
     "bin_counts.parquet",
 )
-_STATE_BUCKETED_DIRS = {
-    "minhash_buckets_bt": ("mh_buckets", ["band", "bucket"]),
-    "minhash_docs_bt": ("mh_docs", ["__id__"]),
-    "url_canon_buckets": ("url_canon", ["__canon__"]),
+
+# State dirs of the retired catalog-bucketed layout, each mapped to the
+# flat dir that holds the same rows.
+_LEGACY_STATE_DIRS = {
+    "minhash_buckets_bt": "minhash_buckets.parquet",
+    "minhash_docs_bt": "minhash_docs.parquet",
+    "url_canon_buckets": "url_canon.parquet",
 }
 
 
-def _catalog_num_buckets(spark, tbl: str) -> int | None:
-    if not spark.catalog.tableExists(tbl):
-        return None
-    for row in spark.sql(f"DESCRIBE FORMATTED {tbl}").collect():
-        if row["col_name"].strip() == "Num Buckets":
-            return int(row["data_type"].strip())
-    return None
+def _refuse_legacy_state(state_dir: str, legacy: tuple[str, ...]) -> None:
+    """Raise when ``state_dir`` holds state in the retired bucketed
+    layout: starting over it would silently restart dedup from empty."""
+    import os
 
-
-def _compact_bucketed_state(
-    spark, tbl: str, loc: str, bucket_cols: list[str], n: int,
-    fs=None,
-) -> int:
-    """Bucket-preserving compaction of one external bucketed state
-    table: rewrite into a temp location with the SAME bucket spec
-    (repartition on the bucket columns first, so each bucket lands in
-    one task → one file per bucket), then atomically exchange the data
-    directories. Bucket ids ride in the part-file names, so the
-    existing catalog entry serves the swapped files unchanged — the
-    zero-state-side-Exchange plan property survives compaction
-    (pytest-pinned). Same commit protocol as ``compact_files``:
-    :func:`~gluestick_spark.fsio.swap_dir` on the ``fs=`` seam, healed on
-    entry (any backend but the local default takes its rename fallback,
-    whose ``rename`` must move whole directory trees)."""
-    from ..fsio import LOCAL_FS, heal_swap, swap_dir
-
-    if fs is None:
-        fs = LOCAL_FS
-    heal_swap(loc, fs=fs)
-    tmp_loc = loc.rstrip("/") + ".__compacting__"
-    tmp_tbl = tbl + "__compacting__"
-    if fs.exists(tmp_loc):
-        fs.rmtree(tmp_loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    (
-        # read the FILES, not the table: the bucketed table's scan
-        # already satisfies HashPartitioning(bucket_cols, n), so a
-        # repartition on it is elided and every scan partition would
-        # write its own file — the opposite of compaction
-        spark.read.parquet(loc)
-        .repartition(n, *[F.col(c) for c in bucket_cols])
-        .write.format("parquet")
-        .bucketBy(n, *bucket_cols)
-        .option("path", tmp_loc)
-        .saveAsTable(tmp_tbl)
-    )
-    swap_dir(tmp_loc, loc, fs=fs)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")  # external: files untouched
-    spark.catalog.refreshTable(tbl)
-    return sum(
-        1 for f in fs.listdir(loc) if f.endswith(".parquet")
-    )
+    for name in legacy:
+        loc = os.path.join(state_dir, name)
+        if _has_data_files(loc):
+            flat = os.path.join(state_dir, _LEGACY_STATE_DIRS[name])
+            raise ValueError(
+                f"legacy bucketed state layout under {loc}: its files are "
+                f"plain parquet — move them into {flat} (the flat state "
+                "layout) to resume this stream, or point it at a fresh "
+                "state_dir. Starting over it would silently restart dedup "
+                "from empty."
+            )
 
 
 def compact_stream_state(
     spark,
     state_dir: str,
     target_rows_per_file: int = 1_000_000,
-    state_buckets: int | None = None,
-    fs=None,
 ) -> dict[str, int]:
     """Compact the append-state tables under ``state_dir`` (VERDICT r10
     #4): every ``foreachBatch`` state append lands one-plus small
@@ -797,9 +610,8 @@ def compact_stream_state(
     per-batch state reads (a small-files operational failure, not a
     correctness one). This composes :func:`~gluestick_spark.sinks.
     layout.compact_files` over the flat per-batch state dirs (minhash
-    band index + docs, URL canon set, drift bin counts) and a
-    bucket-preserving rewrite over the bucketed external state tables.
-    Returns {state name: new file count} for everything it compacted.
+    band index + docs, URL canon set, drift bin counts). Returns
+    {state name: new file count} for everything it compacted.
 
     Contract — STOP the stream first (stop → compact → restart): the
     rewrite is row-preserving, so replay guards that dedup on read
@@ -808,22 +620,16 @@ def compact_stream_state(
     into the directory between the temp rewrite and the atomic
     exchange, and those appends would be lost. True concurrent
     compaction needs a table format's commit log — out of scope here by
-    design (same posture as ``compact_files``).
-
-    ``state_buckets``: only needed when a bucketed state table is not
-    in the catalog (fresh session) — must equal the stream's own
-    ``state_buckets`` (the catalog value wins and is cross-checked when
-    both are present; a mismatch raises rather than silently rewriting
-    the layout a running stream depends on). Crash safety per table is
-    ``compact_files``' exchange/self-heal protocol; a crash between two
-    tables' compactions leaves each table individually consistent."""
+    design (same posture as ``compact_files``). Crash safety per
+    directory is ``compact_files``' exchange/self-heal protocol; a crash
+    between two directories' compactions leaves each one consistent.
+    State in the retired bucketed layout raises (see
+    :func:`_refuse_legacy_state`)."""
     import os
 
-    from ..fsio import LOCAL_FS, heal_swap
     from ..sinks.layout import compact_files
 
-    if fs is None:
-        fs = LOCAL_FS
+    _refuse_legacy_state(state_dir, tuple(_LEGACY_STATE_DIRS))
     results: dict[str, int] = {}
     for name in _STATE_FLAT_DIRS:
         p = os.path.join(state_dir, name)
@@ -831,61 +637,7 @@ def compact_stream_state(
             f.endswith(".parquet") for f in os.listdir(p)
         ):
             results[name] = compact_files(spark, p, target_rows_per_file)
-    for base, (kind, bucket_cols) in _STATE_BUCKETED_DIRS.items():
-        loc = os.path.join(state_dir, base)
-        # a crashed fallback swap parks the data at .__old__ — still ours;
-        # heal BEFORE the catalog checks so registration sees the files
-        heal_swap(loc, fs=fs)
-        if not _has_data_files(loc):
-            continue
-        tbl = _state_table_name(state_dir, kind)
-        n_cat = _catalog_num_buckets(spark, tbl)
-        if n_cat is None and state_buckets is None:
-            raise ValueError(
-                f"bucketed state at {loc} has no catalog entry in this "
-                "session — pass state_buckets=N (the stream's own value) "
-                "so compaction preserves the bucket layout"
-            )
-        if (
-            n_cat is not None
-            and state_buckets is not None
-            and n_cat != state_buckets
-        ):
-            raise ValueError(
-                f"state_buckets={state_buckets} does not match the "
-                f"catalog's {n_cat} buckets for {tbl} — refusing to "
-                "rewrite the layout a stream depends on"
-            )
-        n = n_cat if n_cat is not None else state_buckets
-        _ensure_bucketed_state(spark, tbl, loc, bucket_cols, n)
-        results[base] = _compact_bucketed_state(
-            spark, tbl, loc, bucket_cols, n, fs=fs
-        )
     return results
-
-
-def _guard_state_layout_toggle(
-    state_buckets: int | None, plain_paths: list[str], bucketed_locs: list[str]
-) -> None:
-    """``state_buckets`` cannot be toggled on an existing stream's state:
-    enabling it would silently abandon the plain-parquet state and
-    restart dedup from empty; disabling it would do the reverse. Refuse
-    loudly when the OTHER layout's state already exists (ADVICE r9)."""
-    if state_buckets and any(_has_data_files(p) for p in plain_paths):
-        raise ValueError(
-            "state_buckets=N was enabled but plain-parquet state already "
-            f"exists under {plain_paths} — toggling the state layout on an "
-            "existing stream would silently restart dedup from empty. "
-            "Either keep state_buckets=None, or point the stream at a "
-            "fresh state_dir (and re-seed state if needed)."
-        )
-    if not state_buckets and any(_has_data_files(p) for p in bucketed_locs):
-        raise ValueError(
-            "state_buckets=None but bucketed state already exists under "
-            f"{bucketed_locs} — toggling the state layout on an existing "
-            "stream would silently restart dedup from empty. Either keep "
-            "state_buckets=N, or point the stream at a fresh state_dir."
-        )
 
 
 def streaming_url_dedup(
@@ -896,7 +648,6 @@ def streaming_url_dedup(
     out_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    state_buckets: int | None = None,
 ) -> StreamingQuery:
     """Streaming canonical-URL dedup: each micro-batch is canonicalized
     (:func:`~gluestick_spark.llm.web.canonical_url_expr`), deduplicated
@@ -919,7 +670,7 @@ def streaming_url_dedup(
     ``out_dir`` append and the state append replays the micro-batch
     against unchanged state, appending the SAME survivor rows a second
     time. Every emitted row therefore carries ``__batch_id__``; the
-    replayed duplicates are byte-identical (same batch id, same rows),
+    replayed duplicates are row-identical (same batch id, same rows),
     so :func:`read_streaming_dedup_output` collapses them with one
     distinct on read — the same device ``bin_counts_from_state`` uses.
     The write order (output before state) is deliberate: the opposite
@@ -933,54 +684,26 @@ def streaming_url_dedup(
     rows. State appends are deduplicated on read (distinct) so a
     replayed micro-batch can't double-count.
 
-    **Bucketed state** (``state_buckets=N``, VERDICT r8 task 3): the
-    canonical set is kept as a catalog table BUCKETED on the canonical
-    URL instead of a plain parquet directory. At crawl scale the state
-    is billions of rows, and the default path re-shuffles ALL of it
-    every trigger — once for the replay-guard ``distinct`` and again to
-    co-locate the anti-join. Bucketing pre-hashes the table on the join
-    key, so both the distinct and the state side of the anti-join run
-    bucket-locally with NO Exchange (plan-gated); only the micro-batch
-    (small by definition) shuffles, to ``N`` partitions. Per-batch
-    network cost is then O(batch), not O(state). Emitted rows are
-    identical to the default path (same math, different layout —
-    pytest-pinned). The table is EXTERNAL with its files under
-    ``state_dir`` (ADVICE r9): deleting ``state_dir`` genuinely resets
-    the stream (a stale catalog entry over the wiped location is
-    dropped on the next start), and a fresh session over a persistent
-    ``state_dir`` re-registers the table from disk. ``state_buckets``
-    cannot be toggled on an existing stream's state — the other
-    layout's files present under ``state_dir`` raise loudly."""
+    The canonical set is flat parquet at ``state_dir/url_canon.parquet``;
+    delete ``state_dir`` to reset. State left in the retired bucketed
+    layout raises (see :func:`_refuse_legacy_state`)."""
     import os
 
     from ..llm.web import url_dedup
 
     canon_path = os.path.join(state_dir, "url_canon.parquet")
-    canon_loc = os.path.join(state_dir, "url_canon_buckets")
-    canon_tbl = _state_table_name(state_dir, "url_canon")
-    _guard_state_layout_toggle(state_buckets, [canon_path], [canon_loc])
+    _refuse_legacy_state(state_dir, ("url_canon_buckets",))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_kept = url_dedup(batch_df, url_col, id_col)
-        if state_buckets:
-            have_state = _ensure_bucketed_state(
-                spark, canon_tbl, canon_loc, ["__canon__"], state_buckets
-            )
-            seen = spark.table(canon_tbl).distinct() if have_state else None
-        else:
-            have_state = os.path.exists(canon_path)
-            seen = (
-                spark.read.parquet(canon_path).distinct() if have_state else None
-            )
-        if seen is not None:
-            survivors = batch_kept.join(
+        survivors = url_dedup(batch_df, url_col, id_col)
+        if os.path.exists(canon_path):
+            seen = spark.read.parquet(canon_path).distinct()
+            survivors = survivors.join(
                 seen,
-                batch_kept["canonical_url"] == seen["__canon__"],
+                survivors["canonical_url"] == seen["__canon__"],
                 "left_anti",
             )
-        else:
-            survivors = batch_kept
         # pin BEFORE the writes: the state append below targets the same
         # path the anti-join reads, and the second action would
         # otherwise re-evaluate the join against the just-updated state.
@@ -992,12 +715,7 @@ def streaming_url_dedup(
         canon = survivors.where(F.col("canonical_url").isNotNull()).select(
             F.col("canonical_url").alias("__canon__")
         )
-        if state_buckets:
-            _append_bucketed_state(
-                canon, canon_tbl, canon_loc, ["__canon__"], state_buckets
-            )
-        else:
-            canon.write.mode("append").parquet(canon_path)
+        canon.write.mode("append").parquet(canon_path)
 
     return _start(stream_df, handle, checkpoint_dir, available_now)
 
@@ -1390,7 +1108,7 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
 def read_streaming_dedup_output(spark, out_dir: str) -> DataFrame:
     """Read :func:`streaming_url_dedup` output with the at-least-once
     replay window closed: duplicate rows from a replayed micro-batch are
-    byte-identical (same ``__batch_id__``), so one distinct collapses
+    row-identical (same ``__batch_id__``), so one distinct collapses
     them; the tag is then dropped. The distinct is keyed on the full row
     including the batch id, so two DIFFERENT batches legitimately
     emitting the same id (out-of-order-id superset caveat) are NOT
@@ -1645,8 +1363,9 @@ def streaming_quality_filter(
     carry no cross-batch state, so the union of the per-batch outputs
     IS the batch ``classifier_score`` + threshold over the whole corpus
     — the oracle row shares the classifier CTE chain verbatim. Emitted
-    rows carry ``__batch_id__``; replayed appends are byte-identical
-    and collapse under :func:`read_streaming_dedup_output`.
+    rows carry ``__batch_id__``; replayed appends hold identical rows
+    (the files may differ in their parquet footers) and collapse under
+    :func:`read_streaming_dedup_output`.
 
     A second score band (e.g. a frozen bigram-LM NLL window) composes
     the same way — score with frozen state inside the same foreachBatch
@@ -1700,8 +1419,9 @@ def streaming_decontam(
     :func:`~gluestick_spark.llm.spans.substring_spans_against` over the
     whole corpus (unlike the dedup streams, there is no id-ordering
     assumption). Emitted rows carry ``__batch_id__``; replayed appends
-    are byte-identical and collapse under
-    :func:`read_streaming_dedup_output` on either directory.
+    hold identical rows (the files may differ in their parquet footers)
+    and collapse under :func:`read_streaming_dedup_output` on either
+    directory.
 
     Per-batch cost: batch windows + candidate-bound verify against the
     partitioned index — O(batch), the reference is never re-tokenized.
@@ -1750,8 +1470,8 @@ def streaming_semdedup(
     union of emitted batches equals
     :func:`~gluestick_spark.llm.cluster.semdedup_against` over the
     whole corpus (shared oracle; the streaming_decontam argument).
-    Replays are byte-identical and collapse under
-    :func:`read_streaming_dedup_output`.
+    Replays emit identical rows (the files may differ in their parquet
+    footers) and collapse under :func:`read_streaming_dedup_output`.
 
     Per-batch cost: one narrow assignment over the batch + one
     cid-keyed exchange against the reference cells of the batch's own
@@ -1772,9 +1492,9 @@ def streaming_semdedup(
 # ---------------------------------------------------------------------------
 # Streaming novelty guardrail (VERDICT r11 #8): the L110 store-once
 # pattern composed with llm/decontam.py:novelty_scores — the reference
-# gram-hash set is materialized ONCE (optionally as a bucketed state
-# table, plus its persisted Bloom bitmap), and every micro-batch scores
-# its documents' n-gram novelty against it statelessly.
+# gram-hash set is materialized ONCE (flat parquet, plus its persisted
+# Bloom bitmap), and every micro-batch scores its documents' n-gram
+# novelty against it statelessly.
 # ---------------------------------------------------------------------------
 
 def materialize_gram_state(
@@ -1782,18 +1502,15 @@ def materialize_gram_state(
     state_dir: str,
     text_col: str,
     n: int = 3,
-    buckets: int | None = None,
     bloom_m_bits: int = 1 << 23,
     bloom_k: int = 3,
     mode: str = "overwrite",
     fs=None,
 ) -> None:
     """Persist the reference corpus's DISTINCT word n-gram hashes at
-    ``state_dir`` — ``ref_grams`` (flat parquet, or a bucketed external
-    state table when ``buckets`` is set: probe joins then read the
-    gram side with ZERO Exchange) plus the pre-aggregated Bloom bitmap
-    (``bloom_words.parquet``, ≤ m/64 rows) so serving never rebuilds
-    the filter. ``_GRAM_META.json`` (n, buckets, bloom geometry) is
+    ``state_dir`` — ``ref_grams`` (flat parquet) plus the pre-aggregated
+    Bloom bitmap (``bloom_words.parquet``, ≤ m/64 rows) so serving never
+    rebuilds the filter. ``_GRAM_META.json`` (n, bloom geometry) is
     written LAST — the commit marker
     (:mod:`gluestick_spark.llm.index_commit`): a crash mid-materialize
     leaves no meta and :func:`streaming_novelty` refuses the torn state
@@ -1813,17 +1530,9 @@ def materialize_gram_state(
 
     fs = fs or LOCAL_FS
     spark = reference.sparkSession
-    meta = {
-        "n": n,
-        "buckets": buckets,
-        "bloom_m_bits": bloom_m_bits,
-        "bloom_k": bloom_k,
-    }
+    meta = {"n": n, "bloom_m_bits": bloom_m_bits, "bloom_k": bloom_k}
     grams_loc = _os.path.join(state_dir, "ref_grams")
     words_loc = _os.path.join(state_dir, "bloom_words.parquet")
-    tbl = "gram_state_" + __import__("hashlib").md5(
-        state_dir.encode()
-    ).hexdigest()[:12]
     grams = reference.select(
         F.explode(ngram_hashes_expr(F.col(text_col), n)).alias("__g__")
     ).distinct()
@@ -1831,12 +1540,9 @@ def materialize_gram_state(
         GRAM_STATE, state_dir, meta if mode == "append" else None, fs=fs
     )
     if mode == "append":
-        existing = _read_gram_state_table(spark, state_dir, buckets)
+        existing = spark.read.parquet(grams_loc)
         fresh = pin(grams.join(existing, "__g__", "left_anti"), eager=True)
-        if buckets is not None:
-            _append_bucketed_state(fresh, tbl, grams_loc, ["__g__"], buckets)
-        else:
-            fresh.write.mode("append").parquet(grams_loc)
+        fresh.write.mode("append").parquet(grams_loc)
         new_words = bloom_words(fresh, "__g__", bloom_m_bits, bloom_k)
         merged = pin(
             spark.read.parquet(words_loc)
@@ -1847,32 +1553,12 @@ def materialize_gram_state(
         )
         merged.write.mode("overwrite").parquet(words_loc)
     else:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if fs.isdir(grams_loc):
-            fs.rmtree(grams_loc)
         grams = pin(grams, eager=True)
-        if buckets is not None:
-            _append_bucketed_state(grams, tbl, grams_loc, ["__g__"], buckets)
-        else:
-            grams.write.mode("overwrite").parquet(grams_loc)
+        grams.write.mode("overwrite").parquet(grams_loc)
         bloom_words(grams, "__g__", bloom_m_bits, bloom_k).write.mode(
             "overwrite"
         ).parquet(words_loc)
     publish(GRAM_STATE, state_dir, meta, fs=fs)
-
-
-def _read_gram_state_table(spark, state_dir: str, buckets: int | None):
-    import os as _os
-
-    grams_loc = _os.path.join(state_dir, "ref_grams")
-    if buckets is not None:
-        tbl = "gram_state_" + __import__("hashlib").md5(
-            state_dir.encode()
-        ).hexdigest()[:12]
-        if _ensure_bucketed_state(spark, tbl, grams_loc, ["__g__"], buckets):
-            return spark.table(tbl)
-        raise ValueError(f"gram state missing under {state_dir}")
-    return spark.read.parquet(grams_loc)
 
 
 def streaming_novelty(
@@ -1902,8 +1588,7 @@ def streaming_novelty(
     Per-batch cost: two narrow text passes over the batch + the
     PERSISTED Bloom bitmap (read, never rebuilt) pre-filtering the
     exact join — the reference table is touched only by the surviving
-    (seen + ~0.1% FP) gram stream; with a bucketed state the gram side
-    joins with zero Exchange. Torn state (missing meta) raises."""
+    (seen + ~0.1% FP) gram stream. Torn state (missing meta) raises."""
     import os as _os
 
     from ..fsio import LOCAL_FS
@@ -1911,16 +1596,15 @@ def streaming_novelty(
     from ..llm.index_commit import GRAM_STATE, load_meta
 
     meta = load_meta(GRAM_STATE, state_dir, fs or LOCAL_FS)
+    grams_loc = _os.path.join(state_dir, "ref_grams")
     words_loc = _os.path.join(state_dir, "bloom_words.parquet")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ref_grams = _read_gram_state_table(spark, state_dir, meta["buckets"])
-        words = spark.read.parquet(words_loc)
         scored = novelty_scores_against(
-            batch_df, ref_grams, text_col, id_col, n=meta["n"],
-            bloom_m_bits=meta["bloom_m_bits"], bloom_k=meta["bloom_k"],
-            bloom_words_df=words,
+            batch_df, spark.read.parquet(grams_loc), text_col, id_col,
+            n=meta["n"], bloom_m_bits=meta["bloom_m_bits"],
+            bloom_k=meta["bloom_k"], bloom_words_df=spark.read.parquet(words_loc),
         )
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         scored.select("*", tag).write.mode("append").parquet(out_dir)
@@ -1991,7 +1675,7 @@ def streaming_corpus_drift(
     Per-batch cost: one narrow gram pass over the batch + a merge over
     the ≤ k·batches-long sketch log. State is KILOBYTES regardless of
     corpus size — the mergeable-sketch streaming posture (compare the
-    bucketed-gram state of :func:`streaming_novelty`, which buys
+    exact gram state of :func:`streaming_novelty`, which buys
     exactness at gram-table cost)."""
     import os as _os
 

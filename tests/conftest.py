@@ -37,16 +37,11 @@ _SLOW_TESTS = {
     "test_append_semdedup_ref_torn_append_refuses_and_heals",
     "test_band_index_append_and_geometry_guard",
     "test_band_index_indexed_equals_direct",
-    "test_bucketed_state_lives_under_state_dir_and_resets",
-    "test_bucketed_state_reregisters_after_catalog_loss",
     "test_classifier_score_matches_bruteforce",
     "test_compact_sketch_log_excludes_inflight_max_batch",
     "test_compact_sketch_log_preserves_estimates",
     "test_compact_stream_state_bin_counts_additive_after",
-    "test_compact_stream_state_bucketed_crash_self_heals",
-    "test_compact_stream_state_bucketed_preserves_plan_and_results",
     "test_compact_stream_state_flat_bounds_files_and_keeps_results",
-    "test_compact_stream_state_missing_catalog_needs_buckets",
     "test_connected_components_deep_chain_and_nonconvergence",
     "test_corpus_gram_overlap_matches_bruteforce",
     "test_correlation_matrix_p64_survives_via_split",
@@ -83,7 +78,6 @@ _SLOW_TESTS = {
     "test_sq_ivf_delete_serves_survivors_and_vacuum_purges",
     "test_sq_ivf_rebalance_splits_and_serves",
     "test_sq_ivf_torn_append_self_heals",
-    "test_state_layout_toggle_refused",
     "test_streaming_agg_upsert_equals_batch",
     "test_streaming_bin_counts_additivity_and_replay_guard",
     "test_streaming_cdc_collapses_multi_dump_trigger",
@@ -92,7 +86,6 @@ _SLOW_TESTS = {
     "test_streaming_fingerprint_dedup_cross_batch_chain",
     "test_streaming_interval_join_left_outer_flushes_unmatched",
     "test_streaming_interval_join_matches_batch",
-    "test_streaming_minhash_dedup_bucketed_state_equivalent",
     "test_streaming_minhash_dedup_equals_batch",
     "test_streaming_minhash_torn_docs_state_raises",
     "test_streaming_quality_filter_stream_equals_batch",
@@ -102,7 +95,6 @@ _SLOW_TESTS = {
     "test_streaming_snapshot_upsert",
     "test_streaming_topk_exact_path_matches_batch",
     "test_streaming_topk_trims_with_error_bounds",
-    "test_streaming_url_dedup_bucketed_state_equivalent",
     "test_streaming_url_dedup_state_and_nulls",
     "test_substring_dedup_matches_bruteforce",
     "test_substring_spans_matches_bruteforce",

@@ -48,128 +48,6 @@ def test_vacuum_sees_committer_v1_staging_activity(spark, tmp_dir):
     assert vacuum_versions(path, keep=10, unpublished_grace_seconds=60.0) == [2]
 
 
-# ------------------------------------- ADVICE 2: bucketed state location --
-
-
-def test_bucketed_state_lives_under_state_dir_and_resets(spark, tmp_dir):
-    """ADVICE r9 (medium): bucketed state must live under state_dir (the
-    documented state location) so deleting state_dir genuinely resets
-    the stream; a stale catalog entry over the wiped location must not
-    resurrect dedup state."""
-    import shutil
-
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    d = spark.createDataFrame(
-        [(i, f"https://site{i % 3}.com/p?utm_source=x&id={i % 3}") for i in range(12)],
-        "doc_id long, url string",
-    )
-    tmp = tmp_dir
-    stage = os.path.join(tmp, "src")
-    state = os.path.join(tmp, "state")
-
-    def run(out, ckpt):
-        q = streaming_url_dedup(
-            stream_from_directory(spark, stage, d.schema),
-            "url", "doc_id", state, out, ckpt, state_buckets=4,
-        )
-        q.awaitTermination()
-
-    d.coalesce(1).write.mode("append").parquet(stage)
-    run(os.path.join(tmp, "out1"), os.path.join(tmp, "ckpt1"))
-    out1 = read_streaming_dedup_output(spark, os.path.join(tmp, "out1"))
-    assert out1.count() == 3  # 3 distinct canonical urls
-
-    # state FILES are under state_dir, not the session warehouse
-    loc = os.path.join(state, "url_canon_buckets")
-    assert any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(loc) for f in fs
-    ), "bucketed state files must live under state_dir"
-
-    # deleting state_dir resets the stream even though the catalog entry
-    # lingers: a fresh run re-emits all 3 canonical urls
-    shutil.rmtree(state)
-    tbl = _state_table_name(state, "url_canon")
-    assert spark.catalog.tableExists(tbl)  # the ghost the fix neutralizes
-    run(os.path.join(tmp, "out2"), os.path.join(tmp, "ckpt2"))
-    out2 = read_streaming_dedup_output(spark, os.path.join(tmp, "out2"))
-    assert out2.count() == 3, "wiped state_dir must mean a fresh start"
-
-
-def test_bucketed_state_reregisters_after_catalog_loss(spark, tmp_dir):
-    """Fresh session catalog + persistent state_dir: the external table
-    is re-registered from the files on disk instead of silently
-    restarting dedup from empty."""
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    d = spark.createDataFrame(
-        [(i, f"https://host.com/page{i % 4}") for i in range(8)],
-        "doc_id long, url string",
-    )
-    stage = os.path.join(tmp_dir, "src")
-    state = os.path.join(tmp_dir, "state")
-    out, ckpt = os.path.join(tmp_dir, "out"), os.path.join(tmp_dir, "ckpt")
-
-    d.where("doc_id < 4").coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_url_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "url", "doc_id", state, out, ckpt, state_buckets=4,
-    )
-    q.awaitTermination()
-    # simulate catalog loss (new warehouse / new session): drop the entry
-    tbl = _state_table_name(state, "url_canon")
-    spark.sql(f"DROP TABLE {tbl}")
-    # second half repeats the same 4 pages -> all dupes vs persisted state
-    d.where("doc_id >= 4").coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_url_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "url", "doc_id", state, out, ckpt, state_buckets=4,
-    )
-    q.awaitTermination()
-    got = read_streaming_dedup_output(spark, out)
-    assert got.count() == 4, "state on disk must survive catalog loss"
-
-
-def test_state_layout_toggle_refused(spark, tmp_dir):
-    """state_buckets cannot be toggled on an existing stream's state —
-    either direction raises instead of silently restarting from empty."""
-    from gluestick_spark.streaming.pipeline import (
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    d = spark.createDataFrame(
-        [(i, f"https://h.com/p{i}") for i in range(4)],
-        "doc_id long, url string",
-    )
-    stage = os.path.join(tmp_dir, "src")
-    state = os.path.join(tmp_dir, "state")
-    d.coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_url_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "url", "doc_id", state,
-        os.path.join(tmp_dir, "out"), os.path.join(tmp_dir, "ckpt"),
-    )
-    q.awaitTermination()
-    with pytest.raises(ValueError, match="state layout"):
-        streaming_url_dedup(
-            stream_from_directory(spark, stage, d.schema),
-            "url", "doc_id", state,
-            os.path.join(tmp_dir, "out2"), os.path.join(tmp_dir, "ckpt2"),
-            state_buckets=4,
-        )
-
-
 # ----------------------------------- ADVICE 3: resample non-string class --
 
 

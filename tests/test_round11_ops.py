@@ -1,39 +1,12 @@
-"""Round-11 contracts: streaming state compaction (VERDICT r10 #4) and
-the round's other new operator surfaces."""
+"""Round-11 contracts: the round's new operator surfaces (streaming
+state compaction moved to tests/test_stream_state.py)."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _parquet_files(path: str) -> list[str]:
-    return [f for f in os.listdir(path) if f.endswith(".parquet")]
-
-
-def _urls_df(spark, lo: int, hi: int):
-    rows = [
-        (i, f"https://www.example.com/page{i % 7}?utm_source=x&id={i % 5}")
-        for i in range(lo, hi)
-    ]
-    return spark.createDataFrame(rows, "doc_id long, url string")
-
-
-def _run_url_stream(spark, d, stage, out, state, ckpt, **kw):
-    from gluestick_spark.streaming.pipeline import (
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    d.coalesce(1).write.mode("append").parquet(stage)
-    streaming_url_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "url", "doc_id", state, out, ckpt, **kw,
-    ).awaitTermination()
 
 
 # ----------------------------- r11: cross-corpus n-gram novelty -----------
@@ -168,168 +141,3 @@ def test_sample_exact_k_contract(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="k must be"):
         sample_exact_k(d, "k", 0)
-
-
-# ------------------------- VERDICT r10 #4: streaming state compaction -----
-
-
-def test_compact_stream_state_flat_bounds_files_and_keeps_results(spark, tmp_dir):
-    """Per-batch appends grow the flat canon-state file count without
-    bound; compact_stream_state collapses it, the stream resumes on the
-    compacted state, and emitted survivors match an uncompacted
-    reference run exactly."""
-    from gluestick_spark.streaming.pipeline import (
-        compact_stream_state,
-        read_streaming_dedup_output,
-    )
-
-    def run(base, compact_after=None):
-        stage = os.path.join(base, "src")
-        out = os.path.join(base, "out")
-        state = os.path.join(base, "state")
-        ckpt = os.path.join(base, "ckpt")
-        for b in range(4):
-            _run_url_stream(
-                spark, _urls_df(spark, b * 10, b * 10 + 10),
-                stage, out, state, ckpt,
-            )
-            if compact_after is not None and b == compact_after:
-                n_before = len(_parquet_files(os.path.join(state, "url_canon.parquet")))
-                res = compact_stream_state(spark, state, target_rows_per_file=10**6)
-                assert res["url_canon.parquet"] >= 1
-                n_after = len(_parquet_files(os.path.join(state, "url_canon.parquet")))
-                assert n_after < n_before
-        return read_streaming_dedup_output(spark, out)
-
-    ref = run(os.path.join(tmp_dir, "ref"))
-    got = run(os.path.join(tmp_dir, "cmp"), compact_after=2)
-    assert sorted(r["doc_id"] for r in got.collect()) == sorted(
-        r["doc_id"] for r in ref.collect()
-    )
-
-
-def test_compact_stream_state_bucketed_preserves_plan_and_results(spark, tmp_dir):
-    """Bucket-preserving compaction: after compacting the bucketed canon
-    state, the state-side distinct still runs with ZERO Exchange (bucket
-    ids survive in the file names), the file count collapses to ~one per
-    bucket, and a post-compaction batch dedups correctly."""
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        compact_stream_state,
-        read_streaming_dedup_output,
-    )
-
-    base = os.path.join(tmp_dir, "b")
-    stage, out = os.path.join(base, "src"), os.path.join(base, "out")
-    state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
-    for b in range(3):
-        _run_url_stream(
-            spark, _urls_df(spark, b * 10, b * 10 + 10),
-            stage, out, state, ckpt, state_buckets=4,
-        )
-    loc = os.path.join(state, "url_canon_buckets")
-    n_before = len(_parquet_files(loc))
-    res = compact_stream_state(spark, state, state_buckets=4)
-    assert res["url_canon_buckets"] <= 4 < n_before
-
-    tbl = _state_table_name(state, "url_canon")
-    plan = spark.table(tbl).distinct()._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-    # the stream keeps deduping against the compacted state: a batch of
-    # already-seen urls adds nothing
-    canon_before = spark.table(tbl).distinct().count()
-    out_before = read_streaming_dedup_output(spark, out).count()
-    _run_url_stream(
-        spark, _urls_df(spark, 0, 30),  # batches 0-2 verbatim: all seen
-        stage, out, state, ckpt, state_buckets=4,
-    )
-    assert read_streaming_dedup_output(spark, out).count() == out_before
-    assert spark.table(tbl).distinct().count() == canon_before
-
-    # guard: mismatched bucket count refuses loudly
-    with pytest.raises(ValueError, match="does not match"):
-        compact_stream_state(spark, state, state_buckets=8)
-
-
-def test_compact_stream_state_bucketed_crash_self_heals(spark, tmp_dir):
-    """A crash between the two fallback renames leaves the state under
-    .__old__ only; the next compaction call heals it before rewriting."""
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        compact_stream_state,
-    )
-
-    base = os.path.join(tmp_dir, "c")
-    stage, out = os.path.join(base, "src"), os.path.join(base, "out")
-    state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
-    for b in range(2):
-        _run_url_stream(
-            spark, _urls_df(spark, b * 10, b * 10 + 10),
-            stage, out, state, ckpt, state_buckets=4,
-        )
-    loc = os.path.join(state, "url_canon_buckets")
-    rows_before = spark.read.parquet(loc).distinct().count()
-    os.rename(loc, loc + ".__old__")  # simulated crash mid-swap
-    res = compact_stream_state(spark, state, state_buckets=4)
-    assert res["url_canon_buckets"] >= 1
-    tbl = _state_table_name(state, "url_canon")
-    spark.catalog.refreshTable(tbl)
-    assert spark.read.parquet(loc).distinct().count() == rows_before
-
-
-def test_compact_stream_state_missing_catalog_needs_buckets(spark, tmp_dir):
-    """Fresh-session shape: bucketed state files on disk but no catalog
-    entry — compaction refuses without state_buckets and succeeds with
-    it (re-registering the table first)."""
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        compact_stream_state,
-    )
-
-    base = os.path.join(tmp_dir, "d")
-    stage, out = os.path.join(base, "src"), os.path.join(base, "out")
-    state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
-    _run_url_stream(
-        spark, _urls_df(spark, 0, 10), stage, out, state, ckpt, state_buckets=4
-    )
-    tbl = _state_table_name(state, "url_canon")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # catalog loss
-    with pytest.raises(ValueError, match="state_buckets"):
-        compact_stream_state(spark, state)
-    res = compact_stream_state(spark, state, state_buckets=4)
-    assert res["url_canon_buckets"] >= 1
-    assert spark.catalog.tableExists(tbl)
-
-
-def test_compact_stream_state_bin_counts_additive_after(spark, tmp_dir):
-    """Drift bin-count state: compaction is row-preserving, so the
-    (bin, batch_id)-keyed replay guard and the additive sums are
-    unchanged."""
-    from gluestick_spark.streaming.pipeline import (
-        bin_counts_from_state,
-        compact_stream_state,
-        stream_from_directory,
-        streaming_bin_counts,
-    )
-
-    base = os.path.join(tmp_dir, "e")
-    stage = os.path.join(base, "src")
-    state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
-    d1 = spark.createDataFrame([(float(i),) for i in range(50)], "x double")
-    d2 = spark.createDataFrame([(float(i),) for i in range(50, 80)], "x double")
-    for d in (d1, d2):
-        d.coalesce(1).write.mode("append").parquet(stage)
-        streaming_bin_counts(
-            stream_from_directory(spark, stage, d.schema),
-            "x", 0.0, 100.0, 10, state, ckpt,
-        ).awaitTermination()
-    before = sorted(
-        (r["bin"], r["n"]) for r in bin_counts_from_state(spark, state).collect()
-    )
-    res = compact_stream_state(spark, state)
-    assert res["bin_counts.parquet"] == 1
-    after = sorted(
-        (r["bin"], r["n"]) for r in bin_counts_from_state(spark, state).collect()
-    )
-    assert after == before

@@ -489,95 +489,6 @@ def test_kll_nulls_and_empty(spark):
     assert est[("a", 0.5)] == 1.0 and est[("b", 0.5)] is None
 
 
-# ------------------- VERDICT task 8: streaming novelty -------------------
-
-
-def test_gram_state_torn_and_mismatch(spark, tmp_dir):
-    """A state dir without _GRAM_META (torn materialize / crash before
-    the commit marker) must be refused loudly by both streaming_novelty
-    and append-mode materialize; appending with different geometry must
-    raise, never silently mix gram spaces."""
-    from gluestick_spark.streaming.pipeline import (
-        materialize_gram_state,
-        stream_from_directory,
-        streaming_novelty,
-    )
-
-    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    state = os.path.join(tmp_dir, "state")
-    os.makedirs(state)
-    with pytest.raises(ValueError, match="torn or absent"):
-        streaming_novelty(
-            stream_from_directory(spark, tmp_dir, d.schema),
-            state, "doc_id", "text",
-            os.path.join(tmp_dir, "o"), os.path.join(tmp_dir, "c"),
-        )
-    with pytest.raises(ValueError, match="torn or absent"):
-        materialize_gram_state(d, state, "text", n=3, mode="append")
-    materialize_gram_state(d.limit(20), state, "text", n=3, buckets=4)
-    with pytest.raises(ValueError, match="geometry mismatch"):
-        materialize_gram_state(d, state, "text", n=5, buckets=4, mode="append")
-    # a crash between meta removal and rewrite = torn; rebuild heals
-    os.remove(os.path.join(state, "_GRAM_META.json"))
-    materialize_gram_state(d.limit(20), state, "text", n=3, buckets=4)
-    assert os.path.isfile(os.path.join(state, "_GRAM_META.json"))
-
-
-def test_gram_state_bucketed_zero_exchange(spark, tmp_dir):
-    """The bucketed gram-state side of the novelty join must scan with
-    ZERO Exchange (the L107 state-table contract): only the (small,
-    bloom-filtered) batch side repartitions."""
-    from gluestick_spark.llm.decontam import novelty_scores_against
-    from gluestick_spark.streaming.pipeline import (
-        _read_gram_state_table,
-        materialize_gram_state,
-    )
-
-    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    state = os.path.join(tmp_dir, "state")
-    materialize_gram_state(d.where("doc_id % 2 = 0"), state, "text", n=3, buckets=4)
-    ref = _read_gram_state_table(spark, state, 4)
-    words = spark.read.parquet(os.path.join(state, "bloom_words.parquet"))
-    # force the at-scale regime: a reference gram set too big to
-    # broadcast (at sf0.001 Spark would broadcast it and the bucketing
-    # never comes into play — exactly what does NOT happen at 100 TB)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = novelty_scores_against(
-            d.where("doc_id % 2 = 1"), ref, "text", "doc_id",
-            n=3, bloom_words_df=words,
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    lines = plan.splitlines()
-    # the bucketed state scan must exist and be served bucketed ...
-    scan_idx = [
-        i for i, ln in enumerate(lines)
-        if "gram_state_" in ln and "Scan" in ln and "Bucketed: true" in ln
-    ]
-    assert scan_idx, plan
-    # ... and reach its join without an Exchange: walk up the tree from
-    # the scan to the nearest Join node — no Exchange may sit between
-    def _depth(ln):
-        return len(ln) - len(ln.lstrip(" +-:"))
-
-    i = scan_idx[0]
-    d0 = _depth(lines[i])
-    for j in range(i - 1, -1, -1):
-        if _depth(lines[j]) >= d0:
-            continue
-        assert "Exchange" not in lines[j], plan
-        d0 = _depth(lines[j])
-        if "Join" in lines[j]:
-            break
-
-
 def test_table_stats_quantile_attachment(spark):
     """table_stats(quantile_cols=) attaches KLL quantile estimates for
     numeric columns (NULL elsewhere) without touching the default

@@ -1,6 +1,6 @@
 """Round-9 fixes and additions: versioned-table per-version commit
 markers (ADVICE r8 medium x2), resample_to_ratio zero-class contract,
-band-index commit marker, streaming url-dedup replay tagging."""
+band-index commit marker."""
 
 from __future__ import annotations
 
@@ -149,159 +149,6 @@ def test_band_index_append_recommits(spark, tmp_dir):
     # a doc duplicated from the appended half is caught
     dup = mk(6, 7)
     assert dedup_against_indexed(spark, dup, path, "text", "doc_id").count() == 0
-
-
-# ------------------------------------------- bucketed streaming state -----
-
-
-def _run_url_stream(spark, tmp, d, **kw):
-    from gluestick_spark.streaming.pipeline import (
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    stage, out = os.path.join(tmp, "src"), os.path.join(tmp, "out")
-    state, ckpt = os.path.join(tmp, "state"), os.path.join(tmp, "ckpt")
-    mid = d.count() // 2
-    for cond in (F.col("doc_id") < mid, F.col("doc_id") >= mid):
-        d.where(cond).coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_url_dedup(
-            stream_from_directory(spark, stage, d.schema),
-            "url", "doc_id", state, out, ckpt, **kw,
-        )
-        q.awaitTermination()
-    return read_streaming_dedup_output(spark, out), state
-
-
-def test_streaming_url_dedup_bucketed_state_equivalent(spark, tmp_dir):
-    """VERDICT r8 task 3: the bucketed-state variant must emit exactly
-    the default variant's rows, while its per-batch state plans run with
-    NO state-side Exchange (replay-guard distinct and the anti-join's
-    state side are bucket-local)."""
-    from gluestick_spark.streaming.pipeline import _state_table_name
-
-    d = spark.createDataFrame(
-        [(i, f"https://site{i % 7}.com/page?utm_campaign=x&q={i % 7}")
-         for i in range(40)],
-        "doc_id long, url string",
-    )
-    plain, _ = _run_url_stream(spark, os.path.join(tmp_dir, "p"), d)
-    bucketed, state = _run_url_stream(
-        spark, os.path.join(tmp_dir, "b"), d, state_buckets=4
-    )
-    key = lambda r: (r["doc_id"], r["canonical_url"])
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, bucketed.collect())
-    )
-
-    tbl = _state_table_name(state, "url_canon")
-    assert spark.catalog.tableExists(tbl)
-    # replay-guard distinct: bucket-local, zero Exchange
-    dedup_plan = spark.table(tbl).distinct()._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in dedup_plan, dedup_plan
-    # anti-join: ONLY the (small) batch side exchanges, never the state
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        seen = spark.table(tbl).distinct()
-        batch = d.where("doc_id < 5").withColumn("canonical_url", F.col("url"))
-        j = batch.join(
-            seen, batch["canonical_url"] == seen["__canon__"], "left_anti"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_streaming_minhash_dedup_bucketed_state_equivalent(spark, tmp_dir):
-    """The bucketed minhash state (band index on (band,bucket), docs on
-    id) restructures the per-batch plan (split candidate join + width
-    arithmetic instead of union-repartition) but must keep the emitted
-    survivor set identical; the state-side distinct and width count run
-    with zero Exchange."""
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        stream_from_directory,
-        streaming_minhash_dedup,
-    )
-
-    base = [
-        "the quick brown fox jumps over the lazy dog again and again "
-        f"variation {i} with some shared boilerplate text padding" for i in range(10)
-    ]
-    rows = [(i, base[i % 10] + (" extra" if i >= 10 else "")) for i in range(20)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(tmp, **kw):
-        stage, out = os.path.join(tmp, "src"), os.path.join(tmp, "out")
-        state, ckpt = os.path.join(tmp, "state"), os.path.join(tmp, "ckpt")
-        for cond in (F.col("doc_id") < 10, F.col("doc_id") >= 10):
-            d.where(cond).coalesce(1).write.mode("append").parquet(stage)
-            q = streaming_minhash_dedup(
-                stream_from_directory(spark, stage, d.schema),
-                "text", "doc_id", state, out, ckpt,
-                threshold=0.5, **kw,
-            )
-            q.awaitTermination()
-        return spark.read.parquet(out), state
-
-    plain, _ = run(os.path.join(tmp_dir, "p"))
-    bucketed, state = run(os.path.join(tmp_dir, "b"), state_buckets=4)
-    assert sorted(r["doc_id"] for r in plain.collect()) == sorted(
-        r["doc_id"] for r in bucketed.collect()
-    )
-    bt = _state_table_name(state, "mh_buckets")
-    dt = _state_table_name(state, "mh_docs")
-    assert spark.catalog.tableExists(bt) and spark.catalog.tableExists(dt)
-    for probe in (
-        spark.table(bt).distinct(),
-        spark.table(bt).distinct().groupBy("band", "bucket").count(),
-        spark.table(dt).distinct(),
-    ):
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-
-
-def test_streaming_minhash_torn_docs_state_raises(spark, tmp_dir):
-    """ADVICE r10: bucket state present but docs state lost (crash
-    between the two appends / partial wipe) must raise the designed
-    torn-state ValueError, not an opaque TABLE_OR_VIEW_NOT_FOUND from
-    spark.table() inside foreachBatch."""
-    import shutil
-
-    from pyspark.errors import StreamingQueryException
-
-    from gluestick_spark.streaming.pipeline import (
-        _state_table_name,
-        stream_from_directory,
-        streaming_minhash_dedup,
-    )
-
-    rows = [(i, f"document body number {i} with shared padding text") for i in range(8)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    stage, out = os.path.join(tmp_dir, "src"), os.path.join(tmp_dir, "out")
-    state, ckpt = os.path.join(tmp_dir, "state"), os.path.join(tmp_dir, "ckpt")
-
-    d.where("doc_id < 4").coalesce(1).write.mode("append").parquet(stage)
-    streaming_minhash_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "text", "doc_id", state, out, ckpt,
-        threshold=0.5, state_buckets=4,
-    ).awaitTermination()
-
-    # simulate the torn state: docs state gone, bucket state intact
-    shutil.rmtree(os.path.join(state, "minhash_docs_bt"))
-    spark.sql(f"DROP TABLE IF EXISTS {_state_table_name(state, 'mh_docs')}")
-
-    d.where("doc_id >= 4").coalesce(1).write.mode("append").parquet(stage)
-    with pytest.raises(StreamingQueryException, match="torn state"):
-        streaming_minhash_dedup(
-            stream_from_directory(spark, stage, d.schema),
-            "text", "doc_id", state, out, ckpt,
-            threshold=0.5, state_buckets=4,
-        ).awaitTermination()
 
 
 # --------------------------------------------- persisted IVF x SQ index ---
@@ -632,44 +479,3 @@ def test_classifier_score_monotone_in_weights(spark):
     sp = classifier_score(d, "text", w_pos).first()["clf_score"]
     sn = classifier_score(d, "text", w_neg).first()["clf_score"]
     assert sp == 1.0 and sn == -1.0
-
-
-# ------------------------------------- streaming url-dedup replay tag -----
-
-
-def test_streaming_url_dedup_output_tagged_and_replay_dedupable(spark, tmp_dir):
-    """ADVICE r8 (low): emitted rows carry __batch_id__, so an
-    at-least-once replay (crash between the out_dir append and the state
-    append) produces byte-identical duplicate rows that a distinct-on-
-    read collapses — read_streaming_dedup_output is that read."""
-    from gluestick_spark.streaming.pipeline import (
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_url_dedup,
-    )
-
-    d = spark.createDataFrame(
-        [(i, f"https://ex{i % 5}.com/p?utm_source=x&id={i % 5}") for i in range(20)],
-        "doc_id long, url string",
-    )
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    state = os.path.join(tmp_dir, "state")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    d.coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_url_dedup(
-        stream_from_directory(spark, stage, d.schema),
-        "url", "doc_id", state, out, ckpt,
-    )
-    q.awaitTermination()
-    raw = spark.read.parquet(out)
-    assert "__batch_id__" in raw.columns
-    n = raw.count()
-    assert n == 5
-    # simulate the replay-duplicate window: the same batch's emitted rows
-    # appended a second time with the SAME batch id
-    raw.write.mode("append").parquet(out)
-    assert spark.read.parquet(out).count() == 2 * n
-    clean = read_streaming_dedup_output(spark, out)
-    assert clean.count() == n
-    assert "__batch_id__" not in clean.columns
