@@ -17,6 +17,15 @@ Scale design (the whole point — these must survive 100 TB):
   hamming distance ≤ d found by banding the 64 bits into chunks.
 - **ngram_jaccard**: exact verified Jaccard for candidate pairs.
 
+One banded-LSH join serves every near-dup family — MinHash (self,
+cross-corpus, persisted band index), SimHash, hyperplane embeddings,
+phash/audio (``multimodal.py``) and the MinHash and fingerprint streams
+(``streaming/pipeline.py``). Each family keeps only its signature and
+its verify: ``_cap_buckets`` trims wide buckets, ``_candidate_join`` is
+the one bucket equi-join (optional ``a < b``, distinct), ``_band_pieces``
+the one splitter of a 64-bit signature into pieces, and
+``_hamming_verify`` / ``_jaccard_verify`` the one verify per similarity.
+
 All hashes are Spark's ``xxhash64`` — deterministic across runs/executors.
 """
 
@@ -173,6 +182,144 @@ def _cap_buckets(buckets: DataFrame, key_cols: list[str], max_bucket: int | None
         buckets.withColumn("__bw__", F.count("*").over(w))
         .where(F.col("__bw__") <= max_bucket)
         .drop("__bw__")
+    )
+
+
+def _candidate_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    ordered: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Candidate pairs of a banded LSH index — the one bucket join of
+    every near-dup family (MinHash self and cross-corpus, SimHash,
+    hyperplane embeddings, phash/audio, and the MinHash and fingerprint
+    streams). Equi-join two bucket frames on ``keys``; with ``ordered =
+    (a, b)`` keep only ``a < b`` (a self-join reports each pair once);
+    drop the keys and take distinct, since a pair colliding in several
+    bands is one candidate. Every other column passes through from both
+    sides: callers name each side's id column (the fingerprint state has
+    none) and carry what their verify needs, such as a Hamming signature.
+    Wide buckets are dropped by :func:`_cap_buckets` before the join."""
+    pairs = left.join(right, keys)
+    if ordered is not None:
+        pairs = pairs.where(F.col(ordered[0]) < F.col(ordered[1]))
+    return pairs.drop(*keys).distinct()
+
+
+def _band_pieces(
+    df: DataFrame, id_col: str, sig_col: str, pieces: int, bits: int
+) -> DataFrame:
+    """(``__id__``, ``__h__``, ``band``, ``seg``): the 64-bit signature
+    ``sig_col`` cut into ``pieces`` pieces of ``bits`` bits, low bits
+    first, one row per piece — the bucket frame of the Hamming-LSH
+    families (SimHash, hyperplane embeddings, phash/audio and the
+    fingerprint stream state). Two signatures that differ in fewer than
+    ``pieces`` of the covered bits agree on a whole piece (pigeonhole).
+    ``pieces · bits`` may fall short of 64 (SimHash's 9 pieces of 7
+    bits); the top bits then band nowhere. One 64-bit piece masks with
+    -1: 2⁶⁴ − 1 is no long literal."""
+    mask = -1 if bits == 64 else (1 << bits) - 1
+    piece = [
+        F.struct(
+            F.lit(i).alias("band"),
+            F.shiftrightunsigned(F.col(sig_col), bits * i).bitwiseAND(F.lit(mask)).alias("seg"),
+        )
+        for i in range(pieces)
+    ]
+    return df.select(
+        F.col(id_col).alias("__id__"),
+        F.col(sig_col).alias("__h__"),
+        F.explode(F.array(*piece)).alias("__b__"),
+    ).select("__id__", "__h__", "__b__.band", "__b__.seg")
+
+
+def _hamming_verify(pairs: DataFrame, max_hamming: int) -> DataFrame:
+    """``pairs`` with ``hamming`` = popcount(``__ha__`` xor ``__hb__``),
+    kept where it is at most ``max_hamming`` — the verify of every
+    Hamming-LSH family."""
+    ham = F.bit_count(F.col("__ha__").bitwiseXOR(F.col("__hb__")))
+    return pairs.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming)
+
+
+def _hamming_pairs(
+    hashed: DataFrame,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    pieces: int,
+    bits: int,
+    max_bucket: int | None,
+    a: str,
+    b: str,
+) -> DataFrame:
+    """Self near-dup pairs of a 64-bit signature column: (``a`` < ``b``,
+    ``hamming``) within ``max_hamming``, via banded pieces, the capped
+    candidate join and the Hamming verify."""
+    segs = _cap_buckets(
+        _band_pieces(hashed, id_col, hash_col, pieces, bits), ["band", "seg"], max_bucket
+    )
+
+    def side(id_name: str, h_name: str) -> DataFrame:
+        return segs.withColumnRenamed("__id__", id_name).withColumnRenamed("__h__", h_name)
+
+    pairs = _candidate_join(side(a, "__ha__"), side(b, "__hb__"), ["band", "seg"], (a, b))
+    return _hamming_verify(pairs, max_hamming).select(a, b, "hamming")
+
+
+def _shingle_sets(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    ids: DataFrame | None = None,
+    how: str = "leftsemi",
+) -> DataFrame:
+    """(``__id__``, ``__sh__``): each document's distinct shingle set.
+    With ``ids`` (a one-column frame of candidate ids), only the
+    documents whose id it holds: a verify then shingles each candidate
+    DOCUMENT once — never per pair occurrence, which is unbounded on
+    dup-heavy corpora (a replica family of R contributes C(R,2) pairs;
+    the 10x replica probe measured 48 s vs 12 s), and never every corpus
+    document. ``how`` joins the documents to the distinct ids: "inner"
+    keeps the same rows as the "leftsemi" default, but plans and job
+    counts differ, so each caller keeps the form it was measured with.
+    Without ``ids``, every document, spread over the default
+    parallelism."""
+    if ids is None:
+        df = _parallelize(df, id_col)
+    else:
+        df = df.join(ids.select(F.col(ids.columns[0]).alias(id_col)).distinct(), id_col, how)
+    return df.select(
+        F.col(id_col).alias("__id__"),
+        F.array_distinct(shingles_expr(F.col(text_col), shingle_n)).alias("__sh__"),
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of the (pinned) candidate pairs ``(a, b)``:
+    each side's (``__id__``, ``__sh__``) shingle sets — survivors from
+    :func:`_shingle_sets` or a persisted store — join to the pairs on
+    that side's id. The arrays arrive as real join-output columns, so
+    jaccard_expr's two reads (intersect + union) never recompute the
+    shingle HOF, which gets no codegen CSE. Returns (``a``, ``b``,
+    ``jaccard``) with jaccard ≥ ``threshold``."""
+
+    def side(sh: DataFrame, key: str, col: str) -> DataFrame:
+        return sh.select(F.col("__id__").alias(key), F.col("__sh__").alias(col))
+
+    j = cand.join(side(sh_a, a, "__sha__"), a).join(side(sh_b, b, "__shb__"), b)
+    return (
+        j.withColumn("jaccard", jaccard_expr(F.col("__sha__"), F.col("__shb__")))
+        .where(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
     )
 
 
@@ -336,19 +483,12 @@ def minhash_lsh_candidates(
     # (id, band, bucket): ~bands×N tiny rows vs the old N×shingles shuffle.
     buckets = buckets.repartition("band", "bucket")
     buckets = _cap_buckets(buckets, ["band", "bucket"], max_bucket)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id__") < F.col("r.__id__")),
-        )
-        .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"))
-        .distinct()
+    return _candidate_join(
+        buckets.withColumnRenamed("__id__", "a"),
+        buckets.withColumnRenamed("__id__", "b"),
+        ["band", "bucket"],
+        ("a", "b"),
     )
-    return pairs
 
 
 def jaccard_expr(a: Column, b: Column) -> Column:
@@ -397,12 +537,11 @@ def lsh_recall_audit(
     from .sampling import hash_sample
 
     s = hash_sample(df, id_col, sample_rate, seed)
-    sh = pin(_shingle_sets(s, text_col, id_col, shingle_n, "a"))
-    shb = sh.select(
-        F.col("a").alias("b"), F.col("__sh_a__").alias("__sh_b__")
-    )
+    sh = pin(_shingle_sets(s, text_col, id_col, shingle_n))
+    sha = sh.select(F.col("__id__").alias("a"), F.col("__sh__").alias("__sh_a__"))
+    shb = sh.select(F.col("__id__").alias("b"), F.col("__sh__").alias("__sh_b__"))
     exact = pin(
-        sh.crossJoin(shb)
+        sha.crossJoin(shb)
         .where(F.col("a") < F.col("b"))
         .where(
             jaccard_expr(F.col("__sh_a__"), F.col("__sh_b__"))
@@ -547,33 +686,14 @@ def minhash_near_dup_pairs(
         )
     )
     # Exact-Jaccard verify: shingle once per candidate DOCUMENT per side
-    # (corpus semi-joined to the pair ids), then hash-join the arrays to
-    # the pairs. This dominates both alternatives in every regime:
-    # shingling every corpus doc pays for non-candidates (sparse-dup
-    # corpora), while shingling per pair OCCURRENCE recomputes a hot
-    # doc's set once per partner — on dup-heavy corpora pairs/doc is
-    # unbounded (a replica family of R contributes C(R,2) pairs; the
-    # 10x replica probe measured 48 s vs 12 s). Survivor-doc scale is
-    # min(corpus, 2·pairs) by construction (guide §8: every pass but
-    # the last operates on a lightweight proxy / survivors).
-    def _survivor_shingles(key: str) -> DataFrame:
-        ids = cand.select(F.col(key).alias(id_col)).distinct()
-        return df.join(ids, id_col, "leftsemi").select(
-            F.col(id_col).alias(key),
-            F.array_distinct(shingles_expr(F.col(text_col), shingle_n)).alias(
-                f"__sh{key}__"
-            ),
-        )
+    # (corpus semi-joined to the pair ids, see _shingle_sets), then
+    # hash-join the arrays to the pairs. Survivor-doc scale is
+    # min(corpus, 2·pairs) by construction (guide §8: every pass but the
+    # last operates on a lightweight proxy / survivors).
+    def survivors(key: str) -> DataFrame:
+        return _shingle_sets(df, text_col, id_col, shingle_n, cand.select(key))
 
-    # arrays arrive as real join-output columns, so jaccard_expr's two
-    # reads (intersect + union) never recompute the shingle HOF (which
-    # gets no codegen CSE)
-    j = cand.join(_survivor_shingles("a"), "a").join(_survivor_shingles("b"), "b")
-    return (
-        j.withColumn("jaccard", jaccard_expr(F.col("__sha__"), F.col("__shb__")))
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _jaccard_verify(cand, "a", "b", survivors("a"), survivors("b"), threshold)
 
 
 def minhash_dedup(
@@ -854,7 +974,7 @@ def embedding_near_dups(
     ``chunks-1`` differing bits shares a piece. Candidates are verified with
     exact cosine ≥ ``threshold``. Returns (a, b, cosine) with a < b.
 
-    Scale: buckets carry only (id, chunk, piece); vectors are joined back
+    Scale: buckets carry only (id, band, seg); vectors are joined back
     for the verify step — two hash joins on the id, never an N² cross join.
     Piece width (num_planes/chunks bits) sets bucket fan-out: 2^width
     buckets per chunk, expected width n/2^width. With ``num_planes=None``
@@ -867,14 +987,22 @@ def embedding_near_dups(
     pairs grow as n²/buckets. Recall per piece is
     (1−θ/π)^width for angle θ, so wider pieces trade recall for cost; raise
     ``chunks`` to win it back (overall recall 1−(1−(1−θ/π)^width)^chunks).
+    The signature is a long, so it holds at most 63 planes: the adaptive
+    width is capped at 63 // ``chunks`` bits, and an explicit
+    ``num_planes`` above 63 raises ``ValueError`` before any Spark job.
     """
     from .similarity import cosine_pairs_udf, hyperplane_signature_udf, random_hyperplanes
 
+    if num_planes is not None and num_planes > 63:
+        raise ValueError(
+            f"num_planes must be <= 63 (the sign-safe bits of a long "
+            f"signature), got {num_planes}"
+        )
     if dim is None:
         dim = df.select(F.size(F.col(vec_col))).first()[0]
     if num_planes is None:
         bits_per = lsh_geometry(n if n is not None else df.count(), target_bucket)
-        num_planes = chunks * bits_per
+        num_planes = chunks * min(bits_per, 63 // chunks)
     planes = random_hyperplanes(dim, num_planes, seed)
     bits_per = num_planes // chunks
     sig = hyperplane_signature_udf(planes)(F.col(vec_col))
@@ -883,34 +1011,15 @@ def embedding_near_dups(
     # an exchange AFTER the signature UDF makes it a shared shuffle stage
     # (computed once) instead of re-running the UDF over the corpus per
     # branch. Keyed by id — high cardinality — so local parallelism is
-    # preserved; the join adds its own tiny (chunk, piece) exchanges.
+    # preserved; the join adds its own tiny (band, seg) exchanges.
     base = base.repartition("__id__")
-
-    pieces = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright("__sig__", c * bits_per)
-                .bitwiseAND(F.lit((1 << bits_per) - 1))
-                .alias("piece"),
-            )
-            for c in range(chunks)
-        ]
-    )
-    keyed = base.select("__id__", F.explode(pieces).alias("p")).select(
-        "__id__", F.col("p.chunk").alias("chunk"), F.col("p.piece").alias("piece")
-    )
-    keyed = _cap_buckets(keyed, ["chunk", "piece"], max_bucket)
-    l, r = keyed.alias("l"), keyed.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.piece") == F.col("r.piece"))
-            & (F.col("l.__id__") < F.col("r.__id__")),
-        )
-        .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"))
-        .distinct()
+    keyed = _band_pieces(base, "__id__", "__sig__", chunks, bits_per).drop("__h__")
+    keyed = _cap_buckets(keyed, ["band", "seg"], max_bucket)
+    cand = _candidate_join(
+        keyed.withColumnRenamed("__id__", "a"),
+        keyed.withColumnRenamed("__id__", "b"),
+        ["band", "seg"],
+        ("a", "b"),
     )
     vecs = df.select(F.col(id_col).alias("__id__"), F.col(vec_col).alias("__v__"))
     return (
@@ -1023,7 +1132,6 @@ def simhash_near_dups(
         # approach all-pairs). So recall is guaranteed for max_hamming ≤ 15
         # and best-effort above.
         chunks = min(16, max_hamming + 1)
-    bits_per = 64 // chunks
     token_hashes = F.transform(
         F.array_distinct(tokens_expr(F.lower(F.col(text_col)))), lambda t: F.xxhash64(t)
     )
@@ -1035,34 +1143,8 @@ def simhash_near_dups(
     # embedding_near_dups): the exchange sits AFTER the signature UDF so it
     # runs once, keyed by high-cardinality id to keep parallelism
     base = base.repartition("__id__")
-
-    pieces = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright("__sig__", c * bits_per)
-                .bitwiseAND(F.lit((1 << bits_per) - 1))
-                .alias("piece"),
-            )
-            for c in range(chunks)
-        ]
-    )
-    keyed = base.select("__id__", "__sig__", F.explode(pieces).alias("p")).select(
-        "__id__", "__sig__", F.col("p.chunk").alias("chunk"), F.col("p.piece").alias("piece")
-    )
-    keyed = _cap_buckets(keyed, ["chunk", "piece"], max_bucket)
-    l, r = keyed.alias("l"), keyed.alias("r")
-    ham = F.bit_count(F.col("l.__sig__").bitwiseXOR(F.col("r.__sig__")))
-    return (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.piece") == F.col("r.piece"))
-            & (F.col("l.__id__") < F.col("r.__id__")),
-        )
-        .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"), ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _hamming_pairs(
+        base, "__id__", "__sig__", max_hamming, chunks, 64 // chunks, max_bucket, "a", "b"
     )
 
 
@@ -1092,80 +1174,27 @@ def cross_corpus_near_dup_pairs(
     (new, ref), never compared by id order."""
     bn = minhash_band_buckets(df_new, text_col, id_col, num_perm, bands, shingle_n)
     br = minhash_band_buckets(df_ref, text_col, id_col, num_perm, bands, shingle_n)
-    return _cross_pairs_core(
-        bn,
-        br,
-        ("text", df_new, text_col, id_col, shingle_n),
-        ("text", df_ref, text_col, id_col, shingle_n),
-        threshold,
-        max_bucket,
-    )
+    cand = _cross_candidates(bn, br, max_bucket)
+    sh_new = _shingle_sets(df_new, text_col, id_col, shingle_n, cand.select("new_id"))
+    sh_ref = _shingle_sets(df_ref, text_col, id_col, shingle_n, cand.select("ref_id"))
+    return _jaccard_verify(cand, "new_id", "ref_id", sh_new, sh_ref, threshold)
 
 
-def _shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int, out: str
-) -> DataFrame:
-    return _parallelize(df, id_col).select(
-        F.col(id_col).alias(out),
-        F.array_distinct(shingles_expr(F.col(text_col), shingle_n)).alias(f"__sh_{out}__"),
-    )
-
-
-def _cross_pairs_core(
-    bn: DataFrame,
-    br: DataFrame,
-    new_side,
-    ref_side,
-    threshold: float,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Shared tail of the cross-corpus candidate+verify plan: capped
-    bucket equi-join (cost ∝ cross collisions) then exact-Jaccard verify.
-    Both the direct and index-backed paths end here, so indexed ≡ direct
-    by construction.
-
-    Each side is either ``("text", df, text_col, id_col, shingle_n)`` —
-    a raw corpus, shingled once per candidate DOCUMENT (the corpus
-    semi-joined to the candidate ids; never per pair occurrence, which
-    is unbounded on dup-heavy corpora, and never over every corpus
-    document) — or ``("shingles", frame)`` — a persisted index whose
-    stored shingle sets join directly (reading the store is the hash
-    join's probe, not recomputation). The candidate pair set is pinned
-    (id pairs only) because the text sides reference it for their
-    survivor semi-joins."""
+def _cross_candidates(bn: DataFrame, br: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Pinned (``new_id``, ``ref_id``) candidates of the cross-corpus
+    plan: each side's (id, band, bucket) rows shuffled once and capped,
+    then the candidate join (cost ∝ cross collisions). The direct and
+    index-backed paths share it and the Jaccard verify, so indexed ≡
+    direct by construction. Pinned (id pairs only) because the new
+    side's survivor semi-join reads it before the verify does."""
     bn = _cap_buckets(bn.repartition("band", "bucket"), ["band", "bucket"], max_bucket)
     br = _cap_buckets(br.repartition("band", "bucket"), ["band", "bucket"], max_bucket)
-    cand = (
-        bn.select(F.col("__id__").alias("new_id"), "band", "bucket")
-        .join(br.select(F.col("__id__").alias("ref_id"), "band", "bucket"),
-              ["band", "bucket"])
-        .select("new_id", "ref_id")
-        .distinct()
-    )
-    if new_side[0] == "text" or ref_side[0] == "text":
-        cand = pin(cand)
-
-    def _attach(j: DataFrame, side, key: str) -> DataFrame:
-        if side[0] == "shingles":
-            return j.join(side[1], key)
-        _, sdf, text_col, id_col, shingle_n = side
-        ids = cand.select(F.col(key).alias(id_col)).distinct()
-        # shingle arrays computed once per surviving doc, attached as
-        # real join-output columns (jaccard_expr's intersect + union
-        # never recompute the HOF, which gets no codegen CSE)
-        sh = sdf.join(ids, id_col, "leftsemi").select(
-            F.col(id_col).alias(key),
-            F.array_distinct(shingles_expr(F.col(text_col), shingle_n)).alias(
-                f"__sh_{key}__"
-            ),
+    return pin(
+        _candidate_join(
+            bn.withColumnRenamed("__id__", "new_id"),
+            br.withColumnRenamed("__id__", "ref_id"),
+            ["band", "bucket"],
         )
-        return j.join(sh, key)
-
-    j = _attach(_attach(cand, new_side, "new_id"), ref_side, "ref_id")
-    return (
-        j.withColumn("jaccard", jaccard_expr(F.col("__sh_new_id__"), F.col("__sh_ref_id__")))
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "ref_id", "jaccard")
     )
 
 
@@ -1246,9 +1275,7 @@ def materialize_band_index(
     # mid-rebuild index rather than joining mismatched halves
     begin_rebuild(BAND_INDEX, path, meta if mode == "append" else None)
     sh_path = _os.path.join(path, "shingles")
-    _shingle_sets(df_ref, text_col, id_col, shingle_n, "__id__").withColumnRenamed(
-        "__sh___id____", "__sh__"
-    ).write.mode(mode).parquet(sh_path)
+    _shingle_sets(df_ref, text_col, id_col, shingle_n).write.mode(mode).parquet(sh_path)
     if mode == "overwrite":
         stored = df_ref.sparkSession.read.parquet(sh_path)
         bb = _explode_bands(
@@ -1274,9 +1301,7 @@ def _read_band_index(spark, path: str):
 
     meta = load_meta(BAND_INDEX, path)
     bands_df = spark.read.parquet(_os.path.join(path, "bands"))
-    sh_ref = spark.read.parquet(_os.path.join(path, "shingles")).select(
-        F.col("__id__").alias("ref_id"), F.col("__sh__").alias("__sh_ref_id__")
-    )
+    sh_ref = spark.read.parquet(_os.path.join(path, "shingles"))
     return bands_df, sh_ref, meta
 
 
@@ -1298,14 +1323,11 @@ def cross_corpus_near_dup_pairs_indexed(
     bn = minhash_band_buckets(
         df_new, text_col, id_col, meta["num_perm"], meta["bands"], meta["shingle_n"]
     )
-    return _cross_pairs_core(
-        bn,
-        br,
-        ("text", df_new, text_col, id_col, meta["shingle_n"]),
-        ("shingles", sh_ref),  # persisted shingles: the join probes the store
-        threshold,
-        max_bucket,
-    )
+    cand = _cross_candidates(bn, br, max_bucket)
+    sh_new = _shingle_sets(df_new, text_col, id_col, meta["shingle_n"], cand.select("new_id"))
+    # the persisted shingle store joins as is: reading it is the hash
+    # join's probe, not recomputation
+    return _jaccard_verify(cand, "new_id", "ref_id", sh_new, sh_ref, threshold)
 
 
 def dedup_against_indexed(

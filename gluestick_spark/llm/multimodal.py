@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _band_pieces, _hamming_pairs, cluster_dedup
+
 __all__ = [
     "MEDIA_METADATA_TYPE",
     "attach_binary_metadata",
@@ -303,7 +305,7 @@ def phash_near_dups(
     ``bands`` equal segments: two hashes within ``bands − 1`` bit flips
     MUST agree on at least one whole segment (pigeonhole), so with the
     default (bands=4, max_hamming=3) recall is EXACT — never all-pairs.
-    The verify is one JVM expression (``bit_count(xor)``). Segment
+    The verify is one JVM expression (popcount of the xor). Segment
     buckets wider than ``max_bucket`` are dropped BEFORE the self-join
     (the MinHash ``_cap_buckets`` contract: one degenerate bucket —
     millions of byte-identical images — makes the join quadratic at
@@ -339,8 +341,6 @@ def phash_cluster_dedup(
     to perceptual hashes). Rows in no pair survive untouched; the drop
     set is an anti-join, never a full-table shuffle of ``df``.
     Components converge in O(log n) large-star/small-star rounds."""
-    from .dedup import cluster_dedup
-
     pairs = phash_near_dups(
         df, payload_col, id_col, max_hamming, bands, hasher, max_bucket
     )
@@ -355,15 +355,18 @@ def banded_hamming_pairs(
     bands: int = 4,
     max_bucket: int | None = 10000,
 ) -> DataFrame:
-    """Shared Hamming-LSH core over ANY 64-bit fingerprint column —
+    """Hamming-LSH near-dup pairs over ANY 64-bit fingerprint column —
     backs :func:`phash_near_dups` (images) and :func:`audio_near_dups`
-    (audio), and serves any caller with its own signature: split the
-    hash into ``bands`` equal segments; two hashes within ``bands − 1``
-    bit flips MUST agree on a whole segment (pigeonhole → EXACT recall
-    for ``max_hamming < bands``); bucket self-join on (band, segment),
-    one JVM ``bit_count(xor)`` verify. Segment buckets wider than
-    ``max_bucket`` drop loudly-documented (the MinHash ``_cap_buckets``
-    contract). Returns (``id_a`` < ``id_b``, ``hamming``)."""
+    (audio), and serves any caller with its own signature. It is the
+    banded-LSH core SimHash shares (``llm/dedup.py:_hamming_pairs``):
+    the hash split into ``bands`` equal segments by the one piece
+    splitter (``_band_pieces``); two hashes within ``bands − 1`` bit
+    flips MUST agree on a whole segment (pigeonhole → EXACT recall for
+    ``max_hamming < bands``); the one candidate join on (band, seg)
+    (``_candidate_join``); the one Hamming verify (``_hamming_verify``,
+    popcount of the xor). Segment buckets wider than ``max_bucket`` are
+    dropped first (the MinHash ``_cap_buckets`` contract). Returns
+    (``id_a`` < ``id_b``, ``hamming``)."""
     if not 0 <= max_hamming < bands:
         raise ValueError(
             f"need 0 <= max_hamming < bands for exact recall, got "
@@ -371,30 +374,8 @@ def banded_hamming_pairs(
         )
     if 64 % bands != 0:
         raise ValueError(f"bands must divide 64, got {bands}")
-    segs = fingerprint_segments(hashed, id_col, hash_col, bands)
-    if max_bucket is not None:
-        from .dedup import _cap_buckets
-
-        segs = _cap_buckets(segs, ["band", "seg"], max_bucket)
-    a = segs.select(
-        F.col("__id__").alias("id_a"), F.col("__h__").alias("__ha__"),
-        "band", "seg",
-    )
-    b = segs.select(
-        F.col("__id__").alias("id_b"), F.col("__h__").alias("__hb__"),
-        "band", "seg",
-    )
-    pairs = (
-        a.join(b, ["band", "seg"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__ha__", "__hb__")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("__ha__").bitwiseXOR(F.col("__hb__")))
-    return (
-        pairs.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return _hamming_pairs(
+        hashed, id_col, hash_col, max_hamming, bands, 64 // bands, max_bucket, "id_a", "id_b"
     )
 
 
@@ -466,8 +447,6 @@ def audio_cluster_dedup(
     collapse to A even when A and C never paired directly; rows in no
     pair survive untouched (anti-join drop set). O(log n)
     large-star/small-star rounds."""
-    from .dedup import cluster_dedup
-
     pairs = audio_near_dups(
         df, payload_col, id_col, max_hamming, bands, hasher, max_bucket
     )
@@ -479,27 +458,11 @@ def fingerprint_segments(
 ) -> DataFrame:
     """(``__id__``, ``__h__``, ``band``, ``seg``) — the 64-bit
     fingerprint split into ``bands`` equal segments, one row per
-    segment. The shared banding device behind
-    :func:`banded_hamming_pairs` and the streaming fingerprint-dedup
-    state (``streaming/pipeline.py:streaming_fingerprint_dedup``)."""
+    segment: the one piece splitter (``llm/dedup.py:_band_pieces``) at
+    64 // ``bands`` bits a piece, as :func:`banded_hamming_pairs` uses
+    it. The streaming fingerprint-dedup state
+    (``streaming/pipeline.py:streaming_fingerprint_dedup``) stores these
+    rows and matches them through the one candidate join."""
     if 64 % bands != 0:
         raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    return hashed.select(
-        F.col(id_col).alias("__id__"),
-        F.col(hash_col).alias("__h__"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.expr(f"shiftrightunsigned(`{hash_col}`, {width * i})")
-                        .bitwiseAND(F.lit(mask))
-                        .alias("seg"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("__b__"),
-    ).select("__id__", "__h__", "__b__.band", "__b__.seg")
+    return _band_pieces(hashed, id_col, hash_col, bands, 64 // bands)

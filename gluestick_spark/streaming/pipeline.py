@@ -444,18 +444,22 @@ def streaming_minhash_dedup(
     gives the same keep set. (With out-of-order ids an already-emitted doc
     can't be recalled; late lower-id near-dups then yield a superset.)
 
-    Incremental index design (the 100 TB/day shape):
+    Incremental index design (the 100 TB/day shape), on the batch
+    operator's own pieces in ``llm/dedup.py`` — no second MinHash here:
 
     - state ``buckets``: the persisted LSH band-bucket index
       (:func:`~gluestick_spark.llm.dedup.minhash_band_buckets` rows —
       bands × N tiny rows). Per batch only the BATCH's signatures are
       computed; history is read back as buckets, never re-shingled.
-    - candidate join: (all buckets) ⋈ (batch buckets) on (band, bucket)
-      with a < b — new⇆old and new⇆new pairs only; the old⇆old pairs were
-      decided in earlier batches and are never re-derived.
-    - verify: exact Jaccard, with shingles computed ONLY for candidate ids
-      (semi-join into the docs state first) — per-batch cost scales with
-      candidates, not corpus.
+    - candidate join: the one banded-LSH join (``_candidate_join``) of
+      (all buckets, capped by ``_cap_buckets``) and the batch's rows of
+      them, on (band, bucket) with a < b — new⇆old and new⇆new pairs
+      only; the old⇆old pairs were decided in earlier batches and are
+      never re-derived.
+    - verify: the shared exact-Jaccard verify (``_jaccard_verify``), with
+      shingles computed ONLY for candidate ids (``_shingle_sets`` over
+      the docs state joined to both id columns) — per-batch cost scales
+      with candidates, not corpus.
     - state ``docs`` holds every SEEN doc (kept or dropped): a new doc
       near-duplicating an already-dropped doc must still be dropped for
       batch parity.
@@ -475,11 +479,12 @@ def streaming_minhash_dedup(
 
     from ..llm.dedup import (
         DEFAULT_MAX_BUCKET,
+        _candidate_join,
         _cap_buckets,
-        jaccard_expr,
+        _jaccard_verify,
+        _shingle_sets,
         minhash_band_buckets,
     )
-    from ..llm.text import shingles_expr
 
     if max_bucket is None:
         max_bucket = DEFAULT_MAX_BUCKET
@@ -511,37 +516,23 @@ def streaming_minhash_dedup(
         all_bb = _cap_buckets(
             all_bb.repartition("band", "bucket"), ["band", "bucket"], max_bucket
         )
-        new_ids = batch.select("__id__").distinct()
-        right = all_bb.join(new_ids, "__id__")
-        cand = (
-            all_bb.alias("l")
-            .join(
-                right.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l.__id__") < F.col("r.__id__")),
-            )
-            .select(F.col("l.__id__").alias("a"), F.col("r.__id__").alias("b"))
-            .distinct()
+        # new⇆old and new⇆new pairs only: the right side holds the batch's
+        # rows, so old⇆old pairs decided earlier are never re-derived
+        new = all_bb.join(batch.select("__id__").distinct(), "__id__")
+        cand = _candidate_join(
+            all_bb.withColumnRenamed("__id__", "a"),
+            new.withColumnRenamed("__id__", "b"),
+            ["band", "bucket"],
+            ("a", "b"),
         )
-        cand_ids = cand.select(F.col("a").alias("__id__")).union(
-            cand.select(F.col("b").alias("__id__"))
-        ).distinct()
-        sh = docs_all.join(cand_ids, "__id__").select(
-            "__id__",
-            F.array_distinct(shingles_expr(F.col("__text__"), shingle_n)).alias("__sh__"),
+        # ONE shingle frame (docs joined to both id columns) serves both
+        # sides of the verify; the inner join runs 2–3 fewer jobs per
+        # trigger here than a semi-join (sf0.001 two-batch probe, 4 cores)
+        sh = _shingle_sets(
+            docs_all, "__text__", "__id__", shingle_n,
+            cand.select("a").union(cand.select("b")), "inner",
         )
-        drops = (
-            cand.join(
-                sh.select(F.col("__id__").alias("a"), F.col("__sh__").alias("__sha__")), "a"
-            )
-            .join(
-                sh.select(F.col("__id__").alias("b"), F.col("__sh__").alias("__shb__")), "b"
-            )
-            .where(jaccard_expr(F.col("__sha__"), F.col("__shb__")) >= threshold)
-            .select("b")
-            .distinct()
-        )
+        drops = _jaccard_verify(cand, "a", "b", sh, sh, threshold).select("b").distinct()
         kept = batch.join(drops, batch["__id__"] == drops["b"], "left_anti")
         kept.select(
             F.col("__id__").alias(id_col), F.col("__text__").alias(text_col)
@@ -744,7 +735,8 @@ def streaming_fingerprint_dedup(
     2. batch-internal near-dup pairs via the shared pigeonhole-exact
        Hamming LSH (:func:`~gluestick_spark.llm.multimodal.
        banded_hamming_pairs`), contracted to connected components;
-    3. batch-vs-STATE matches: the persisted state is the (band, seg,
+    3. batch-vs-STATE matches through the one candidate join and Hamming
+       verify of ``llm/dedup.py``: the persisted state is the (band, seg,
        fingerprint) segment set of every row EVER PROCESSED — kept AND
        dropped — because connectivity is pairwise regardless of keep
        status: storing dropped rows' fingerprints is exactly what makes
@@ -776,7 +768,7 @@ def streaming_fingerprint_dedup(
     definition."""
     import os
 
-    from ..llm.dedup import connected_components
+    from ..llm.dedup import _candidate_join, _hamming_verify, connected_components
     from ..llm.multimodal import (
         banded_hamming_pairs,
         compute_phash,
@@ -815,19 +807,13 @@ def streaming_fingerprint_dedup(
                 .parquet(seg_path)
                 .distinct()
             )
+            hits = _candidate_join(
+                segs.withColumnRenamed("__h__", "__ha__"),
+                state.select("band", "seg", F.col("__h__").alias("__hb__")),
+                ["band", "seg"],
+            )
             matched = (
-                segs.join(
-                    state.select(
-                        F.col("band"), F.col("seg"),
-                        F.col("__h__").alias("__hs__"),
-                    ),
-                    ["band", "seg"],
-                )
-                .where(
-                    F.bit_count(
-                        F.col("__h__").bitwiseXOR(F.col("__hs__"))
-                    ) <= max_hamming
-                )
+                _hamming_verify(hits, max_hamming)
                 .select(F.col("__id__").alias("id"))
                 .distinct()
             )

@@ -1,5 +1,6 @@
 """Tests for the last SURVEY §2 gap operators: array_to_dict (A4),
-exception (I5), embedding-cosine near-dup dedup."""
+exception (I5), and the later gap operators. (The embedding-cosine
+near-dup tests live in tests/test_near_dups.py.)"""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from gluestick_spark import array_to_dict_expr, custom_fields_expr, exception
-from gluestick_spark.llm import embedding_dedup, embedding_near_dups
 
 
 def test_array_to_dict_roundtrip(spark):
@@ -44,35 +44,6 @@ def test_exception_persists_and_raises(tmp_dir):
         exception("boom", root=tmp_dir)
     with open(os.path.join(tmp_dir, "errors.txt")) as f:
         assert f.read() == "boom\n"
-
-
-def _vec_df(spark):
-    base = [float(i % 7) - 3.0 for i in range(16)]
-    near = list(base)
-    near[0] += 0.01
-    far = [float((i * 3) % 5) - 2.0 for i in range(16)]
-    return spark.createDataFrame(
-        [Row(vec_id=1, embedding=base), Row(vec_id=2, embedding=near), Row(vec_id=3, embedding=far)]
-    )
-
-
-def test_embedding_near_dups_finds_near_pair(spark):
-    df = _vec_df(spark)
-    pairs = embedding_near_dups(df, "embedding", "vec_id", threshold=0.99, dim=16).collect()
-    assert [(r["a"], r["b"]) for r in pairs] == [(1, 2)]
-    assert pairs[0]["cosine"] > 0.99
-
-
-def test_embedding_dedup_drops_higher_id(spark):
-    df = _vec_df(spark)
-    out = embedding_dedup(df, "embedding", "vec_id", threshold=0.99, dim=16)
-    assert sorted(r["vec_id"] for r in out.collect()) == [1, 3]
-
-
-def test_embedding_near_dups_infers_dim(spark):
-    df = _vec_df(spark)
-    pairs = embedding_near_dups(df, "embedding", "vec_id", threshold=0.99)
-    assert pairs.count() == 1
 
 
 def test_asof_join_backward_semantics(spark):

@@ -19,12 +19,8 @@ from gluestick_spark.llm import (
     jaccard_expr,
     lang_id_expr,
     lsh_ann_topk,
-    minhash_dedup,
-    minhash_lsh_candidates,
     quality_score_expr,
     sample_frames,
-    simhash_expr,
-    simhash_near_dups,
     word_count_expr,
 )
 from gluestick_spark.llm.similarity import random_hyperplanes
@@ -38,50 +34,6 @@ def test_exact_dedup_keeps_min_id(spark):
     )
     out = exact_dedup(df, "text", "doc_id")
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
-
-
-def test_minhash_finds_near_duplicates(spark):
-    base = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
-    near = base.replace("lazy", "sleepy")
-    far = "completely different words about spark dataframes and shuffle partitions at scale"
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=base), Row(doc_id=2, text=near), Row(doc_id=3, text=far)]
-    )
-    cands = {(r["a"], r["b"]) for r in minhash_lsh_candidates(df, "text", "doc_id").collect()}
-    assert (1, 2) in cands
-    out = minhash_dedup(df, "text", "doc_id", threshold=0.5)
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert ids == [1, 3]  # 2 dropped as near-dup of 1
-
-
-def test_minhash_deterministic(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = sorted(map(tuple, minhash_lsh_candidates(docs, "text", "doc_id").collect()))
-    b = sorted(map(tuple, minhash_lsh_candidates(docs, "text", "doc_id").collect()))
-    assert a == b
-
-
-def test_simhash_identical_and_near(spark):
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="alpha beta gamma delta epsilon zeta eta theta"),
-            Row(doc_id=2, text="alpha beta gamma delta epsilon zeta eta theta"),
-            Row(doc_id=3, text="alpha beta gamma delta epsilon zeta eta iota"),
-        ]
-    )
-    sigs = {r["doc_id"]: r["s"] for r in df.select("doc_id", simhash_expr(F.col("text")).alias("s")).collect()}
-    assert sigs[1] == sigs[2]
-
-    def ham(x: int, y: int) -> int:
-        return bin((x ^ y) & (2**64 - 1)).count("1")
-
-    # one-word change moves the signature, but much less than a random doc
-    other = simhash_expr(F.lit("totally unrelated corpus of shuffle partitions and executors"))
-    sig_other = df.limit(1).select(other.alias("s")).first()["s"]
-    assert 0 < ham(sigs[1], sigs[3]) < ham(sigs[1], sig_other)
-    # identical docs are always found by the banded search
-    pairs = {(r["a"], r["b"]): r["hamming"] for r in simhash_near_dups(df, "text", "doc_id", max_hamming=16).collect()}
-    assert pairs[(1, 2)] == 0
 
 
 def test_jaccard_expr(spark):
@@ -270,61 +222,6 @@ def test_sample_frames_requires_extractor(spark):
     assert [r["frame_idx"] for r in out] == [0, 1]
 
 
-def test_minhash_bucket_cap_degenerate_corpus(spark):
-    """A boilerplate-heavy corpus (2k identical docs) must not go quadratic:
-    with max_bucket set, the hot bucket is dropped before the self-join and
-    the candidate count stays bounded; distinct docs still pair up."""
-    base = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
-    rows = [Row(doc_id=i, text="boilerplate header please ignore this page") for i in range(2000)]
-    rows += [Row(doc_id=9001, text=base), Row(doc_id=9002, text=base.replace("lazy", "sleepy"))]
-    df = spark.createDataFrame(rows)
-    cands = minhash_lsh_candidates(df, "text", "doc_id", max_bucket=100)
-    got = {(r["a"], r["b"]) for r in cands.collect()}
-    assert (9001, 9002) in got
-    # uncapped would be ~2M boilerplate pairs; the cap drops that bucket
-    assert len(got) < 1000
-
-
-def test_simhash_embedding_bucket_cap(spark):
-    rows = [Row(doc_id=i, text="same words every single time") for i in range(500)]
-    rows += [Row(doc_id=9001, text="alpha beta gamma delta epsilon zeta eta theta")]
-    df = spark.createDataFrame(rows)
-    capped = simhash_near_dups(df, "text", "doc_id", max_hamming=3, max_bucket=50)
-    assert capped.count() == 0  # the one hot bucket exceeded the cap
-
-    from gluestick_spark.llm.dedup import embedding_near_dups
-
-    vecs = [Row(vec_id=i, embedding=[1.0, 0.0, 0.0, 0.0]) for i in range(200)]
-    vecs += [Row(vec_id=901, embedding=[0.9, 0.1, 0.0, 0.0])]
-    vdf = spark.createDataFrame(vecs)
-    out = embedding_near_dups(
-        vdf, "embedding", "vec_id", threshold=0.99, dim=4, num_planes=8, max_bucket=50
-    )
-    assert out.count() == 0
-
-
-def test_minhash_near_dup_pairs_matches_brute_force(spark):
-    from gluestick_spark.llm.dedup import minhash_near_dup_pairs
-    from gluestick_spark.llm.text import shingles_expr
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    pairs = {
-        (r["a"], r["b"])
-        for r in minhash_near_dup_pairs(docs, "text", "doc_id", threshold=0.8).collect()
-    }
-    sh = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(shingles_expr(F.col("text"), 3)).alias("sh"),
-    )
-    l, r = sh.alias("l"), sh.alias("r")
-    brute = (
-        l.join(r, F.col("l.id") < F.col("r.id"))
-        .where(jaccard_expr(F.col("l.sh"), F.col("r.sh")) >= 0.8)
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-    )
-    assert pairs == {(x["a"], x["b"]) for x in brute.collect()}
-
-
 def test_pure_python_xxh64_matches_spark(spark):
     """tools/xxh64.py is the independent oracle for xxhash64-dependent
     operators — its output must be bit-identical to Spark's."""
@@ -337,24 +234,6 @@ def test_pure_python_xxh64_matches_spark(spark):
     df = spark.createDataFrame([(s,) for s in samples], ["s"])
     got = [r[0] for r in df.select(F.xxhash64("s")).collect()]
     assert got == [xxh64(s.encode("utf-8")) for s in samples]
-
-
-def test_simhash_fixture_replica_matches_spark(spark):
-    """The pure-Python simhash replica (fixture generator) must reproduce
-    simhash_near_dups exactly — checked at sf0.001, a different scale than
-    the sf0.01 fixture itself."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from tools.make_oracle_fixtures import simhash_pairs_py
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").where(F.col("doc_id") < 100)
-    got = sorted(
-        (r["a"], r["b"], r["hamming"])
-        for r in simhash_near_dups(d, "text", "doc_id", max_hamming=8).collect()
-    )
-    docs = {r["doc_id"]: r["text"] for r in d.select("doc_id", "text").collect()}
-    assert got == simhash_pairs_py(docs, max_hamming=8)
 
 
 def test_lsh_geometry_scales_with_corpus():
@@ -374,57 +253,6 @@ def test_lsh_geometry_scales_with_corpus():
     for n in (1_000, 50_000, 400_000):
         bits = lsh_geometry(n, target_bucket=16)
         assert n / 2**bits <= 16 < 2 * n / 2**bits + 16
-
-
-def test_simhash_adaptive_chunks_full_recall(spark):
-    """chunks=None resolves to max_hamming+1 — the widest banding that still
-    guarantees full recall: verified output == brute-force all-pairs
-    hamming, independent of geometry."""
-    d = spark.read.parquet(f"{SF}/documents.parquet").where(F.col("doc_id") < 120)
-    got = {
-        (r["a"], r["b"], r["hamming"])
-        for r in simhash_near_dups(d, "text", "doc_id", max_hamming=6).collect()
-    }
-    sigs = d.select("doc_id", simhash_expr(F.col("text")).alias("s"))
-    l, r = sigs.alias("l"), sigs.alias("r")
-    ham = F.bit_count(F.col("l.s").bitwiseXOR(F.col("r.s")))
-    brute = (
-        l.join(r, F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"), ham.alias("hamming")
-        )
-        .where(F.col("hamming") <= 6)
-    )
-    assert got == {(x["a"], x["b"], x["hamming"]) for x in brute.collect()}
-
-
-def test_embedding_near_dups_adaptive_recall(spark):
-    """Adaptive geometry must keep high recall on genuine near-duplicates:
-    plant jittered copies (cos ≈ 0.999) of real sf0.001 embeddings and
-    require ≥95% of the planted pairs back at threshold 0.95."""
-    import numpy as np
-
-    from gluestick_spark.llm.dedup import embedding_near_dups
-
-    base = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    rows = base.collect()
-    rng = np.random.default_rng(7)
-    planted = [
-        Row(
-            vec_id=r["vec_id"] + 100_000,
-            embedding=[
-                float(x) for x in (np.asarray(r["embedding"]) + rng.normal(0, 0.01, 64))
-            ],
-        )
-        for r in rows
-    ]
-    df = spark.createDataFrame(rows + planted, base.schema)
-    pairs = {
-        (r["a"], r["b"])
-        for r in embedding_near_dups(df, "embedding", "vec_id", threshold=0.95).collect()
-    }
-    hits = sum((r["vec_id"], r["vec_id"] + 100_000) in pairs for r in rows)
-    assert hits / len(rows) >= 0.95
 
 
 def test_connected_components_transitive(spark):

@@ -576,46 +576,6 @@ def test_streaming_corpus_drift_replay_idempotent(spark, tmp_dir):
     assert len(first) == 1 and first[0]["k_used"] > 0
 
 
-def test_phash_near_dups_injected_hasher_and_guarantee(spark):
-    """Hamming-LSH recall is pigeonhole-exact for hamming < bands: with
-    an injected hasher producing controlled bit flips, every qualifying
-    pair is found with its exact distance; parameter guards raise."""
-    from gluestick_spark.llm.multimodal import phash_near_dups
-
-    def near_hasher(b: bytes) -> int:
-        import hashlib as h
-
-        base = int.from_bytes(
-            h.sha256(b[:4]).digest()[:8], "big", signed=True
-        )
-        for i in range(b[-1] % 4):  # 0..3 bit flips by payload tail
-            base ^= 1 << (i * 7)
-        return base
-
-    p = spark.createDataFrame(
-        [(i, bytes([1, 2, 3, 4, i % 4])) for i in range(12)],
-        "doc_id long, payload binary",
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in phash_near_dups(
-            p, "payload", "doc_id", max_hamming=2, bands=4, hasher=near_hasher
-        ).collect()
-    }
-    # flips f_a vs f_b differ in |f_a - f_b| bits (nested flip sets)
-    for a in range(12):
-        for b in range(a + 1, 12):
-            d = abs(a % 4 - b % 4)
-            if d <= 2:
-                assert got[(a, b)] == d, (a, b, d, got.get((a, b)))
-            else:
-                assert (a, b) not in got
-    with pytest.raises(ValueError, match="max_hamming < bands"):
-        phash_near_dups(p, "payload", "doc_id", max_hamming=4, bands=4)
-    with pytest.raises(ValueError, match="divide 64"):
-        phash_near_dups(p, "payload", "doc_id", max_hamming=2, bands=5)
-
-
 def test_priority_sample_estimator(spark):
     """Priority sampling: deterministic per seed + repartition-invariant;
     Σ w_est unbiased for the corpus total (mean over fixed seeds — the
@@ -719,32 +679,3 @@ def test_priority_sample_grouped(spark):
         assert abs(sum(v) / len(v) - tot[g]) / tot[g] < 0.12, g
 
 
-def test_phash_cluster_dedup_transitive(spark):
-    """A~B and B~C (but never A~C directly) must collapse to one
-    survivor — transitive closure, not greedy pair-drop. Injected
-    hasher builds the chain: flips {0,1}, {1,2} pair within hamming 2
-    but {0,2} is 2 apart too... use 1-bit steps with max_hamming=1 so
-    A~B, B~C pair and A~C (2 bits) does NOT."""
-    from gluestick_spark.llm.multimodal import phash_cluster_dedup
-
-    def chain_hasher(b: bytes) -> int:
-        if b[0] == 9:  # the far-away singleton: different base entirely
-            return -0x7654_3210_0FED_CBA9
-        base = 0x1234_5678_9ABC_0000
-        for i in range(b[-1]):  # payload tail = number of 1-bit flips
-            base ^= 1 << (i * 9)
-        return base
-
-    p = spark.createDataFrame(
-        [(i, bytes([7, i])) for i in range(3)] + [(9, bytes([9, 0]))],
-        "doc_id long, payload binary",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in phash_cluster_dedup(
-            p, "payload", "doc_id", max_hamming=1, bands=4, hasher=chain_hasher
-        ).collect()
-    )
-    # docs 0,1,2 form a chain (0~1, 1~2, NOT 0~2) -> one survivor (min id 0);
-    # doc 9 hashes to a different base entirely -> untouched
-    assert kept == [0, 9], kept

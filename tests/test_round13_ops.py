@@ -638,134 +638,7 @@ def test_lang_id_ft_beats_marker_baseline(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-# ---------------- VERDICT 6: audio fingerprint near-dup ------------------
-
-
-def test_audio_near_dups_chain_collapse(spark):
-    """Injectable fingerprint with controlled bit flips: A~B and B~C are
-    within max_hamming but A~C is NOT — pigeonhole recall finds both
-    edges, and the transitive-closure dedup still collapses the chain
-    to one survivor (min id). Singletons survive untouched."""
-    from gluestick_spark.llm.multimodal import (
-        audio_cluster_dedup,
-        audio_near_dups,
-    )
-
-    base = 0x0123456789ABCDEF
-    fp = {
-        b"A": base,
-        b"B": base ^ 0b111,            # 3 flips from A (edge)
-        b"C": base ^ 0b111 ^ (0b11 << 20),  # 2 flips from B, 5 from A
-        b"D": base ^ ((1 << 40) - 1),  # far from everything
-    }
-
-    def hasher(payload: bytes) -> int:
-        v = fp[payload]
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    d = spark.createDataFrame(
-        [(1, b"A"), (2, b"B"), (3, b"C"), (4, b"D")],
-        "doc_id long, payload binary",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_near_dups(
-            d, "payload", "doc_id", max_hamming=3, bands=4, hasher=hasher
-        ).collect()
-    }
-    assert pairs == {(1, 2): 3, (2, 3): 2}  # A~C (5 bits) correctly absent
-
-    kept = sorted(
-        r["doc_id"]
-        for r in audio_cluster_dedup(
-            d, "payload", "doc_id", max_hamming=3, bands=4, hasher=hasher
-        ).collect()
-    )
-    assert kept == [1, 4]  # chain A-B-C collapses to A; D survives
-
-    # exact-duplicate payloads always pair at hamming 0 (default hasher)
-    dd = spark.createDataFrame(
-        [(1, b"same"), (2, b"same"), (3, b"other")],
-        "doc_id long, payload binary",
-    )
-    got = audio_near_dups(dd, "payload", "doc_id").collect()
-    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in got] == [(1, 2, 0)]
-
-    # image and audio fingerprints of one payload must differ (distinct
-    # sha256 projections) — the multimodal-parity seam contract
-    from gluestick_spark.llm.multimodal import fake_audio_fingerprint, fake_phash
-
-    assert fake_phash(b"same") != fake_audio_fingerprint(b"same")
-
-
 # ---------------- r13 extra: streaming fingerprint dedup -----------------
-
-
-def test_streaming_fingerprint_dedup_cross_batch_chain(spark, tmp_dir):
-    """Chain A~B (batch 1) then C~B (batch 2), with A~C too far: C must
-    drop even though B was itself dropped — the state keeps DROPPED
-    rows' fingerprints, which is what makes cross-batch chains collapse
-    like the batch transitive closure. NULL payloads pass through."""
-    import os
-
-    from gluestick_spark.streaming.pipeline import (
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_fingerprint_dedup,
-    )
-
-    base = 0x0123456789ABCDEF
-    fp = {
-        b"A": base,
-        b"B": base ^ 0b111,                 # 3 flips from A
-        b"C": base ^ 0b111 ^ (0b11 << 20),  # 2 from B, 5 from A
-        b"D": base ^ ((1 << 40) - 1),       # far from everything
-    }
-
-    def hasher(payload: bytes) -> int:
-        v = fp[payload]
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    state = os.path.join(tmp_dir, "state")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    batch1 = spark.createDataFrame(
-        [(1, b"A"), (2, b"B"), (5, None)], "doc_id long, payload binary"
-    )
-    batch2 = spark.createDataFrame(
-        [(3, b"C"), (4, b"D")], "doc_id long, payload binary"
-    )
-    schema = batch1.schema
-    for b in (batch1, batch2):
-        b.coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_fingerprint_dedup(
-            stream_from_directory(spark, stage, schema),
-            "payload", "doc_id", state, out, ckpt,
-            max_hamming=3, bands=4, hasher=lambda p: hasher(bytes(p)),
-        )
-        q.awaitTermination()
-    kept = sorted(
-        r["doc_id"]
-        for r in read_streaming_dedup_output(spark, out).collect()
-    )
-    # A kept; B dropped (A~B); C dropped via state match on dropped B;
-    # D far -> kept; NULL payload (5) passes through unjudged
-    assert kept == [1, 4, 5]
-
-    # batch twin agrees: phash_cluster_dedup over the union keeps {1,4}
-    # among judged rows (5 is unjudgeable there too — NULL hash)
-    from gluestick_spark.llm.multimodal import phash_cluster_dedup
-
-    union = batch1.unionByName(batch2).where("payload IS NOT NULL")
-    batch_kept = sorted(
-        r["doc_id"]
-        for r in phash_cluster_dedup(
-            union, "payload", "doc_id",
-            max_hamming=3, bands=4, hasher=lambda p: hasher(bytes(p)),
-        ).collect()
-    )
-    assert batch_kept == [1, 4]
 
 
 def test_fp_segment_state_compaction_and_replay(spark, tmp_dir):

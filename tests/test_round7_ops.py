@@ -434,47 +434,6 @@ def test_versioned_crash_leftover_not_published(spark, tmp_dir):
     assert v == 3 and read_versioned(spark, path).count() == 7
 
 
-# ---------------------------------------------- cross-corpus near-dup -----
-
-
-def test_dedup_against_drops_only_cross_corpus_dups(spark):
-    from gluestick_spark.llm.dedup import cross_corpus_near_dup_pairs, dedup_against
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    ref = spark.createDataFrame(
-        [(100, base), (101, "completely different reference text here entirely")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            (1, base + " extra"),          # near-dup of ref 100 -> dropped
-            (2, "novel content one of a kind nothing shared with anything"),
-            (3, "novel content one of a kind nothing shared with anything"),
-            # 2 and 3 duplicate EACH OTHER but match nothing in ref -> both kept
-        ],
-        "doc_id long, text string",
-    )
-    pairs = cross_corpus_near_dup_pairs(new, ref, "text", "doc_id", threshold=0.6)
-    got_pairs = {(r.new_id, r.ref_id) for r in pairs.collect()}
-    assert got_pairs == {(1, 100)}  # oriented (new, ref); no within-side pairs
-    survivors = sorted(r.doc_id for r in
-                       dedup_against(new, ref, "text", "doc_id", threshold=0.6).collect())
-    assert survivors == [2, 3]  # within-new dups deliberately kept
-
-
-def test_dedup_against_overlapping_id_spaces(spark):
-    # same ids on both sides must not confuse the orientation
-    from gluestick_spark.llm.dedup import dedup_against
-
-    t = "shared text body that is identical on both sides of the fence"
-    ref = spark.createDataFrame([(1, t)], "doc_id long, text string")
-    new = spark.createDataFrame([(1, t), (2, "something else entirely unrelated")],
-                                "doc_id long, text string")
-    survivors = sorted(r.doc_id for r in
-                       dedup_against(new, ref, "text", "doc_id", threshold=0.8).collect())
-    assert survivors == [2]
-
-
 def test_scale_features_robust_mode(spark):
     import math
 

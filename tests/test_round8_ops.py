@@ -221,84 +221,6 @@ def test_heavy_hitters_output_ordered(spark):
     ]
 
 
-# --------------------------------------------- persisted LSH band index ---
-
-
-def test_band_index_indexed_equals_direct(spark, tmp_dir):
-    """dedup_against_indexed must be row-identical to dedup_against: the
-    candidate+verify tail is shared, only the reference side's signing is
-    swapped for a parquet read."""
-    from gluestick_spark.llm.dedup import (
-        dedup_against,
-        dedup_against_indexed,
-        materialize_band_index,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    new = d.where("doc_id % 2 = 1")
-    ref = d.where("doc_id % 2 = 0")
-    idx = os.path.join(tmp_dir, "band_idx")
-    materialize_band_index(ref, "text", "doc_id", idx)
-    direct = sorted(
-        r.doc_id for r in dedup_against(new, ref, "text", "doc_id", 0.8).collect()
-    )
-    indexed = sorted(
-        r.doc_id
-        for r in dedup_against_indexed(spark, new, idx, "text", "doc_id", 0.8).collect()
-    )
-    assert indexed == direct and len(direct) > 0
-
-
-def test_band_index_append_and_geometry_guard(spark, tmp_dir):
-    from gluestick_spark.llm.dedup import (
-        cross_corpus_near_dup_pairs,
-        cross_corpus_near_dup_pairs_indexed,
-        materialize_band_index,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    ref1 = spark.createDataFrame([(100, base)], "doc_id long, text string")
-    ref2 = spark.createDataFrame(
-        [(200, "an entirely different second reference batch of text")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(1, base + " extra"),
-         (2, "an entirely different second reference batch of text too")],
-        "doc_id long, text string",
-    )
-    idx = os.path.join(tmp_dir, "idx")
-    materialize_band_index(ref1, "text", "doc_id", idx)
-    got1 = {
-        (r.new_id, r.ref_id)
-        for r in cross_corpus_near_dup_pairs_indexed(
-            spark, new, idx, "text", "doc_id", 0.6
-        ).collect()
-    }
-    assert got1 == {(1, 100)}
-    # O(batch) append: only ref2 is signed; the index now covers both
-    materialize_band_index(ref2, "text", "doc_id", idx, mode="append")
-    got2 = {
-        (r.new_id, r.ref_id)
-        for r in cross_corpus_near_dup_pairs_indexed(
-            spark, new, idx, "text", "doc_id", 0.6
-        ).collect()
-    }
-    assert got2 == {(1, 100), (2, 200)}
-    # and matches the direct two-batch computation
-    both = ref1.union(ref2)
-    direct = {
-        (r.new_id, r.ref_id)
-        for r in cross_corpus_near_dup_pairs(new, both, "text", "doc_id", 0.6).collect()
-    }
-    assert got2 == direct
-    # geometry drift is refused, never silently compared
-    with pytest.raises(ValueError, match="geometry mismatch"):
-        materialize_band_index(ref2, "text", "doc_id", idx, num_perm=32, mode="append")
-
-
 # --------------------------------------------------- funnel analysis ------
 
 

@@ -1,6 +1,6 @@
 """Round-9 fixes and additions: versioned-table per-version commit
-markers (ADVICE r8 medium x2), resample_to_ratio zero-class contract,
-band-index commit marker."""
+markers (ADVICE r8 medium x2), resample_to_ratio zero-class contract.
+(The band-index commit-marker tests live in tests/test_near_dups.py.)"""
 
 from __future__ import annotations
 
@@ -102,53 +102,6 @@ def test_resample_to_ratio_still_exact_on_present_classes(spark):
     counts = {r["c"]: r["n"] for r in out.groupBy("c").agg(F.count("*").alias("n")).collect()}
     # n_a=60,w=3 -> 20; n_b=40,w=2 -> 20; n_c=20,w=1 -> 20; u=20
     assert counts == {"a": 60, "b": 40, "c": 20}
-
-
-# -------------------------------------------- band-index commit marker ----
-
-
-def test_band_index_requires_commit_marker(spark, tmp_dir):
-    """ADVICE r8 (low): a torn rebuild (crash between the bands and
-    shingles overwrites) must fail LOUDLY on read, not silently serve a
-    mixed-corpora index."""
-    from gluestick_spark.llm.dedup import (
-        dedup_against_indexed,
-        materialize_band_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"unique document body number {i} " * 3) for i in range(8)],
-        "doc_id long, text string",
-    )
-    path = os.path.join(tmp_dir, "bidx")
-    materialize_band_index(docs, "text", "doc_id", path)
-    marker = os.path.join(path, "_INDEX_COMMIT")
-    assert os.path.isfile(marker)
-    # sanity: committed index serves
-    assert dedup_against_indexed(spark, docs, path, "text", "doc_id").count() == 0
-    # torn rebuild: marker gone, read must raise
-    os.remove(marker)
-    with pytest.raises(ValueError, match="uncommitted"):
-        dedup_against_indexed(spark, docs, path, "text", "doc_id")
-
-
-def test_band_index_append_recommits(spark, tmp_dir):
-    from gluestick_spark.llm.dedup import (
-        dedup_against_indexed,
-        materialize_band_index,
-    )
-
-    mk = lambda lo, hi: spark.createDataFrame(
-        [(i, f"unique document body number {i} " * 3) for i in range(lo, hi)],
-        "doc_id long, text string",
-    )
-    path = os.path.join(tmp_dir, "bidx")
-    materialize_band_index(mk(0, 6), "text", "doc_id", path)
-    materialize_band_index(mk(6, 12), "text", "doc_id", path, mode="append")
-    assert os.path.isfile(os.path.join(path, "_INDEX_COMMIT"))
-    # a doc duplicated from the appended half is caught
-    dup = mk(6, 7)
-    assert dedup_against_indexed(spark, dup, path, "text", "doc_id").count() == 0
 
 
 # --------------------------------------------- persisted IVF x SQ index ---

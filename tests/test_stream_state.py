@@ -13,6 +13,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
+# Most jobs per trigger seen before the bucket joins were folded into
+# one, on the data of test_streaming_minhash_dedup_two_batches_equal_batch.
+MINHASH_JOBS_MAX = (17, 21)
 STREAMING = pathlib.Path(__file__).resolve().parents[1] / "gluestick_spark" / "streaming"
 
 
@@ -48,10 +51,12 @@ def _run_minhash_stream(spark, d, stage, out, state, ckpt, threshold):
     )
 
     d.coalesce(1).write.mode("append").parquet(stage)
-    streaming_minhash_dedup(
+    q = streaming_minhash_dedup(
         stream_from_directory(spark, stage, d.schema),
         "text", "doc_id", state, out, ckpt, threshold=threshold,
-    ).awaitTermination()
+    )
+    q.awaitTermination()
+    return q
 
 
 def _dirs(tmp_dir):
@@ -79,7 +84,11 @@ def test_streaming_never_touches_the_catalog():
 def test_streaming_minhash_dedup_two_batches_equal_batch(spark, tmp_dir):
     """Two micro-batches (monotone ids) keep exactly the batch
     ``minhash_dedup`` keep set of their union, including a batch-2 doc
-    that near-duplicates a batch-1 doc that was itself dropped."""
+    that near-duplicates a batch-1 doc that was itself dropped. No
+    trigger runs more Spark jobs, counted by the query's job group, than
+    before the bucket joins were folded into one (MINHASH_JOBS_MAX, the
+    most seen there on this data; pinning the batch's band frame raised
+    the counts)."""
     from gluestick_spark.llm.dedup import minhash_dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -91,14 +100,18 @@ def test_streaming_minhash_dedup_two_batches_equal_batch(spark, tmp_dir):
     ]
     full = spark.createDataFrame(docs)
     stage, out, state, ckpt = _dirs(tmp_dir)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
     for cond in (F.col("doc_id") <= 2, F.col("doc_id") > 2):
-        _run_minhash_stream(spark, full.where(cond), stage, out, state, ckpt, 0.7)
+        q = _run_minhash_stream(spark, full.where(cond), stage, out, state, ckpt, 0.7)
+        jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
     streamed = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     batch = sorted(
         r["doc_id"]
         for r in minhash_dedup(full, "text", "doc_id", threshold=0.7).collect()
     )
     assert streamed == batch == [1, 4]
+    assert all(j <= m for j, m in zip(jobs, MINHASH_JOBS_MAX)), jobs
 
 
 def test_streaming_url_dedup_two_batches_equal_batch(spark, tmp_dir):
