@@ -89,11 +89,14 @@ from pyspark.sql import functions as F
 
 from gluestick_spark.fsio import LOCAL_FS
 from gluestick_spark.llm.index_commit import (
+    SCHEMAS,
     SEMDEDUP_REF,
     begin_rebuild,
+    check_append,
     load_meta,
     publish,
     rollback_torn_append,
+    schema_entry,
 )
 from gluestick_spark.llm.ivf_cells import (
     Cells,
@@ -938,6 +941,7 @@ def materialize_semdedup_ref(
     )
     capped: list[int] = []
     counts: list[int] = []
+    schemas = {}
     if state:
         pts = _assign_df(_prepare(reference, vec_col, id_col, scale), state, assign)
         # per-cell TRUE counts (capped cells included) persist in the
@@ -950,7 +954,7 @@ def materialize_semdedup_ref(
             capped = _capped_cells(counts, max_cluster_size)
             if capped:
                 pts = pts.where(~F.col("cid").isin(capped))
-        write_cells(_ref_rows(pts), Cells(path), "overwrite")
+        schemas["cells"] = write_cells(_ref_rows(pts), Cells(path), "overwrite")
     meta = {
         "scale": int(scale),
         "k": int(k),
@@ -963,6 +967,7 @@ def materialize_semdedup_ref(
             int(max_cluster_size) if max_cluster_size is not None else None
         ),
         "state": encode_state(state),
+        SCHEMAS: schemas,
     }
     publish(SEMDEDUP_REF, path, meta)
 
@@ -1025,9 +1030,11 @@ def append_semdedup_ref(
     if n_rows == 0:
         return 0
     cells = Cells(path)
+    rows = _ref_rows(pts)
+    check_append(SEMDEDUP_REF, path, meta, "cells", schema_entry(rows, cells.part))
     ledger = os.path.join(cells.root, _SSD_LEDGER)
     with append_bracket(path):
-        write_cells(_ref_rows(pts), cells, "append")
+        write_cells(rows, cells, "append")
         LOCAL_FS.makedirs(ledger)
         LOCAL_FS.write_text_atomic(
             os.path.join(ledger, f"{uuid.uuid4().hex}.json"),
@@ -1085,7 +1092,9 @@ def _semdedup_judge(path: str, vec_col: str, id_col: str, threshold: float):
         # batch-sized; feeds the cid collect and the verdicts
         pts = pin(pts)
         cids = [r["cid"] for r in pts.select("cid").distinct().collect()]
-        cells = read_probed(batch_df.sparkSession, Cells(path), cids, meta["id_col"])
+        cells = read_probed(
+            batch_df.sparkSession, Cells(path), cids, meta["id_col"], meta
+        )
         ref_pts = cells.select(
             "cid", F.col("qr").alias("__q__"), F.col("xxr").alias("__xx__")
         )
@@ -1311,17 +1320,19 @@ def materialize_sq_ivf(
         return_state=True,
     )
     begin_rebuild(SQ_IVF, path)
+    schemas = {}
     if state:
         enc = _sq_cells(
             df, vec_col, id_col, id_col, scale, list(enumerate(state))
         )
-        write_cells(enc, Cells(path), "overwrite")
+        schemas["cells"] = write_cells(enc, Cells(path), "overwrite")
     router = {
         "scale": int(scale),
         "n_clusters": int(n_clusters),
         "iters": int(iters),
         "id_col": id_col,
         "state": encode_state(state),
+        SCHEMAS: schemas,
     }
     publish(SQ_IVF, path, router)
 
@@ -1359,6 +1370,8 @@ def sq_ivf_append(
     append_cells(
         _sq_cells(df, vec_col, id_col, router.id_col, router.scale, router.live),
         Cells(path),
+        SQ_IVF,
+        router.meta,
     )
 
 
@@ -1392,7 +1405,7 @@ def sq_ivf_topk_indexed(
     probes, _, _ = _select_probes(
         router.state, query, router.scale, nprobe, dead=router.dead
     )
-    enc = read_probed(spark, Cells(path), probes, router.id_col).select(
+    enc = read_probed(spark, Cells(path), probes, router.id_col, router.meta).select(
         F.col(router.id_col).alias(out_id),
         F.col("scale").alias("__sc__"),
         F.col("qvec").alias("__qv__"),
@@ -1469,5 +1482,5 @@ def sq_ivf_topk_indexed_batch(
     return batch_topk(
         spark, Cells(path), router.id_col, qprep,
         ["__qid__", "__qsc__", "__qcodes__"], probes, query_id_col, out_id,
-        [Rank("score", "double", score, False, k)],
+        [Rank("score", "double", score, False, k)], router.meta,
     )

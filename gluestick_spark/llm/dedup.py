@@ -273,7 +273,6 @@ def _shingle_sets(
     id_col: str,
     shingle_n: int,
     ids: DataFrame | None = None,
-    how: str = "leftsemi",
 ) -> DataFrame:
     """(``__id__``, ``__sh__``): each document's distinct shingle set.
     With ``ids`` (a one-column frame of candidate ids), only the
@@ -281,15 +280,13 @@ def _shingle_sets(
     DOCUMENT once — never per pair occurrence, which is unbounded on
     dup-heavy corpora (a replica family of R contributes C(R,2) pairs;
     the 10x replica probe measured 48 s vs 12 s), and never every corpus
-    document. ``how`` joins the documents to the distinct ids: "inner"
-    keeps the same rows as the "leftsemi" default, but plans and job
-    counts differ, so each caller keeps the form it was measured with.
-    Without ``ids``, every document, spread over the default
-    parallelism."""
+    document. The documents join the distinct ids with an inner join,
+    which keeps the rows a semi-join would and runs fewer jobs. Without
+    ``ids``, every document, spread over the default parallelism."""
     if ids is None:
         df = _parallelize(df, id_col)
     else:
-        df = df.join(ids.select(F.col(ids.columns[0]).alias(id_col)).distinct(), id_col, how)
+        df = df.join(ids.select(F.col(ids.columns[0]).alias(id_col)).distinct(), id_col)
     return df.select(
         F.col(id_col).alias("__id__"),
         F.array_distinct(shingles_expr(F.col(text_col), shingle_n)).alias("__sh__"),
@@ -678,7 +675,7 @@ def minhash_near_dup_pairs(
     """
     # Pinned: (a, b) id pairs only — tiny rows, the connected_components
     # edge pattern — because the verify below references the candidate
-    # set three times (two survivor semi-joins + the pair join) and the
+    # set three times (two survivor joins + the pair join) and the
     # signature/bucket chain must run once, not three times.
     cand = pin(
         minhash_lsh_candidates(
@@ -686,7 +683,7 @@ def minhash_near_dup_pairs(
         )
     )
     # Exact-Jaccard verify: shingle once per candidate DOCUMENT per side
-    # (corpus semi-joined to the pair ids, see _shingle_sets), then
+    # (corpus joined to the distinct pair ids, see _shingle_sets), then
     # hash-join the arrays to the pairs. Survivor-doc scale is
     # min(corpus, 2·pairs) by construction (guide §8: every pass but the
     # last operates on a lightweight proxy / survivors).
@@ -1186,7 +1183,7 @@ def _cross_candidates(bn: DataFrame, br: DataFrame, max_bucket: int | None) -> D
     then the candidate join (cost ∝ cross collisions). The direct and
     index-backed paths share it and the Jaccard verify, so indexed ≡
     direct by construction. Pinned (id pairs only) because the new
-    side's survivor semi-join reads it before the verify does."""
+    side's survivor join reads it before the verify does."""
     bn = _cap_buckets(bn.repartition("band", "bucket"), ["band", "bucket"], max_bucket)
     br = _cap_buckets(br.repartition("band", "bucket"), ["band", "bucket"], max_bucket)
     return pin(
@@ -1245,10 +1242,11 @@ def materialize_band_index(
 ) -> None:
     """Persist ``df_ref``'s LSH index at ``path``: ``bands/`` holds the
     (``__id__``, band, bucket) rows, ``shingles/`` the per-doc distinct
-    shingle sets, the ``_INDEX_COMMIT`` marker the geometry.
-    ``mode="append"`` adds a NEW reference batch to an existing
-    committed index (O(batch) — nothing is re-signed; geometry must
-    match the stored meta).
+    shingle sets, the ``_INDEX_COMMIT`` marker the geometry and the
+    two parts' schemas. ``mode="append"`` adds a NEW reference batch to
+    an existing committed index (O(batch) — nothing is re-signed;
+    geometry must match the stored meta, and the batch's frames the
+    recorded schemas, or it raises before writing).
 
     Crash safety (ADVICE r8, :mod:`gluestick_spark.llm.index_commit`):
     the marker is removed FIRST and re-published only after every
@@ -1268,16 +1266,34 @@ def materialize_band_index(
     band derivation must not re-emit."""
     import os as _os
 
-    from .index_commit import BAND_INDEX, begin_rebuild, publish
+    from .index_commit import (
+        BAND_INDEX,
+        SCHEMAS,
+        begin_rebuild,
+        build_meta,
+        publish,
+        read_store,
+        recorded_schema,
+        schema_entry,
+    )
 
-    meta = {"num_perm": num_perm, "bands": bands, "shingle_n": shingle_n}
+    geometry = {"num_perm": num_perm, "bands": bands, "shingle_n": shingle_n}
+    sh_path = _os.path.join(path, "shingles")
+    sh = _shingle_sets(df_ref, text_col, id_col, shingle_n)
+    parts = {"shingles": sh}
+    if mode == "append":
+        parts["bands"] = bb = minhash_band_buckets(
+            df_ref, text_col, id_col, num_perm, bands, shingle_n
+        )
+    meta = build_meta(BAND_INDEX, path, mode, geometry, parts)
     # invalidate BEFORE touching any component: readers fail loudly on a
     # mid-rebuild index rather than joining mismatched halves
-    begin_rebuild(BAND_INDEX, path, meta if mode == "append" else None)
-    sh_path = _os.path.join(path, "shingles")
-    _shingle_sets(df_ref, text_col, id_col, shingle_n).write.mode(mode).parquet(sh_path)
+    begin_rebuild(BAND_INDEX, path, geometry if mode == "append" else None)
+    sh.write.mode(mode).parquet(sh_path)
     if mode == "overwrite":
-        stored = df_ref.sparkSession.read.parquet(sh_path)
+        stored = read_store(
+            df_ref.sparkSession, sh_path, recorded_schema(meta, "shingles")
+        )
         bb = _explode_bands(
             stored.select(
                 "__id__",
@@ -1286,10 +1302,7 @@ def materialize_band_index(
             num_perm,
             bands,
         )
-    else:
-        bb = minhash_band_buckets(
-            df_ref, text_col, id_col, num_perm, bands, shingle_n
-        )
+        meta[SCHEMAS]["bands"] = schema_entry(bb)
     bb.write.mode(mode).parquet(_os.path.join(path, "bands"))
     publish(BAND_INDEX, path, meta)
 
@@ -1297,11 +1310,13 @@ def materialize_band_index(
 def _read_band_index(spark, path: str):
     import os as _os
 
-    from .index_commit import BAND_INDEX, load_meta
+    from .index_commit import BAND_INDEX, load_meta, read_store, recorded_schema
 
     meta = load_meta(BAND_INDEX, path)
-    bands_df = spark.read.parquet(_os.path.join(path, "bands"))
-    sh_ref = spark.read.parquet(_os.path.join(path, "shingles"))
+    bands_df, sh_ref = (
+        read_store(spark, _os.path.join(path, part), recorded_schema(meta, part))
+        for part in ("bands", "shingles")
+    )
     return bands_df, sh_ref, meta
 
 

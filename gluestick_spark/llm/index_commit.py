@@ -12,10 +12,12 @@ refuses. The protocol is three calls, all through the ``fs=`` seam:
   From here until :func:`publish`, readers refuse the store.
 - :func:`publish` writes the marker atomically (``write_text_atomic``)
   — the commit point.
-- :func:`load_meta` is the one reader: it raises a single message
-  ("uncommitted … torn or absent") when the marker is missing and
-  returns the meta otherwise; ``serving=True`` also refuses a store
+- :func:`load_meta` is the one marker reader: it raises a single
+  message ("uncommitted … torn or absent") when the marker is missing
+  and returns the meta otherwise; ``serving=True`` also refuses a store
   with an open append (:func:`require_committed`).
+
+The parts themselves are read by :func:`read_store` only (below).
 
 Stores and their markers (:class:`Store`; names and JSON schemas are
 stable on-disk contracts):
@@ -31,6 +33,19 @@ stable on-disk contracts):
 
 Band and substring indexes written before this layout also carry a
 ``_META.json`` copy of the same JSON; it is ignored.
+
+The marker also records, under ``schemas``, the schema of each part
+directory the build wrote (``cells``, ``bands``, ``shingles``,
+``windows``, ``docs``, ``ref_grams``, ``bloom_words.parquet``,
+``sketch.parquet``), as an inferring read of that directory returns it
+(:func:`schema_entry`). The entry is part of the marker's on-disk
+contract: :func:`read_store` is the one read of a committed store and
+types the scan from it, so a read runs no footer-inference job. An
+explicit schema reads a column the files lack as NULL, so the guard sits
+on the write side: every append compares its frame with the recorded
+entry before it writes (:func:`check_append`). A store committed before
+schemas were recorded has no entry and is read by inference, in
+:func:`read_store` only.
 
 Appends to the routered families (``sq_ivf_append``, ``pq_ivf_append``,
 ``append_semdedup_ref``, deletes, rebalance sub-cells, the router-less
@@ -71,9 +86,13 @@ import json
 import os
 from typing import NamedTuple
 
+from pyspark.sql import DataFrame
+from pyspark.sql.types import IntegerType, IntegralType, StructField, StructType
+
 from ..fsio import LOCAL_FS, StateFS
 
 SIDECAR = "_APPEND_INPROGRESS"
+SCHEMAS = "schemas"
 
 
 class Store(NamedTuple):
@@ -127,11 +146,13 @@ def begin_rebuild(
     """Open a (re)build of the store at ``path``: roll back any torn
     append, check ``append_geometry`` against the committed meta when
     appending (the store must then be committed), and drop the marker so
-    readers refuse until :func:`publish`."""
+    readers refuse until :func:`publish`. Only the geometry is compared;
+    the recorded schemas are checked per part by :func:`check_append`."""
     fs.makedirs(path)
     rollback_torn_append(path, fs=fs)
     if append_geometry is not None:
         stored = load_meta(store, path, fs)
+        stored.pop(SCHEMAS, None)
         if stored != append_geometry:
             raise ValueError(
                 f"{store.what} geometry mismatch: stored {stored}, "
@@ -145,8 +166,87 @@ def begin_rebuild(
 def publish(
     store: Store, path: str, meta: dict, fs: StateFS = LOCAL_FS
 ) -> None:
-    """Commit the store: write its marker atomically."""
+    """Commit the store: write its marker atomically. A build records,
+    next to the geometry, each part directory it wrote and its
+    :func:`schema_entry` under ``meta[SCHEMAS]``."""
     fs.write_text_atomic(os.path.join(path, store.marker), json.dumps(meta))
+
+
+def schema_entry(df: DataFrame, partition: str | None = None) -> dict:
+    """The recorded schema of a part directory written from ``df``:
+    ``df.schema`` (no job) as an inferring read of the directory returns
+    it — every field nullable, and the ``partition`` column last. Stores
+    partition by cell id, whose directory values infer as int."""
+    fields = [f for f in df.schema.fields if f.name != partition]
+    if partition is not None:
+        dtype = df.schema[partition].dataType
+        if isinstance(dtype, IntegralType):
+            dtype = IntegerType()
+        fields.append(StructField(partition, dtype))
+    text = StructType(fields).json()
+    for key in ("nullable", "containsNull", "valueContainsNull"):
+        text = text.replace(f'"{key}":false', f'"{key}":true')
+    return json.loads(text)
+
+
+def _recorded(meta: dict | None, part: str) -> dict | None:
+    return (meta or {}).get(SCHEMAS, {}).get(part)
+
+
+def recorded_schema(meta: dict | None, part: str) -> StructType | None:
+    """The schema ``meta`` records for ``part``; None for a store
+    committed before schemas were recorded (or no marker at all)."""
+    entry = _recorded(meta, part)
+    return None if entry is None else StructType.fromJson(entry)
+
+
+def read_store(spark, root: str, schema: StructType | None) -> DataFrame:
+    """The one read of a committed store's part directory ``root``,
+    typed by its recorded ``schema`` (:func:`recorded_schema`): no
+    footer-inference job. A store committed before schemas were recorded
+    passes None and is read by inference — the only schema-less read of
+    a committed store."""
+    if schema is None:
+        return spark.read.parquet(root)
+    return spark.read.schema(schema).parquet(root)
+
+
+def build_meta(
+    store: Store,
+    path: str,
+    mode: str,
+    geometry: dict,
+    parts: dict[str, DataFrame],
+    fs: StateFS = LOCAL_FS,
+) -> dict:
+    """The meta a build of a store with an append mode publishes. On
+    ``mode="append"`` it is the committed meta, after each frame of
+    ``parts`` (part name → frame about to be written) is checked
+    against its recorded schema (:func:`check_append`); otherwise it is
+    ``geometry`` with the schema entry of each part."""
+    if mode != "append":
+        return {**geometry, SCHEMAS: {p: schema_entry(f) for p, f in parts.items()}}
+    meta = load_meta(store, path, fs)
+    for part, frame in parts.items():
+        check_append(store, path, meta, part, schema_entry(frame))
+    return meta
+
+
+def check_append(
+    store: Store, path: str, meta: dict, part: str, entry: dict
+) -> None:
+    """Refuse, before anything is written, an append to ``part`` whose
+    frame (:func:`schema_entry`) differs from the recorded schema in a
+    field name or type: a typed read would turn the drift into silent
+    NULLs or a failed scan. A store without a recorded schema is not
+    checked."""
+    recorded = _recorded(meta, part)
+    if recorded is not None and recorded != entry:
+        raise ValueError(
+            f"{store.what} at {path}: the appended {part} schema "
+            f"{StructType.fromJson(entry).simpleString()} does not match "
+            f"the recorded {StructType.fromJson(recorded).simpleString()}"
+        )
 
 
 def _cells_root(path: str, cells: str) -> str:

@@ -57,9 +57,18 @@ from .index_commit import (
     SQ_IVF,
     Store,
     load_meta,
+    recorded_schema,
     rollback_torn_append,
 )
-from .ivf_cells import TOMBSTONES, Cells, append_bracket, tombstones, write_cells
+from .ivf_cells import (
+    TOMBSTONES,
+    Cells,
+    _tombstones,
+    append_bracket,
+    read_cells,
+    tombstones,
+    write_cells,
+)
 
 __all__ = [
     "ivf_delete",
@@ -70,14 +79,27 @@ __all__ = [
 ]
 
 def _delete_core(
-    spark, path: str, ids_df: DataFrame, id_col: str, fallback_cells: str = "cells"
+    spark,
+    path: str,
+    ids_df: DataFrame,
+    id_col: str,
+    fallback_cells: str = "cells",
+    meta: dict | None = None,
 ) -> int:
     """Shared tombstone append: distinct ids, bracketed write. Returns
     the number of ids tombstoned in this batch. ``fallback_cells`` only
-    matters for healing a pre-r14 (non-self-describing) torn sidecar."""
+    matters for healing a pre-r14 (non-self-describing) torn sidecar.
+    With a router ``meta`` that records the cells schema, the ids are
+    written in the stored id type, which is the type the tombstones are
+    read with; an id that type cannot hold names no stored row and is
+    written as NULL, which anti-joins nothing."""
     rollback_torn_append(path, cells=fallback_cells)
     src = id_col if id_col in ids_df.columns else ids_df.columns[0]
-    doomed = ids_df.select(F.col(src).alias(id_col)).distinct()
+    ids = F.col(src)
+    schema = recorded_schema(meta, "cells")
+    if schema is not None:
+        ids = ids.try_cast(schema[id_col].dataType)
+    doomed = ids_df.select(ids.alias(id_col)).distinct()
     n = doomed.count()
     if n == 0:
         return 0
@@ -93,15 +115,15 @@ def sq_ivf_delete(spark, path: str, ids_df: DataFrame) -> int:
     materialize_sq_ivf` index (id column taken from the router).
     Serving excludes them immediately; :func:`vacuum_deleted` purges
     physically. Returns the batch's distinct id count."""
-    id_col = load_meta(SQ_IVF, path)["id_col"]
-    return _delete_core(spark, path, ids_df, id_col)
+    meta = load_meta(SQ_IVF, path)
+    return _delete_core(spark, path, ids_df, meta["id_col"], meta=meta)
 
 
 def pq_ivf_delete(spark, path: str, ids_df: DataFrame) -> int:
     """Tombstone ids out of a :func:`~gluestick_spark.llm.pq.
     materialize_pq_ivf` index — same contract as :func:`sq_ivf_delete`."""
-    id_col = load_meta(PQ_IVF, path)["id_col"]
-    return _delete_core(spark, path, ids_df, id_col)
+    meta = load_meta(PQ_IVF, path)
+    return _delete_core(spark, path, ids_df, meta["id_col"], meta=meta)
 
 
 def ivf_delete(
@@ -185,21 +207,23 @@ def vacuum_deleted(
     tombstones are still active; a rewritten-but-uncleared tombstone
     anti-joins rows already gone."""
     rollback_torn_append(path, cells=cells)
+    meta = None
     if id_col is None:
-        id_col = load_meta(_ROUTERED, path)["id_col"]
+        meta = load_meta(_ROUTERED, path)
+        id_col = meta["id_col"]
     if batch_cells < 1:
         raise ValueError(f"batch_cells must be >= 1, got {batch_cells}")
     report: dict = {"cells_rewritten": [], "cells_dropped": [], "rows_purged": 0}
     layout = Cells(path, cells, part_col)
     root = layout.root
     _recover_vacuum_leftovers(root, part_col)
-    t = tombstones(spark, path, id_col)
+    t = _tombstones(spark, path, id_col, meta)
     if t is None:
         return report
     t = pin(t)  # reused per rewrite group; kilobytes
     affected = sorted(
         r[part_col]
-        for r in spark.read.parquet(root)
+        for r in read_cells(spark, layout, meta)
         .join(t, id_col)
         .select(part_col)
         .distinct()
@@ -210,7 +234,7 @@ def vacuum_deleted(
         group = affected[lo : lo + batch_cells]
         # fresh reader per group: earlier swaps must not leave this scan
         # a stale file listing (pruning reads ONLY the group's dirs)
-        gdf = spark.read.parquet(root).where(F.col(part_col).isin(group))
+        gdf = read_cells(spark, layout, meta).where(F.col(part_col).isin(group))
         purged = {
             r[part_col]: r["n"]
             for r in gdf.join(t, id_col)

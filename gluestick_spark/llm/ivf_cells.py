@@ -33,7 +33,9 @@ This module owns the mechanics every family shares:
 - :func:`load_router` / :func:`publish_router` — the router decode
   (integer state, ``dead`` set, live ``(cid, state)`` list) and its
   re-publication after a rebalance.
-- :func:`read_probed` — the partition-pruned probe read, with tombstoned
+- :func:`read_probed` — the partition-pruned probe read, typed by the
+  cells schema the router records
+  (:func:`~gluestick_spark.llm.index_commit.read_store`), with tombstoned
   ids anti-joined out under the index's stored id column.
 - :func:`batch_topk` — batched serving: probes exploded per query, one
   lazily pinned probe frame, the probed-cell union collected, one pruned
@@ -52,16 +54,22 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..partitioning import pin
 from .index_commit import (
     PQ_IVF,
+    ROUTER,
     SQ_IVF,
     Store,
     begin_append,
+    check_append,
     commit_append,
     load_meta,
     publish,
+    read_store,
+    recorded_schema,
+    schema_entry,
 )
 
 TOMBSTONES = "_tombstones.parquet"
@@ -92,17 +100,19 @@ def plain_cells(path: str) -> Cells:
 
 def write_cells(
     df: DataFrame, cells: Cells, mode: str, root: str | None = None
-) -> None:
+) -> dict:
     """Write ``df`` partitioned by the cell column under ``root``
-    (default: the cells root). The repartition on the cell column
-    coalesces each cell into whole files instead of every task writing a
-    sliver of every cell."""
+    (default: the cells root) and return the schema entry a build
+    records for it. The repartition on the cell column coalesces each
+    cell into whole files instead of every task writing a sliver of
+    every cell."""
     (
         df.repartition(F.col(cells.part))
         .write.partitionBy(cells.part)
         .mode(mode)
         .parquet(root or cells.root)
     )
+    return schema_entry(df, cells.part)
 
 
 @contextmanager
@@ -115,8 +125,14 @@ def append_bracket(path: str, subdir: str = "cells"):
     commit_append(path)
 
 
-def append_cells(df: DataFrame, cells: Cells) -> None:
-    """Append ``df`` into the cell directories inside the append bracket."""
+def append_cells(
+    df: DataFrame, cells: Cells, store: Store | None = None, meta: dict | None = None
+) -> None:
+    """Append ``df`` into the cell directories inside the append
+    bracket. With the committed ``meta`` of ``store``, a frame whose
+    schema drifted from the recorded cells schema raises first."""
+    if store is not None:
+        check_append(store, cells.path, meta, cells.subdir, schema_entry(df, cells.part))
     with append_bracket(cells.path, cells.subdir):
         write_cells(df, cells, "append")
 
@@ -180,25 +196,52 @@ def check_topk(nprobe: int, k: int) -> None:
         raise ValueError("nprobe >= 1 and k >= 1 required")
 
 
-def tombstones(spark, path: str, id_col: str) -> DataFrame | None:
-    """The index's tombstoned ids as a 1-column frame (``id_col``), or
-    None when nothing was ever deleted (or a vacuum cleared them)."""
+def read_cells(spark, cells: Cells, meta: dict | None) -> DataFrame:
+    """Every cell row, typed by the cells schema recorded in ``meta``
+    (inferred for a marker-less or pre-schema index)."""
+    return read_store(spark, cells.root, recorded_schema(meta, cells.subdir))
+
+
+def _tombstones(
+    spark, path: str, id_col: str, meta: dict | None
+) -> DataFrame | None:
     root = os.path.join(path, TOMBSTONES)
     if not os.path.isdir(root) or not any(
         f.endswith(".parquet") for f in os.listdir(root)
     ):
         return None
-    return spark.read.parquet(root).select(id_col).distinct()
+    schema = recorded_schema(meta, "cells")
+    if schema is not None:
+        schema = StructType([schema[id_col]])
+    return read_store(spark, root, schema).select(id_col).distinct()
 
 
-def read_probed(spark, cells: Cells, probes: list[int], id_col: str) -> DataFrame:
-    """The rows of the probed cells, with stored column names. The
-    ``part IN (probes)`` filter rides the scan as a partition filter, so
-    only the probed directories are read. Tombstoned ids are dropped by
-    one anti-join on the stored id column ``id_col``, which is the
-    column the tombstones were written under; cost O(candidates)."""
-    df = spark.read.parquet(cells.root).where(F.col(cells.part).isin(probes))
-    t = tombstones(spark, cells.path, id_col)
+def tombstones(spark, path: str, id_col: str) -> DataFrame | None:
+    """The index's tombstoned ids as a 1-column frame (``id_col``), or
+    None when nothing was ever deleted (or a vacuum cleared them). The
+    read is typed by the id field of the recorded cells schema when the
+    index has a router that records one; a plain or pre-schema index's
+    tombstones are read by inference."""
+    meta = None
+    if os.path.isfile(os.path.join(path, ROUTER)):
+        meta = load_meta(SQ_IVF, path)
+    return _tombstones(spark, path, id_col, meta)
+
+
+def read_probed(
+    spark, cells: Cells, probes: list[int], id_col: str, meta: dict | None = None
+) -> DataFrame:
+    """The rows of the probed cells, with stored column names, read with
+    the cells schema recorded in the committed ``meta`` — no inference
+    job (a plain or pre-schema index, ``meta`` None or without a
+    schema, is read by inference). The ``part IN (probes)`` filter rides
+    the scan as a partition filter, so only the probed directories are
+    read. Tombstoned ids are dropped by one anti-join on the stored id
+    column ``id_col``, which is the column the tombstones were written
+    under, read with that field of the recorded schema; cost
+    O(candidates)."""
+    df = read_cells(spark, cells, meta).where(F.col(cells.part).isin(probes))
+    t = _tombstones(spark, cells.path, id_col, meta)
     return df if t is None else df.join(t, id_col, "left_anti")
 
 
@@ -236,19 +279,22 @@ def batch_topk(
     query_id_col: str,
     out_id: str,
     ranks: list[Rank],
+    meta: dict | None = None,
 ) -> DataFrame:
     """Batched top-k over an IVF index in a bounded number of jobs.
 
     ``queries`` holds one row per query with ``__qid__`` and the
     ``carry`` columns the ranks read; ``probes`` is the per-query array
-    of probe cells. Each query row is exploded over its probes and
-    pinned lazily: the probe frame feeds both the probed-cell collect
-    and the join, and the collect materializes it (an eager pin would
-    cost one more job). The union of probed cells, bounded by the cell
-    count, prunes the cell scan to literal partitions; one join on the
-    partition column pairs queries with candidates, whose stored id
-    ``id_col`` is renamed to ``out_id``. The ranks then apply in order,
-    each as a per-query window. Returns (``query_id_col``, ``out_id``,
+    of probe cells; ``meta`` is the index's committed router meta, whose
+    cells schema types the read (None for the plain family). Each query
+    row is exploded over its probes and pinned lazily: the probe frame
+    feeds both the probed-cell collect and the join, and the collect
+    materializes it (an eager pin would cost one more job). The union of
+    probed cells, bounded by the cell count, prunes the cell scan to
+    literal partitions; one join on the partition column pairs queries
+    with candidates, whose stored id ``id_col`` is renamed to
+    ``out_id``. The ranks then apply in order, each as a per-query
+    window. Returns (``query_id_col``, ``out_id``,
     rank columns...), ordered by query, the last rank and id."""
 
     def order(r: Rank) -> Column:
@@ -263,7 +309,7 @@ def batch_topk(
             out_id,
             [(r.col, r.dtype) for r in ranks],
         )
-    cand = qx.join(read_probed(spark, cells, probed, id_col), part)
+    cand = qx.join(read_probed(spark, cells, probed, id_col, meta), part)
     if out_id != id_col:
         cand = cand.withColumnRenamed(id_col, out_id)
     for r in ranks:

@@ -540,11 +540,12 @@ def materialize_pq_ivf(
 
     Serving cost is then ∝ probed cells × code bytes — see
     :func:`pq_ivf_topk_indexed`."""
-    from .index_commit import begin_rebuild, publish
+    from .index_commit import SCHEMAS, begin_rebuild, publish
 
     router = _train_router(df, vec_col, id_col, n_clusters, iters, scale)
     begin_rebuild(PQ_IVF, path)
     books: list[Codebook] = []
+    schemas = {}
     if router:
         books = train_pq(
             df, vec_col, id_col, m=m, k=n_codes, iters=iters, scale=scale,
@@ -553,7 +554,7 @@ def materialize_pq_ivf(
         enc = _encode_cells(
             df, vec_col, id_col, router, books, scale, keep_qvec=store_vectors
         )
-        write_cells(enc, Cells(path), "overwrite")
+        schemas["cells"] = write_cells(enc, Cells(path), "overwrite")
     meta = {
         "scale": int(scale),
         "m": int(m),
@@ -564,6 +565,7 @@ def materialize_pq_ivf(
         "id_col": id_col,
         "router": encode_state(router),
         "codebooks": [encode_state(book) for book in books],
+        SCHEMAS: schemas,
     }
     publish(PQ_IVF, path, meta)
 
@@ -611,7 +613,7 @@ def pq_ivf_append(
         router.scale, keep_qvec=bool(router.meta.get("store_vectors", False)),
         router_cids=[cid for cid, _ in live],
     )
-    append_cells(enc, Cells(path))
+    append_cells(enc, Cells(path), PQ_IVF, router.meta)
 
 
 def pq_ivf_topk_indexed(
@@ -657,7 +659,7 @@ def pq_ivf_topk_indexed(
         router.state, query, router.scale, nprobe, dead=router.dead
     )
     tab = adc_table(query, _codebooks(router), router.scale)
-    enc = read_probed(spark, Cells(path), probes, router.id_col).select(
+    enc = read_probed(spark, Cells(path), probes, router.id_col, router.meta).select(
         F.col(router.id_col).alias(out_id),
         F.col("code"),
         *([] if rerank is None else [F.col("qvec")]),
@@ -807,5 +809,5 @@ def pq_ivf_topk_indexed_batch(
     carry = ["__qid__", "__tab__"] + (["__q__"] if rerank is not None else [])
     return batch_topk(
         spark, Cells(path), router.id_col, qprep.join(qtab, "__qid__"), carry,
-        probes, query_id_col, out_id, ranks,
+        probes, query_id_col, out_id, ranks, router.meta,
     )

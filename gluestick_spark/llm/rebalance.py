@@ -75,6 +75,7 @@ from .ivf_cells import (
     load_router,
     plain_cells,
     publish_router,
+    read_cells,
 )
 from .text import bind_row
 
@@ -226,9 +227,12 @@ def _rebalance_core(
     commit,
     drop_dead_dirs: bool = True,
     assign_fn=None,
+    meta: dict | None = None,
 ) -> dict:
-    """Shared rebalance engine over the index's ``cells``; ``recon`` is
-    the vector reconstruction expression over a stored row, and
+    """Shared rebalance engine over the index's ``cells``, read with the
+    cells schema recorded in the committed router ``meta`` (None for the
+    marker-less plain family); ``recon`` is the vector reconstruction
+    expression over a stored row, and
     ``commit(new_state, new_dead)`` commits the router atomically (or,
     for the router-less plain-IVF family, records the caller-visible
     centroid update). ``drop_dead_dirs=False`` defers split-cell
@@ -252,7 +256,7 @@ def _rebalance_core(
     }
     if not oversized:
         return report
-    rows = spark.read.parquet(cells.root)
+    rows = read_cells(spark, cells, meta)
     next_cid = len(state)
     frames, new_states, split_cids = [], [], []
     for cid in oversized:
@@ -303,6 +307,7 @@ def _rebalance_routered(
         router.id_col, [router.id_col, *payload], router.scale,
         max_cell_rows, split_factor,
         lambda state, dead: publish_router(store, path, router, state, dead),
+        meta=router.meta,
     )
 
 

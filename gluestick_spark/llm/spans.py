@@ -564,12 +564,14 @@ def materialize_substring_index(
     matching: ``windows/`` holds every k-token rolling window's portable
     hash with (ref id, position), ``docs/`` the reference token arrays
     (the verify stage needs them), the ``_INDEX_COMMIT`` marker the
-    geometry. The reference corpus is windowed ONCE; every incoming
-    batch then joins against the persisted hashes instead of
-    re-tokenizing the reference
+    geometry and both parts' schemas. The reference corpus is windowed
+    ONCE; every incoming batch then joins against the persisted hashes
+    instead of re-tokenizing the reference
     — the recurring-crawl contract of ``materialize_band_index``, for
     exact substrings. ``mode="append"`` adds a new reference batch to a
-    committed index in O(batch) (geometry must match the stored meta).
+    committed index in O(batch) (geometry must match the stored meta and
+    the batch's frames the recorded schemas, or it raises before
+    writing).
 
     Crash safety (:mod:`gluestick_spark.llm.index_commit`): the marker
     is removed before the multi-step rewrite and published last —
@@ -580,6 +582,7 @@ def materialize_substring_index(
     from gluestick_spark.llm.index_commit import (
         SUBSTRING_INDEX,
         begin_rebuild,
+        build_meta,
         publish,
     )
 
@@ -587,8 +590,7 @@ def materialize_substring_index(
         raise ValueError(f"k must be >= 2, got {k}")
     from gluestick_spark.llm.sketch import kmv_hash_expr
 
-    meta = {"k": k}
-    begin_rebuild(SUBSTRING_INDEX, path, meta if mode == "append" else None)
+    geometry = {"k": k}
     toks = tokens_expr(F.col(text_col))
     docs = df_ref.select(F.col(id_col).alias("__rid__"), toks.alias("__rtoks__")).where(
         F.size("__rtoks__") >= k
@@ -599,12 +601,16 @@ def materialize_substring_index(
             F.array_join(F.slice(F.col("__rtoks__"), i + 1, k), " ")
         ),
     )
-    docs.select(
+    windows = docs.select(
         "__rid__", F.posexplode(win_hash).alias("__rpos__", "__h__")
     ).select(
         "__rid__", F.col("__rpos__").cast("long").alias("__rpos__"), "__h__"
-    ).write.mode(mode).parquet(_os.path.join(path, "windows"))
-    docs.write.mode(mode).parquet(_os.path.join(path, "docs"))
+    )
+    parts = {"windows": windows, "docs": docs}
+    meta = build_meta(SUBSTRING_INDEX, path, mode, geometry, parts)
+    begin_rebuild(SUBSTRING_INDEX, path, geometry if mode == "append" else None)
+    for part, frame in parts.items():
+        frame.write.mode(mode).parquet(_os.path.join(path, part))
     publish(SUBSTRING_INDEX, path, meta)
 
 
@@ -634,10 +640,20 @@ def substring_spans_against(
     re-tokenized."""
     import os as _os
 
-    from gluestick_spark.llm.index_commit import SUBSTRING_INDEX, load_meta
+    from gluestick_spark.llm.index_commit import (
+        SUBSTRING_INDEX,
+        load_meta,
+        read_store,
+        recorded_schema,
+    )
     from gluestick_spark.llm.sketch import kmv_hash_expr
 
-    k = int(load_meta(SUBSTRING_INDEX, index_path)["k"])
+    meta = load_meta(SUBSTRING_INDEX, index_path)
+    k = int(meta["k"])
+    ref_win, ref_docs = (
+        read_store(spark, _os.path.join(index_path, part), recorded_schema(meta, part))
+        for part in ("windows", "docs")
+    )
 
     toks = tokens_expr(F.col(text_col))
     new_docs = df_new.select(F.col(id_col), toks.alias("__toks__")).where(
@@ -653,7 +669,6 @@ def substring_spans_against(
         id_col, F.posexplode(win_hash).alias("pos", "__h__")
     ).select(id_col, F.col("pos").cast("long").alias("pos"), "__h__")
 
-    ref_win = spark.read.parquet(_os.path.join(index_path, "windows"))
     ref_ok = (
         ref_win.groupBy("__h__")
         .agg(F.count(F.lit(1)).alias("__n__"))
@@ -666,7 +681,6 @@ def substring_spans_against(
     )
     # verify: slice both sides' tokens at the candidate offsets and
     # require exact string equality — candidate-bound work
-    ref_docs = spark.read.parquet(_os.path.join(index_path, "docs"))
     new_gram = F.array_join(
         F.slice(F.col("__toks__"), F.col("pos").cast("int") + 1, k), " "
     )

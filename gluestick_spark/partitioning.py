@@ -56,8 +56,11 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
       re-derives the frame (3-iteration label propagation read its
       source 46 times that way). ``persist`` is only right when the
       function itself runs every action on the frame and then unpersists.
-    - A pin is not fault-tolerant: losing an executor that holds pinned
-      blocks restarts the job.
+    - A pin is not fault-tolerant: the lineage is cut, so nothing can
+      recompute a lost block. After an executor that holds pinned blocks
+      is lost, the next job that reads them fails with
+      ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` once its task attempts
+      (4 by default) are spent; it does not restart.
     """
     return df.localCheckpoint(eager=eager)
 

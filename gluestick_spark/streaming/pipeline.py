@@ -508,8 +508,14 @@ def streaming_minhash_dedup(
                     "fresh state_dir, or restore/delete BOTH state "
                     "directories together."
                 )
-            all_bb = spark.read.parquet(buckets_path).distinct().unionByName(bb)
-            docs_all = spark.read.parquet(docs_path).distinct().unionByName(batch)
+            all_bb = (
+                spark.read.schema(bb.schema).parquet(buckets_path)
+                .distinct().unionByName(bb)
+            )
+            docs_all = (
+                spark.read.schema(batch.schema).parquet(docs_path)
+                .distinct().unionByName(batch)
+            )
         else:
             all_bb = bb
             docs_all = batch
@@ -526,11 +532,10 @@ def streaming_minhash_dedup(
             ("a", "b"),
         )
         # ONE shingle frame (docs joined to both id columns) serves both
-        # sides of the verify; the inner join runs 2–3 fewer jobs per
-        # trigger here than a semi-join (sf0.001 two-batch probe, 4 cores)
+        # sides of the verify
         sh = _shingle_sets(
             docs_all, "__text__", "__id__", shingle_n,
-            cand.select("a").union(cand.select("b")), "inner",
+            cand.select("a").union(cand.select("b")),
         )
         drops = _jaccard_verify(cand, "a", "b", sh, sh, threshold).select("b").distinct()
         kept = batch.join(drops, batch["__id__"] == drops["b"], "left_anti")
@@ -672,8 +677,10 @@ def streaming_url_dedup(
     narrow canonicalization, one batch-sized keyed aggregate, and ONE
     anti-join against the state — the state is a canonical-URL SET (one
     string row per distinct page ever kept), never the full history of
-    rows. State appends are deduplicated on read (distinct) so a
-    replayed micro-batch can't double-count.
+    rows. The state is read with the schema of the rows the handler
+    appends (no inference job) and without a distinct: a replayed
+    micro-batch's duplicate state rows leave the anti-join's rows
+    unchanged.
 
     The canonical set is flat parquet at ``state_dir/url_canon.parquet``;
     delete ``state_dir`` to reset. State left in the retired bucketed
@@ -685,11 +692,19 @@ def streaming_url_dedup(
     canon_path = os.path.join(state_dir, "url_canon.parquet")
     _refuse_legacy_state(state_dir, ("url_canon_buckets",))
 
+    def canon(survivors: DataFrame) -> DataFrame:
+        """The state rows the handler appends for ``survivors``."""
+        return survivors.where(F.col("canonical_url").isNotNull()).select(
+            F.col("canonical_url").alias("__canon__")
+        )
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         survivors = url_dedup(batch_df, url_col, id_col)
         if os.path.exists(canon_path):
-            seen = spark.read.parquet(canon_path).distinct()
+            # no distinct: a replay's duplicate state rows cannot change
+            # the rows of a left-anti join
+            seen = spark.read.schema(canon(survivors).schema).parquet(canon_path)
             survivors = survivors.join(
                 seen,
                 survivors["canonical_url"] == seen["__canon__"],
@@ -703,12 +718,14 @@ def streaming_url_dedup(
         survivors.withColumn(
             "__batch_id__", F.lit(batch_id).cast("long")
         ).write.mode("append").parquet(out_dir)
-        canon = survivors.where(F.col("canonical_url").isNotNull()).select(
-            F.col("canonical_url").alias("__canon__")
-        )
-        canon.write.mode("append").parquet(canon_path)
+        canon(survivors).write.mode("append").parquet(canon_path)
 
     return _start(stream_df, handle, checkpoint_dir, available_now)
+
+
+# The rows streaming_fingerprint_dedup appends to its segment state, for
+# compact_fingerprint_state, which has no handler frame to take them from.
+_FP_STATE = "band int, seg long, __h__ long, __batch__ long"
 
 
 def streaming_fingerprint_dedup(
@@ -791,22 +808,16 @@ def streaming_fingerprint_dedup(
         judged = pin(judged)
         segs = fingerprint_segments(judged, id_col, "__fp__", bands)
 
+        rows = segs.select("band", "seg", "__h__").withColumn(
+            "__batch__", F.lit(batch_id).cast("long")
+        )
         matched = None
         if os.path.exists(seg_path):
             # full-row distinct (tag included) collapses an at-least-once
             # replay's re-appended rows — same batch id, byte-identical —
             # while keeping legitimate cross-batch duplicates (harmless:
-            # set-semantics matching + the final distinct). mergeSchema
-            # (ADVICE r14 #3): a pre-r14 untagged state appended to by a
-            # tagged batch has mixed per-file schemas — without the merge
-            # whether __batch__ exists depends on which footer Spark
-            # happens to pick, making the replay-collapse semantics
-            # nondeterministic across reads.
-            state = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(seg_path)
-                .distinct()
-            )
+            # set-semantics matching + the final distinct)
+            state = spark.read.schema(rows.schema).parquet(seg_path).distinct()
             hits = _candidate_join(
                 segs.withColumnRenamed("__h__", "__ha__"),
                 state.select("band", "seg", F.col("__h__").alias("__hb__")),
@@ -851,9 +862,7 @@ def streaming_fingerprint_dedup(
         # the __batch__ tag makes a replay's re-append byte-identical so
         # the read-side distinct collapses it, and
         # compact_fingerprint_state reclaims the physical duplicates
-        segs.select("band", "seg", "__h__").withColumn(
-            "__batch__", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(seg_path)
+        rows.write.mode("append").parquet(seg_path)
 
     return _start(stream_df, handle, checkpoint_dir, available_now)
 
@@ -1064,7 +1073,12 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
     one. A batch replayed AFTER compaction re-appends rows the next
     compaction removes again; matching is unaffected either way (set
     semantics — the kmv-style idempotence argument, no watermark
-    needed). Returns the row count after compaction."""
+    needed). Returns the row count after compaction.
+
+    The state is read with the schema of the rows the stream appends
+    (``_FP_STATE``): a file of untagged state from before the tag reads
+    ``__batch__`` as NULL, which falls out of the max (0 when no row is
+    tagged)."""
     import os as _os
     import shutil as _shutil
 
@@ -1072,15 +1086,8 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
 
     seg_path = _os.path.join(state_dir, "fp_segments.parquet")
     heal_swap(seg_path)
-    # mergeSchema (ADVICE r14 #3): a mixed tagged/untagged state dir must
-    # deterministically surface __batch__ regardless of footer pick order;
-    # untagged files' rows read as null and fall out of the max
-    state = spark.read.option("mergeSchema", "true").parquet(seg_path)
-    if "__batch__" in state.columns:  # pre-r14 states carry no tag
-        max_batch = state.agg(F.max("__batch__")).first()[0] or 0
-        state = state.drop("__batch__")
-    else:
-        max_batch = 0
+    state = spark.read.schema(_FP_STATE).parquet(seg_path)
+    max_batch = state.agg(F.max("__batch__")).first()[0] or 0
     compacted = state.dropDuplicates(["band", "seg", "__h__"]).withColumn(
         "__batch__", F.lit(int(max_batch)).cast("long")
     )
@@ -1088,7 +1095,7 @@ def compact_fingerprint_state(spark, state_dir: str) -> int:
     _shutil.rmtree(tmp, ignore_errors=True)
     compacted.write.mode("overwrite").parquet(tmp)
     swap_dir(tmp, seg_path)
-    return spark.read.parquet(seg_path).count()
+    return spark.read.schema(_FP_STATE).parquet(seg_path).count()
 
 
 def read_streaming_dedup_output(spark, out_dir: str) -> DataFrame:
@@ -1512,26 +1519,38 @@ def materialize_gram_state(
     from ..fsio import LOCAL_FS
     from ..llm.bloom import bloom_words
     from ..llm.decontam import ngram_hashes_expr
-    from ..llm.index_commit import GRAM_STATE, begin_rebuild, publish
+    from ..llm.index_commit import (
+        GRAM_STATE,
+        begin_rebuild,
+        build_meta,
+        publish,
+        read_store,
+        recorded_schema,
+    )
 
     fs = fs or LOCAL_FS
     spark = reference.sparkSession
-    meta = {"n": n, "bloom_m_bits": bloom_m_bits, "bloom_k": bloom_k}
+    geometry = {"n": n, "bloom_m_bits": bloom_m_bits, "bloom_k": bloom_k}
     grams_loc = _os.path.join(state_dir, "ref_grams")
     words_loc = _os.path.join(state_dir, "bloom_words.parquet")
     grams = reference.select(
         F.explode(ngram_hashes_expr(F.col(text_col), n)).alias("__g__")
     ).distinct()
+    parts = {
+        "ref_grams": grams,
+        "bloom_words.parquet": bloom_words(grams, "__g__", bloom_m_bits, bloom_k),
+    }
+    meta = build_meta(GRAM_STATE, state_dir, mode, geometry, parts, fs)
     begin_rebuild(
-        GRAM_STATE, state_dir, meta if mode == "append" else None, fs=fs
+        GRAM_STATE, state_dir, geometry if mode == "append" else None, fs=fs
     )
     if mode == "append":
-        existing = spark.read.parquet(grams_loc)
+        existing = read_store(spark, grams_loc, recorded_schema(meta, "ref_grams"))
         fresh = pin(grams.join(existing, "__g__", "left_anti"), eager=True)
         fresh.write.mode("append").parquet(grams_loc)
         new_words = bloom_words(fresh, "__g__", bloom_m_bits, bloom_k)
         merged = pin(
-            spark.read.parquet(words_loc)
+            read_store(spark, words_loc, recorded_schema(meta, "bloom_words.parquet"))
             .unionByName(new_words)
             .groupBy("__bw__")
             .agg(F.bit_or("__bb__").alias("__bb__")),
@@ -1579,18 +1598,22 @@ def streaming_novelty(
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import novelty_scores_against
-    from ..llm.index_commit import GRAM_STATE, load_meta
+    from ..llm.index_commit import GRAM_STATE, load_meta, read_store, recorded_schema
 
     meta = load_meta(GRAM_STATE, state_dir, fs or LOCAL_FS)
-    grams_loc = _os.path.join(state_dir, "ref_grams")
-    words_loc = _os.path.join(state_dir, "bloom_words.parquet")
+
+    def read(spark, part: str) -> DataFrame:
+        return read_store(
+            spark, _os.path.join(state_dir, part), recorded_schema(meta, part)
+        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         scored = novelty_scores_against(
-            batch_df, spark.read.parquet(grams_loc), text_col, id_col,
+            batch_df, read(spark, "ref_grams"), text_col, id_col,
             n=meta["n"], bloom_m_bits=meta["bloom_m_bits"],
-            bloom_k=meta["bloom_k"], bloom_words_df=spark.read.parquet(words_loc),
+            bloom_k=meta["bloom_k"],
+            bloom_words_df=read(spark, "bloom_words.parquet"),
         )
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         scored.select("*", tag).write.mode("append").parquet(out_dir)
@@ -1617,16 +1640,22 @@ def materialize_corpus_sketch(
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import ngrams_expr
-    from ..llm.index_commit import CORPUS_SKETCH, begin_rebuild, publish
+    from ..llm.index_commit import (
+        CORPUS_SKETCH,
+        SCHEMAS,
+        begin_rebuild,
+        publish,
+        schema_entry,
+    )
     from ..llm.sketch import kmv_sketch
 
     fs = fs or LOCAL_FS
     begin_rebuild(CORPUS_SKETCH, path, fs=fs)
     grams = df.select(F.explode(ngrams_expr(F.col(text_col), n)).alias("__g__"))
-    kmv_sketch(grams, "__g__", k).write.mode("overwrite").parquet(
-        _os.path.join(path, "sketch.parquet")
-    )
-    publish(CORPUS_SKETCH, path, {"n": n, "k": k}, fs=fs)
+    sketch = kmv_sketch(grams, "__g__", k)
+    sketch.write.mode("overwrite").parquet(_os.path.join(path, "sketch.parquet"))
+    meta = {"n": n, "k": k, SCHEMAS: {"sketch.parquet": schema_entry(sketch)}}
+    publish(CORPUS_SKETCH, path, meta, fs=fs)
 
 
 def streaming_corpus_drift(
@@ -1667,7 +1696,12 @@ def streaming_corpus_drift(
 
     from ..fsio import LOCAL_FS
     from ..llm.decontam import kmv_jaccard_from_sketches, ngrams_expr
-    from ..llm.index_commit import CORPUS_SKETCH, load_meta
+    from ..llm.index_commit import (
+        CORPUS_SKETCH,
+        load_meta,
+        read_store,
+        recorded_schema,
+    )
     from ..llm.sketch import kmv_merge, kmv_sketch
 
     meta = load_meta(CORPUS_SKETCH, ref_sketch_path, fs or LOCAL_FS)
@@ -1686,8 +1720,10 @@ def streaming_corpus_drift(
         cum = kmv_merge(read_sketch_log(spark, log_dir), k).select(
             F.col("kmv").alias("__ka__")
         )
-        ref = spark.read.parquet(
-            _os.path.join(ref_sketch_path, "sketch.parquet")
+        ref = read_store(
+            spark,
+            _os.path.join(ref_sketch_path, "sketch.parquet"),
+            recorded_schema(meta, "sketch.parquet"),
         ).select(F.col("kmv").alias("__kb__"))
         est = kmv_jaccard_from_sketches(spark, cum, ref, k)
         tag = F.lit(batch_id).cast("long").alias("__batch_id__")

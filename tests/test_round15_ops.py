@@ -3,7 +3,6 @@
 Phase A — ADVICE r14 closures + VERDICT r14 plan-posture fixes:
 - vacuum_deleted: hidden swap dirs + crash recovery + batched rewrites
 - compact_sketch_log: in-flight max-batch exclusion (append race)
-- fp_segments mixed tagged/untagged schema determinism (mergeSchema)
 """
 
 from __future__ import annotations
@@ -231,44 +230,6 @@ def test_compact_sketch_log_single_batch_is_pure_passthrough(spark, tmp_dir):
     assert raw.where(F.col("__batch__") == 0).count() == 1
     assert raw.where(F.col("__batch__") == -1).count() == 0
     assert _log_watermark(log_dir) is None
-
-
-# ---------------- fp segment state: mixed-schema determinism ----------------
-
-
-def test_fp_segments_mixed_schema_reads_deterministically(spark, tmp_dir):
-    """ADVICE r14 #3: a pre-r14 untagged fp_segments.parquet appended to
-    by a tagged batch has mixed per-file schemas. The mergeSchema read
-    must surface __batch__ for every read (untagged rows null) and
-    compact_fingerprint_state must not crash on the all/partial-null
-    tag."""
-    from gluestick_spark.streaming.pipeline import compact_fingerprint_state
-
-    state_dir = tmp_dir
-    seg_path = os.path.join(state_dir, "fp_segments.parquet")
-    untagged = spark.createDataFrame(
-        [(0, 7, 111), (1, 8, 222)], "band int, seg long, __h__ long"
-    )
-    untagged.write.mode("append").parquet(seg_path)
-    tagged = spark.createDataFrame(
-        [(0, 7, 111, 3), (2, 9, 333, 3)],
-        "band int, seg long, __h__ long, __batch__ long",
-    )
-    tagged.write.mode("append").parquet(seg_path)
-
-    n = compact_fingerprint_state(spark, state_dir)
-    assert n == 3  # (0,7,111) deduped across the tag boundary
-    out = spark.read.parquet(seg_path)
-    assert "__batch__" in out.columns
-    assert out.agg(F.max("__batch__")).first()[0] == 3
-
-    # all-untagged state: max over no tags falls back to 0, not a crash
-    import shutil
-
-    shutil.rmtree(seg_path)
-    untagged.write.mode("append").parquet(seg_path)
-    assert compact_fingerprint_state(spark, state_dir) == 2
-    assert spark.read.parquet(seg_path).agg(F.max("__batch__")).first()[0] == 0
 
 
 # ---------------- batched retrieval serving (VERDICT r14 #2/#3) ----------

@@ -16,6 +16,10 @@ SF_DIR = "/root/testdata/sf0.001"
 # Most jobs per trigger seen before the bucket joins were folded into
 # one, on the data of test_streaming_minhash_dedup_two_batches_equal_batch.
 MINHASH_JOBS_MAX = (17, 21)
+# Most jobs per trigger seen, over 3 runs on the data of
+# test_streaming_url_dedup_two_batches_equal_batch, while the URL state
+# was still read through an inferring read and a distinct.
+URL_JOBS_MAX = (4, 7)
 STREAMING = pathlib.Path(__file__).resolve().parents[1] / "gluestick_spark" / "streaming"
 
 
@@ -38,10 +42,12 @@ def _run_url_stream(spark, d, stage, out, state, ckpt):
     )
 
     d.coalesce(1).write.mode("append").parquet(stage)
-    streaming_url_dedup(
+    q = streaming_url_dedup(
         stream_from_directory(spark, stage, d.schema),
         "url", "doc_id", state, out, ckpt,
-    ).awaitTermination()
+    )
+    q.awaitTermination()
+    return q
 
 
 def _run_minhash_stream(spark, d, stage, out, state, ckpt, threshold):
@@ -117,7 +123,9 @@ def test_streaming_minhash_dedup_two_batches_equal_batch(spark, tmp_dir):
 def test_streaming_url_dedup_two_batches_equal_batch(spark, tmp_dir):
     """Two micro-batches (monotone ids) emit exactly the batch
     ``url_dedup`` rows of their union: a batch-2 variant of a batch-1
-    page is dropped against the state, and NULL-canonical rows pass."""
+    page is dropped against the state, and NULL-canonical rows pass. No
+    trigger runs more Spark jobs, counted by the query's job group, than
+    URL_JOBS_MAX."""
     from gluestick_spark.llm.web import url_dedup
     from gluestick_spark.streaming.pipeline import read_streaming_dedup_output
 
@@ -132,13 +140,17 @@ def test_streaming_url_dedup_two_batches_equal_batch(spark, tmp_dir):
         "doc_id long, url string",
     )
     stage, out, state, ckpt = _dirs(tmp_dir)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
     for cond in (F.col("doc_id") <= 2, F.col("doc_id") > 2):
-        _run_url_stream(spark, full.where(cond), stage, out, state, ckpt)
+        q = _run_url_stream(spark, full.where(cond), stage, out, state, ckpt)
+        jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
     cols = ["doc_id", "url", "canonical_url"]
     streamed = sorted(tuple(r) for r in read_streaming_dedup_output(spark, out).select(cols).collect())
     batch = sorted(tuple(r) for r in url_dedup(full, "url", "doc_id").select(cols).collect())
     assert streamed == batch
     assert [r[0] for r in streamed] == [1, 2, 4, 5]
+    assert all(j <= m for j, m in zip(jobs, URL_JOBS_MAX)), jobs
 
 
 def test_streaming_minhash_torn_docs_state_raises(spark, tmp_dir):
@@ -319,3 +331,85 @@ def test_gram_state_torn_and_mismatch(spark, tmp_dir):
     os.remove(os.path.join(state, "_GRAM_META.json"))
     materialize_gram_state(d.limit(20), state, "text", n=3)
     assert os.path.isfile(os.path.join(state, "_GRAM_META.json"))
+
+
+# ------------------------------------------------ typed state reads -------
+
+
+def test_fp_segments_mixed_schema_reads_deterministically(spark, tmp_dir):
+    """A pre-r14 untagged fp_segments.parquet appended to by a tagged
+    batch has mixed per-file schemas. compact_fingerprint_state reads it
+    with the schema the stream appends, so every read surfaces
+    __batch__ (untagged rows NULL), whichever footer Spark would pick,
+    and the all/partial-NULL tag does not crash it."""
+    from gluestick_spark.streaming.pipeline import compact_fingerprint_state
+
+    state_dir = tmp_dir
+    seg_path = os.path.join(state_dir, "fp_segments.parquet")
+    untagged = spark.createDataFrame(
+        [(0, 7, 111), (1, 8, 222)], "band int, seg long, __h__ long"
+    )
+    untagged.write.mode("append").parquet(seg_path)
+    tagged = spark.createDataFrame(
+        [(0, 7, 111, 3), (2, 9, 333, 3)],
+        "band int, seg long, __h__ long, __batch__ long",
+    )
+    tagged.write.mode("append").parquet(seg_path)
+
+    n = compact_fingerprint_state(spark, state_dir)
+    assert n == 3  # (0,7,111) deduped across the tag boundary
+    out = spark.read.parquet(seg_path)
+    assert "__batch__" in out.columns
+    assert out.agg(F.max("__batch__")).first()[0] == 3
+
+    # all-untagged state: max over no tags falls back to 0, not a crash
+    import shutil
+
+    shutil.rmtree(seg_path)
+    untagged.write.mode("append").parquet(seg_path)
+    assert compact_fingerprint_state(spark, state_dir) == 2
+    assert spark.read.parquet(seg_path).agg(F.max("__batch__")).first()[0] == 0
+
+
+def test_stream_state_reads_like_inference(spark, tmp_dir):
+    """Each dedup stream reads its state with the schema of the frame it
+    appends; that schema is what an inferring read of the state returns
+    (the MinHash buckets and docs, the URL canon set, the fingerprint
+    segments, whose compaction reads with ``_FP_STATE``)."""
+    from gluestick_spark.llm.dedup import minhash_band_buckets
+    from gluestick_spark.llm.multimodal import fake_phash
+    from gluestick_spark.llm.web import url_dedup
+    from gluestick_spark.streaming.pipeline import (
+        _FP_STATE,
+        stream_from_directory,
+        streaming_fingerprint_dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps!")],
+        "doc_id long, text string",
+    )
+    _, out, state, ckpt = _dirs(tmp_dir)
+    _run_minhash_stream(spark, docs, os.path.join(tmp_dir, "m"), out, state, ckpt, 0.7)
+    batch = docs.select(F.col("doc_id").alias("__id__"), F.col("text").alias("__text__"))
+    urls = _urls_df(spark, 0, 6)
+    _run_url_stream(spark, urls, os.path.join(tmp_dir, "u"), out + "u", state, ckpt + "u")
+    canon = url_dedup(urls, "url", "doc_id").select(F.col("canonical_url").alias("__canon__"))
+    payload = spark.createDataFrame(
+        [(i, bytes([i % 3] * 8)) for i in range(6)], "doc_id long, payload binary"
+    )
+    payload.coalesce(1).write.parquet(os.path.join(tmp_dir, "f"))
+    streaming_fingerprint_dedup(
+        stream_from_directory(spark, os.path.join(tmp_dir, "f"), payload.schema),
+        "payload", "doc_id", state, out + "f", ckpt + "f", hasher=fake_phash,
+    ).awaitTermination()
+    appended = {
+        "minhash_buckets.parquet": minhash_band_buckets(batch, "__text__", "__id__").schema,
+        "minhash_docs.parquet": batch.schema,
+        "url_canon.parquet": canon.schema,
+        "fp_segments.parquet": _FP_STATE,
+    }
+    for name, schema in appended.items():
+        loc = os.path.join(state, name)
+        typed = spark.read.schema(schema).parquet(loc).schema
+        assert typed == spark.read.parquet(loc).schema, name
