@@ -8061,8 +8061,8 @@ def q_streaming_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ckpt,
         )
         q.awaitTermination()
-    # read through the replay-window-closing helper (ADVICE r8: rows are
-    # __batch_id__-tagged; distinct-on-read collapses replayed appends)
+    # the output sits in one __batch_id__ partition per batch; the reader
+    # drops that column
     return read_streaming_dedup_output(spark, out).select(
         "doc_id", "canonical_url"
     )

@@ -220,7 +220,9 @@ def vacuum_deleted(
     t = _tombstones(spark, path, id_col, meta)
     if t is None:
         return report
-    t = pin(t)  # reused per rewrite group; kilobytes
+    # distinct ids: the purge count below inner-joins them; pinned for
+    # reuse per rewrite group (kilobytes)
+    t = pin(t.distinct())
     affected = sorted(
         r[part_col]
         for r in read_cells(spark, layout, meta)

@@ -205,6 +205,8 @@ def read_cells(spark, cells: Cells, meta: dict | None) -> DataFrame:
 def _tombstones(
     spark, path: str, id_col: str, meta: dict | None
 ) -> DataFrame | None:
+    """The tombstoned ids as written, repeats included: a left-anti join
+    needs no distinct, so callers that count take one."""
     root = os.path.join(path, TOMBSTONES)
     if not os.path.isdir(root) or not any(
         f.endswith(".parquet") for f in os.listdir(root)
@@ -213,7 +215,7 @@ def _tombstones(
     schema = recorded_schema(meta, "cells")
     if schema is not None:
         schema = StructType([schema[id_col]])
-    return read_store(spark, root, schema).select(id_col).distinct()
+    return read_store(spark, root, schema).select(id_col)
 
 
 def tombstones(spark, path: str, id_col: str) -> DataFrame | None:
@@ -225,7 +227,8 @@ def tombstones(spark, path: str, id_col: str) -> DataFrame | None:
     meta = None
     if os.path.isfile(os.path.join(path, ROUTER)):
         meta = load_meta(SQ_IVF, path)
-    return _tombstones(spark, path, id_col, meta)
+    t = _tombstones(spark, path, id_col, meta)
+    return None if t is None else t.distinct()
 
 
 def read_probed(

@@ -14,10 +14,35 @@ path: the same operators applied incrementally.
 
 All run with ``trigger(availableNow=True)`` in tests (bounded execution);
 on a cluster the same code runs continuously with checkpointing.
+
+**The replay rule of the appending ``foreachBatch`` streams.** Spark
+re-runs a micro-batch whose commit it never recorded — a crash after the
+handler wrote, before the checkpoint commit — with the same
+``batch_id``, and only the last such batch. So each handler writes every
+frame as the partition ``<tag>=<batch_id>`` of its directory by dynamic
+overwrite (``_write_batch``): a replay replaces its own files instead of
+adding a second copy. And it reads the state it depends on with the
+schema of the rows it writes and a partition filter
+(``_read_batches``): dedup state strictly below ``batch_id``, sketch
+logs through it, so a replayed batch never sees its own earlier rows.
+Output and state then come out row-identical to an uninterrupted run,
+with no distinct on any read. The tags are ``__batch_id__`` on output,
+``__batch__`` on state, ``batch_id`` on bin counts and CDC changes.
+Compaction folds the partitions below the newest into ``<tag>=-1`` and
+keeps the newest raw (``_fold_batches``); a handler folds a state
+directory itself once it holds more partitions than Spark lists without
+a job (``_fold_wide``). The output and state directories of a stream
+belong to its checkpoint: one holding a batch the checkpoint never
+planned is refused at start (``_refuse_foreign``), and so is one written
+flat by the earlier append layout (``_refuse_flat``). The
+snapshot handlers (``streaming_agg_upsert``, ``streaming_topk``,
+``streaming_snapshot_upsert``, ``streaming_scd2``) publish by an atomic
+snapshot swap instead.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..fsio import LOCAL_FS, heal_swap, swap_dir
 from ..partitioning import pin
 
 __all__ = [
@@ -59,16 +85,153 @@ def _start(
     handle: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     available_now: bool,
+    writes: tuple[tuple[str, str], ...] = (),
 ) -> StreamingQuery:
     """Start ``handle`` as the ``foreachBatch`` sink of ``stream_df``,
     checkpointed at ``checkpoint_dir``; ``available_now`` drains the
-    source once and stops (bounded runs), otherwise it runs continuously."""
+    source once and stops (bounded runs), otherwise it runs continuously.
+    ``writes`` are the (directory, tag) pairs ``handle`` writes by
+    :func:`_write_batch`; each is checked before the checkpoint exists
+    (:func:`_refuse_flat`, :func:`_refuse_foreign`)."""
+    for path, tag in writes:
+        _refuse_flat(path, tag)
+        _refuse_foreign(path, tag, checkpoint_dir)
     writer = stream_df.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+_FOLDED = -1  # the partition compaction folds older batches into
+_DISCOVERY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _write_batch(df: DataFrame, path: str, tag: str, batch_id: int) -> None:
+    """Write ``df`` as the partition ``tag=batch_id`` of ``path`` by
+    dynamic overwrite: a replayed batch replaces its own files."""
+    (
+        df.withColumn(tag, F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(tag)
+        .parquet(path)
+    )
+
+
+def _batch_ids(path: str, tag: str) -> list[int]:
+    """The ids of the ``tag=<id>`` partitions under ``path``, ascending."""
+    if not os.path.isdir(path):
+        return []
+    head = tag + "="
+    return sorted(int(n[len(head):]) for n in os.listdir(path) if n.startswith(head))
+
+
+def _fold_wide(spark, path: str, tag: str, fold) -> None:
+    """Fold ``path`` by :func:`_fold_batches` once it holds more batch
+    partitions than Spark lists without a job of its own
+    (``parallelPartitionDiscovery.threshold``), so a running stream's
+    reads stay at a bounded partition count without a stop to compact.
+    A fold whose swap crashed is healed first."""
+    heal_swap(path)
+    if len(_batch_ids(path, tag)) > int(spark.conf.get(_DISCOVERY, "32")):
+        _fold_batches(spark, path, tag, fold)
+
+
+def _read_batches(
+    spark, path: str, schema: T.StructType, tag: str, below: int,
+    fold=DataFrame.distinct,
+) -> DataFrame | None:
+    """The rows of the partitions ``tag`` < ``below`` of ``path``, read
+    with ``schema`` (the rows as written, without the tag) and a
+    partition filter; None when there are none. A wide ``path`` is
+    folded with ``fold`` first (:func:`_fold_wide`)."""
+    _fold_wide(spark, path, tag, fold)
+    if not any(b < below for b in _batch_ids(path, tag)):
+        return None
+    typed = T.StructType(schema.fields + [T.StructField(tag, T.LongType())])
+    return spark.read.schema(typed).parquet(path).where(F.col(tag) < below).drop(tag)
+
+
+def _refuse_flat(p: str, tag: str) -> None:
+    """Raise when ``p`` holds part files at its root: output or state
+    written by the earlier append layout. Batch partitions written beside
+    them would hide them, since Spark reads a directory holding both
+    through its partitions only and drops the root files."""
+    if os.path.isdir(p) and any(
+        f.endswith(".parquet") and os.path.isfile(os.path.join(p, f))
+        for f in os.listdir(p)
+    ):
+        raise ValueError(
+            f"flat stream directory {p}: its part files sit at the root, "
+            f"but streams now write one {tag}=<batch id> partition per "
+            "batch, and a directory holding both silently drops the "
+            "root rows on read. Point the stream at a fresh directory, "
+            f"or move the root files into {os.path.join(p, f'{tag}={_FOLDED}')} "
+            "once they hold no replayed duplicates."
+        )
+
+
+def _refuse_foreign(p: str, tag: str, checkpoint_dir: str) -> None:
+    """Raise when ``p`` holds a batch partition that ``checkpoint_dir``
+    never planned (no offset log entry at or above its id; any partition
+    at all under a fresh checkpoint): the directory was written under
+    another checkpoint. Run over it, batch 0 on would overwrite the old
+    run's partitions and read none of the state below them."""
+    ids = _batch_ids(p, tag)
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    planned = max(
+        (int(n) for n in os.listdir(offsets) if n.isdigit()), default=-1
+    ) if os.path.isdir(offsets) else -1
+    if ids and (planned < 0 or ids[-1] > planned):
+        raise ValueError(
+            f"stream directory {p} holds batch partitions up to "
+            f"{tag}={ids[-1]}, but the checkpoint {checkpoint_dir} has "
+            + ("planned no batch" if planned < 0 else f"planned batches only through {planned}")
+            + ": the directory was written under another checkpoint. Its "
+            "output and state directories belong to one checkpoint; resume "
+            "with that checkpoint, or point the stream at fresh directories."
+        )
+
+
+def _fold_batches(spark, path: str, tag: str, fold, rows_per_file: int = 0) -> bool:
+    """The one compaction rule: fold every batch partition of ``path``
+    below the newest into the partition ``tag=-1`` with ``fold`` (rows →
+    folded rows) and keep the newest raw. Spark replays only the last
+    uncommitted batch, which is at most the newest partition, so the fold
+    never absorbs a batch that may still be replayed. The new tree is
+    published by :func:`~gluestick_spark.fsio.swap_dir` (a crashed swap
+    is healed first). Returns whether anything was folded."""
+    import shutil
+
+    heal_swap(path)
+    _refuse_flat(path, tag)
+    ids = _batch_ids(path, tag)
+    if ids[:-1] in ([], [_FOLDED]):
+        return False
+    newest = ids[-1]
+    rows = spark.read.parquet(path).where(F.col(tag) < newest).drop(tag)
+    tmp = path.rstrip("/") + ".__compacting__"
+    shutil.rmtree(tmp, ignore_errors=True)
+    fold(rows).write.option("maxRecordsPerFile", rows_per_file).parquet(
+        os.path.join(tmp, f"{tag}={_FOLDED}")
+    )
+    shutil.copytree(
+        os.path.join(path, f"{tag}={newest}"), os.path.join(tmp, f"{tag}={newest}")
+    )
+    swap_dir(tmp, path)
+    return True
+
+
+def _sum_bins(rows: DataFrame) -> DataFrame:
+    """The fold of bin-count state: one summed row per bin."""
+    return rows.groupBy("bin").agg(F.sum("n").alias("n"))
+
+
+def _sketch_fold(merge, k: int, gcols: list[str]):
+    """The fold of a sketch log: one ``merge``d sketch row per group."""
+    return lambda rows: merge(rows, k, gcols).coalesce(1)
 
 
 def streaming_dedup(
@@ -464,19 +627,12 @@ def streaming_minhash_dedup(
       near-duplicating an already-dropped doc must still be dropped for
       batch parity.
 
-    State appends are made idempotent on read (distinct) so a replayed
-    micro-batch (foreachBatch's at-least-once) can't skew candidates; the
-    ``out_dir`` append itself is at-least-once — resume from the checkpoint
-    only, or key the sink by batch_id, as with any foreachBatch sink.
-
-    Both state tables are flat parquet under ``state_dir``
-    (``minhash_buckets.parquet``, ``minhash_docs.parquet``); delete
-    ``state_dir`` to reset. Band state without doc state (a crash between
-    the two state appends, or a partial wipe) raises a "torn state
-    layout" ``ValueError``, and so does state left in the retired
-    bucketed layout (see :func:`_refuse_legacy_state`)."""
-    import os
-
+    Both state tables are batch-partitioned parquet under ``state_dir``
+    (``minhash_buckets.parquet``, ``minhash_docs.parquet``), written and
+    read by the module's replay rule; delete ``state_dir`` to reset. Band
+    state without doc state below the batch (a partial wipe) raises a
+    "torn state layout" ``ValueError``, and so does state left in the
+    retired bucketed layout (see :func:`_refuse_legacy_state`)."""
     from ..llm.dedup import (
         DEFAULT_MAX_BUCKET,
         _candidate_join,
@@ -497,28 +653,23 @@ def streaming_minhash_dedup(
         batch = batch_df.select(
             F.col(id_col).alias("__id__"), F.col(text_col).alias("__text__")
         )
-        bb = minhash_band_buckets(batch, "__text__", "__id__", num_perm, bands, shingle_n)
-        if os.path.exists(buckets_path):
-            if not os.path.exists(docs_path):
-                raise ValueError(
-                    "torn state layout: minhash bucket state exists at "
-                    f"{buckets_path} but doc state is missing at {docs_path} "
-                    "— a crash between the two state appends or a partial "
-                    "wipe left the stream unresumable. Point the stream at a "
-                    "fresh state_dir, or restore/delete BOTH state "
-                    "directories together."
-                )
-            all_bb = (
-                spark.read.schema(bb.schema).parquet(buckets_path)
-                .distinct().unionByName(bb)
+        # the candidate join and the state write both read the batch's
+        # band frame: pin it once (batch-sized)
+        bb = pin(
+            minhash_band_buckets(batch, "__text__", "__id__", num_perm, bands, shingle_n)
+        )
+        old_bb = _read_batches(spark, buckets_path, bb.schema, "__batch__", batch_id)
+        old_docs = _read_batches(spark, docs_path, batch.schema, "__batch__", batch_id)
+        if old_bb is not None and old_docs is None:
+            raise ValueError(
+                "torn state layout: minhash bucket state exists at "
+                f"{buckets_path} but doc state is missing at {docs_path} "
+                "— a partial wipe left the stream unresumable. Point the "
+                "stream at a fresh state_dir, or restore/delete BOTH state "
+                "directories together."
             )
-            docs_all = (
-                spark.read.schema(batch.schema).parquet(docs_path)
-                .distinct().unionByName(batch)
-            )
-        else:
-            all_bb = bb
-            docs_all = batch
+        all_bb = bb if old_bb is None else old_bb.unionByName(bb)
+        docs_all = batch if old_docs is None else old_docs.unionByName(batch)
         all_bb = _cap_buckets(
             all_bb.repartition("band", "bucket"), ["band", "bucket"], max_bucket
         )
@@ -539,18 +690,20 @@ def streaming_minhash_dedup(
         )
         drops = _jaccard_verify(cand, "a", "b", sh, sh, threshold).select("b").distinct()
         kept = batch.join(drops, batch["__id__"] == drops["b"], "left_anti")
-        kept.select(
+        kept = kept.select(
             F.col("__id__").alias(id_col), F.col("__text__").alias(text_col)
-        ).write.mode("append").parquet(out_dir)
-        bb.write.mode("append").parquet(buckets_path)
-        batch.write.mode("append").parquet(docs_path)
+        )
+        _write_batch(kept, out_dir, "__batch_id__", batch_id)
+        _write_batch(bb, buckets_path, "__batch__", batch_id)
+        _write_batch(batch, docs_path, "__batch__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = (
+        (out_dir, "__batch_id__"), (buckets_path, "__batch__"), (docs_path, "__batch__")
+    )
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def _has_data_files(loc: str) -> bool:
-    import os
-
     if not os.path.isdir(loc):
         return False
     for _root, _dirs, files in os.walk(loc):
@@ -559,14 +712,15 @@ def _has_data_files(loc: str) -> bool:
     return False
 
 
-# The append-state dirs this module writes (flat per-batch parquet), for
-# compaction.
-_STATE_FLAT_DIRS = (
-    "minhash_buckets.parquet",
-    "minhash_docs.parquet",
-    "url_canon.parquet",
-    "bin_counts.parquet",
-)
+# The batch-partitioned state dirs this module writes under a state_dir,
+# each with its partition column and its fold, for compaction.
+_STATE_FOLDS = {
+    "minhash_buckets.parquet": ("__batch__", DataFrame.distinct),
+    "minhash_docs.parquet": ("__batch__", DataFrame.distinct),
+    "url_canon.parquet": ("__batch__", DataFrame.distinct),
+    "fp_segments.parquet": ("__batch__", DataFrame.distinct),
+    "bin_counts.parquet": ("batch_id", _sum_bins),
+}
 
 # State dirs of the retired catalog-bucketed layout, each mapped to the
 # flat dir that holds the same rows.
@@ -580,8 +734,6 @@ _LEGACY_STATE_DIRS = {
 def _refuse_legacy_state(state_dir: str, legacy: tuple[str, ...]) -> None:
     """Raise when ``state_dir`` holds state in the retired bucketed
     layout: starting over it would silently restart dedup from empty."""
-    import os
-
     for name in legacy:
         loc = os.path.join(state_dir, name)
         if _has_data_files(loc):
@@ -600,39 +752,37 @@ def compact_stream_state(
     state_dir: str,
     target_rows_per_file: int = 1_000_000,
 ) -> dict[str, int]:
-    """Compact the append-state tables under ``state_dir`` (VERDICT r10
-    #4): every ``foreachBatch`` state append lands one-plus small
-    parquet files FOREVER — at 100× batch counts the listing dominates
-    per-batch state reads (a small-files operational failure, not a
-    correctness one). This composes :func:`~gluestick_spark.sinks.
-    layout.compact_files` over the flat per-batch state dirs (minhash
-    band index + docs, URL canon set, drift bin counts). Returns
-    {state name: new file count} for everything it compacted.
+    """Compact the batch-partitioned state under ``state_dir`` (MinHash
+    band index and docs, URL canon set, fingerprint segments, drift bin
+    counts) by the module's one rule (:func:`_fold_batches`): every batch
+    partition below the newest folds into ``__batch__=-1`` (``batch_id``
+    for bin counts) as a set distinct, or a per-bin sum for bin counts,
+    in files of at most ``target_rows_per_file`` rows; the newest batch
+    stays raw. Returns {state name: parquet file count after} for each
+    state it folded.
 
-    Contract — STOP the stream first (stop → compact → restart): the
-    rewrite is row-preserving, so replay guards that dedup on read
-    (``distinct()``, (bin, batch_id) keys) behave identically after
-    compaction, but a stream appending CONCURRENTLY could write files
-    into the directory between the temp rewrite and the atomic
-    exchange, and those appends would be lost. True concurrent
-    compaction needs a table format's commit log — out of scope here by
-    design (same posture as ``compact_files``). Crash safety per
-    directory is ``compact_files``' exchange/self-heal protocol; a crash
-    between two directories' compactions leaves each one consistent.
-    State in the retired bucketed layout raises (see
-    :func:`_refuse_legacy_state`)."""
-    import os
+    When to compact: each uncompacted batch adds a partition directory
+    to every state read, and past 32 of them Spark lists the partitions
+    with a job of its own (``parallelPartitionDiscovery.threshold``) —
+    one more job per read per trigger. The streams fold each state past
+    that count themselves (:func:`_fold_wide`), so calling this is only
+    needed to fold earlier or into other file sizes.
 
-    from ..sinks.layout import compact_files
-
+    Contract — STOP the stream first (stop → compact → restart): a batch
+    written while the fold runs would be lost in the swap. A compaction
+    between a crash and its replay is safe: the crashed batch is at most
+    the newest partition, which stays raw and is overwritten by the
+    replay. State in the retired bucketed layout, or written flat by the
+    earlier append layout, raises (see :func:`_refuse_legacy_state`,
+    :func:`_refuse_flat`)."""
     _refuse_legacy_state(state_dir, tuple(_LEGACY_STATE_DIRS))
     results: dict[str, int] = {}
-    for name in _STATE_FLAT_DIRS:
+    for name, (tag, fold) in _STATE_FOLDS.items():
         p = os.path.join(state_dir, name)
-        if os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
-            results[name] = compact_files(spark, p, target_rows_per_file)
+        if _fold_batches(spark, p, tag, fold, target_rows_per_file):
+            results[name] = sum(
+                f.endswith(".parquet") for _r, _d, fs in os.walk(p) for f in fs
+            )
     return results
 
 
@@ -662,38 +812,23 @@ def streaming_url_dedup(
     lower id then yields a superset — same caveat as
     :func:`streaming_minhash_dedup`.)
 
-    **At-least-once replay window** (ADVICE r8): a crash between the
-    ``out_dir`` append and the state append replays the micro-batch
-    against unchanged state, appending the SAME survivor rows a second
-    time. Every emitted row therefore carries ``__batch_id__``; the
-    replayed duplicates are row-identical (same batch id, same rows),
-    so :func:`read_streaming_dedup_output` collapses them with one
-    distinct on read — the same device ``bin_counts_from_state`` uses.
-    The write order (output before state) is deliberate: the opposite
-    order would LOSE rows on the same crash (state says seen, output
-    never written), and at-least-once + dedup-on-read beats at-most-once.
-
     Scale shape (continuous crawl-frontier dedup): per-batch cost is one
     narrow canonicalization, one batch-sized keyed aggregate, and ONE
     anti-join against the state — the state is a canonical-URL SET (one
     string row per distinct page ever kept), never the full history of
-    rows. The state is read with the schema of the rows the handler
-    appends (no inference job) and without a distinct: a replayed
-    micro-batch's duplicate state rows leave the anti-join's rows
-    unchanged.
+    rows.
 
-    The canonical set is flat parquet at ``state_dir/url_canon.parquet``;
-    delete ``state_dir`` to reset. State left in the retired bucketed
-    layout raises (see :func:`_refuse_legacy_state`)."""
-    import os
-
+    The canonical set is batch-partitioned parquet at
+    ``state_dir/url_canon.parquet``, written and read by the module's
+    replay rule; delete ``state_dir`` to reset. State left in the retired
+    bucketed layout raises (see :func:`_refuse_legacy_state`)."""
     from ..llm.web import url_dedup
 
     canon_path = os.path.join(state_dir, "url_canon.parquet")
     _refuse_legacy_state(state_dir, ("url_canon_buckets",))
 
     def canon(survivors: DataFrame) -> DataFrame:
-        """The state rows the handler appends for ``survivors``."""
+        """The state rows the handler writes for ``survivors``."""
         return survivors.where(F.col("canonical_url").isNotNull()).select(
             F.col("canonical_url").alias("__canon__")
         )
@@ -701,31 +836,22 @@ def streaming_url_dedup(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         survivors = url_dedup(batch_df, url_col, id_col)
-        if os.path.exists(canon_path):
-            # no distinct: a replay's duplicate state rows cannot change
-            # the rows of a left-anti join
-            seen = spark.read.schema(canon(survivors).schema).parquet(canon_path)
+        seen = _read_batches(
+            spark, canon_path, canon(survivors).schema, "__batch__", batch_id
+        )
+        if seen is not None:
             survivors = survivors.join(
                 seen,
                 survivors["canonical_url"] == seen["__canon__"],
                 "left_anti",
             )
-        # pin BEFORE the writes: the state append below targets the same
-        # path the anti-join reads, and the second action would
-        # otherwise re-evaluate the join against the just-updated state.
-        # Lazy is enough: the out_dir write strictly precedes the append
+        # the output and state writes share one anti-join
         survivors = pin(survivors)
-        survivors.withColumn(
-            "__batch_id__", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(out_dir)
-        canon(survivors).write.mode("append").parquet(canon_path)
+        _write_batch(survivors, out_dir, "__batch_id__", batch_id)
+        _write_batch(canon(survivors), canon_path, "__batch__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
-
-
-# The rows streaming_fingerprint_dedup appends to its segment state, for
-# compact_fingerprint_state, which has no handler frame to take them from.
-_FP_STATE = "band int, seg long, __h__ long, __batch__ long"
+    writes = ((out_dir, "__batch_id__"), (canon_path, "__batch__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def streaming_fingerprint_dedup(
@@ -770,21 +896,14 @@ def streaming_fingerprint_dedup(
     rows — the result is then a superset (the documented
     streaming_minhash_dedup caveat).
 
-    Same at-least-once replay window as :func:`streaming_url_dedup`
-    (``__batch_id__``-tagged output, ``read_streaming_dedup_output``
-    collapses replays; output written before state so a crash never
-    loses rows). State rows are ``__batch__``-tagged and the state is
-    read through ``distinct()``, so a replayed batch's re-appended
-    segments collapse instead of double-counting toward join fan-out;
-    :func:`compact_fingerprint_state` reclaims the physical duplicates
-    (set-semantics matching makes compaction exactly invariant). Scale
-    shape: per-batch cost is one codec pass + a batch-sized banded
-    self-join + ONE (band, seg)-keyed join against state segments —
-    state is O(distinct segments seen × bands) after compaction, the
-    join is segment-bucketed, and the batch side is small by
-    definition."""
-    import os
-
+    The segment state (``state_dir/fp_segments.parquet``) and the output
+    follow the module's replay rule; :func:`compact_stream_state` folds
+    the segments to a set (set-semantics matching makes that exactly
+    invariant). Scale shape: per-batch cost is one codec pass + a
+    batch-sized banded self-join + ONE (band, seg)-keyed join against
+    state segments — state is O(distinct segments seen × bands) after
+    compaction, the join is segment-bucketed, and the batch side is
+    small by definition."""
     from ..llm.dedup import _candidate_join, _hamming_verify, connected_components
     from ..llm.multimodal import (
         banded_hamming_pairs,
@@ -808,16 +927,10 @@ def streaming_fingerprint_dedup(
         judged = pin(judged)
         segs = fingerprint_segments(judged, id_col, "__fp__", bands)
 
-        rows = segs.select("band", "seg", "__h__").withColumn(
-            "__batch__", F.lit(batch_id).cast("long")
-        )
+        rows = segs.select("band", "seg", "__h__")
         matched = None
-        if os.path.exists(seg_path):
-            # full-row distinct (tag included) collapses an at-least-once
-            # replay's re-appended rows — same batch id, byte-identical —
-            # while keeping legitimate cross-batch duplicates (harmless:
-            # set-semantics matching + the final distinct)
-            state = spark.read.schema(rows.schema).parquet(seg_path).distinct()
+        state = _read_batches(spark, seg_path, rows.schema, "__batch__", batch_id)
+        if state is not None:
             hits = _candidate_join(
                 segs.withColumnRenamed("__h__", "__ha__"),
                 state.select("band", "seg", F.col("__h__").alias("__hb__")),
@@ -849,22 +962,15 @@ def streaming_fingerprint_dedup(
             )
         else:
             drops = comp.where(F.col("id") != F.col("component")).select("id")
-        # no pin needed: survivors is consumed exactly once (the output
-        # write below), and the state append it reads from (seg_path)
-        # happens strictly AFTER that write completes
         survivors = batch_df.join(
             drops.withColumnRenamed("id", id_col), id_col, "left_anti"
         )
-        survivors.withColumn(
-            "__batch_id__", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(out_dir)
-        # ALL judged segments persist — kept and dropped (see docstring);
-        # the __batch__ tag makes a replay's re-append byte-identical so
-        # the read-side distinct collapses it, and
-        # compact_fingerprint_state reclaims the physical duplicates
-        rows.write.mode("append").parquet(seg_path)
+        _write_batch(survivors, out_dir, "__batch_id__", batch_id)
+        # ALL judged segments persist — kept and dropped (see docstring)
+        _write_batch(rows, seg_path, "__batch__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"), (seg_path, "__batch__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def streaming_quantiles(
@@ -893,81 +999,36 @@ def streaming_quantiles(
     carries the same pytest-pinned rank-error band as a one-shot
     ``kll_sketch`` over everything streamed (merge conserves weight
     exactly; the error constant degrades gracefully with chain length —
-    the L124 contract). Replay safety: KLL merge is NOT idempotent
-    (weights add), so the log rides ``__batch__``-tagged rows and the
-    merge reads the log through ``distinct()`` — a replayed batch's
-    duplicate row is byte-identical (same tag, same deterministic
-    sketch) and collapses, never double-counts.
+    the L124 contract). KLL merge is not idempotent (weights add); the
+    module's replay rule is what keeps a replayed batch from counting
+    twice: its log partition is overwritten, not appended to.
 
     Per-batch cost: one Arrow-batched partial-sketch pass over the
     batch (the documented KLL crossing) + a merge over the kilobyte
-    log. State is O(k·log n · groups · batches) doubles — compact the
-    log by rewriting it with one merged row per group when batches
-    accumulate."""
-    import os as _os
-
+    log. The log folds itself past the partition count Spark lists
+    without a job (:func:`_fold_wide`, the :func:`compact_sketch_log`
+    merge), so it stays O(k·log n · groups) doubles times a bounded
+    number of partitions."""
     from ..llm.sketch import kll_merge, kll_quantiles, kll_sketch
 
     gcols = list(group_cols or [])
-    log_dir = _os.path.join(state_dir, "kll_log.parquet")
+    log_dir = os.path.join(state_dir, "kll_log.parquet")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_sk = kll_sketch(batch_df, value_col, k, gcols).withColumn(
-            "__batch__", F.lit(batch_id).cast("long")
+        batch_sk = kll_sketch(batch_df, value_col, k, gcols)
+        _write_batch(batch_sk, log_dir, "__batch__", batch_id)
+        log = _read_batches(
+            spark, log_dir, batch_sk.schema, "__batch__", batch_id + 1,
+            _sketch_fold(kll_merge, k, gcols),
         )
-        batch_sk.write.mode("append").parquet(log_dir)
-        # distinct = the pre-compaction replay collapse (see docstring);
-        # __batch__ stays in the key so identical sketches from DIFFERENT
-        # batches survive; read_sketch_log's watermark filter closes the
-        # post-compaction replay window (ADVICE r13 #2)
-        log = read_sketch_log(spark, log_dir).distinct().drop("__batch__")
+        if log is None:  # nothing sketched yet: an empty first batch
+            return
         est = kll_quantiles(kll_merge(log, k, gcols), list(probs), gcols)
-        est.withColumn(
-            "__batch_id__", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(out_dir)
+        _write_batch(est, out_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
-
-
-_WATERMARK_FILE = "_COMPACTED_THROUGH"
-_COMPACTED_TAG = -1  # __batch__ sentinel for merged rows (real ids are >= 0)
-
-
-def _log_watermark(log_dir: str) -> int | None:
-    """Compacted-through watermark of a sketch log, or None if the log
-    was never compacted. Stored INSIDE the log dir (underscore-prefixed,
-    so Spark's parquet reader ignores it) — the atomic dir swap therefore
-    publishes the compacted rows and their watermark TOGETHER; a separate
-    sidecar would reopen the replay window in the crash gap between the
-    two writes."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(log_dir, _WATERMARK_FILE)
-    if not _os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return int(_json.load(f)["through"])
-
-
-def read_sketch_log(spark, log_dir: str) -> DataFrame:
-    """Read a sketch log with the post-compaction replay window closed
-    (ADVICE r13 #2): rows re-appended by a micro-batch replayed AFTER a
-    compaction already folded them in (``__batch__ <= watermark``) are
-    dropped; compacted merged rows (tag ``-1``) and genuinely new
-    batches pass. Pre-compaction replays still collapse under the
-    caller's ``distinct()`` (byte-identical rows, same tag) — this
-    filter closes the one window distinct cannot: a replayed partial
-    sketch is NOT byte-identical to the merged row that absorbed it, so
-    a weight-additive merge (KLL) would double-count it."""
-    df = spark.read.parquet(log_dir)
-    w = _log_watermark(log_dir)
-    if w is not None:
-        df = df.where(
-            (F.col("__batch__") < 0) | (F.col("__batch__") > F.lit(int(w)))
-        )
-    return df
+    writes = ((out_dir, "__batch_id__"), (log_dir, "__batch__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def compact_sketch_log(
@@ -976,138 +1037,32 @@ def compact_sketch_log(
     kind: str,
     k: int,
     group_cols: list[str] | None = None,
-    assume_quiesced: bool = False,
 ) -> int:
     """Compact a sketch log (:func:`streaming_corpus_drift`'s
     ``sketch_log.parquet`` / :func:`streaming_quantiles`'
-    ``kll_log.parquet``) to ONE merged row per group — the maintenance
-    step both docstrings prescribe when batches accumulate. The merged
-    row is tagged ``__batch__ = -1`` (the compacted sentinel) and the
-    log's max REAL batch id is persisted as the ``_COMPACTED_THROUGH``
-    watermark inside the new dir, so a micro-batch replayed AFTER the
-    compaction (crash between its log append and the checkpoint commit)
-    is dropped by :func:`read_sketch_log` instead of double-counting —
-    the ADVICE r13 #2 window. The swap is atomic: write to a temp dir
-    (watermark included), then :func:`~gluestick_spark.fsio.swap_dir`,
-    so a concurrent trigger reads the old log or the new — never a
-    half-compacted one; a crashed rename fallback is healed before the
-    log is read. Returns the row count after compaction.
-
-    ``kind``: ``'kmv'`` (merge idempotent — compaction is always safe)
-    or ``'kll'`` (weights add — safe via the reader's distinct collapse
-    for pre-compaction replays plus the watermark for post-compaction
-    ones).
-
-    Concurrent-append safety (ADVICE r14 #2): micro-batches commit
-    serially within a stream, so at most the MAXIMUM real batch id in
-    the listing can be a mid-commit partial. By default that batch is
-    EXCLUDED from the fold — its rows pass through raw (replays of it
-    still collapse under the reader's distinct, exactly as before any
-    compaction) and the watermark only covers provably complete
-    batches, so a partial listing can never silently drop the batch's
-    remaining rows. ``assume_quiesced=True`` restores the full fold for
-    single-writer maintenance windows where no trigger is in flight."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from ..fsio import heal_swap, swap_dir
+    ``kll_log.parquet``) by the module's one rule
+    (:func:`_fold_batches`): every batch partition below the newest
+    merges into one row per group in ``__batch__=-1``; the newest batch,
+    the only one Spark may still replay, stays raw. ``kind``: ``'kmv'``
+    or ``'kll'``, the merge of that log. Stop the stream first, as for
+    :func:`compact_stream_state`. Returns the row count after
+    compaction."""
     from ..llm.sketch import kll_merge, kmv_merge
 
     if kind not in ("kmv", "kll"):
         raise ValueError(f"kind must be 'kmv' or 'kll', got {kind!r}")
     gcols = list(group_cols or [])
-    heal_swap(log_dir)
-    # read through the watermark filter: a stale replayed row must not be
-    # baked into the merge either
-    log = read_sketch_log(spark, log_dir).distinct()
-    prev_w = _log_watermark(log_dir)
-    max_real = log.where(F.col("__batch__") >= 0).agg(
-        F.max("__batch__")
-    ).first()[0]
-    passthrough = None
-    if not assume_quiesced and max_real is not None:
-        # the max batch id may be a mid-commit partial (the only batch
-        # that can be, given serial triggers): keep its rows raw and
-        # fold only provably complete batches
-        passthrough = log.where(F.col("__batch__") == F.lit(int(max_real)))
-        log = log.where(F.col("__batch__") != F.lit(int(max_real)))
-        max_real = log.where(F.col("__batch__") >= 0).agg(
-            F.max("__batch__")
-        ).first()[0]
-    through = max(
-        (v for v in (prev_w, max_real) if v is not None), default=None
-    )
-    body = log.drop("__batch__")
-    merged = (
-        kmv_merge(body, k, gcols) if kind == "kmv" else kll_merge(body, k, gcols)
-    ).withColumn("__batch__", F.lit(_COMPACTED_TAG).cast("long"))
-    if passthrough is not None:
-        # a global (no-group) agg over an empty fold would mint a bogus
-        # empty-sketch row — when everything sits in the excluded batch,
-        # the "compaction" is just the passthrough
-        if log.first() is None:
-            merged = passthrough.select(*merged.columns).limit(0)
-        merged = merged.unionByName(passthrough.select(*merged.columns))
-    tmp = log_dir.rstrip("/") + ".__compacting__"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if through is not None:
-        with open(_os.path.join(tmp, _WATERMARK_FILE), "w") as f:
-            _json.dump({"through": int(through)}, f)
-    swap_dir(tmp, log_dir)
+    merge = kmv_merge if kind == "kmv" else kll_merge
+    _fold_batches(spark, log_dir, "__batch__", _sketch_fold(merge, k, gcols))
     return spark.read.parquet(log_dir).count()
 
 
-def compact_fingerprint_state(spark, state_dir: str) -> int:
-    """Compact :func:`streaming_fingerprint_dedup`'s segment state
-    (``fp_segments.parquet``) to ONE row per distinct ``(band, seg,
-    __h__)`` — the maintenance step for the one stream state that
-    otherwise only grows (VERDICT r13 missing-#3): replays re-append a
-    batch's segments and legitimate near-identical payloads repeat
-    segments across batches; matching is SET semantics, so physical
-    deduplication is exactly invariant. Surviving rows are re-tagged
-    with the state's max ``__batch__`` and the swap is atomic
-    (:func:`~gluestick_spark.fsio.swap_dir`, healed on entry) — a
-    concurrent trigger reads the old state or the new, never a torn
-    one. A batch replayed AFTER compaction re-appends rows the next
-    compaction removes again; matching is unaffected either way (set
-    semantics — the kmv-style idempotence argument, no watermark
-    needed). Returns the row count after compaction.
-
-    The state is read with the schema of the rows the stream appends
-    (``_FP_STATE``): a file of untagged state from before the tag reads
-    ``__batch__`` as NULL, which falls out of the max (0 when no row is
-    tagged)."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..fsio import heal_swap, swap_dir
-
-    seg_path = _os.path.join(state_dir, "fp_segments.parquet")
-    heal_swap(seg_path)
-    state = spark.read.schema(_FP_STATE).parquet(seg_path)
-    max_batch = state.agg(F.max("__batch__")).first()[0] or 0
-    compacted = state.dropDuplicates(["band", "seg", "__h__"]).withColumn(
-        "__batch__", F.lit(int(max_batch)).cast("long")
-    )
-    tmp = seg_path + ".__compacting__"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, seg_path)
-    return spark.read.schema(_FP_STATE).parquet(seg_path).count()
-
-
 def read_streaming_dedup_output(spark, out_dir: str) -> DataFrame:
-    """Read :func:`streaming_url_dedup` output with the at-least-once
-    replay window closed: duplicate rows from a replayed micro-batch are
-    row-identical (same ``__batch_id__``), so one distinct collapses
-    them; the tag is then dropped. The distinct is keyed on the full row
-    including the batch id, so two DIFFERENT batches legitimately
-    emitting the same id (out-of-order-id superset caveat) are NOT
-    collapsed — only replays are."""
-    raw = spark.read.parquet(out_dir)
-    return raw.distinct().drop("__batch_id__")
+    """Read the output of an appending stream (the dedup, filter, judge
+    and score streams) without its ``__batch_id__`` partition column.
+    A replayed batch overwrote its own partition, so no row repeats."""
+    _refuse_flat(out_dir, "__batch_id__")
+    return spark.read.parquet(out_dir).drop("__batch_id__")
 
 
 def streaming_bin_counts(
@@ -1131,38 +1086,30 @@ def streaming_bin_counts(
 
     Scale shape: per batch ONE map-side-combined aggregate producing
     ≤ n_bins+1 rows — the state grows by bins×batches tiny rows, never
-    by data volume. :func:`bin_counts_from_state` drops duplicate
-    (bin, batch_id) rows on read, so a fully-replayed batch cannot
-    double-count; a batch that crashed MID-append and then replayed can
-    leave one partial row pair per bin (foreachBatch's at-least-once
-    append limitation, shared with every append-state operator here) —
-    resume from the checkpoint rather than re-feeding input to avoid it.
+    by data volume. The state is partitioned by ``batch_id`` under the
+    module's replay rule, so a replayed batch replaces its own counts.
     """
-    import os
-
     from ..operators.profile import bin_counts
 
     path = os.path.join(state_dir, "bin_counts.parquet")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bin_counts(batch_df, col, lo, hi, n_bins, "n").withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ).write.mode("append").parquet(path)
+        _fold_wide(batch_df.sparkSession, path, "batch_id", _sum_bins)
+        counts = bin_counts(batch_df, col, lo, hi, n_bins, "n")
+        _write_batch(counts, path, "batch_id", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((path, "batch_id"),)
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def bin_counts_from_state(
     spark, state_dir: str, name: str = "n"
 ) -> DataFrame:
-    """Collapse the per-batch histogram state to the cumulative
-    (bin, ``name``) histogram (duplicate batch_ids dropped first, so an
-    at-least-once replay can't double-count)."""
-    import os
-
+    """Sum the per-batch histogram state to the cumulative (bin,
+    ``name``) histogram."""
     path = os.path.join(state_dir, "bin_counts.parquet")
-    raw = spark.read.parquet(path).dropDuplicates(["bin", "batch_id"])
-    return raw.groupBy("bin").agg(F.sum("n").alias(name))
+    _refuse_flat(path, "batch_id")
+    return spark.read.parquet(path).groupBy("bin").agg(F.sum("n").alias(name))
 
 
 def streaming_snapshot_upsert(
@@ -1309,22 +1256,16 @@ def streaming_cdc(
         diff = table_diff(snap, batch_df, keys, compare_cols).where(
             F.col("change") != "delete"  # upsert feed: absence != deletion
         )
-        # dynamic partition overwrite keyed on batch_id makes the change
-        # write IDEMPOTENT: a crash between this write and the snapshot
+        # the replay rule: a crash between this write and the snapshot
         # commit re-runs the same batch_id against the old snapshot and
-        # REPLACES its partition instead of double-appending. (Changes
-        # must be written before the snapshot: the reverse order loses the
-        # diff entirely on replay — the new snapshot diffs to empty.)
-        (
-            diff.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(changes_dir)
-        )
+        # replaces its partition. (Changes must be written before the
+        # snapshot: the reverse order loses the diff entirely on replay —
+        # the new snapshot diffs to empty.)
+        _write_batch(diff, changes_dir, "batch_id", batch_id)
         snapshot_records(spark, batch_df, stream, snapshot_dir, pk=keys)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((changes_dir, "batch_id"),)
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def streaming_quality_filter(
@@ -1355,16 +1296,14 @@ def streaming_quality_filter(
     device): the classifier weights are frozen literals and batches
     carry no cross-batch state, so the union of the per-batch outputs
     IS the batch ``classifier_score`` + threshold over the whole corpus
-    — the oracle row shares the classifier CTE chain verbatim. Emitted
-    rows carry ``__batch_id__``; replayed appends hold identical rows
-    (the files may differ in their parquet footers) and collapse under
-    :func:`read_streaming_dedup_output`.
+    — the oracle row shares the classifier CTE chain verbatim.
 
     A second score band (e.g. a frozen bigram-LM NLL window) composes
     the same way — score with frozen state inside the same foreachBatch
     and AND the predicates; it stays stateless and stream ≡ batch
     exactly. Per-batch cost: one narrow projection + two appends."""
     from ..llm.classifier import classifier_score
+
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # the passing-side and rejected-side writes share one scoring
@@ -1375,16 +1314,12 @@ def streaming_quality_filter(
                 out_col=score_col,
             )
         )
-        tag = F.lit(batch_id).cast("long").alias("__batch_id__")
         passing = F.col(score_col) >= F.lit(float(threshold))
-        scored.where(passing).select("*", tag).write.mode("append").parquet(
-            out_dir
-        )
-        scored.where(~passing).select("*", tag).write.mode("append").parquet(
-            rejected_dir
-        )
+        _write_batch(scored.where(passing), out_dir, "__batch_id__", batch_id)
+        _write_batch(scored.where(~passing), rejected_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"), (rejected_dir, "__batch_id__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def streaming_decontam(
@@ -1411,15 +1346,13 @@ def streaming_decontam(
     per-batch span sets IS the batch
     :func:`~gluestick_spark.llm.spans.substring_spans_against` over the
     whole corpus (unlike the dedup streams, there is no id-ordering
-    assumption). Emitted rows carry ``__batch_id__``; replayed appends
-    hold identical rows (the files may differ in their parquet footers)
-    and collapse under :func:`read_streaming_dedup_output` on either
-    directory.
+    assumption).
 
     Per-batch cost: batch windows + candidate-bound verify against the
     partitioned index — O(batch), the reference is never re-tokenized.
     """
     from ..llm.spans import substring_spans_against
+
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1431,11 +1364,11 @@ def streaming_decontam(
         )
         dirty = spans.select(id_col).distinct()
         clean = batch_df.join(dirty, id_col, "left_anti")
-        tag = F.lit(batch_id).cast("long").alias("__batch_id__")
-        clean.select("*", tag).write.mode("append").parquet(out_dir)
-        spans.select("*", tag).write.mode("append").parquet(flagged_dir)
+        _write_batch(clean, out_dir, "__batch_id__", batch_id)
+        _write_batch(spans, flagged_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"), (flagged_dir, "__batch_id__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def streaming_semdedup(
@@ -1463,8 +1396,6 @@ def streaming_semdedup(
     union of emitted batches equals
     :func:`~gluestick_spark.llm.cluster.semdedup_against` over the
     whole corpus (shared oracle; the streaming_decontam argument).
-    Replays emit identical rows (the files may differ in their parquet
-    footers) and collapse under :func:`read_streaming_dedup_output`.
 
     Per-batch cost: one narrow assignment over the batch + one
     cid-keyed exchange against the reference cells of the batch's own
@@ -1476,10 +1407,10 @@ def streaming_semdedup(
     judge = _semdedup_judge(ref_path, vec_col, id_col, threshold)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        tag = F.lit(batch_id).cast("long").alias("__batch_id__")
-        judge(batch_df).select("*", tag).write.mode("append").parquet(out_dir)
+        _write_batch(judge(batch_df), out_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"),)
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 # ---------------------------------------------------------------------------
@@ -1514,9 +1445,6 @@ def materialize_gram_state(
     the table duplicate-free — the invariant the seen-count join needs
     — and the bitmap is extended by OR-merging the new grams' words.
     Geometry must match the stored meta."""
-    import os as _os
-
-    from ..fsio import LOCAL_FS
     from ..llm.bloom import bloom_words
     from ..llm.decontam import ngram_hashes_expr
     from ..llm.index_commit import (
@@ -1531,8 +1459,8 @@ def materialize_gram_state(
     fs = fs or LOCAL_FS
     spark = reference.sparkSession
     geometry = {"n": n, "bloom_m_bits": bloom_m_bits, "bloom_k": bloom_k}
-    grams_loc = _os.path.join(state_dir, "ref_grams")
-    words_loc = _os.path.join(state_dir, "bloom_words.parquet")
+    grams_loc = os.path.join(state_dir, "ref_grams")
+    words_loc = os.path.join(state_dir, "bloom_words.parquet")
     grams = reference.select(
         F.explode(ngram_hashes_expr(F.col(text_col), n)).alias("__g__")
     ).distinct()
@@ -1587,16 +1515,12 @@ def streaming_novelty(
     device): the reference gram set is static and batches carry no
     cross-batch state, so the union of the per-batch novelty rows IS
     the batch :func:`~gluestick_spark.llm.decontam.novelty_scores` over
-    the whole corpus. Emitted rows carry ``__batch_id__``; replayed
-    appends collapse under :func:`read_streaming_dedup_output`.
+    the whole corpus.
 
     Per-batch cost: two narrow text passes over the batch + the
     PERSISTED Bloom bitmap (read, never rebuilt) pre-filtering the
     exact join — the reference table is touched only by the surviving
     (seen + ~0.1% FP) gram stream. Torn state (missing meta) raises."""
-    import os as _os
-
-    from ..fsio import LOCAL_FS
     from ..llm.decontam import novelty_scores_against
     from ..llm.index_commit import GRAM_STATE, load_meta, read_store, recorded_schema
 
@@ -1604,7 +1528,7 @@ def streaming_novelty(
 
     def read(spark, part: str) -> DataFrame:
         return read_store(
-            spark, _os.path.join(state_dir, part), recorded_schema(meta, part)
+            spark, os.path.join(state_dir, part), recorded_schema(meta, part)
         )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -1615,10 +1539,10 @@ def streaming_novelty(
             bloom_k=meta["bloom_k"],
             bloom_words_df=read(spark, "bloom_words.parquet"),
         )
-        tag = F.lit(batch_id).cast("long").alias("__batch_id__")
-        scored.select("*", tag).write.mode("append").parquet(out_dir)
+        _write_batch(scored, out_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"),)
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)
 
 
 def materialize_corpus_sketch(
@@ -1636,9 +1560,6 @@ def materialize_corpus_sketch(
     sketch-once half of :func:`streaming_corpus_drift` and of any
     pairwise corpus comparison (:func:`~gluestick_spark.llm.decontam.
     kmv_jaccard_from_sketches`)."""
-    import os as _os
-
-    from ..fsio import LOCAL_FS
     from ..llm.decontam import ngrams_expr
     from ..llm.index_commit import (
         CORPUS_SKETCH,
@@ -1653,7 +1574,7 @@ def materialize_corpus_sketch(
     begin_rebuild(CORPUS_SKETCH, path, fs=fs)
     grams = df.select(F.explode(ngrams_expr(F.col(text_col), n)).alias("__g__"))
     sketch = kmv_sketch(grams, "__g__", k)
-    sketch.write.mode("overwrite").parquet(_os.path.join(path, "sketch.parquet"))
+    sketch.write.mode("overwrite").parquet(os.path.join(path, "sketch.parquet"))
     meta = {"n": n, "k": k, SCHEMAS: {"sketch.parquet": schema_entry(sketch)}}
     publish(CORPUS_SKETCH, path, meta, fs=fs)
 
@@ -1681,20 +1602,14 @@ def streaming_corpus_drift(
     union IS the merge of per-part k-mins, so the LAST batch's row
     equals the batch :func:`~gluestick_spark.llm.decontam.
     corpus_jaccard_kmv` over everything streamed — bit-for-bit, any
-    batch split. Replay safety is ALGEBRAIC, not transactional: KMV
-    merge is idempotent (merging a duplicate sketch changes nothing),
-    so a replayed batch's duplicate log row cannot skew the cumulative
-    sketch; out_dir rows collapse under
-    :func:`read_streaming_dedup_output` as usual.
+    batch split. The sketch log and the output follow the module's
+    replay rule.
 
     Per-batch cost: one narrow gram pass over the batch + a merge over
     the ≤ k·batches-long sketch log. State is KILOBYTES regardless of
     corpus size — the mergeable-sketch streaming posture (compare the
     exact gram state of :func:`streaming_novelty`, which buys
     exactness at gram-table cost)."""
-    import os as _os
-
-    from ..fsio import LOCAL_FS
     from ..llm.decontam import kmv_jaccard_from_sketches, ngrams_expr
     from ..llm.index_commit import (
         CORPUS_SKETCH,
@@ -1706,27 +1621,27 @@ def streaming_corpus_drift(
 
     meta = load_meta(CORPUS_SKETCH, ref_sketch_path, fs or LOCAL_FS)
     n, k = int(meta["n"]), int(meta["k"])
-    log_dir = _os.path.join(state_dir, "sketch_log.parquet")
+    log_dir = os.path.join(state_dir, "sketch_log.parquet")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         grams = batch_df.select(
             F.explode(ngrams_expr(F.col(text_col), n)).alias("__g__")
         )
-        batch_sketch = kmv_sketch(grams, "__g__", k).withColumn(
-            "__batch__", F.lit(batch_id).cast("long")
+        batch_sketch = kmv_sketch(grams, "__g__", k)
+        _write_batch(batch_sketch, log_dir, "__batch__", batch_id)
+        log = _read_batches(
+            spark, log_dir, batch_sketch.schema, "__batch__", batch_id + 1,
+            _sketch_fold(kmv_merge, k, []),
         )
-        batch_sketch.write.mode("append").parquet(log_dir)
-        cum = kmv_merge(read_sketch_log(spark, log_dir), k).select(
-            F.col("kmv").alias("__ka__")
-        )
+        cum = kmv_merge(log, k).select(F.col("kmv").alias("__ka__"))
         ref = read_store(
             spark,
-            _os.path.join(ref_sketch_path, "sketch.parquet"),
+            os.path.join(ref_sketch_path, "sketch.parquet"),
             recorded_schema(meta, "sketch.parquet"),
         ).select(F.col("kmv").alias("__kb__"))
         est = kmv_jaccard_from_sketches(spark, cum, ref, k)
-        tag = F.lit(batch_id).cast("long").alias("__batch_id__")
-        est.select("*", tag).write.mode("append").parquet(out_dir)
+        _write_batch(est, out_dir, "__batch_id__", batch_id)
 
-    return _start(stream_df, handle, checkpoint_dir, available_now)
+    writes = ((out_dir, "__batch_id__"), (log_dir, "__batch__"))
+    return _start(stream_df, handle, checkpoint_dir, available_now, writes)

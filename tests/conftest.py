@@ -41,7 +41,7 @@ _SLOW_TESTS = {
     "test_compact_sketch_log_excludes_inflight_max_batch",
     "test_compact_sketch_log_preserves_estimates",
     "test_compact_stream_state_bin_counts_additive_after",
-    "test_compact_stream_state_flat_bounds_files_and_keeps_results",
+    "test_compact_stream_state_bounds_partitions_and_keeps_results",
     "test_connected_components_deep_chain_and_nonconvergence",
     "test_corpus_gram_overlap_matches_bruteforce",
     "test_correlation_matrix_p64_survives_via_split",

@@ -173,19 +173,18 @@ def _no_exchange_crashed_swap(monkeypatch, path):
 
 def test_compact_sketch_log_heals_crashed_swap(spark, tmp_dir, monkeypatch):
     from gluestick_spark.llm.sketch import kmv_merge, kmv_sketch
-    from gluestick_spark.streaming.pipeline import compact_sketch_log, read_sketch_log
+    from gluestick_spark.streaming.pipeline import _write_batch, compact_sketch_log
 
     d = spark.createDataFrame(
         [(i, f"g{i % 97}") for i in range(600)], "doc_id long, g string"
     )
     log_dir = os.path.join(tmp_dir, "sketch_log.parquet")
     for b in range(3):
-        kmv_sketch(d.where(F.col("doc_id") % 3 == b), "g", 64).withColumn(
-            "__batch__", F.lit(b).cast("long")
-        ).write.mode("append").parquet(log_dir)
+        sketch = kmv_sketch(d.where(F.col("doc_id") % 3 == b), "g", 64)
+        _write_batch(sketch, log_dir, "__batch__", b)
 
     def merged():
-        log = read_sketch_log(spark, log_dir).distinct().drop("__batch__")
+        log = spark.read.parquet(log_dir).drop("__batch__")
         return list(kmv_merge(log, 64).first()["kmv"])
 
     want = merged()
@@ -196,23 +195,18 @@ def test_compact_sketch_log_heals_crashed_swap(spark, tmp_dir, monkeypatch):
     assert not os.path.exists(log_dir + ".__compacting__")
 
 
-def test_compact_fingerprint_state_heals_crashed_swap(spark, tmp_dir, monkeypatch):
-    from gluestick_spark.streaming.pipeline import compact_fingerprint_state
+def test_compact_stream_state_heals_crashed_swap(spark, tmp_dir, monkeypatch):
+    from gluestick_spark.streaming.pipeline import _write_batch, compact_stream_state
 
     seg_path = os.path.join(tmp_dir, "fp_segments.parquet")
     rows = [(b, s, (b * 31 + s) % 7) for b in range(4) for s in range(5)]
-    for batch in range(2):
-        spark.createDataFrame(
-            [r + (batch,) for r in rows],
-            "band int, seg long, __h__ long, __batch__ long",
-        ).write.mode("append").parquet(seg_path)
+    for batch in range(3):
+        segs = spark.createDataFrame(rows, "band int, seg long, __h__ long")
+        _write_batch(segs, seg_path, "__batch__", batch)
     _no_exchange_crashed_swap(monkeypatch, seg_path)
-    assert compact_fingerprint_state(spark, tmp_dir) == len(rows)
-    got = {
-        (r["band"], r["seg"], r["__h__"])
-        for r in spark.read.parquet(seg_path).collect()
-    }
-    assert got == set(rows)
+    assert set(compact_stream_state(spark, tmp_dir)) == {"fp_segments.parquet"}
+    folded = spark.read.parquet(os.path.join(seg_path, "__batch__=-1"))
+    assert sorted(map(tuple, folded.collect())) == sorted(rows)
     assert not os.path.exists(seg_path + ".__old__")
 
 
@@ -548,6 +542,38 @@ def test_indexed_topk_reads_run_no_inference_job(spark, stores):
     assert got == {k: v - 1 for k, v in BATCH_TOPK_JOBS_BEFORE.items()}, got
 
 
+# Jobs of a single SQ top-k on a tombstoned index while the tombstones
+# were read through a distinct.
+TOMBSTONED_TOPK_JOBS_BEFORE = 3
+
+
+def test_tombstoned_topk_anti_joins_ids_without_distinct(spark, stores, tmp_dir):
+    """A single SQ top-k on a tombstoned index, with ids tombstoned
+    twice, drops them by one left-anti join, which needs no distinct: it
+    serves the top rows of the untouched index minus the tombstoned ids,
+    with fewer jobs than while the ids were read through a distinct."""
+    from gluestick_spark.llm.cluster import sq_ivf_topk_indexed
+    from gluestick_spark.llm.index_delete import sq_ivf_delete
+
+    path = _copy(stores["sq"], os.path.join(tmp_dir, "sq"))
+    doomed = _emb(spark).where("vec_id % 7 = 3").select(F.col("vec_id").cast("int"))
+    sq_ivf_delete(spark, path, doomed)
+    sq_ivf_delete(spark, path, doomed.where("vec_id < 40"))
+    q = [0.5] * 8
+    gone = {r["vec_id"] for r in doomed.collect()}
+    full = sq_ivf_topk_indexed(spark, stores["sq"], q, k=120, nprobe=2).collect()
+    want = [tuple(r) for r in full if r["vec_id"] not in gone][:5]
+    got = []
+    jobs = _jobs(
+        spark,
+        lambda: got.extend(
+            tuple(r) for r in sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=2).collect()
+        ),
+    )
+    assert got == want
+    assert jobs < TOMBSTONED_TOPK_JOBS_BEFORE, jobs
+
+
 # The reads of library stores that keep inference, by (module, function):
 # user input and its catalog coercion, snapshots and versioned tables (their
 # format is to change), the marker-less plain-IVF and materialize_sq
@@ -563,7 +589,7 @@ _INFERRING_READS = {
     ("llm/similarity.py", "sq_topk_indexed"),
     ("llm/rebalance.py", "ivf_rebalance"),
     ("llm/rebalance.py", "cell_sizes"),
-    ("streaming/pipeline.py", "read_sketch_log"),
+    ("streaming/pipeline.py", "_fold_batches"),
     ("streaming/pipeline.py", "compact_sketch_log"),
     ("streaming/pipeline.py", "read_streaming_dedup_output"),
     ("streaming/pipeline.py", "bin_counts_from_state"),

@@ -533,49 +533,6 @@ def test_corpus_jaccard_kmv_estimator(spark):
     assert tuple(empty) == (0, 0, None)
 
 
-def test_streaming_corpus_drift_replay_idempotent(spark, tmp_dir):
-    """Replay safety is algebraic: merging a duplicate batch sketch into
-    the log changes nothing (KMV merge idempotence), so a replayed batch
-    emits a byte-identical row. Torn reference sketch (no meta) raises."""
-    import pyspark.sql.functions as SF
-
-    from gluestick_spark.llm.sketch import kmv_merge
-    from gluestick_spark.streaming.pipeline import (
-        materialize_corpus_sketch,
-        stream_from_directory,
-        streaming_corpus_drift,
-    )
-
-    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    a = d.where("doc_id % 2 = 1").select("doc_id", "text")
-    ref_dir = os.path.join(tmp_dir, "ref")
-    with pytest.raises(ValueError, match="torn or absent"):
-        streaming_corpus_drift(
-            stream_from_directory(spark, tmp_dir, a.schema),
-            ref_dir, "text",
-            os.path.join(tmp_dir, "o"), os.path.join(tmp_dir, "c"),
-            os.path.join(tmp_dir, "s"),
-        )
-    materialize_corpus_sketch(d.where("doc_id % 2 = 0"), ref_dir, "text", n=3, k=256)
-    stage, out = os.path.join(tmp_dir, "in"), os.path.join(tmp_dir, "out")
-    ckpt, state = os.path.join(tmp_dir, "ck"), os.path.join(tmp_dir, "st")
-    a.coalesce(1).write.parquet(stage)
-    q = streaming_corpus_drift(
-        stream_from_directory(spark, stage, a.schema),
-        ref_dir, "text", out, ckpt, state,
-    )
-    q.awaitTermination()
-    first = spark.read.parquet(out).distinct().collect()
-    # simulate an at-least-once replay: duplicate the batch sketch log
-    # and re-merge — the cumulative sketch must be unchanged
-    log = os.path.join(state, "sketch_log.parquet")
-    dup = spark.read.parquet(log)
-    merged_once = kmv_merge(dup, 256).first()["kmv"]
-    merged_dup = kmv_merge(dup.unionByName(dup), 256).first()["kmv"]
-    assert merged_once == merged_dup
-    assert len(first) == 1 and first[0]["k_used"] > 0
-
-
 def test_priority_sample_estimator(spark):
     """Priority sampling: deterministic per seed + repartition-invariant;
     Σ w_est unbiased for the corpus total (mean over fixed seeds — the

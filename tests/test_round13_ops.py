@@ -638,89 +638,6 @@ def test_lang_id_ft_beats_marker_baseline(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-# ---------------- r13 extra: streaming fingerprint dedup -----------------
-
-
-def test_fp_segment_state_compaction_and_replay(spark, tmp_dir):
-    """VERDICT r13 #3: the fingerprint segment state is __batch__-tagged
-    (a replayed batch's re-append is byte-identical and collapses on the
-    read-side distinct) and compact_fingerprint_state reclaims the
-    physical duplicates with matching exactly invariant — a later chain
-    link against a DROPPED row's fingerprint still collapses."""
-    import os
-
-    from gluestick_spark.streaming.pipeline import (
-        compact_fingerprint_state,
-        read_streaming_dedup_output,
-        stream_from_directory,
-        streaming_fingerprint_dedup,
-    )
-
-    base = 0x0123456789ABCDEF
-    fp = {
-        b"A": base,
-        b"B": base ^ 0b111,                 # 3 flips from A
-        b"C": base ^ 0b111 ^ (0b11 << 20),  # 2 from B, 5 from A
-        b"D": base ^ ((1 << 40) - 1),       # far from everything
-        b"E": base ^ 0b111 ^ (0b11 << 20) ^ (1 << 33),  # 1 from C
-        b"F": base ^ ((1 << 63) - (1 << 22)),           # far
-    }
-
-    def hasher(payload: bytes) -> int:
-        v = fp[payload]
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    state = os.path.join(tmp_dir, "state")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    schema = "doc_id long, payload binary"
-    batches = [
-        spark.createDataFrame([(1, b"A"), (2, b"B")], schema),
-        spark.createDataFrame([(3, b"C"), (4, b"D")], schema),
-    ]
-    for b in batches:
-        b.coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_fingerprint_dedup(
-            stream_from_directory(spark, stage, batches[0].schema),
-            "payload", "doc_id", state, out, ckpt,
-            max_hamming=3, bands=4, hasher=lambda p: hasher(bytes(p)),
-        )
-        q.awaitTermination()
-
-    seg_path = os.path.join(state, "fp_segments.parquet")
-    raw = spark.read.parquet(seg_path)
-    n_phys = raw.count()
-    n_logical = raw.distinct().count()
-    assert n_phys == n_logical == 16  # 4 judged rows x 4 bands
-
-    # at-least-once replay of the LAST batch: byte-identical re-append
-    max_b = raw.agg(F.max("__batch__")).first()[0]
-    raw.where(F.col("__batch__") == max_b).write.mode("append").parquet(
-        seg_path
-    )
-    grown = spark.read.parquet(seg_path)
-    assert grown.count() == n_phys + 8          # physical bloat...
-    assert grown.distinct().count() == n_logical  # ...logically collapsed
-
-    # compaction reclaims the duplicates; matching stays exact: E (1 flip
-    # from DROPPED C) must still drop, F far -> kept
-    assert compact_fingerprint_state(spark, state) == n_logical
-    b3 = spark.createDataFrame([(6, b"E"), (7, b"F")], schema)
-    b3.coalesce(1).write.mode("append").parquet(stage)
-    q = streaming_fingerprint_dedup(
-        stream_from_directory(spark, stage, batches[0].schema),
-        "payload", "doc_id", state, out, ckpt,
-        max_hamming=3, bands=4, hasher=lambda p: hasher(bytes(p)),
-    )
-    q.awaitTermination()
-    kept = sorted(
-        r["doc_id"]
-        for r in read_streaming_dedup_output(spark, out).collect()
-    )
-    assert kept == [1, 4, 7]
-
-
 # ---------------- r13 extra: sample-trained PQ codebooks -----------------
 
 
@@ -779,178 +696,6 @@ def test_pq_sample_trained_codebooks(spark):
 
     with pytest.raises(ValueError, match="train_sample_rate"):
         train_pq(emb, "embedding", "vec_id", train_sample_rate=0.0)
-
-
-# ---------------- r13 extra: streaming KLL quantile monitor --------------
-
-
-def test_streaming_quantiles_merge_law_and_replay(spark, tmp_dir):
-    """The cumulative estimate after the last trigger satisfies the
-    one-shot sketch's rank-bound contract over everything streamed, and
-    a REPLAYED batch (byte-identical duplicate log row, same tag)
-    cannot double-count — the distinct-on-read collapse, pinned by
-    injecting the duplicate by hand."""
-    import os
-
-    from gluestick_spark.llm.sketch import kll_merge, kll_quantiles, kll_sketch
-    from gluestick_spark.streaming.pipeline import (
-        stream_from_directory,
-        streaming_quantiles,
-    )
-
-    rows = [(i, float((i * 37) % 1000)) for i in range(2000)]
-    d = spark.createDataFrame(rows, "doc_id long, v double")
-    stage = os.path.join(tmp_dir, "src")
-    out = os.path.join(tmp_dir, "out")
-    state = os.path.join(tmp_dir, "state")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    schema = d.schema
-    for cond in ("doc_id < 1000", "doc_id >= 1000"):
-        d.where(cond).coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_quantiles(
-            stream_from_directory(spark, stage, schema),
-            "v", out, ckpt, state, probs=(0.25, 0.5, 0.9), k=200,
-        )
-        q.awaitTermination()
-
-    snaps = spark.read.parquet(out)
-    last = snaps.agg(F.max("__batch_id__")).first()[0]
-    est = {
-        r["prob"]: r["value"]
-        for r in snaps.where(F.col("__batch_id__") == last).collect()
-    }
-    # rank-bound check against the full data (the L124 contract, ε=5%)
-    vals = sorted(v for _, v in rows)
-    n = len(vals)
-    for p, v in est.items():
-        rlo = sum(1 for x in vals if x < v)
-        rhi = sum(1 for x in vals if x <= v)
-        target = max(1, -(-p * n // 1))
-        assert rlo + 1 - 0.05 * n <= target <= rhi + 0.05 * n, (p, v)
-
-    # replay: duplicate the LAST batch's log rows verbatim (same
-    # __batch__ tag) — the cumulative estimate must not move
-    log_dir = os.path.join(state, "kll_log.parquet")
-    log = spark.read.parquet(log_dir)
-    dup = log.where(F.col("__batch__") == log.agg(F.max("__batch__")).first()[0])
-    dup.write.mode("append").parquet(log_dir)
-    log2 = spark.read.parquet(log_dir).distinct().drop("__batch__")
-    est2 = {
-        r["prob"]: r["value"]
-        for r in kll_quantiles(kll_merge(log2, 200), [0.25, 0.5, 0.9]).collect()
-    }
-    assert est2 == est
-
-    # and WITHOUT the collapse the duplicate genuinely shifts weight —
-    # the distinct is load-bearing, not decorative
-    n_merged = kll_merge(
-        spark.read.parquet(log_dir).drop("__batch__"), 200
-    ).first()["kll"]["n"]
-    n_clean = kll_merge(log2, 200).first()["kll"]["n"]
-    assert n_merged > n_clean == 2000
-
-
-def test_compact_sketch_log_preserves_estimates(spark, tmp_dir):
-    """Compacting a KLL sketch log to one row per group is invisible to
-    the reader: identical quantile estimates before and after, the
-    compacted-through watermark records the max real batch id, and the
-    row count collapses to the group count. KMV kind likewise
-    (idempotent merge)."""
-    import os
-
-    from gluestick_spark.llm.sketch import (
-        kll_merge,
-        kll_quantiles,
-        kll_sketch,
-        kmv_merge,
-        kmv_sketch,
-    )
-    from gluestick_spark.streaming.pipeline import (
-        _log_watermark,
-        compact_sketch_log,
-        read_sketch_log,
-    )
-
-    d = spark.createDataFrame(
-        [(i, ["a", "b"][i % 2], float(i % 500)) for i in range(3000)],
-        "doc_id long, g string, v double",
-    )
-    log_dir = os.path.join(tmp_dir, "kll_log.parquet")
-    for b in range(3):
-        kll_sketch(
-            d.where(F.col("doc_id") % 3 == b), "v", 200, ["g"]
-        ).withColumn("__batch__", F.lit(b).cast("long")).write.mode(
-            "append"
-        ).parquet(log_dir)
-
-    def estimates():
-        log = read_sketch_log(spark, log_dir).distinct().drop("__batch__")
-        return sorted(
-            map(tuple, kll_quantiles(
-                kll_merge(log, 200, ["g"]), [0.25, 0.5, 0.9], ["g"]
-            ).collect())
-        )
-
-    def total_n():
-        log = read_sketch_log(spark, log_dir).distinct().drop("__batch__")
-        return sum(r["kll"]["n"] for r in kll_merge(log, 200, ["g"]).collect())
-
-    before = estimates()
-    n = compact_sketch_log(spark, log_dir, "kll", 200, ["g"], assume_quiesced=True)
-    assert n == 2  # one row per group
-    assert estimates() == before
-    # merged rows carry the compacted sentinel; the watermark records
-    # the max real batch id folded in
-    assert spark.read.parquet(log_dir).agg(F.max("__batch__")).first()[0] == -1
-    assert _log_watermark(log_dir) == 2
-
-    # ADVICE r13 #2: a batch replayed AFTER compaction (crash between
-    # its log append and the checkpoint commit) re-appends a partial row
-    # that is NOT byte-identical to the merged row — the watermark drops
-    # it, so the cumulative weight cannot double-count
-    n_before_replay = total_n()
-    assert n_before_replay == 3000
-    kll_sketch(
-        d.where(F.col("doc_id") % 3 == 2), "v", 200, ["g"]
-    ).withColumn("__batch__", F.lit(2).cast("long")).write.mode(
-        "append"
-    ).parquet(log_dir)
-    assert total_n() == n_before_replay
-    assert estimates() == before
-    # a genuinely NEW batch (id > watermark) still lands
-    kll_sketch(
-        d.where(F.col("doc_id") % 3 == 0), "v", 200, ["g"]
-    ).withColumn("__batch__", F.lit(3).cast("long")).write.mode(
-        "append"
-    ).parquet(log_dir)
-    assert total_n() == 4000
-    # recompaction folds it in and advances the watermark
-    assert compact_sketch_log(
-        spark, log_dir, "kll", 200, ["g"], assume_quiesced=True
-    ) == 2
-    assert _log_watermark(log_dir) == 3
-    assert total_n() == 4000
-
-    # kmv kind
-    klog = os.path.join(tmp_dir, "kmv_log.parquet")
-    for b in range(3):
-        kmv_sketch(
-            d.where(F.col("doc_id") % 3 == b).selectExpr("CAST(doc_id AS STRING) AS s"),
-            "s", 64,
-        ).withColumn("__batch__", F.lit(b).cast("long")).write.mode(
-            "append"
-        ).parquet(klog)
-    pre = kmv_merge(
-        spark.read.parquet(klog).drop("__batch__"), 64
-    ).first()["kmv"]
-    assert compact_sketch_log(spark, klog, "kmv", 64, assume_quiesced=True) == 1
-    post = kmv_merge(
-        spark.read.parquet(klog).drop("__batch__"), 64
-    ).first()["kmv"]
-    assert list(pre) == list(post)
-
-    with pytest.raises(ValueError, match="kind"):
-        compact_sketch_log(spark, klog, "hll", 64)
 
 
 # ---------------- r13 extra: plain-IVF append crash safety ---------------

@@ -2,7 +2,6 @@
 
 Phase A — ADVICE r14 closures + VERDICT r14 plan-posture fixes:
 - vacuum_deleted: hidden swap dirs + crash recovery + batched rewrites
-- compact_sketch_log: in-flight max-batch exclusion (append race)
 """
 
 from __future__ import annotations
@@ -133,103 +132,6 @@ def test_vacuum_recovers_stranded_old_cell(spark, tmp_dir):
         for r in sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4).collect()
     ]
     assert got == brute
-
-
-# ---------------- sketch-log compaction: append race ----------------
-
-
-def test_compact_sketch_log_excludes_inflight_max_batch(spark, tmp_dir):
-    """ADVICE r14 #2: compaction racing a mid-commit append must not
-    watermark the in-flight batch. The default fold excludes the max
-    real batch id — its rows pass through raw, so the part of the batch
-    the compaction's listing MISSED still lands (no silent loss), while
-    replays of folded batches are still dropped by the watermark."""
-    from gluestick_spark.llm.sketch import kll_merge, kll_sketch
-    from gluestick_spark.streaming.pipeline import (
-        _log_watermark,
-        compact_sketch_log,
-        read_sketch_log,
-    )
-
-    # the two halves of batch 2 (doc_id < 1500 / >= 1500) get disjoint
-    # values, so their sketches differ and distinct() keeps both
-    d = spark.createDataFrame(
-        [(i, float(i % 500 + (1000 if i >= 1500 else 0))) for i in range(3000)],
-        "doc_id long, v double",
-    )
-    rows = d.count()
-    log_dir = os.path.join(tmp_dir, "kll_log.parquet")
-    for b in range(2):
-        kll_sketch(d.where(F.col("doc_id") % 3 == b), "v", 200).withColumn(
-            "__batch__", F.lit(b).cast("long")
-        ).write.mode("append").parquet(log_dir)
-    # batch 2 commits in two physical appends; compaction runs when only
-    # the FIRST half is visible (the partial-listing race)
-    kll_sketch(
-        d.where((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 1500)), "v", 200
-    ).withColumn("__batch__", F.lit(2).cast("long")).write.mode("append").parquet(
-        log_dir
-    )
-
-    def total_n():
-        log = read_sketch_log(spark, log_dir).distinct().drop("__batch__")
-        return kll_merge(log, 200).first()["kll"]["n"]
-
-    compact_sketch_log(spark, log_dir, "kll", 200)
-    # only provably complete batches are watermarked
-    assert _log_watermark(log_dir) == 1
-    # batch 2's visible half survived as a raw tagged row
-    raw = spark.read.parquet(log_dir)
-    assert raw.where(F.col("__batch__") == 2).count() == 1
-    assert raw.where(F.col("__batch__") == -1).count() == 1
-
-    # the batch's remaining half lands AFTER compaction — pre-fix the
-    # watermark (2) would have dropped it
-    kll_sketch(
-        d.where((F.col("doc_id") % 3 == 2) & (F.col("doc_id") >= 1500)), "v", 200
-    ).withColumn("__batch__", F.lit(2).cast("long")).write.mode("append").parquet(
-        log_dir
-    )
-    assert total_n() == rows
-    # a full replay of the half already seen still collapses (distinct)
-    kll_sketch(
-        d.where((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < 1500)), "v", 200
-    ).withColumn("__batch__", F.lit(2).cast("long")).write.mode("append").parquet(
-        log_dir
-    )
-    assert total_n() == rows
-    # and a replay of a FOLDED batch is dropped by the watermark
-    kll_sketch(d.where(F.col("doc_id") % 3 == 0), "v", 200).withColumn(
-        "__batch__", F.lit(0).cast("long")
-    ).write.mode("append").parquet(log_dir)
-    assert total_n() == rows
-
-    # quiesced recompaction folds everything down to one row
-    assert compact_sketch_log(spark, log_dir, "kll", 200, assume_quiesced=True) == 1
-    assert _log_watermark(log_dir) == 2
-    assert total_n() == rows
-
-
-def test_compact_sketch_log_single_batch_is_pure_passthrough(spark, tmp_dir):
-    """With exactly one (possibly in-flight) batch in the log, the
-    default compaction must not mint a bogus empty-sketch merged row —
-    the output is the passthrough alone."""
-    from gluestick_spark.llm.sketch import kmv_sketch
-    from gluestick_spark.streaming.pipeline import (
-        _log_watermark,
-        compact_sketch_log,
-    )
-
-    d = spark.createDataFrame([(str(i),) for i in range(100)], "s string")
-    log_dir = os.path.join(tmp_dir, "kmv_log.parquet")
-    kmv_sketch(d, "s", 64).withColumn(
-        "__batch__", F.lit(0).cast("long")
-    ).write.mode("append").parquet(log_dir)
-    assert compact_sketch_log(spark, log_dir, "kmv", 64) == 1
-    raw = spark.read.parquet(log_dir)
-    assert raw.where(F.col("__batch__") == 0).count() == 1
-    assert raw.where(F.col("__batch__") == -1).count() == 0
-    assert _log_watermark(log_dir) is None
 
 
 # ---------------- batched retrieval serving (VERDICT r14 #2/#3) ----------

@@ -684,45 +684,6 @@ def test_sq_indexed_equals_direct(spark, tmp_dir):
     assert cols == {"vec_id", "scale", "qvec"}
 
 
-def test_streaming_bin_counts_additivity_and_replay_guard(spark, tmp_dir):
-    import os
-
-    from gluestick_spark.operators.profile import bin_counts
-    from gluestick_spark.streaming.pipeline import (
-        bin_counts_from_state,
-        stream_from_directory,
-        streaming_bin_counts,
-    )
-
-    stage = os.path.join(tmp_dir, "src")
-    state = os.path.join(tmp_dir, "state")
-    ckpt = os.path.join(tmp_dir, "ckpt")
-    df1 = spark.createDataFrame([(i, i % 10) for i in range(50)], "id long, x long")
-    df2 = spark.createDataFrame([(100 + i, (i % 10) + 2) for i in range(30)],
-                                "id long, x long")
-    schema = df1.schema
-    for d in (df1, df2):
-        d.coalesce(1).write.mode("append").parquet(stage)
-        q = streaming_bin_counts(
-            stream_from_directory(spark, stage, schema),
-            "x", 0, 12, 6, state, ckpt,
-        )
-        q.awaitTermination()
-    got = {r["bin"]: r["n"] for r in bin_counts_from_state(spark, state).collect()}
-    full = df1.unionByName(df2)
-    want = {r["bin"]: r["n"]
-            for r in bin_counts(full, "x", 0, 12, 6).collect()}
-    assert got == want  # additive state == batch histogram, exactly
-    # replay guard: duplicating a batch's state rows must not double-count
-    p = os.path.join(state, "bin_counts.parquet")
-    spark.read.parquet(p).where(F.col("batch_id") == 0).write.mode(
-        "append"
-    ).parquet(p)
-    again = {r["bin"]: r["n"]
-             for r in bin_counts_from_state(spark, state).collect()}
-    assert again == want
-
-
 # --------------------------------------------------------- html clean ----
 
 
