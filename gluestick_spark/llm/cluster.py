@@ -152,45 +152,26 @@ def int_dot_expr(a: Column, b: Column) -> Column:
     )
 
 
-def _dot_lit_sql(q_sql: str, s: list[int]) -> str:
+def _dot_fold_sql(q_sql: str, s: list[int], finish: str | None = None) -> str:
     """SQL text for the exact int64 dot of an array<long> column
-    fragment against an integer-literal vector, unrolled as a
-    left-associated sum — term order identical to the
-    :func:`int_dot_expr` fold (``((0 + t₀) + t₁) + …`` ≡
-    ``t₀ + t₁ + …``), so every partial sum (and thus ANSI overflow
-    behavior) is the same. Unrolled ``element_at`` terms whole-stage
-    codegen, unlike the interpreted higher-order-function fold, and —
-    the reason this module builds SQL text at all — the whole
-    expression crosses py4j ONCE instead of ~50 driver roundtrips per
-    centroid (measured: 7.4 s of a 9.7 s kmeans build was expression
-    construction chatter).
+    fragment against an integer-literal vector, as the
+    ``aggregate(zip_with(...))`` fold — the runtime expression the Column
+    API built before r15, parsed in one py4j call (~50 driver roundtrips
+    per centroid otherwise: 7.4 s of a 9.7 s kmeans build was expression
+    construction chatter). ``finish`` is an optional lambda body over
+    ``acc`` (the dot).
 
-    Use for SINGLE dots (one query vector, a rerank distance). For the
-    k-struct argmin use :func:`_dot_fold_sql`: k·d unrolled terms form
-    ONE un-splittable expression whose generated method exceeds
-    janino's 64 KB limit (observed on the PQ encode projection), and
-    the failed compile + interpreted fallback costs more than the fold
-    ever did."""
-    return (
-        " + ".join(
-            f"element_at({q_sql}, {i + 1}) * {int(v)}L" for i, v in enumerate(s)
-        )
-        or "0L"
-    )
-
-
-def _dot_fold_sql(q_sql: str, s: list[int]) -> str:
-    """SQL text for the same exact int64 dot as :func:`_dot_lit_sql`
-    but in the ``aggregate(zip_with(...))`` fold form — byte-for-byte
-    the runtime expression the Column API built before r15 (identical
-    fold order, identical interpreted evaluation), just parsed in one
-    py4j call. The fold keeps generated code size O(1) per centroid,
-    which is what lets a k-struct argmin projection stay inside
-    whole-stage codegen limits."""
+    Higher-order functions are evaluated outside generated code, so the
+    literals never reach a generated class: generated code size stays
+    O(1) per centroid (a k-struct argmin projection stays inside
+    whole-stage codegen limits), and a single-query plan that keeps its
+    query literals inside the fold (``finish`` included) compiles once
+    per shape instead of once per query."""
     vals = ", ".join(f"{int(v)}L" for v in s)
+    fin = f", acc -> {finish}" if finish else ""
     return (
         f"aggregate(zip_with({q_sql}, array({vals}), (x, y) -> x * y), "
-        "0L, (acc, v) -> acc + v)"
+        f"0L, (acc, v) -> acc + v{fin})"
     )
 
 
@@ -1150,11 +1131,8 @@ def ivf_topk_exact(
 
     pts = _prepare(df, vec_col, id_col, scale)
     pts = _assign_df(pts, state, assign).where(F.col("cid").isin(probes))
-    # one parsed expression; the unrolled dot keeps the fold's exact
-    # left-associated int64 term order (see _dot_lit_sql)
-    dist = F.expr(
-        f"{int(qxx)}L - 2L * ({_dot_lit_sql('__q__', qq)}) + __xx__"
-    )
+    # the query literals stay inside the fold (see _dot_fold_sql)
+    dist = F.expr(_dot_fold_sql("__q__", qq, f"{int(qxx)}L - 2L * acc + __xx__"))
     return (
         pts.select(F.col("__id__").alias(id_col), dist.alias("ivf_dist"))
         .orderBy(F.col("ivf_dist").asc(), F.col(id_col).asc())
@@ -1235,7 +1213,8 @@ def _select_probes(
     double, ties to smallest cid) — shared by the in-query paths and
     the persisted-index serving path so indexed ≡ direct is structural,
     not coincidental. Returns (probe cids, quantized query, its squared
-    norm)."""
+    norm). A query whose length differs from the router's raises a
+    ``ValueError`` naming both dimensions, before any job."""
     from math import floor as _floor
 
     qq = [_floor(x * scale + 0.5) for x in query]
@@ -1244,6 +1223,11 @@ def _select_probes(
     for cid, (s, n) in enumerate(state):
         if cid in dead:
             continue  # rebalanced-away cell: tombstoned, never probed
+        if len(s) != len(qq):
+            raise ValueError(
+                f"query dimension {len(qq)} does not match index "
+                f"dimension {len(s)}"
+            )
         num = n * n * qxx - 2 * n * sum(a * b for a, b in zip(qq, s)) + sum(
             v * v for v in s
         )
@@ -1447,7 +1431,7 @@ def sq_ivf_topk_indexed_batch(
     family. Query-id uniqueness is the caller's contract; duplicate ids
     collapse into one ranking."""
     from .index_commit import SQ_IVF
-    from .similarity import sq_quantize_exprs
+    from .similarity import _sq_score_expr, sq_quantize_exprs
 
     check_topk(nprobe, k)
     router = load_router(SQ_IVF, path)
@@ -1467,18 +1451,9 @@ def sq_ivf_topk_indexed_batch(
     probes = _probe_cids_expr(
         [sn for _, sn in live], nprobe, cids=[cid for cid, _ in live]
     )
-    # exact int64 code dot × stored scale × query scale — the same IEEE
-    # multiply order as _sq_score_topk, so scores are bit-identical
-    idot = F.aggregate(
-        F.zip_with(
-            F.col("qvec"),
-            F.col("__qcodes__"),
-            lambda a, b: a.cast("long") * b.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    score = idot.cast("double") * F.col("scale") * F.col("__qsc__")
+    # the single-query score with per-row query columns: one expression,
+    # so batch ≡ single is structural
+    score = _sq_score_expr("__qcodes__", "__qsc__", codes="qvec", scale="scale")
     return batch_topk(
         spark, Cells(path), router.id_col, qprep,
         ["__qid__", "__qsc__", "__qcodes__"], probes, query_id_col, out_id,

@@ -378,11 +378,14 @@ def minhash_signature_expr(shingles: Column, num_perm: int = 64) -> Column:
     interpreted-lambda fold costs ~1.9s over 5000 docs at sf0.1 — real but
     not worth a correctness-flaky path.
     """
-    perm_arr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _minhash_perms(num_perm)
-        ]
+    # one SQL parse for the whole literal (INT a/b), not ~5 py4j calls per
+    # permutation
+    perm_arr = F.expr(
+        "array({})".format(
+            ", ".join(
+                f"struct({a} AS a, {b} AS b)" for a, b in _minhash_perms(num_perm)
+            )
+        )
     )
     hs = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P)))
 
@@ -437,16 +440,20 @@ def _explode_bands(with_sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
     signature frame — the banding half of :func:`minhash_band_buckets`,
     shared with the shingle-store-fed index build."""
     rows_per_band = num_perm // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.element_at("__sig__", b * rows_per_band + r + 1) for r in range(rows_per_band)]
-                ).alias("bucket"),
+    # one SQL parse (INT band ids), not a Column tree per band
+    band_structs = F.expr(
+        "array({})".format(
+            ", ".join(
+                "struct({b} AS band, xxhash64({sig}) AS bucket)".format(
+                    b=b,
+                    sig=", ".join(
+                        f"element_at(__sig__, {b * rows_per_band + r + 1})"
+                        for r in range(rows_per_band)
+                    ),
+                )
+                for b in range(bands)
             )
-            for b in range(bands)
-        ]
+        )
     )
     return with_sig.select("__id__", F.explode(band_structs).alias("bb")).select(
         "__id__", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")

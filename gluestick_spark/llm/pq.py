@@ -345,16 +345,18 @@ def _rerank_dist_expr(qq: list[int], vec_col: str = "qvec"):
     """Exact int64 L2 between the stored quantized vector and the
     quantized query — the IVFADC+R refinement distance (Jégou et al.
     §V). Precision is the quantization grid (scale⁻¹ per coordinate),
-    i.e. the full-vector distance the PQ codes approximate."""
-    # unrolled squared-difference sum: identical left-associated int64
-    # term order to the zip_with/aggregate fold it replaces, but
-    # whole-stage-codegen-able and ONE py4j parse
-    terms = " + ".join(
-        f"(element_at({vec_col}, {i + 1}) - {int(v)}L) * "
-        f"(element_at({vec_col}, {i + 1}) - {int(v)}L)"
-        for i, v in enumerate(qq)
-    ) or "0L"
-    return F.expr(terms)
+    i.e. the full-vector distance the PQ codes approximate.
+
+    One ``aggregate(zip_with(...))`` fold with the query as an
+    ``ARRAY<BIGINT>`` literal inside it, summing ``(v_i − q_i)²`` left to
+    right in int64: higher-order functions are evaluated outside
+    generated code, so the rerank plan compiles once per shape, not
+    once per query."""
+    vals = ", ".join(f"{int(v)}L" for v in qq)
+    return F.expr(
+        f"aggregate(zip_with({vec_col}, CAST(array({vals}) AS ARRAY<BIGINT>), "
+        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+    )
 
 
 def _adc_topk(

@@ -202,24 +202,57 @@ def sq_topk(
     return _sq_score_topk(enc, id_col, qscale, qcodes, k)
 
 
+def _sq_score_expr(
+    qcodes: list[int] | str,
+    qscale: float | str,
+    codes: str = "__qv__",
+    scale: str = "__sc__",
+) -> Column:
+    """The SQ score ``(int_dot(codes, qcodes) · scale) · qscale`` as ONE
+    higher-order fold — the one scoring expression of single-query and
+    batched SQ serving, so single ≡ batch holds by construction.
+
+    ``qcodes``/``qscale`` are either one query (an int code list and its
+    float scale — the literals of :func:`quantize_query`) or the SQL names
+    of per-row query columns (``array<tinyint>`` codes and a double
+    scale, as the batched path carries them). ``codes``/``scale`` name
+    the stored codes and stored scale.
+
+    Every query-dependent literal sits inside the ``aggregate``: higher-
+    order functions are evaluated outside generated code, so the
+    single-query plan compiles once per shape and a new query reuses the
+    cached classes, and no generated method grows with the dimension.
+    The sum is the exact int64 fold ``((0 + t₁) + t₂) + …`` with
+    ``tᵢ = code_i · qcode_i``; the finish multiplies in the order
+    ``(idot · scale) · qscale``, the order the scores are pinned to. A
+    stored vector whose length differs from the query's raises instead
+    of scoring NULL (``zip_with`` pads the shorter array with NULL)."""
+    if isinstance(qcodes, str):
+        qdim = f"size({qcodes})"
+    else:
+        qdim = str(len(qcodes))
+        vals = ", ".join(f"{int(c)}L" for c in qcodes)
+        qcodes = f"CAST(array({vals}) AS ARRAY<BIGINT>)"
+        qscale = f"{float(qscale)!r}D"
+    return F.expr(
+        f"aggregate(zip_with({codes}, {qcodes}, "
+        "(a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x, "
+        f"acc -> IF(size({codes}) = {qdim}, "
+        f"CAST(acc AS DOUBLE) * {scale} * {qscale}, "
+        "raise_error(format_string("
+        f"'SQ query dimension %d does not match index dimension %d', "
+        f"{qdim}, size({codes})))))"
+    )
+
+
 def _sq_score_topk(
     enc: DataFrame, id_col: str, qscale: float, qcodes: list[int], k: int
 ) -> DataFrame:
-    """Shared SQ scoring tail: int64 code dot × the two scales, top-k.
-
-    The dot is unrolled SQL text (one parse, whole-stage codegen) with
-    the same left-associated int64 term order as the zip_with/aggregate
-    fold it replaces — bit-identical sums, including overflow order."""
-    idot = F.expr(
-        " + ".join(
-            f"CAST(element_at(__qv__, {i + 1}) AS BIGINT) * {int(c)}L"
-            for i, c in enumerate(qcodes)
-        )
-        or "0L"
-    )
-    score = idot.cast("double") * F.col("__sc__") * F.lit(float(qscale))
+    """Shared single-query SQ tail: :func:`_sq_score_expr` over
+    (``id_col``, ``__qv__``, ``__sc__``) rows, top-k by score desc, id
+    asc."""
     return (
-        enc.select(F.col(id_col), score.alias("score"))
+        enc.select(F.col(id_col), _sq_score_expr(qcodes, qscale).alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -855,8 +888,8 @@ def _probe_centroids_expr(
     trees cost thousands of py4j roundtrips — the r15 profile's
     driver-side tax). ``repr(float)``+``D`` renders each literal as the
     shortest roundtrip decimal, which Java parses back to the identical
-    double, and the unrolled dot keeps the fold's left-associated IEEE
-    order — probe choice is bit-identical. Returns ``array<int>``."""
+    double, and the dot folds left-associated in the same IEEE order —
+    probe choice is bit-identical. Returns ``array<int>``."""
     # left-fold x·x sum, same order as aggregate(transform(...))
     qn_sql = f"sqrt(aggregate(transform({qcol}, x -> x * x), 0.0D, (acc, x) -> acc + x))"
     structs = []

@@ -149,6 +149,53 @@ def test_minhash_verify_shingles_survivor_docs_once(spark):
     assert plan.count("concat_ws( , slice(") == 2
 
 
+def test_minhash_band_buckets_equal_column_built_form(spark):
+    """The permutation literal and the band structs are parsed from SQL
+    text in one call each; band buckets equal the Column-API form they
+    replaced (same INT literal types, same xxhash64 children), as a
+    multiset and as a schema."""
+    from gluestick_spark.llm.dedup import (
+        _MINHASH_P,
+        _minhash_perms,
+        minhash_band_buckets,
+    )
+    from gluestick_spark.llm.text import bind_row, shingles_expr
+
+    num_perm, bands = 64, 16
+    perms = F.array(*[
+        F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+        for a, b in _minhash_perms(num_perm)
+    ])
+    hs = F.transform(
+        F.array_distinct(shingles_expr(F.col("text"), 3)),
+        lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P)),
+    )
+    sig = bind_row(hs, lambda hsv: F.transform(perms, lambda p: F.array_min(
+        F.transform(hsv, lambda h: F.pmod(h * p["a"] + p["b"], F.lit(_MINHASH_P)))
+    )))
+    rows = num_perm // bands
+    band_structs = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(*[
+                F.element_at("__sig__", b * rows + r + 1) for r in range(rows)
+            ]).alias("bucket"),
+        )
+        for b in range(bands)
+    ])
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    want = docs.select(
+        F.col("doc_id").alias("__id__"), sig.alias("__sig__")
+    ).select("__id__", F.explode(band_structs).alias("bb")).select(
+        "__id__", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+    got = minhash_band_buckets(docs, "text", "doc_id", num_perm, bands)
+    assert got.schema == want.schema
+    assert got.count() == docs.count() * bands
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 # -------- SimHash -------------------------------------------------------
 
 

@@ -66,42 +66,6 @@ def test_resample_to_ratio_int_class_labels(spark):
     assert counts == {0: 30, 1: 15}
 
 
-# -------------------------------- ADVICE 4: sq_ivf_append crash bracket ---
-
-
-def test_sq_ivf_append_commit_bracket(spark, tmp_dir):
-    """A missing _ROUTER.json (torn BUILD) refuses loudly in serving and
-    append; a successful append leaves the router in place. (Append-torn
-    state is owned by the _APPEND_INPROGRESS manifest since r11 — see
-    test_append_manifest_* below.)"""
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_append,
-        sq_ivf_topk_indexed,
-    )
-
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    mid = emb.agg(F.expr("percentile_approx(vec_id, 0.5)")).first()[0]
-    h1 = emb.where(F.col("vec_id") <= mid)
-    h2 = emb.where(F.col("vec_id") > mid)
-    q = list(emb.first()["embedding"])
-    path = os.path.join(tmp_dir, "idx")
-    materialize_sq_ivf(h1, "embedding", "vec_id", path, n_clusters=4)
-    router = os.path.join(path, "_ROUTER.json")
-
-    # successful append re-commits the marker and serves the new rows
-    sq_ivf_append(h2, "embedding", "vec_id", path)
-    assert os.path.isfile(router)
-    assert sq_ivf_topk_indexed(spark, path, q, k=3, nprobe=4).count() == 3
-
-    # torn append: marker gone mid-append -> everything refuses loudly
-    os.remove(router)
-    with pytest.raises(ValueError, match="uncommitted"):
-        sq_ivf_topk_indexed(spark, path, q, k=3, nprobe=4)
-    with pytest.raises(ValueError, match="uncommitted"):
-        sq_ivf_append(h2, "embedding", "vec_id", path)
-
-
 # ------------------------------------ VERDICT 2: persisted IVF x PQ index --
 
 
@@ -263,50 +227,6 @@ def test_append_manifest_rollback_unit(tmp_dir):
     begin_append(idx)
     commit_append(idx)
     require_committed(idx, "test")  # no raise
-
-
-def test_sq_ivf_torn_append_self_heals(spark, tmp_dir):
-    """ADVICE r10: a torn append (sidecar present, unmanifested cell
-    files) refuses serving loudly, and a RETRIED append rolls the torn
-    batch back and re-appends — final index ≡ the clean-append index,
-    no rebuild needed."""
-    import json
-    import shutil
-
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_append,
-        sq_ivf_topk_indexed,
-    )
-    from gluestick_spark.llm.index_commit import SIDECAR, _list_cell_files
-
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    mid = emb.agg(F.expr("percentile_approx(vec_id, 0.5)")).first()[0]
-    h1 = emb.where(F.col("vec_id") <= mid)
-    h2 = emb.where(F.col("vec_id") > mid)
-    q = list(h2.first()["embedding"])
-    path = os.path.join(tmp_dir, "idx")
-    materialize_sq_ivf(h1, "embedding", "vec_id", path, n_clusters=4)
-    pre_files = _list_cell_files(os.path.join(path, "cells"))
-
-    sq_ivf_append(h2, "embedding", "vec_id", path)
-    want = [r["vec_id"] for r in
-            sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4).collect()]
-
-    # simulate: that append TORE — sidecar holds the pre-append manifest,
-    # so every h2 cell file is unmanifested
-    with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump({"files": pre_files}, f)
-    with pytest.raises(ValueError, match="in-progress or torn"):
-        sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4)
-
-    # retried append self-heals: rollback to pre_files, then re-append
-    sq_ivf_append(h2, "embedding", "vec_id", path)
-    got = [r["vec_id"] for r in
-           sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4).collect()]
-    assert got == want
-    assert not os.path.exists(os.path.join(path, SIDECAR))
-    shutil.rmtree(path)
 
 
 def test_pq_ivf_torn_append_self_heals(spark, tmp_dir):

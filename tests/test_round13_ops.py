@@ -160,81 +160,6 @@ def _topk_ids(df):
     return [tuple(r) for r in df.collect()]
 
 
-def test_sq_ivf_rebalance_splits_and_serves(spark, tmp_dir):
-    """Forced-skew append sequence → rebalance: the hot cell splits, the
-    nprobe=all probe stays identical to exhaustive SQ scoring (no row
-    lost or duplicated through the move), partition pruning still rides
-    the scan, and append-after-rebalance routes into live cells only."""
-    import json
-    import os
-
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_append,
-        sq_ivf_topk_indexed,
-    )
-    from gluestick_spark.llm.rebalance import cell_sizes, sq_ivf_rebalance
-    from gluestick_spark.llm.similarity import quantize_embeddings, sq_topk
-
-    emb = _skewed_embeddings(spark)
-    h1 = emb.where("vec_id < 100")
-    h2 = emb.where("vec_id >= 100")
-    path = os.path.join(tmp_dir, "sq_idx")
-    # small router trained on the early slice, then a skewed append
-    materialize_sq_ivf(h1, "embedding", "vec_id", path, n_clusters=4)
-    sq_ivf_append(h2, "embedding", "vec_id", path)
-
-    sizes0 = cell_sizes(spark, os.path.join(path, "cells"))
-    q = [1.0] * 8  # query in the hot region
-    n_cells0 = len(json.load(open(os.path.join(path, "_ROUTER.json")))["state"])
-    before = _topk_ids(sq_ivf_topk_indexed(spark, path, q, k=10, nprobe=n_cells0))
-
-    rep = sq_ivf_rebalance(spark, path, max_cell_rows=120, split_factor=2)
-    assert rep["split"], rep  # the hot cell must have split
-    meta = json.load(open(os.path.join(path, "_ROUTER.json")))
-    assert sorted(meta["dead"]) == rep["split"]
-    sizes1 = cell_sizes(spark, os.path.join(path, "cells"))
-    assert sum(sizes1.values()) == sum(sizes0.values())  # content preserved
-    assert max(sizes1.values()) < max(sizes0.values())  # skew reduced
-    for cid in rep["split"]:  # dead dirs gone
-        assert cid not in sizes1
-
-    # nprobe=all (live) probe identical before/after the move AND equal
-    # to exhaustive int8 scoring — the oracle-row contract
-    n_live = len(meta["state"]) - len(meta["dead"])
-    after = _topk_ids(sq_ivf_topk_indexed(spark, path, q, k=10, nprobe=n_live))
-    assert after == before
-    enc = quantize_embeddings(emb, "embedding", "vec_id")
-    from gluestick_spark.llm.similarity import _sq_score_topk, quantize_query
-
-    qs, qc = quantize_query(q)
-    brute = _topk_ids(_sq_score_topk(
-        enc.select(F.col("vec_id"), F.col("scale").alias("__sc__"),
-                   F.col("qvec").alias("__qv__")), "vec_id", qs, qc, 10))
-    assert after == brute
-
-    # pruned probe still prunes: nprobe=1 reads one cell directory
-    plan = sq_ivf_topk_indexed(spark, path, q, k=3, nprobe=1)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-    # append-after-rebalance: new rows land in LIVE cells only and the
-    # grown index still matches exhaustive scoring at nprobe=all
-    extra = spark.createDataFrame(
-        [(1000 + i, [1.0 + 0.0005 * i] * 8) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    sq_ivf_append(extra, "embedding", "vec_id", path)
-    sizes2 = cell_sizes(spark, os.path.join(path, "cells"))
-    assert all(cid not in sizes2 for cid in meta["dead"])
-    grown = _topk_ids(sq_ivf_topk_indexed(spark, path, q, k=10, nprobe=n_live))
-    enc2 = quantize_embeddings(emb.unionByName(extra), "embedding", "vec_id")
-    brute2 = _topk_ids(_sq_score_topk(
-        enc2.select(F.col("vec_id"), F.col("scale").alias("__sc__"),
-                    F.col("qvec").alias("__qv__")), "vec_id", qs, qc, 10))
-    assert grown == brute2
-
-
 def test_pq_ivf_rebalance_splits_and_serves(spark, tmp_dir):
     """PQ family: rebalance preserves the code payload verbatim — the
     nprobe=all ADC ranking is identical before and after the split."""

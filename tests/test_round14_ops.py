@@ -69,73 +69,6 @@ def _emb(spark, n=300, dim=8):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_sq_ivf_delete_serves_survivors_and_vacuum_purges(spark, tmp_dir):
-    """Delete propagation (VERDICT r13 #2): tombstoned ids vanish from
-    serving immediately; vacuum physically purges exactly the affected
-    cells, drops fully-dead ones, clears the tombstones, and the probe
-    answer is unchanged before/after vacuum — and equals exhaustive SQ
-    scoring over the surviving rows."""
-    import os
-
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_append,
-        sq_ivf_topk_indexed,
-    )
-    from gluestick_spark.llm.index_delete import (
-        TOMBSTONES,
-        sq_ivf_delete,
-        tombstones,
-        vacuum_deleted,
-    )
-    from gluestick_spark.llm.similarity import sq_topk
-
-    emb = _emb(spark)
-    path = os.path.join(tmp_dir, "sq_idx")
-    materialize_sq_ivf(
-        emb.where("vec_id < 100"), "embedding", "vec_id", path, n_clusters=4
-    )
-    sq_ivf_append(emb.where("vec_id >= 100"), "embedding", "vec_id", path)
-
-    q = [1.0] * 8
-    # plant the delete set to INCLUDE the full corpus's top-3 — the test
-    # cannot pass by accident
-    top_full = [r["vec_id"] for r in sq_topk(emb, "embedding", "vec_id", q, 3).collect()]
-    doom_pred = F.col("vec_id").isin(top_full) | (F.col("vec_id") % 7 == 3)
-    doomed = emb.where(doom_pred).select("vec_id")
-    n_doomed = doomed.count()
-    assert sq_ivf_delete(spark, path, doomed) == n_doomed
-    # idempotent re-delete
-    assert sq_ivf_delete(spark, path, doomed) == n_doomed
-
-    survivors = emb.where(~doom_pred)
-    brute = [
-        tuple(r) for r in sq_topk(survivors, "embedding", "vec_id", q, 10).collect()
-    ]
-    got = [
-        tuple(r)
-        for r in sq_ivf_topk_indexed(spark, path, q, k=10, nprobe=4).collect()
-    ]
-    assert got == brute
-    assert not any(v in top_full for v, _ in got)
-
-    # vacuum: physical purge, atomic per-cell swap, tombstones cleared
-    rep = vacuum_deleted(spark, path)
-    assert rep["rows_purged"] == n_doomed
-    assert tombstones(spark, path, "vec_id") is None
-    assert not os.path.isdir(os.path.join(path, TOMBSTONES))
-    left = spark.read.parquet(os.path.join(path, "cells"))
-    assert left.where(doom_pred).count() == 0
-    assert left.count() == 300 - n_doomed
-    got2 = [
-        tuple(r)
-        for r in sq_ivf_topk_indexed(spark, path, q, k=10, nprobe=4).collect()
-    ]
-    assert got2 == brute
-    # vacuum with nothing to do is a no-op
-    assert vacuum_deleted(spark, path)["rows_purged"] == 0
-
-
 def test_ivf_delete_fully_dead_cell_and_plain_family(spark, tmp_dir):
     """Plain-family delete: wiping every row of one cell drops its dir
     at vacuum; serving (cosine top-k) equals brute force over survivors

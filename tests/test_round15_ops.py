@@ -309,33 +309,6 @@ def test_rrf_fuse_per_query_equals_per_query_single(spark):
         assert per == single, qid
 
 
-def test_sq_batch_keeps_partition_pruning(spark, tmp_dir):
-    """The batched cells scan still carries the cid PartitionFilter —
-    batching must not cost the single-query path's pruning."""
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_topk_indexed_batch,
-    )
-
-    emb = _emb(spark, n=200)
-    path = os.path.join(tmp_dir, "bprune")
-    materialize_sq_ivf(emb, "embedding", "vec_id", path, n_clusters=4)
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    top = sq_ivf_topk_indexed_batch(
-        spark, path, queries, "embedding", "query_id", k=5, nprobe=2
-    )
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    pruned = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln
-        and "PartitionFilters:" in ln
-        and "cid" in ln.split("PartitionFilters:")[1].split("]")[0]
-    ]
-    assert pruned, plan
-
-
 # ---------------- checksum-validated PII (VERDICT r14 #7) ----------
 
 

@@ -1,21 +1,14 @@
-"""Round-8 late additions: label propagation communities, int8-SQ ANN
-search, temperature (alpha) corpus sampling, centroid-distance outliers."""
+"""Round-8 late additions: label propagation communities, temperature
+(alpha) corpus sampling, centroid-distance outliers. (The int8-SQ ANN
+tests live in tests/test_sq_serving.py.)"""
 
 from __future__ import annotations
-
-import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from gluestick_spark.llm.cluster import centroid_outliers
 from gluestick_spark.llm.sampling import alpha_sample
-from gluestick_spark.llm.similarity import (
-    quantize_embeddings,
-    quantize_query,
-    sq_quantize_exprs,
-    sq_topk,
-)
 from gluestick_spark.operators.graph import label_propagation
 
 
@@ -94,95 +87,6 @@ def test_lpa_no_window_in_plan(spark):
         .toString()
     )
     assert "Window" not in plan
-
-
-# ------------------------------------------------------------ sq_topk ----
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_sq_topk_ordering_and_scores(spark):
-    e = _emb(
-        spark,
-        [
-            (0, [1.0, 0.0]),     # query: aligned with itself
-            (1, [2.0, 0.0]),     # same direction, bigger norm -> top score
-            (2, [0.0, 1.0]),     # orthogonal -> 0
-            (3, [-1.0, 0.0]),    # opposite -> negative
-        ],
-    )
-    got = sq_topk(e, "embedding", "vec_id", [1.0, 0.0], k=4).collect()
-    ids = [r["vec_id"] for r in got]
-    assert ids[0] == 1 and set(ids[:2]) == {0, 1}
-    scores = {r["vec_id"]: r["score"] for r in got}
-    assert scores[1] == pytest.approx(2.0, abs=0.02)
-    assert scores[0] == pytest.approx(1.0, abs=0.02)
-    assert scores[2] == pytest.approx(0.0, abs=1e-12)
-    assert scores[3] == pytest.approx(-1.0, abs=0.02)
-
-
-def test_sq_topk_zero_vectors_score_zero(spark):
-    e = _emb(spark, [(1, [0.0, 0.0]), (2, [1.0, 1.0])])
-    scores = {
-        r["vec_id"]: r["score"]
-        for r in sq_topk(e, "embedding", "vec_id", [1.0, 1.0], k=2).collect()
-    }
-    assert scores[1] == 0.0
-    # zero QUERY kills every score too
-    all_zero = sq_topk(e, "embedding", "vec_id", [0.0, 0.0], k=2).collect()
-    assert all(r["score"] == 0.0 for r in all_zero)
-
-
-def test_quantize_query_matches_engine_quantizer(spark):
-    rng = random.Random(5)
-    vecs = [
-        [0.37, -1.92, 0.003, 1.92],
-        [0.0] * 4,  # zero vector: scale 0, all-zero codes
-        [-0.5, -3.25, -1e-9, -2.0],  # all negative
-        [-2.5, 2.5, 1.25, -0.01],  # both ends of the ±127 clamp
-    ] + [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(200)]
-    e = _emb(spark, list(enumerate(vecs)))
-    rows = {
-        r["vec_id"]: r
-        for r in quantize_embeddings(e, "embedding", "vec_id").collect()
-    }
-    assert len(rows) == len(vecs)
-    for i, vec in enumerate(vecs):
-        scale, codes = quantize_query(vec)
-        assert rows[i]["scale"] == pytest.approx(scale, abs=0.0)  # bit-identical
-        assert [int(c) for c in rows[i]["qvec"]] == codes
-    assert quantize_query(vecs[1]) == (0.0, [0, 0, 0, 0])
-    assert min(quantize_query(vecs[2])[1]) == -127
-    assert quantize_query(vecs[3])[1][:2] == [-127, 127]
-
-
-def test_sq_encoder_folds_row_max_once(spark):
-    # Lambda bodies get no common-subexpression elimination: a row max
-    # referenced inside the per-element lambda is re-folded for every
-    # element (O(d²) per row). It must be bound once, outside it.
-    _, codes = sq_quantize_exprs(F.col("embedding"))
-    plan = (
-        _emb(spark, [(1, [1.0, -2.0])])
-        .select(codes.alias("q"))
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert plan.count("array_max(") == 1
-
-
-def test_sq_topk_no_shuffle_plan(spark):
-    e = _emb(spark, [(i, [float(i), 1.0]) for i in range(20)])
-    plan = (
-        sq_topk(e, "embedding", "vec_id", [1.0, 0.0], k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange hashpartitioning" not in plan
 
 
 # -------------------------------------------------------- alpha_sample ----
@@ -666,24 +570,6 @@ def test_streaming_url_dedup_state_and_nulls(spark, tmp_dir):
     assert got[1] == "https://s.com/p?id=1" and got[2] is None
 
 
-def test_sq_indexed_equals_direct(spark, tmp_dir):
-    import os
-
-    from gluestick_spark.llm.similarity import materialize_sq, sq_topk_indexed
-
-    e = _emb(spark, [(i, [float((i * 7) % 13), float((i * 3) % 5), 1.0])
-                     for i in range(40)])
-    q = [1.0, 2.0, 0.5]
-    direct = sq_topk(e, "embedding", "vec_id", q, k=8).collect()
-    path = os.path.join(tmp_dir, "sqidx")
-    materialize_sq(e, "embedding", path)
-    indexed = sq_topk_indexed(spark, path, q, k=8).collect()
-    assert [tuple(r) for r in direct] == [tuple(r) for r in indexed]
-    # the index stores int8 codes + one scale, never the float vectors
-    cols = set(spark.read.parquet(path).columns)
-    assert cols == {"vec_id", "scale", "qvec"}
-
-
 # --------------------------------------------------------- html clean ----
 
 
@@ -913,45 +799,3 @@ def test_normalize_phone_default_cc_param(spark):
     got = _norm_phones(spark, ["040 1234567"], default_cc="49",
                        national_len=10)
     assert got == ["+490401234567"]
-
-
-# ---------------------------------------------------------- sq_ivf_topk ----
-
-
-def test_sq_ivf_subset_of_full_sq(spark):
-    from gluestick_spark.llm.cluster import sq_ivf_topk
-
-    # two well-separated clusters; query sits in cluster A — with
-    # nprobe=1 the pruned ranking must be a prefix-consistent subset of
-    # the full SQ ranking restricted to cluster A
-    rows = [(i, [10.0 + (i % 5) * 0.1, 10.0]) for i in range(10)]
-    rows += [(100 + i, [-10.0 - (i % 5) * 0.1, -10.0]) for i in range(10)]
-    e = _emb(spark, rows)
-    q = [10.0, 10.0]
-    pruned = sq_ivf_topk(e, "embedding", "vec_id", q, k=5,
-                         n_clusters=2, nprobe=1, iters=2)
-    ids = [r["vec_id"] for r in pruned.collect()]
-    assert len(ids) == 5 and all(i < 100 for i in ids)  # far cluster pruned
-    full = sq_topk(e.where(F.col("vec_id") < 100), "embedding", "vec_id", q, k=5)
-    assert ids == [r["vec_id"] for r in full.collect()]  # identical ranking
-
-
-def test_sq_ivf_nprobe_all_equals_sq_topk(spark):
-    from gluestick_spark.llm.cluster import sq_ivf_topk
-
-    rows = [(i, [float((i * 7) % 13), float((i * 3) % 5), 1.0])
-            for i in range(30)]
-    e = _emb(spark, rows)
-    q = [1.0, 2.0, 0.5]
-    ivf = sq_ivf_topk(e, "embedding", "vec_id", q, k=8,
-                      n_clusters=4, nprobe=4, iters=1)
-    full = sq_topk(e, "embedding", "vec_id", q, k=8)
-    assert [tuple(r) for r in ivf.collect()] == [tuple(r) for r in full.collect()]
-
-
-def test_sq_ivf_validates(spark):
-    from gluestick_spark.llm.cluster import sq_ivf_topk
-
-    e = _emb(spark, [(1, [1.0, 0.0])])
-    with pytest.raises(ValueError):
-        sq_ivf_topk(e, "embedding", "vec_id", [1.0, 0.0], nprobe=0)

@@ -4,7 +4,6 @@ complementing the per-op hand-computed tests."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -21,33 +20,6 @@ def test_pivot_melt_roundtrip(spark):
             df.groupBy("k", "t").agg(F.sum("v").alias("s")).collect()}
     got = {(r["k"], r["t"]): r["v"] for r in long.collect()}
     assert got == want
-
-
-def test_sq_quantization_error_bound(spark):
-    """Dequantized values are within scale/2 of the originals — the
-    int8 quantizer's defining guarantee (floor(x/s + 0.5) rounds to the
-    nearest code, codes clamp only beyond |x| = amax)."""
-    from gluestick_spark.llm.similarity import (
-        dequantize_expr,
-        quantize_embeddings,
-    )
-
-    rows = [(i, [((i * 37 + j * 11) % 200 - 100) / 25.0 for j in range(16)])
-            for i in range(30)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    enc = quantize_embeddings(df, "embedding", "vec_id")
-    joined = df.join(enc, "vec_id").select(
-        "vec_id", "scale",
-        F.arrays_zip(
-            F.col("embedding"), dequantize_expr(F.col("qvec"), F.col("scale"))
-        ).alias("z"),
-    )
-    bad = joined.select(
-        F.filter(
-            "z", lambda p: F.abs(p["embedding"] - p["1"]) > F.col("scale") / 2 + F.lit(1e-12)
-        ).alias("viol")
-    ).where(F.size("viol") > 0)
-    assert bad.count() == 0
 
 
 def test_containment_dominates_jaccard(spark):

@@ -1,6 +1,7 @@
 """Round-9 fixes and additions: versioned-table per-version commit
 markers (ADVICE r8 medium x2), resample_to_ratio zero-class contract.
-(The band-index commit-marker tests live in tests/test_near_dups.py.)"""
+(The band-index commit-marker tests live in tests/test_near_dups.py, the
+persisted IVF x SQ index tests in tests/test_sq_serving.py.)"""
 
 from __future__ import annotations
 
@@ -102,85 +103,6 @@ def test_resample_to_ratio_still_exact_on_present_classes(spark):
     counts = {r["c"]: r["n"] for r in out.groupBy("c").agg(F.count("*").alias("n")).collect()}
     # n_a=60,w=3 -> 20; n_b=40,w=2 -> 20; n_c=20,w=1 -> 20; u=20
     assert counts == {"a": 60, "b": 40, "c": 20}
-
-
-# --------------------------------------------- persisted IVF x SQ index ---
-
-
-def test_sq_ivf_index_requires_router_commit(spark, tmp_dir):
-    """_ROUTER.json is written LAST (atomic replace) — a torn build has
-    no router and serving refuses loudly instead of probing a
-    half-written index (the band-index lesson applied)."""
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_topk_indexed,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = list(emb.first()["embedding"])
-    path = os.path.join(tmp_dir, "idx")
-    materialize_sq_ivf(emb, "embedding", "vec_id", path, n_clusters=4)
-    assert sq_ivf_topk_indexed(spark, path, q, k=3, nprobe=2).count() == 3
-    os.remove(os.path.join(path, "_ROUTER.json"))
-    with pytest.raises(ValueError, match="uncommitted"):
-        sq_ivf_topk_indexed(spark, path, q, k=3, nprobe=2)
-
-
-def test_sq_ivf_append_serves_like_rebuild(spark, tmp_dir):
-    """sq_ivf_append assigns the new batch against the FROZEN persisted
-    router and appends codes into the cell directories — serving the
-    grown index must equal in-query sq_ivf_topk over the union with the
-    same router geometry... which a rebuild can't give (it would retrain
-    on the union), so the honest check is: append(half2) onto
-    index(half1) ≡ an index built from half1's router applied to both
-    halves = every half2 vector present, scored identically to its
-    standalone quantization."""
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_append,
-        sq_ivf_topk_indexed,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    mid = emb.agg(F.expr("percentile_approx(vec_id, 0.5)")).first()[0]
-    h1, h2 = emb.where(F.col("vec_id") <= mid), emb.where(F.col("vec_id") > mid)
-    q = list(emb.first()["embedding"])
-    path = os.path.join(tmp_dir, "idx")
-    materialize_sq_ivf(h1, "embedding", "vec_id", path, n_clusters=4)
-    before = {r["vec_id"] for r in
-              sq_ivf_topk_indexed(spark, path, q, k=50, nprobe=4).collect()}
-    sq_ivf_append(h2, "embedding", "vec_id", path)
-    after = sq_ivf_topk_indexed(spark, path, q, k=10**6, nprobe=4)
-    got = {r["vec_id"]: r["score"] for r in after.collect()}
-    # with all cells probed, EVERY vector of both halves is served
-    assert set(got) == {r["vec_id"] for r in emb.collect()}
-    assert before <= set(got)
-    # appended vectors score exactly as their standalone SQ quantization
-    from gluestick_spark.llm.similarity import sq_topk
-
-    direct = {r["vec_id"]: r["score"]
-              for r in sq_topk(h2, "embedding", "vec_id", q, k=10**6).collect()}
-    assert all(got[v] == s for v, s in direct.items())
-    # appending to a torn index refuses loudly
-    os.remove(os.path.join(path, "_ROUTER.json"))
-    with pytest.raises(ValueError, match="uncommitted"):
-        sq_ivf_append(h2, "embedding", "vec_id", path)
-
-
-def test_sq_ivf_index_empty_corpus(spark, tmp_dir):
-    from gluestick_spark.llm.cluster import (
-        materialize_sq_ivf,
-        sq_ivf_topk_indexed,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).where(F.lit(False))
-    path = os.path.join(tmp_dir, "idx")
-    materialize_sq_ivf(emb, "embedding", "vec_id", path, n_clusters=4)
-    out = sq_ivf_topk_indexed(spark, path, [0.1, 0.2], k=3, nprobe=2)
-    assert out.count() == 0
-    assert out.columns == ["vec_id", "score"]
 
 
 # --------------------------------------------- corr_matrix width split ----
