@@ -12,16 +12,14 @@ protocols describe put indexes/snapshots on object storage, where a
 backend must provide the SAME primitives with the SAME atomicity
 guarantees or the protocols' crash-safety claims are void:
 
-- ``replace(src, dst)`` MUST atomically overwrite ``dst`` (POSIX
-  rename(2) semantics) — it is the publication step of every protocol.
-  Plain S3 has no atomic rename: a copy+delete ``replace`` would re-open
-  exactly the torn-pointer windows these protocols close. Implement it
-  over a conditional-put (If-None-Match/ETag) commit object, or use a
-  real table format's commit log instead.
+- ``write_text_atomic(p, s)`` MUST publish ``s`` whole or not at all
+  (tmp + POSIX rename(2) on the local default) — it writes every commit
+  marker and append sidecar. Plain S3 has no atomic rename: a
+  copy+delete would re-open exactly the torn-marker windows these
+  protocols close. Implement it as a conditional put (If-None-Match /
+  ETag), or use a real table format's commit log instead.
 - ``mkdir(p)`` MUST be an exclusive claim: fail iff ``p`` exists
   (the versioned writer's concurrency device).
-- ``append_line(p, line)`` MUST be a single serialized append (the
-  ``_COMMITS`` log write — never read-modify-rewrite).
 - ``rename(src, dst)`` moves a file or a whole directory tree; callers
   guarantee ``dst`` does not exist (move-aside protocols).
 
@@ -34,9 +32,9 @@ the seam owns only the driver-side control files around them.
 Two primitives built on the seam carry every persisted store:
 
 - **Committed stores** (ANN indexes, band/substring indexes, SemDeDup
-  reference, gram state, corpus sketch) publish a meta JSON marker last
-  — :mod:`gluestick_spark.llm.index_commit` owns that protocol and the
-  per-store marker names.
+  reference, gram state, corpus sketch, versioned-table versions)
+  publish a meta JSON marker last — :mod:`gluestick_spark.llm.
+  index_commit` owns that protocol and the per-store marker names.
 - **Directory rewrites** (``compact_files``, bucketed stream-state and
   sketch-log/fingerprint compaction, per-cell vacuum, snapshot publish)
   publish a rewritten tree with :func:`swap_dir`: ``renameat2(RENAME_EXCHANGE)`` on the local
@@ -101,11 +99,6 @@ class StateFS:
         new, never a torn file."""
         raise NotImplementedError
 
-    def append_line(self, p: str, line: str) -> None:
-        """Single serialized append of ``line`` (caller includes no
-        newline; one is added)."""
-        raise NotImplementedError
-
     def remove(self, p: str) -> None:
         raise NotImplementedError
 
@@ -117,17 +110,13 @@ class StateFS:
         """Move a file or directory tree; ``dst`` must not exist."""
         raise NotImplementedError
 
-    def replace(self, src: str, dst: str) -> None:
-        """ATOMIC overwrite of file ``dst`` with file ``src``."""
-        raise NotImplementedError
-
     def rmtree(self, p: str, ignore_errors: bool = False) -> None:
         raise NotImplementedError
 
 
 class LocalFS(StateFS):
-    """POSIX-local implementation — rename/replace atomicity comes from
-    the kernel; this is the default backend everywhere."""
+    """POSIX-local implementation — rename atomicity comes from the
+    kernel; this is the default backend everywhere."""
 
     def exists(self, p: str) -> bool:
         return os.path.exists(p)
@@ -167,13 +156,6 @@ class LocalFS(StateFS):
             f.write(s)
         os.replace(tmp, p)
 
-    def append_line(self, p: str, line: str) -> None:
-        fd = os.open(p, os.O_WRONLY | os.O_CREAT | os.O_APPEND, 0o644)
-        try:
-            os.write(fd, f"{line}\n".encode())
-        finally:
-            os.close(fd)
-
     def remove(self, p: str) -> None:
         os.remove(p)
 
@@ -182,9 +164,6 @@ class LocalFS(StateFS):
 
     def rename(self, src: str, dst: str) -> None:
         os.rename(src, dst)
-
-    def replace(self, src: str, dst: str) -> None:
-        os.replace(src, dst)
 
     def rmtree(self, p: str, ignore_errors: bool = False) -> None:
         shutil.rmtree(p, ignore_errors=ignore_errors)
@@ -301,12 +280,6 @@ class MemoryFS(StateFS):
     def write_text_atomic(self, p: str, s: str) -> None:
         self.write_text(p, s)
 
-    def append_line(self, p: str, line: str) -> None:
-        p = self._n(p)
-        self._parent_ok(p)
-        self.files[p] = self.files.get(p, "") + f"{line}\n"
-        self._touch(p)
-
     def remove(self, p: str) -> None:
         p = self._n(p)
         if p not in self.files:
@@ -346,13 +319,6 @@ class MemoryFS(StateFS):
                 nf = dst + f[len(src):]
                 self.files[nf] = self.files.pop(f)
                 self.mtimes[nf] = self.mtimes.pop(f, 0.0)
-
-    def replace(self, src: str, dst: str) -> None:
-        src, dst = self._n(src), self._n(dst)
-        if src not in self.files:
-            raise FileNotFoundError(src)
-        self.files[dst] = self.files.pop(src)
-        self.mtimes[dst] = self.mtimes.pop(src, 0.0)
 
     def rmtree(self, p: str, ignore_errors: bool = False) -> None:
         p = self._n(p)

@@ -906,11 +906,12 @@ def materialize_semdedup_ref(
     cells partitioned by cid (:mod:`gluestick_spark.llm.ivf_cells`) —
     the store-once/serve-many form of :func:`semdedup_against`'s
     reference half. ``max_cluster_size`` is applied AT BUILD: capped
-    reference cells (:func:`_capped_cells`) are not written and their
-    cids are recorded in the meta, so serving knows corpus rows routed
-    there are UNJUDGED (the semdedup cap contract — never a silent
-    keep). A bad cap is refused before the committed reference is
-    touched. The meta JSON is written LAST — it is the commit marker
+    reference cells (:func:`_capped_cells`) are not written, and the
+    meta records the cap and every cell's count, from which serving
+    derives the capped cells, so it knows corpus rows routed there are
+    UNJUDGED (the semdedup cap contract — never a silent keep). A bad
+    cap is refused before the committed reference is touched. The meta
+    JSON is written LAST — it is the commit marker
     (:mod:`gluestick_spark.llm.index_commit`); a torn build refuses to
     serve, and a rebuild first rolls back any torn
     :func:`append_semdedup_ref` batch."""
@@ -920,7 +921,6 @@ def materialize_semdedup_ref(
         reference, vec_col, id_col, k=k, iters=iters, scale=scale,
         return_state=True, assign=assign,
     )
-    capped: list[int] = []
     counts: list[int] = []
     schemas = {}
     if state:
@@ -942,7 +942,6 @@ def materialize_semdedup_ref(
         "iters": int(iters),
         "id_col": id_col,
         "assign": assign,
-        "capped": capped,
         "counts": counts,
         "max_cluster_size": (
             int(max_cluster_size) if max_cluster_size is not None else None
@@ -975,9 +974,7 @@ def append_semdedup_ref(
     ``max_cluster_size`` stops being judged, an empty cell that gains
     rows starts, exactly as a rebuild over the union with the same
     router would decide. (Build-capped cells' rows were never written,
-    so disk alone can never be the count of record.) A capped reference
-    whose meta predates the counts field refuses to append — rebuild
-    once to record them.
+    so disk alone can never be the count of record.)
 
     Crash safety is the shared ``_APPEND_INPROGRESS`` bracket
     (:func:`~gluestick_spark.llm.ivf_cells.append_bracket`): a torn
@@ -991,12 +988,6 @@ def append_semdedup_ref(
         raise ValueError(
             f"semdedup reference at {path} has an empty router — rebuild "
             "with materialize_semdedup_ref on a non-empty reference"
-        )
-    if meta.get("max_cluster_size") is not None and "counts" not in meta:
-        raise ValueError(
-            f"semdedup reference at {path} was built with a cap by a "
-            "pre-append version (no per-cell counts in the meta) — "
-            "rebuild once with materialize_semdedup_ref to record them"
         )
     # feeds the count aggregate AND the append write
     pts = pin(
@@ -1027,12 +1018,11 @@ def append_semdedup_ref(
 def _semdedup_capped(path: str, meta: dict) -> set[int]:
     """The reference's CURRENT capped-cell set: build counts + every
     committed append ledger, judged by :func:`_capped_cells` against
-    the persisted cap. A pre-counts meta (or an uncapped build) falls
-    back to the frozen build-time list."""
-    cap, counts = meta.get("max_cluster_size"), meta.get("counts")
-    if cap is None or counts is None:
-        return set(meta.get("capped", []))
-    totals = list(counts)
+    the persisted cap; an uncapped build caps nothing."""
+    cap = meta["max_cluster_size"]
+    if cap is None:
+        return set()
+    totals = list(meta["counts"])
     ledger = os.path.join(Cells(path).root, _SSD_LEDGER)
     if LOCAL_FS.isdir(ledger):
         for name in sorted(LOCAL_FS.listdir(ledger)):

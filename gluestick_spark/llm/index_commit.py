@@ -30,6 +30,9 @@ stable on-disk contracts):
   ``_SEMDEDUP_META.json``
 - gram state (``materialize_gram_state``): ``_GRAM_META.json``
 - reference sketch (``materialize_corpus_sketch``): ``_SKETCH_META.json``
+- versioned table version (``operators/versioned.py:write_versioned``,
+  ``delete_where``): ``v=N/_COMMITTED``, one per version; a delta's
+  marker also names its ``base`` version and ``keys``
 
 Band and substring indexes written before this layout also carry a
 ``_META.json`` copy of the same JSON; it is ignored.
@@ -37,15 +40,15 @@ Band and substring indexes written before this layout also carry a
 The marker also records, under ``schemas``, the schema of each part
 directory the build wrote (``cells``, ``bands``, ``shingles``,
 ``windows``, ``docs``, ``ref_grams``, ``bloom_words.parquet``,
-``sketch.parquet``), as an inferring read of that directory returns it
-(:func:`schema_entry`). The entry is part of the marker's on-disk
-contract: :func:`read_store` is the one read of a committed store and
-types the scan from it, so a read runs no footer-inference job. An
-explicit schema reads a column the files lack as NULL, so the guard sits
-on the write side: every append compares its frame with the recorded
-entry before it writes (:func:`check_append`). A store committed before
-schemas were recorded has no entry and is read by inference, in
-:func:`read_store` only.
+``sketch.parquet``, a version's ``data`` or ``deletes.parquet``), as an
+inferring read of that directory returns it (:func:`schema_entry`). The
+entry is part of the marker's on-disk contract: :func:`read_store` is
+the one read of a committed store and types the scan from it, so a read
+runs no footer-inference job. An explicit schema reads a column the
+files lack as NULL, so the guard sits on the write side: every append
+compares its frame with the recorded entry before it writes
+(:func:`check_append`). A store committed before schemas were recorded
+has no entry and is read by inference, in :func:`read_store` only.
 
 Appends to the routered families (``sq_ivf_append``, ``pq_ivf_append``,
 ``append_semdedup_ref``, deletes, rebalance sub-cells, the router-less
@@ -75,8 +78,8 @@ Directory rewrites (compaction, vacuum) are the other primitive:
 :func:`gluestick_spark.fsio.swap_dir`.
 
 The default seam is the local filesystem; an object-store backend must
-provide ATOMIC ``replace`` (the marker and sidecar publish) or the
-crash-safety claims are void. See the fsio module docstring for the
+make ``write_text_atomic`` (the marker and sidecar publish) ATOMIC or
+the crash-safety claims are void. See the fsio module docstring for the
 per-backend contract.
 """
 
@@ -118,6 +121,7 @@ GRAM_STATE = Store("gram state", "_GRAM_META.json", "materialize_gram_state")
 CORPUS_SKETCH = Store(
     "reference sketch", "_SKETCH_META.json", "materialize_corpus_sketch"
 )
+TABLE_VERSION = Store("versioned table version", "_COMMITTED", "write_versioned")
 
 
 def load_meta(
@@ -264,27 +268,21 @@ def _list_cell_files(root: str, fs: StateFS = LOCAL_FS) -> list[str]:
     return sorted(out)
 
 
-def rollback_torn_append(
-    path: str, cells: str = "cells", fs: StateFS = LOCAL_FS
-) -> bool:
+def rollback_torn_append(path: str, fs: StateFS = LOCAL_FS) -> bool:
     """Undo a torn/unacknowledged append: delete cell files not in the
     manifest, prune partition dirs it created, drop the sidecar.
     Returns True iff a torn batch was rolled back.
 
-    The sidecar is SELF-DESCRIBING since r14: it records which root its
-    manifest lists (``cells``), and the rollback honors the RECORDED
-    root over the caller's default — without this, a torn DELETE
-    (manifest = tombstone files) healed by an append's rollback (default
-    root = cell files) would compare cell files against a tombstone
-    manifest and destroy the index. Pre-r14 sidecars lack the key and
-    fall back to the caller's argument."""
+    The sidecar is SELF-DESCRIBING: it records which root its manifest
+    lists (``cells``), so a torn DELETE (manifest = tombstone files)
+    healed by an append's rollback is compared against the tombstone
+    files, never against the cell files."""
     side = os.path.join(path, SIDECAR)
     if not fs.isfile(side):
         return False
     manifest_doc = json.loads(fs.read_text(side))
     manifest = set(manifest_doc["files"])
-    cells = manifest_doc.get("cells", cells)
-    root = _cells_root(path, cells)
+    root = _cells_root(path, manifest_doc["cells"])
     for rel in _list_cell_files(root, fs):
         # the sidecar lives under root itself when cells='.' (the plain-IVF
         # layout) — it is protocol state, never a torn data file; it is
@@ -306,7 +304,7 @@ def begin_append(
 ) -> None:
     """Open the append bracket: roll back any torn batch, then snapshot
     the pre-append cell listing into the sidecar (atomic)."""
-    rollback_torn_append(path, cells, fs)
+    rollback_torn_append(path, fs)
     side = os.path.join(path, SIDECAR)
     fs.write_text_atomic(
         side,

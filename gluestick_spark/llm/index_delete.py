@@ -83,17 +83,15 @@ def _delete_core(
     path: str,
     ids_df: DataFrame,
     id_col: str,
-    fallback_cells: str = "cells",
     meta: dict | None = None,
 ) -> int:
     """Shared tombstone append: distinct ids, bracketed write. Returns
-    the number of ids tombstoned in this batch. ``fallback_cells`` only
-    matters for healing a pre-r14 (non-self-describing) torn sidecar.
-    With a router ``meta`` that records the cells schema, the ids are
-    written in the stored id type, which is the type the tombstones are
-    read with; an id that type cannot hold names no stored row and is
-    written as NULL, which anti-joins nothing."""
-    rollback_torn_append(path, cells=fallback_cells)
+    the number of ids tombstoned in this batch. With a router ``meta``
+    that records the cells schema, the ids are written in the stored id
+    type, which is the type the tombstones are read with; an id that
+    type cannot hold names no stored row and is written as NULL, which
+    anti-joins nothing."""
+    rollback_torn_append(path)
     src = id_col if id_col in ids_df.columns else ids_df.columns[0]
     ids = F.col(src)
     schema = recorded_schema(meta, "cells")
@@ -132,7 +130,7 @@ def ivf_delete(
     """Tombstone ids out of a raw-vector :func:`~gluestick_spark.llm.
     similarity.materialize_ivf` index (router-less family — the caller
     names the id column, as everywhere in this family)."""
-    return _delete_core(spark, path, ids_df, id_col, fallback_cells=".")
+    return _delete_core(spark, path, ids_df, id_col)
 
 
 _VACUUM_TMP = "_vacuum.__rewriting__"  # underscore: invisible to Spark
@@ -149,27 +147,22 @@ def _recover_vacuum_leftovers(root: str, part_col: str) -> None:
     """Heal any crash leftover of a prior vacuum before computing the
     affected-cell set (ADVICE r14 #1). Two kinds exist:
 
-    - ``_<part_col>=N.__old__`` (and the pre-r15 unprefixed
-      ``<part_col>=N.__old__``): the displaced live cell of a two-rename
+    - ``_<part_col>=N.__old__``: the displaced live cell of a two-rename
       swap. If the live cell dir is ABSENT the crash hit between the two
       renames — restore it (rename back; the tombstones that triggered
       the rewrite are still active, so the restored doomed rows stay
       serving-invisible and the rerun purges them again). If the live
       dir exists the swap completed — the leftover is pure garbage.
-    - ``_vacuum.__rewriting__`` / pre-r15 ``<part_col>=N.__rewriting__``
-      temp dirs: never referenced by a live cell, always garbage.
+    - ``_vacuum.__rewriting__``: the staging dir, never referenced by a
+      live cell, always garbage.
     """
     if not os.path.isdir(root):
         return
     for name in os.listdir(root):
         full = os.path.join(root, name)
-        if name.endswith(".__old__"):
-            base = name[: -len(".__old__")]
-            if base.startswith("_" + part_col + "="):
-                base = base[1:]
-            if base.startswith(part_col + "="):
-                heal_swap(os.path.join(root, base), full)
-        elif name.endswith(".__rewriting__"):
+        if name.startswith(f"_{part_col}=") and name.endswith(".__old__"):
+            heal_swap(os.path.join(root, name[1 : -len(".__old__")]), full)
+        elif name == _VACUUM_TMP:
             shutil.rmtree(full, ignore_errors=True)
 
 
@@ -206,7 +199,7 @@ def vacuum_deleted(
     fallback renames. Idempotent at every window: an unrewritten cell's
     tombstones are still active; a rewritten-but-uncleared tombstone
     anti-joins rows already gone."""
-    rollback_torn_append(path, cells=cells)
+    rollback_torn_append(path)
     meta = None
     if id_col is None:
         meta = load_meta(_ROUTERED, path)

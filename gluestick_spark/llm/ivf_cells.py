@@ -14,7 +14,8 @@ next to its protocol state (:mod:`gluestick_spark.llm.index_commit`):
   cells under ``cells/`` holding (``qr``, ``xxr``), partition column
   ``cid``, committed by ``_SEMDEDUP_META.json``, which keeps the
   centroid state under ``state`` (:func:`encode_state`) beside the
-  per-cell build ``counts`` and the ``capped`` cells. Appends add a
+  per-cell build ``counts`` and the ``max_cluster_size`` cap they are
+  judged against (``llm/cluster.py:_capped_cells``). Appends add a
   count ledger under ``cells/_append_counts/`` inside the append
   bracket. It has no tombstones and no rebalance.
 

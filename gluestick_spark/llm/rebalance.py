@@ -434,7 +434,7 @@ def ivf_rebalance(
     the duplicates are invisible). Reclaim them with :func:`ivf_vacuum`
     after persisting the new list — or let the next ``ivf_rebalance``'s
     ``_prune_stale_cells`` self-heal."""
-    rollback_torn_append(path, cells=".")  # never bake in a torn batch
+    rollback_torn_append(path)  # never bake in a torn batch
     cents = list(centroids)
     state = [
         ([0] * (len(c) if c else 1), 1) if c is None else c for c in cents

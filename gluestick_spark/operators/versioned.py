@@ -1,8 +1,8 @@
 """Versioned table writes with time travel — a table-format-lite layer
 over the snapshot family: every write lands as a NEW immutable version
-directory and an atomic pointer flip publishes it; readers can open the
-latest version or any retained historical one, and vacuum trims history
-by count.
+directory that one commit marker publishes; readers can open the latest
+version or any retained historical one, and vacuum trims history by
+count.
 
 This is the capability a training-data pipeline actually needs from a
 table format at its simplest: reproduce last week's corpus exactly
@@ -11,41 +11,50 @@ table format at its simplest: reproduce last week's corpus exactly
 Where :mod:`gluestick_spark.operators.snapshot` keeps ONE current state
 per stream (type-1), this keeps every published state until vacuumed.
 
-Commit protocol: the writer CLAIMS its version number with an exclusive
-``os.mkdir`` of ``v=N`` (two concurrent writers can never claim the same
-N — the loser's mkdir raises and it retries with N+1), writes the
-directory completely, records publication PER-VERSION with a
-``v=N/_COMMITTED`` marker (created inside the directory the writer
-exclusively owns — concurrent commits cannot lose each other's record,
-unlike a shared-log rewrite), appends one line to the informational
-``_COMMITS`` log via a single ``O_APPEND`` write (kernel-serialized —
-never read-modify-rewrite), then flips the one-line ``_LATEST`` pointer
-(``os.replace``) — atomic on POSIX, so readers see the old version
-or the new one, never a torn table. A version is published iff its
-``_COMMITTED`` marker exists or it appears in ``_COMMITS`` (pre-marker
-tables), with a ``_SUCCESS``-marker fallback for tables older than the
-log. A crash mid-write leaves an unpublished ``v=N`` directory that is
-invisible to ``read_versioned``/``published_versions`` — even after
-later writes publish higher numbers — and that vacuum removes once the
-newest mtime anywhere under it (the whole tree, so committer-v1 task
-files staging under ``v=N/_temporary/...`` count as activity) has aged
-past a grace period — vacuum can't rmtree under a slow writer that
-merely lost the pointer race.
+Commit protocol: every ``v=N`` directory is a committed store
+(:mod:`gluestick_spark.llm.index_commit`, ``TABLE_VERSION``), the shape
+of a Delta Lake commit: one JSON per version that carries the version's
+schema and its action. The writer CLAIMS its version number with an
+exclusive ``mkdir`` of ``v=N`` (two concurrent writers can never claim
+the same N — the loser's mkdir raises and it retries with N+1), writes
+the parquet into the directory it now owns, then publishes the
+``v=N/_COMMITTED`` marker (``index_commit.publish``). A version is
+published iff its marker exists, and the latest version is the highest
+published number. Nothing at the table root is ever written, so
+concurrent commits cannot lose each other's record. A crash before the
+marker leaves an unpublished ``v=N`` directory that is invisible to
+``read_versioned``/``published_versions`` — even after later writes
+publish higher numbers — and that vacuum removes once the newest mtime
+anywhere under it (the whole tree, so committer-v1 task files staging
+under ``v=N/_temporary/...`` count as activity) has aged past a grace
+period — vacuum can't rmtree under a slow writer that is still writing
+a lower number.
+
+Concurrent writers: "latest" is the highest published number, not the
+last publish to finish. It therefore only moves forward, and
+:func:`delete_where` always bases its delta on the highest published
+version, never on an older one that a higher publish has superseded.
 
 Layout::
 
     path/
-      _LATEST            one line: the published version number
-      _COMMITS           one published version per line (append-only log)
-      v=1/ ... v=N/      immutable Spark parquet directories
-        _COMMITTED       per-version publication marker
+      v=1/ ... v=N/        one immutable version each (the mkdir claim)
+        part-*.parquet     a flat version's rows (part ``data``), or
+        deletes.parquet/   a delta's delete vector (part ``deletes.parquet``)
+        _COMMITTED         the marker: {"schemas": {part: schema_entry}},
+                           plus "base" (version) and "keys" for a delta
+
+Every read is typed by the schema the marker records
+(``index_commit.read_store``), so opening a version — flat or a chain
+of deltas — runs no Spark job. A table from before versions were
+committed stores (its ``_COMMITTED`` holds a bare version number) is
+refused with a ``ValueError`` that names its path.
 
 All driver-side state-file operations ride the injectable ``fs=`` seam
-(:mod:`gluestick_spark.fsio`, VERDICT r11 #3), defaulting to the local
-filesystem. The protocol REQUIRES atomic ``replace`` (the pointer flip),
-exclusive ``mkdir`` (the version claim), and serialized ``append_line``
-(the log) from its backend — a plain object store satisfies none of
-these with copy+delete; implement the seam over conditional-put or use
+(:mod:`gluestick_spark.fsio`), defaulting to the local filesystem. The
+protocol REQUIRES exclusive ``mkdir`` (the version claim) and atomic
+``write_text_atomic`` (the marker) from its backend — a plain object
+store satisfies neither; implement the seam over conditional-put or use
 a real table format's commit log there (see the fsio docstring).
 """
 
@@ -58,6 +67,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsio import LOCAL_FS, StateFS
+from ..llm.index_commit import (
+    SCHEMAS,
+    TABLE_VERSION,
+    load_meta,
+    publish,
+    read_store,
+    recorded_schema,
+    schema_entry,
+)
 
 __all__ = [
     "write_versioned",
@@ -70,10 +88,7 @@ __all__ = [
     "vacuum_versions",
 ]
 
-_POINTER = "_LATEST"
-_COMMITS = "_COMMITS"
-_MARKER = "_COMMITTED"
-_BASE_MARK = "_BASE.json"
+_DATA = "data"
 _DELETES_DIR = "deletes.parquet"
 
 
@@ -97,110 +112,72 @@ def list_versions(path: str, fs: StateFS = LOCAL_FS) -> list[int]:
     return sorted(out)
 
 
-def _commit_log(path: str, fs: StateFS = LOCAL_FS) -> set[int]:
-    p = os.path.join(path, _COMMITS)
-    if not fs.isfile(p):
-        return set()
-    out: set[int] = set()
-    for line in fs.read_text(p).splitlines():
-        line = line.strip()
-        if line:
-            try:
-                out.add(int(line))
-            except ValueError:
-                continue
-    return out
-
-
-def _record_commit(path: str, v: int, fs: StateFS = LOCAL_FS) -> None:
-    # Publication record is PER-VERSION: a marker file inside v=N/, a
-    # directory this writer owns exclusively (mkdir claim) — two
-    # concurrent commits can never lose each other's record. The shared
-    # _COMMITS log is kept as an informational/legacy index via a single
-    # O_APPEND write (kernel-serialized append, never read-modify-
-    # rewrite — the round-8 race: two near-simultaneous rewrites could
-    # drop each other's version, orphaning a fully-written table).
-    fs.write_text(os.path.join(_vdir(path, v), _MARKER), str(v))
-    fs.append_line(os.path.join(path, _COMMITS), str(v))
-
-
 def published_versions(path: str, fs: StateFS = LOCAL_FS) -> list[int]:
     """Versions that completed a publish, ascending — the only ones
-    ``read_versioned`` will open. Source of truth is the per-version
-    ``_COMMITTED`` marker (crash-between-data-and-commit leaves no
-    marker, so a complete-looking directory stays unpublished forever,
-    even after later writes bury it under the pointer); versions listed
-    in the ``_COMMITS`` log also count (tables written before the marker
-    existed), intersected with what is actually on disk so a vacuumed or
-    externally-removed version drops out without a log rewrite. ONLY for
-    legacy tables with no markers and no log, a version <= the pointer
-    counts as published iff its directory holds Spark's ``_SUCCESS``
-    marker (a torn parquet directory never does)."""
-    on_disk = list_versions(path, fs)
-    marked = {
+    ``read_versioned`` will open: those whose ``v=N/_COMMITTED`` marker
+    exists. A crash between data and marker leaves a complete-looking
+    directory that stays unpublished forever, even after later writes
+    publish higher numbers; a vacuumed version drops out with its
+    directory."""
+    return [
         v
-        for v in on_disk
-        if fs.isfile(os.path.join(_vdir(path, v), _MARKER))
-    }
-    logged = _commit_log(path, fs)
-    if marked or logged:
-        return sorted(v for v in on_disk if v in marked or v in logged)
-    cur = latest_version(path, fs)
-    out: set[int] = set()
-    if cur is not None:
-        for v in on_disk:
-            if v <= cur and fs.isfile(
-                os.path.join(_vdir(path, v), "_SUCCESS")
-            ):
-                out.add(v)
-    return sorted(out)
+        for v in list_versions(path, fs)
+        if fs.isfile(os.path.join(_vdir(path, v), TABLE_VERSION.marker))
+    ]
 
 
 def latest_version(path: str, fs: StateFS = LOCAL_FS) -> int | None:
-    """The PUBLISHED version (pointer contents), or None before any
-    successful publish. Unpublished crash leftovers don't count."""
-    p = os.path.join(path, _POINTER)
-    if not fs.isfile(p):
-        return None
-    return int(fs.read_text(p).strip())
+    """The highest PUBLISHED version, or None before any successful
+    publish. Unpublished crash leftovers don't count."""
+    pub = published_versions(path, fs)
+    return pub[-1] if pub else None
 
 
-def write_versioned(df: DataFrame, path: str, fs: StateFS = LOCAL_FS) -> int:
-    """Write ``df`` as the next version and publish it atomically.
-    Returns the new version number. The data write is a plain Spark
-    parquet write (fully parallel); only the version claim, commit-log
-    append, and pointer flip are driver-side. The version number is
-    CLAIMED with an exclusive ``os.mkdir`` before the write, so two
-    concurrent writers get distinct version numbers (each publishes its
-    own complete directory; last pointer flip wins the "latest" title,
-    both remain readable via time travel)."""
-    v = _claim_version(path, fs)
-    df.write.mode("append").parquet(_vdir(path, v))
-    _record_commit(path, v, fs)
-    fs.write_text_atomic(os.path.join(path, _POINTER), str(v))  # atomic publish
-    return v
-
-
-def _delta_meta(path: str, v: int, fs: StateFS = LOCAL_FS) -> dict | None:
-    """The delete-vector metadata of a delta version (``_BASE.json``:
-    base version + key columns), or None for a flat data version."""
-    import json
-
-    p = os.path.join(_vdir(path, v), _BASE_MARK)
-    if not fs.isfile(p):
-        return None
-    return json.loads(fs.read_text(p))
+def _version_meta(path: str, v: int, fs: StateFS = LOCAL_FS) -> dict:
+    """The marker of version ``v``: ``schemas``, plus ``base`` and
+    ``keys`` for a delta. Refuses a table in the older layout, whose
+    marker holds a bare version number."""
+    meta = load_meta(TABLE_VERSION, _vdir(path, v), fs)
+    if not isinstance(meta, dict):
+        raise ValueError(
+            f"versioned table at {path} is in an older layout (v={v}/"
+            f"{TABLE_VERSION.marker} records no schema): read its v=N "
+            "directories with spark.read.parquet and write them into a new "
+            "table with write_versioned"
+        )
+    return meta
 
 
 def _base_chain(path: str, v: int, fs: StateFS = LOCAL_FS) -> list[int]:
     """Versions that ``v`` transitively depends on (delta → base → …)."""
     out: list[int] = []
-    m = _delta_meta(path, v, fs)
-    while m is not None:
-        b = int(m["base"])
-        out.append(b)
-        m = _delta_meta(path, b, fs)
+    meta = _version_meta(path, v, fs)
+    while "base" in meta:
+        out.append(meta["base"])
+        meta = _version_meta(path, meta["base"], fs)
     return out
+
+
+def write_versioned(df: DataFrame, path: str, fs: StateFS = LOCAL_FS) -> int:
+    """Write ``df`` as the next version and publish it atomically.
+    Returns the new version number. The data write is a plain Spark
+    parquet write (fully parallel); only the version claim and the
+    marker are driver-side. The version number is CLAIMED with an
+    exclusive ``os.mkdir`` before the write, so two concurrent writers
+    get distinct version numbers (each publishes its own complete
+    directory, both remain readable via time travel, and the higher
+    number is the latest whichever publishes last)."""
+    return _write_version(df, path, _claim_version(path, fs), fs)
+
+
+def _write_version(
+    df: DataFrame, path: str, v: int, fs: StateFS = LOCAL_FS
+) -> int:
+    """Write ``df`` into the claimed ``v=N`` and publish it."""
+    vdir = _vdir(path, v)
+    df.write.mode("append").parquet(vdir)
+    publish(TABLE_VERSION, vdir, {SCHEMAS: {_DATA: schema_entry(df)}}, fs)
+    return v
 
 
 def read_versioned(
@@ -209,33 +186,36 @@ def read_versioned(
     version: int | None = None,
     fs: StateFS = LOCAL_FS,
 ) -> DataFrame:
-    """Open the published version (default) or a specific retained one —
-    time travel. Raises on an unpublished/unknown version so a typo can't
-    silently read a crash leftover — including a torn ``v=N`` that later
-    writes have since buried under the pointer (publication is tracked in
-    the ``_COMMITS`` log, not inferred from directory listings).
+    """Open the latest published version (default) or a specific retained
+    one — time travel. Raises on an unpublished/unknown version so a typo
+    can't silently read a crash leftover — including a torn ``v=N`` that
+    later writes have since buried under higher published numbers.
 
     A DELTA version (:func:`delete_where`) is resolved merge-on-read:
     its base resolves recursively, then one anti-join against the delete
-    vector — the read-side half of the deletion-vector design."""
-    if version is None:
-        version = latest_version(path, fs)
-        if version is None:
-            raise ValueError(f"no published version at {path}")
+    vector — the read-side half of the deletion-vector design. Every
+    scan is typed by its marker's recorded schema: no Spark job runs."""
     pub = published_versions(path, fs)
+    if version is None:
+        if not pub:
+            raise ValueError(f"no published version at {path}")
+        version = pub[-1]
     if version not in pub:
         raise ValueError(
             f"version {version} not published at {path} "
             f"(published: {pub}, on disk: {list_versions(path, fs)})"
         )
-    m = _delta_meta(path, version, fs)
-    if m is None:
-        return spark.read.parquet(_vdir(path, version))
-    base = read_versioned(spark, path, int(m["base"]), fs)
-    dels = spark.read.parquet(
-        os.path.join(_vdir(path, version), _DELETES_DIR)
+    meta = _version_meta(path, version, fs)
+    vdir = _vdir(path, version)
+    if "base" not in meta:
+        return read_store(spark, vdir, recorded_schema(meta, _DATA))
+    dels = read_store(
+        spark,
+        os.path.join(vdir, _DELETES_DIR),
+        recorded_schema(meta, _DELETES_DIR),
     )
-    return base.join(dels, list(m["keys"]), "left_anti")
+    base = read_versioned(spark, path, meta["base"], fs)
+    return base.join(dels, meta["keys"], "left_anti")
 
 
 def _claim_version(path: str, fs: StateFS = LOCAL_FS) -> int:
@@ -261,10 +241,11 @@ def delete_where(
     """DELETE rows from the versioned table as a MERGE-ON-READ delta
     version — the table-side takedown path matching the ANN-index
     tombstone story (r14): the new version holds ONLY the matched key
-    tuples (the delete vector) plus a ``_BASE.json`` pointer, so a
-    takedown/PII delete costs O(matched keys), never a table rewrite;
-    :func:`read_versioned` resolves it with one anti-join. Returns the
-    new version number.
+    tuples (the delete vector), and its marker names the base version
+    and the key columns, so a takedown/PII delete costs O(matched keys),
+    never a table rewrite; :func:`read_versioned` resolves it with one
+    anti-join. The base is the latest (highest) published version.
+    Returns the new version number.
 
     Time-travel semantics are the standard table-format ones: PRE-delete
     versions remain readable (reproducibility), so the PHYSICAL purge
@@ -274,12 +255,9 @@ def delete_where(
     Vacuum is chain-aware: a base version referenced by any retained
     delta is never removed.
 
-    Crash contract: claim → delete-vector write → base marker →
-    ``_COMMITTED`` → pointer flip; a crash before the commit marker
-    leaves an unpublished directory invisible to readers and vacuumable
-    under the normal grace rules."""
-    import json
-
+    Crash contract: claim → delete-vector write → ``_COMMITTED``; a
+    crash before the marker leaves an unpublished directory invisible to
+    readers and vacuumable under the normal grace rules."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if not keys:
         raise ValueError("key_cols must be non-empty")
@@ -290,15 +268,14 @@ def delete_where(
     cond = F.expr(condition) if isinstance(condition, str) else condition
     doomed = base_df.where(cond).select(*keys).distinct()
     v = _claim_version(path, fs)
-    doomed.write.mode("append").parquet(
-        os.path.join(_vdir(path, v), _DELETES_DIR)
+    vdir = _vdir(path, v)
+    doomed.write.mode("append").parquet(os.path.join(vdir, _DELETES_DIR))
+    publish(
+        TABLE_VERSION,
+        vdir,
+        {SCHEMAS: {_DELETES_DIR: schema_entry(doomed)}, "base": cur, "keys": keys},
+        fs,
     )
-    fs.write_text_atomic(
-        os.path.join(_vdir(path, v), _BASE_MARK),
-        json.dumps({"base": int(cur), "keys": keys}),
-    )
-    _record_commit(path, v, fs)
-    fs.write_text_atomic(os.path.join(path, _POINTER), str(v))
     return v
 
 
@@ -313,7 +290,7 @@ def compact_version(
     cur = latest_version(path, fs)
     if cur is None:
         raise ValueError(f"no published version at {path}")
-    if _delta_meta(path, cur, fs) is None:
+    if "base" not in _version_meta(path, cur, fs):
         return cur
     return write_versioned(read_versioned(spark, path, cur, fs=fs), path, fs)
 
@@ -362,8 +339,8 @@ def vacuum_versions(
     fs: StateFS = LOCAL_FS,
 ) -> list[int]:
     """Delete all but the newest ``keep`` published versions, plus
-    unpublished crash leftovers OLDER than the pointer that have sat
-    unmodified for at least ``unpublished_grace_seconds``. The grace
+    unpublished crash leftovers OLDER than the latest version that have
+    sat unmodified for at least ``unpublished_grace_seconds``. The grace
     period exists because a buried claim is NOT garbage by construction:
     a slow writer's lower-numbered claim can still be mid-write when a
     faster writer publishes a higher version, and an rmtree under it
@@ -372,10 +349,10 @@ def vacuum_versions(
     committer-v1 staging an active writer's task files land under
     ``v=N/_temporary/...`` without touching ``v=N`` itself, so the
     top-level mtime alone would age out a live write. Anything newer
-    than the pointer is never touched regardless of age, and the default
-    grace (1h) is set above plausible single-job write durations; raise
-    it for clusters whose jobs run longer. Returns the deleted version
-    numbers.
+    than the latest version is never touched regardless of age, and the
+    default grace (1h) is set above plausible single-job write
+    durations; raise it for clusters whose jobs run longer. Returns the
+    deleted version numbers.
 
     .. versionchanged:: round 10
        The default ``unpublished_grace_seconds`` was RAISED 900 → 3600:
@@ -386,24 +363,19 @@ def vacuum_versions(
     .. versionchanged:: round 11
        The staleness walk short-circuits at the first fresh mtime, so
        probing a live multi-thousand-file version tree no longer stats
-       every file on each vacuum call.
-
-    The ``_COMMITS`` log is never rewritten (that would race a
-    concurrent writer's append): ``published_versions`` intersects the
-    log with what is on disk, so stale lines for vacuumed versions are
-    inert."""
+       every file on each vacuum call."""
     if keep < 1:
         raise ValueError(f"keep must be >= 1, got {keep}")
-    cur = latest_version(path, fs)
-    if cur is None:
-        return []
     pub = published_versions(path, fs)
-    doomed = set(pub[:-keep] if len(pub) > keep else [])
+    if not pub:
+        return []
+    cur = pub[-1]
+    doomed = set(pub[:-keep])
     # chain protection (r14 merge-on-read deltas): a base a RETAINED
     # delta resolves through must survive, however old — removing it
     # would break every reader of the retained version
     protected: set[int] = set()
-    for v in pub[-keep:] if len(pub) > keep else pub:
+    for v in pub[-keep:]:
         protected.update(_base_chain(path, v, fs))
     doomed -= protected
     now = time.time()

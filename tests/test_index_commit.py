@@ -575,17 +575,16 @@ def test_tombstoned_topk_anti_joins_ids_without_distinct(spark, stores, tmp_dir)
 
 
 # The reads of library stores that keep inference, by (module, function):
-# user input and its catalog coercion, snapshots and versioned tables (their
-# format is to change), the marker-less plain-IVF and materialize_sq
-# families, the public audit of a caller-named cells directory, and the
-# public readers of stream output and sketch logs.
+# user input and its catalog coercion, snapshots (their format is to
+# change), the marker-less plain-IVF and materialize_sq families, the
+# public audit of a caller-named cells directory, and the public readers
+# of stream output and sketch logs.
 _INFERRING_READS = {
     ("llm/index_commit.py", "read_store"),
     ("sources/reader.py", "get_parquet"),
     ("sources/reader.py", "get"),
     ("sources/reader.py", "read_parquet_folder"),
     ("sources/reader.py", "read_snapshots"),
-    ("operators/versioned.py", "read_versioned"),
     ("llm/similarity.py", "sq_topk_indexed"),
     ("llm/rebalance.py", "ivf_rebalance"),
     ("llm/rebalance.py", "cell_sizes"),
@@ -596,8 +595,9 @@ _INFERRING_READS = {
 }
 
 
-def _parquet_reads(path):
-    """(outermost function, passes a schema) of each ``read.parquet(``."""
+def _method_calls(path, methods):
+    """(outermost function, receiver source) of each call of a method
+    named in ``methods``."""
     import ast
 
     tree = ast.parse(path.read_text())
@@ -611,14 +611,22 @@ def _parquet_reads(path):
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "parquet"
-                and ".read" in ast.unparse(child.func.value)
+                and child.func.attr in methods
             ):
-                out.append((name, ".schema(" in ast.unparse(child.func.value)))
+                out.append((name, ast.unparse(child.func.value)))
             visit(child, name)
 
     visit(tree, None)
     return out
+
+
+def _parquet_reads(path):
+    """(outermost function, passes a schema) of each ``read.parquet(``."""
+    return [
+        (fn, ".schema(" in receiver)
+        for fn, receiver in _method_calls(path, {"parquet"})
+        if ".read" in receiver
+    ]
 
 
 def test_one_store_read():
@@ -637,3 +645,26 @@ def test_one_store_read():
                 untyped.add((rel, fn))
     assert merges == []
     assert untyped - _INFERRING_READS == set()
+
+
+# The one driver-side state file written outside the commit protocol, by
+# (module, function): the SemDeDup append ledger, a count file per batch
+# written inside the append bracket.
+_STATE_WRITES = {("llm/cluster.py", "append_semdedup_ref")}
+
+
+def test_one_state_writer():
+    """Only ``llm/index_commit.py`` and ``fsio.py`` write driver-side
+    state files (``write_text`` / ``write_text_atomic``); every other
+    module commits through them, apart from the named exception."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gluestick_spark"
+    writes = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in ("llm/index_commit.py", "fsio.py"):
+            continue
+        methods = {"write_text", "write_text_atomic"}
+        writes.update((rel, fn) for fn, _ in _method_calls(path, methods))
+    assert writes - _STATE_WRITES == set()

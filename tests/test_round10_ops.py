@@ -11,43 +11,6 @@ from pyspark.sql import functions as F
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# ------------------------------------------------ ADVICE 1: vacuum tree ---
-
-
-def test_vacuum_sees_committer_v1_staging_activity(spark, tmp_dir):
-    """ADVICE r9 (medium): with FileOutputCommitter v1 an in-flight
-    writer's task files land under v=N/_temporary/... and never touch
-    v=N's own mtime — staleness must be judged from the newest mtime
-    anywhere under the tree, or vacuum rmtree's a live write."""
-    from gluestick_spark.operators.versioned import (
-        vacuum_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(2), path)  # v=1 published
-    claim = os.path.join(path, "v=2")
-    os.mkdir(claim)  # slow writer's claim
-    write_versioned(spark.range(4), path)  # fast writer publishes v=3
-    # simulate committer-v1 staging: nested task file is FRESH, but the
-    # claimed top dir itself is old
-    staging = os.path.join(claim, "_temporary", "0", "task_0")
-    os.makedirs(staging)
-    with open(os.path.join(staging, "part-0.parquet"), "w") as f:
-        f.write("x")
-    old = 1.0
-    os.utime(claim, (old, old))
-    # grace=60s: top-dir mtime alone says "ancient", tree mtime says live
-    assert vacuum_versions(path, keep=10, unpublished_grace_seconds=60.0) == []
-    assert os.path.isdir(claim)
-    # age the WHOLE tree out -> now it is garbage
-    for dirpath, _dirs, files in os.walk(claim):
-        os.utime(dirpath, (old, old))
-        for name in files:
-            os.utime(os.path.join(dirpath, name), (old, old))
-    assert vacuum_versions(path, keep=10, unpublished_grace_seconds=60.0) == [2]
-
-
 # ----------------------------------- ADVICE 3: resample non-string class --
 
 
@@ -255,7 +218,7 @@ def test_pq_ivf_torn_append_self_heals(spark, tmp_dir):
             pq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4).collect()]
 
     with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump({"files": pre_files}, f)
+        json.dump({"files": pre_files, "cells": "cells"}, f)
     with pytest.raises(ValueError, match="in-progress or torn"):
         pq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4)
 

@@ -58,7 +58,7 @@ def test_rebuild_over_torn_append_then_append(spark, tmp_dir, kind):
 
     # tear the append: sidecar manifests the pre-append listing
     with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump({"files": pre_files}, f)
+        json.dump({"files": pre_files, "cells": "cells"}, f)
 
     # operator recovers by REBUILDING over the torn index (the recovery
     # the _load_*_router error message suggests) ...
@@ -258,47 +258,6 @@ def test_append_manifest_protocol_over_memory_fs():
     assert not fs.isfile(idx + "/" + SIDECAR)
     assert rollback_torn_append(idx, fs=fs) is False  # idempotent no-op
     require_committed(idx, "mem", fs=fs)
-
-
-def test_versioned_pointer_protocol_over_memory_fs(spark, tmp_dir):
-    """The versioned-table publication metadata (claim, marker, log,
-    pointer flip, vacuum) runs over MemoryFS. The parquet payload is a
-    data-plane write and stays on the local disk — the seam owns only
-    the control files, so the protocol functions take fs= while Spark
-    writes to the real path."""
-    from gluestick_spark.fsio import MemoryFS
-    from gluestick_spark.operators.versioned import (
-        _record_commit,
-        latest_version,
-        list_versions,
-        published_versions,
-        vacuum_versions,
-    )
-
-    fs = MemoryFS()
-    path = "/tbl"
-    fs.makedirs(path)
-    # simulate two published versions + one torn claim via the seam
-    for v in (1, 2):
-        fs.mkdir(f"{path}/v={v}")
-        fs.write_text(f"{path}/v={v}/part-0.parquet", "x")
-        _record_commit(path, v, fs=fs)
-        fs.write_text_atomic(f"{path}/_LATEST", str(v))
-    fs.mkdir(f"{path}/v=3")  # torn claim: no marker, no pointer
-    fs.write_text(f"{path}/v=3/part-0.parquet", "x")
-
-    assert list_versions(path, fs=fs) == [1, 2, 3]
-    assert published_versions(path, fs=fs) == [1, 2]
-    assert latest_version(path, fs=fs) == 2
-    assert fs.read_text(f"{path}/_COMMITS") == "1\n2\n"
-
-    # vacuum: keep=1 deletes v=1 (published, old); v=3 is NEWER than the
-    # pointer so it is never touched regardless of age
-    deleted = vacuum_versions(path, keep=1, fs=fs)
-    assert deleted == [1]
-    assert not fs.isdir(f"{path}/v=1")
-    assert fs.isdir(f"{path}/v=3")
-    assert published_versions(path, fs=fs) == [2]
 
 
 # ------------------- VERDICT task 4: bloom pre-filter --------------------

@@ -654,7 +654,7 @@ def test_plain_ivf_append_bracket(spark, tmp_dir):
 
     # tear the append: sidecar manifests the pre-append listing
     with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump({"files": pre_files}, f)
+        json.dump({"files": pre_files, "cells": "."}, f)
     with pytest.raises(ValueError, match="in-progress or torn"):
         ivf_topk_indexed(spark, path, q, cents, k=10, nprobe=4)
 

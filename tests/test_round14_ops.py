@@ -302,85 +302,6 @@ def test_tombstone_antijoin_keeps_partition_pruning(spark, tmp_dir):
     assert all(r["vec_id"] % 9 != 4 for r in top.collect())
 
 
-# ---------------- r14 extra: versioned-table merge-on-read DELETE --------
-
-
-def test_versioned_delete_chain_compact_vacuum(spark, tmp_dir):
-    """delete_where writes a delete VECTOR (O(matched keys), no table
-    rewrite); read resolves chained deltas; time travel still sees the
-    pre-delete state; compact_version materializes; vacuum is
-    chain-aware (never removes a retained delta's base) and completes
-    the physical purge after compaction; a torn delta stays invisible."""
-    import os
-
-    from gluestick_spark.operators.versioned import (
-        _BASE_MARK,
-        _DELETES_DIR,
-        _vdir,
-        compact_version,
-        delete_where,
-        list_versions,
-        read_versioned,
-        vacuum_versions,
-        write_versioned,
-    )
-
-    d = spark.createDataFrame(
-        [(i, f"u{i % 7}", float(i)) for i in range(100)],
-        "id long, user string, v double",
-    )
-    path = os.path.join(tmp_dir, "vt")
-    assert write_versioned(d, path) == 1
-
-    v2 = delete_where(spark, path, "id % 10 = 3", "id")
-    assert v2 == 2
-    # the delta holds ONLY the vector — no data rewrite
-    assert os.path.isfile(os.path.join(_vdir(path, 2), _BASE_MARK))
-    assert spark.read.parquet(
-        os.path.join(_vdir(path, 2), _DELETES_DIR)
-    ).count() == 10
-    assert read_versioned(spark, path).count() == 90
-    assert read_versioned(spark, path, 1).count() == 100  # time travel
-
-    v3 = delete_where(spark, path, F.col("user") == "u2", "id")
-    assert v3 == 3
-    got = sorted(r["id"] for r in read_versioned(spark, path).collect())
-    want = sorted(
-        i for i in range(100) if i % 10 != 3 and i % 7 != 2
-    )
-    assert got == want
-
-    # chain-aware vacuum: keep=1 retains v3, whose chain is {2, 1} —
-    # nothing may be removed
-    assert vacuum_versions(path, keep=1, unpublished_grace_seconds=0) == []
-    assert read_versioned(spark, path, 1).count() == 100
-
-    # compaction flattens; vacuum then purges the pre-delete history
-    v4 = compact_version(spark, path)
-    assert v4 == 4
-    assert sorted(r["id"] for r in read_versioned(spark, path).collect()) == want
-    assert compact_version(spark, path) == 4  # flat: no-op
-    gone = vacuum_versions(path, keep=1, unpublished_grace_seconds=0)
-    assert gone == [1, 2, 3]
-    assert list_versions(path) == [4]
-    # physical purge complete: the deleted ids exist nowhere on disk
-    left = spark.read.parquet(_vdir(path, 4))
-    assert left.where("id % 10 = 3 OR user = 'u2'").count() == 0
-
-    # torn delta: claim + vector, no commit marker -> invisible
-    os.makedirs(_vdir(path, 5))
-    spark.createDataFrame([(1,)], "id long").write.parquet(
-        os.path.join(_vdir(path, 5), _DELETES_DIR)
-    )
-    with open(os.path.join(_vdir(path, 5), _BASE_MARK), "w") as f:
-        f.write('{"base": 4, "keys": ["id"]}')
-    assert read_versioned(spark, path).count() == len(want)
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="not published"):
-        read_versioned(spark, path, 5)
-
-
 # ---------------- r14 extra: chunking + leakage-safe split ---------------
 
 

@@ -77,9 +77,8 @@ def test_vacuum_recovers_stranded_old_cell(spark, tmp_dir):
     """ADVICE r14 #1: a crash between the two fallback renames leaves the
     live cell dir absent with survivors stranded in ``.__old__`` —
     vacuum entry must restore it (and clean completed-swap leftovers)
-    rather than permanently stop serving those rows. Both the r15 hidden
-    naming and the pre-r15 unprefixed naming are healed, and the hidden
-    names never flip partition discovery."""
+    rather than permanently stop serving those rows. The hidden names
+    are healed and never flip partition discovery."""
     from gluestick_spark.llm.cluster import materialize_sq_ivf, sq_ivf_topk_indexed
     from gluestick_spark.llm.index_delete import sq_ivf_delete, vacuum_deleted
     from gluestick_spark.llm.similarity import sq_topk
@@ -103,13 +102,9 @@ def test_vacuum_recovers_stranded_old_cell(spark, tmp_dir):
     leftover_src = os.path.join(cells_root, live[1])
     leftover = os.path.join(cells_root, "_" + live[1] + ".__old__")
     shutil.copytree(leftover_src, leftover)
-    # plus a legacy pre-r15 unprefixed temp dir
-    legacy_tmp = os.path.join(cells_root, live[2] + ".__rewriting__")
-    shutil.copytree(leftover_src, legacy_tmp)
 
     # the hidden __old__ dir is invisible to partition discovery even
-    # BEFORE recovery (the unprefixed legacy .__rewriting__ one is the
-    # bug being fixed, so it is cleaned at entry instead)
+    # BEFORE recovery
     doomed = emb.where(F.col("vec_id") % 11 == 5).select("vec_id")
     n_doomed = doomed.count()
     sq_ivf_delete(spark, path, doomed)

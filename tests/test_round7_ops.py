@@ -376,64 +376,6 @@ def test_correlation_matrix_values_and_single_scan(spark):
     assert got2[("a", "k")] is None
 
 
-# ------------------------------------------------ versioned time travel ---
-
-
-def test_versioned_write_read_time_travel(spark, tmp_dir):
-    import os
-
-    from gluestick_spark.operators.versioned import (
-        latest_version,
-        list_versions,
-        read_versioned,
-        vacuum_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    v1 = write_versioned(spark.range(5), path)
-    v2 = write_versioned(spark.range(10), path)
-    assert (v1, v2) == (1, 2) and latest_version(path) == 2
-    assert read_versioned(spark, path).count() == 10          # latest
-    assert read_versioned(spark, path, 1).count() == 5        # time travel
-    # vacuum keeps the newest `keep` and reports what it removed
-    v3 = write_versioned(spark.range(3), path)
-    assert vacuum_versions(path, keep=2) == [1]
-    assert list_versions(path) == [2, 3]
-    assert read_versioned(spark, path, 2).count() == 10       # survivor intact
-    import pytest
-
-    with pytest.raises(ValueError, match="not published"):
-        read_versioned(spark, path, 1)
-
-
-def test_versioned_crash_leftover_not_published(spark, tmp_dir):
-    import os
-
-    import pytest
-
-    from gluestick_spark.operators.versioned import (
-        latest_version,
-        read_versioned,
-        vacuum_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl2")
-    write_versioned(spark.range(4), path)
-    # simulate a crash AFTER the data write but BEFORE the pointer flip:
-    # a v=2 directory exists, pointer still says 1
-    spark.range(99).write.parquet(os.path.join(path, "v=2"))
-    assert latest_version(path) == 1
-    assert read_versioned(spark, path).count() == 4           # old state visible
-    with pytest.raises(ValueError, match="not published"):
-        read_versioned(spark, path, 2)                        # typo can't read it
-    assert vacuum_versions(path, keep=1) == []                # never vacuumed
-    # the next write supersedes the leftover and publishes cleanly
-    v = write_versioned(spark.range(7), path)
-    assert v == 3 and read_versioned(spark, path).count() == 7
-
-
 def test_scale_features_robust_mode(spark):
     import math
 

@@ -1,87 +1,11 @@
-"""Round-8 fixes and additions: versioned-table publication tracking
-(ADVICE r7 medium + concurrency), exact-PSL registered domains, compat
-parametrized-dtype casting, heavy_hitters deterministic ordering."""
+"""Round-8 fixes and additions: exact-PSL registered domains, compat
+parametrized-dtype casting, heavy_hitters deterministic ordering. (The
+versioned-table tests live in tests/test_versioned.py.)"""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
-
-# ------------------------------------------- versioned publication log ----
-
-
-def test_versioned_buried_torn_version_stays_unreadable(spark, tmp_dir):
-    """ADVICE r7 (medium): a torn v=N (crash before commit) must stay
-    unreadable even AFTER a later write publishes v=N+1 and buries it
-    under the pointer."""
-    from gluestick_spark.operators.versioned import (
-        published_versions,
-        read_versioned,
-        vacuum_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(4), path)  # v=1 published
-    # crash between data write and commit-log append: a complete-LOOKING
-    # v=2 directory (parquet + _SUCCESS) that never reached _COMMITS
-    spark.range(99).write.parquet(os.path.join(path, "v=2"))
-    # later writer claims v=3 and publishes it — v=2 is now buried
-    v = write_versioned(spark.range(7), path)
-    assert v == 3
-    assert published_versions(path) == [1, 3]
-    assert read_versioned(spark, path).count() == 7
-    with pytest.raises(ValueError, match="not published"):
-        read_versioned(spark, path, 2)
-    # vacuum never touches a FRESH buried leftover (it may be a slow
-    # in-flight writer that merely lost the pointer race — ADVICE r8)...
-    assert 2 not in vacuum_versions(path, keep=2)
-    assert os.path.isdir(os.path.join(path, "v=2"))
-    # ...but removes it once it has aged past the grace period
-    deleted = vacuum_versions(path, keep=2, unpublished_grace_seconds=0.0)
-    assert 2 in deleted
-    assert not os.path.isdir(os.path.join(path, "v=2"))
-    assert read_versioned(spark, path, 1).count() == 4  # survivors intact
-    assert read_versioned(spark, path, 3).count() == 7
-
-
-def test_versioned_exclusive_claim_skips_taken_numbers(spark, tmp_dir):
-    """The version number is claimed with an exclusive mkdir: a directory
-    already on disk (a concurrent writer's claim) is never reused."""
-    from gluestick_spark.operators.versioned import (
-        published_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(2), path)             # v=1
-    os.mkdir(os.path.join(path, "v=2"))               # concurrent claim
-    v = write_versioned(spark.range(3), path)
-    assert v == 3                                     # claim not stolen
-    assert published_versions(path) == [1, 3]
-
-
-def test_versioned_legacy_table_without_log_still_reads(spark, tmp_dir):
-    """Pre-log tables (no _COMMITS): versions <= pointer with a _SUCCESS
-    marker count as published; a torn directory (no _SUCCESS) does not."""
-    from gluestick_spark.operators.versioned import (
-        published_versions,
-        read_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    spark.range(5).write.parquet(os.path.join(path, "v=1"))
-    spark.range(9).write.parquet(os.path.join(path, "v=2"))
-    os.remove(os.path.join(path, "v=2", "_SUCCESS"))  # torn
-    with open(os.path.join(path, "_LATEST"), "w") as f:
-        f.write("2")
-    assert published_versions(path) == [1]
-    assert read_versioned(spark, path, 1).count() == 5
-    with pytest.raises(ValueError, match="not published"):
-        read_versioned(spark, path, 2)
-
 
 # --------------------------------------------- exact-PSL domains ----------
 

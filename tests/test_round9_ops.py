@@ -1,7 +1,7 @@
-"""Round-9 fixes and additions: versioned-table per-version commit
-markers (ADVICE r8 medium x2), resample_to_ratio zero-class contract.
-(The band-index commit-marker tests live in tests/test_near_dups.py, the
-persisted IVF x SQ index tests in tests/test_sq_serving.py.)"""
+"""Round-9 fixes and additions: resample_to_ratio zero-class contract.
+(The versioned-table tests live in tests/test_versioned.py, the
+band-index commit-marker tests in tests/test_near_dups.py, the persisted
+IVF x SQ index tests in tests/test_sq_serving.py.)"""
 
 from __future__ import annotations
 
@@ -9,72 +9,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-# ----------------------------------- versioned per-version publication ----
-
-
-def test_versioned_commit_log_is_append_only(spark, tmp_dir):
-    """ADVICE r8 (medium): publication is recorded per-version, and the
-    shared _COMMITS log is append-only — a concurrent writer's line can
-    never be lost to a read-modify-rewrite, and a stale/foreign line is
-    inert (intersected with on-disk versions)."""
-    from gluestick_spark.operators.versioned import (
-        published_versions,
-        read_versioned,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(3), path)  # v=1
-    # a concurrent writer's append lands between this writer's commits
-    with open(os.path.join(path, "_COMMITS"), "a") as f:
-        f.write("999\n")
-    write_versioned(spark.range(5), path)  # v=2
-    log = open(os.path.join(path, "_COMMITS")).read()
-    assert "999" in log and "1" in log and "2" in log  # nothing rewritten
-    assert published_versions(path) == [1, 2]  # phantom 999 inert
-    assert read_versioned(spark, path).count() == 5
-
-
-def test_versioned_marker_is_authoritative_without_log(spark, tmp_dir):
-    """The per-version _COMMITTED marker alone proves publication: even
-    with the _COMMITS log gone (e.g. lost in a copy), every properly
-    committed version stays readable."""
-    from gluestick_spark.operators.versioned import (
-        published_versions,
-        read_versioned,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(3), path)
-    write_versioned(spark.range(7), path)
-    os.remove(os.path.join(path, "_COMMITS"))
-    assert published_versions(path) == [1, 2]
-    assert read_versioned(spark, path, 1).count() == 3
-    assert read_versioned(spark, path, 2).count() == 7
-
-
-def test_versioned_vacuum_spares_inflight_claim(spark, tmp_dir):
-    """ADVICE r8 (medium): a buried unpublished claim inside the grace
-    window is an in-flight writer, not garbage — vacuum must not rmtree
-    under it; after it ages out, it goes."""
-    from gluestick_spark.operators.versioned import (
-        vacuum_versions,
-        write_versioned,
-    )
-
-    path = os.path.join(tmp_dir, "tbl")
-    write_versioned(spark.range(2), path)  # v=1 published
-    os.mkdir(os.path.join(path, "v=2"))  # slow writer's claim, mid-write
-    write_versioned(spark.range(4), path)  # fast writer publishes v=3
-    assert vacuum_versions(path, keep=10) == []  # claim spared
-    assert os.path.isdir(os.path.join(path, "v=2"))
-    # age the claim past the grace window
-    old = 1.0
-    os.utime(os.path.join(path, "v=2"), (old, old))
-    assert vacuum_versions(path, keep=10) == [2]
-
 
 # ----------------------------------------- resample_to_ratio contract -----
 

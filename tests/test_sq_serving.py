@@ -374,7 +374,7 @@ def test_sq_ivf_torn_append_self_heals(spark, tmp_dir):
     # simulate: that append TORE — sidecar holds the pre-append manifest,
     # so every h2 cell file is unmanifested
     with open(os.path.join(path, SIDECAR), "w") as f:
-        json.dump({"files": pre_files}, f)
+        json.dump({"files": pre_files, "cells": "cells"}, f)
     with pytest.raises(ValueError, match="in-progress or torn"):
         sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=4)
 
