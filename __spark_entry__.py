@@ -7477,10 +7477,10 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = d.withColumn("text", mut)
     g = gopher_quality_flags(d, "text")
-    # stage boundary (r15): line_dedup references its input ~6 times
-    # (occurrence explode, election join-back, collision path, doc
-    # reattach) — unpinned, each reference re-plans AND re-runs the
-    # mutation + gopher battery (at 100 TB: six corpus passes for one)
+    # stage boundary (r15): line_dedup references its input three times
+    # (election, join-back, doc reattach) — unpinned, each reference
+    # re-plans AND re-runs the mutation + gopher battery (at 100 TB:
+    # three corpus passes for one)
     kept1 = pin(
         g.where(F.col("gopher_pass")).select("doc_id", "text", "source")
     )

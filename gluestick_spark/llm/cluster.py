@@ -108,6 +108,7 @@ from gluestick_spark.llm.ivf_cells import (
     decode_state,
     empty_topk,
     encode_state,
+    in_probes,
     load_router,
     read_probed,
     write_cells,
@@ -1103,10 +1104,11 @@ def ivf_topk_exact(
     k·(d+1)-int state. Row distances are exact int64 squared L2 between
     quantized vectors.
 
-    Plan: narrow assignment map (or broadcast join at large k·d) → a
-    ``cid IN probes`` filter — with a materialized index this is
-    partition pruning; inline it prunes at the scan filter — →
-    ``TakeOrderedAndProject``. No shuffle of the corpus.
+    Plan: narrow assignment map (or broadcast join at large k·d) → the
+    probed-cell filter (``ivf_cells.in_probes``: one array literal, so
+    a new probe set compiles nothing; a materialized index prunes
+    partitions instead) → ``TakeOrderedAndProject``. No shuffle of the
+    corpus.
     """
     check_topk(nprobe, k)
     assigned_src, state = kmeans(
@@ -1120,7 +1122,7 @@ def ivf_topk_exact(
     probes, qq, qxx = _select_probes(state, query, scale, nprobe)
 
     pts = _prepare(df, vec_col, id_col, scale)
-    pts = _assign_df(pts, state, assign).where(F.col("cid").isin(probes))
+    pts = _assign_df(pts, state, assign).where(in_probes("cid", probes))
     # the query literals stay inside the fold (see _dot_fold_sql)
     dist = F.expr(_dot_fold_sql("__q__", qq, f"{int(qxx)}L - 2L * acc + __xx__"))
     return (
@@ -1158,10 +1160,9 @@ def sq_ivf_topk(
     Plan shape: one narrow assignment map against the coarse-codebook
     LITERALS (the router k·d is small by design — this path deliberately
     uses the literal strategy so the original vector column rides along
-    without a join-back), a ``cid IN probes`` filter (partition pruning
-    against a :func:`~gluestick_spark.llm.similarity.materialize_ivf`
-    layout), SQ encoding of the survivors, TakeOrderedAndProject. No
-    corpus shuffle.
+    without a join-back), the probed-cell filter
+    (``ivf_cells.in_probes``), SQ encoding of the survivors,
+    TakeOrderedAndProject. No corpus shuffle.
     """
     check_topk(nprobe, k)
     from .similarity import _sq_score_topk, quantize_embeddings, quantize_query
@@ -1180,7 +1181,7 @@ def sq_ivf_topk(
         "__q__", quantize_vec_expr(F.col("__v__"), scale)
     ).withColumn("__xx__", int_dot_expr(F.col("__q__"), F.col("__q__")))
     pruned = pre.withColumn("cid", _assign_expr(state)).where(
-        F.col("cid").isin(probes)
+        in_probes("cid", probes)
     )
     enc = quantize_embeddings(
         pruned, "__v__", "__id__", out_col="__qv__", scale_col="__sc__"

@@ -810,9 +810,10 @@ def connected_components(
     star contraction halves tree heights every alternation: **O(log n)
     rounds regardless of diameter**, so a pathological edit-chain corpus
     can't blow the iteration budget. Convergence = the edge set reaching a
-    fixpoint (a star forest centered on component minima), checked with two
-    cheap count jobs per round over the (shrinking) edge set; each
-    round's ``pin`` truncates lineage so plans stay flat across rounds.
+    fixpoint (a star forest centered on component minima), checked once
+    per round: the symmetric difference of the old and new edge sets (one
+    keyed aggregate over their union) is empty; each round's ``pin``
+    truncates lineage so plans stay flat across rounds.
 
     Graphs at or under :data:`_CC_LOCAL_MAX_EDGES` distinct edges skip
     the loop entirely: the collected edge list (bounded, ~1 MB) goes
@@ -846,7 +847,6 @@ def connected_components(
         return spark.createDataFrame(
             sorted(labels.items()), schema
         )
-    n_edges = edges.count()
     # Nodes come from the PINNED edge set, not from `pairs`: the pairs
     # frame is typically an expensive un-cached plan (LSH + verify), and
     # reading it a second time would re-run that whole pipeline when the
@@ -858,14 +858,19 @@ def connected_components(
         .distinct()
     )
     for _ in range(max_iter):
-        # the convergence count right below materializes the pin
-        new_edges = pin(_small_star(_large_star(edges)))
-        n_new = new_edges.count()
-        # Sets are distinct-deduped: equal counts + empty (new − old) ⇒ equal.
-        if n_new == n_edges and new_edges.exceptAll(edges).isEmpty():
-            edges = new_edges
+        old, edges = edges, pin(_small_star(_large_star(edges)))
+        # Both edge sets are distinct, so they are equal iff no edge is in
+        # only one of them: one keyed aggregate over their union, one
+        # emptiness check (which also materializes the pin)
+        moved = (
+            old.withColumn("__s__", F.lit(-1))
+            .union(edges.withColumn("__s__", F.lit(1)))
+            .groupBy("u", "v")
+            .agg(F.sum("__s__").alias("__s__"))
+            .where(F.col("__s__") != 0)
+        )
+        if moved.isEmpty():
             break
-        edges, n_edges = new_edges, n_new
     else:
         # Fail loudly: returning an unconverged forest would silently split
         # real clusters (under-dedup). O(log n) rounds means hitting this

@@ -197,6 +197,15 @@ def check_topk(nprobe: int, k: int) -> None:
         raise ValueError("nprobe >= 1 and k >= 1 required")
 
 
+def in_probes(col: str, probes: list[int]) -> Column:
+    """``col`` is one of ``probes``: the in-query cell filter, with the
+    probes as one array literal, so a new probe set reuses the compiled
+    classes (``isin`` inlines its list into generated code, one class
+    per distinct set). A stored index prunes with ``isin`` instead
+    (:func:`read_probed`), where the list is a partition filter."""
+    return F.array_contains(F.lit(probes).cast("array<int>"), F.col(col))
+
+
 def read_cells(spark, cells: Cells, meta: dict | None) -> DataFrame:
     """Every cell row, typed by the cells schema recorded in ``meta``
     (inferred for a marker-less or pre-schema index)."""

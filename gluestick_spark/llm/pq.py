@@ -71,6 +71,7 @@ from gluestick_spark.llm.ivf_cells import (
     decode_state,
     empty_topk,
     encode_state,
+    in_probes,
     load_router,
     read_probed,
     write_cells,
@@ -420,8 +421,8 @@ def pq_ivf_topk(
     ranking end-to-end.
 
     Plan: one narrow projection (router assign + m argmin encodes — no
-    join, no shuffle), a ``cid IN probes`` scan filter, then
-    ``TakeOrderedAndProject``.
+    join, no shuffle), the probed-cell filter (``ivf_cells.in_probes``),
+    then ``TakeOrderedAndProject``.
 
     ``rerank=R`` (IVFADC+R, VERDICT r10 #6): the top-R ADC candidates
     are re-scored with the exact int64 L2 on the quantized full
@@ -440,7 +441,7 @@ def pq_ivf_topk(
     probes, qq, _ = _select_probes(router, query, scale, nprobe)
     enc = _encode_cells(
         df, vec_col, id_col, router, books, scale, keep_qvec=rerank is not None
-    ).where(F.col("cid").isin(probes))
+    ).where(in_probes("cid", probes))
     return _adc_topk(enc, id_col, adc_table(query, books, scale), k, rerank, qq)
 
 

@@ -33,6 +33,7 @@ from .ivf_cells import (
     append_cells,
     batch_topk,
     check_topk,
+    in_probes,
     plain_cells,
     read_probed,
     write_cells,
@@ -565,7 +566,7 @@ def ivf_topk(
     """
     probe = _probe_centroids(query, centroids, nprobe)
     assigned = ivf_assign(df, vec_col, centroids)
-    candidates = assigned.where(F.col("centroid_id").isin(probe)).drop("centroid_id")
+    candidates = assigned.where(in_probes("centroid_id", probe)).drop("centroid_id")
     return cosine_topk(candidates, vec_col, query, k, id_col)
 
 
@@ -851,7 +852,7 @@ def ann_recall_audit(
         if pre is not None:
             probes, _, _ = _select_probes(router, q, scale, nprobe)
             pruned = quantize_embeddings(
-                pre.where(F.col("cid").isin(probes)), vec_col, id_col,
+                pre.where(in_probes("cid", probes)), vec_col, id_col,
                 out_col="__qv__", scale_col="__sc__",
             )
             got_ivf = _ids(_sq_score_topk(pruned, id_col, qscale, qcodes, k))

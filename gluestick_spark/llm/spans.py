@@ -166,56 +166,43 @@ def line_dedup(
     "first blank line" would strip every other one. Documents with no
     text pass through with ``text_clean = ''``.
 
-    Plan (VERDICT r10 #3 — hashed shuffle keys): the r10 plan shipped
-    every occurrence's full line text through TWO keyed exchanges
-    (election groupBy(line), join-back on line) and then TWICE more
-    through the reassembly ((id,pos)-keyed merge + per-doc collect).
-    Now line text crosses an exchange exactly TWICE total, both at
-    bounded scale:
+    Lazy: the call runs no Spark job. The returned plan reads ``df``
+    three times (election, join-back, doc reattach), so pin an expensive
+    upstream chain before calling.
 
-    1. election ``groupBy(xxhash64(line), line)`` — exact per-line
-       first-occurrence + count; map-side combine collapses hot
-       boilerplate, so the exchange carries each distinct line once
-       per map task (never occurrence scale);
-    2. a hash-level rollup (no text) detects collisions
-       (``n_distinct > 1``) and serves the join-back, which ships only
-       ``(id, pos, hash)``;
+    Plan (VERDICT r10 #3 — hashed shuffle keys): text crosses an
+    exchange exactly twice, both at bounded scale — distinct lines in
+    the election, each document's text once in the reattach:
+
+    1. election ``groupBy(xxhash64(line), line)`` — each line's first
+       position ``min(struct(id, pos))`` and count; map-side combine
+       collapses hot boilerplate, so the exchange carries each distinct
+       line once per map task (never occurrence scale);
+    2. a hash-level rollup (no text) keeps the hashes whose most
+       frequent line repeats (``max(n_occ) > 1``) with the list of the
+       first positions of every line behind the hash, and serves the
+       join-back, which ships only ``(id, pos, hash)``;
     3. reassembly is DOC-level: the dropped positions collapse to one
        small ``collect_set(pos)`` array per affected document, joined
        back to ``df`` itself, and ``text_clean`` is rebuilt with a pure
        index-filtered split — the original text column crosses the one
        doc-keyed join exchange instead of two occurrence-keyed ones.
 
-    Hash-key exactness (the containment/fingerprint verify device): for
-    hashes with one distinct line every occurrence behind the hash IS
-    the same string, so hash-keyed decisions equal string-keyed ones;
-    the rare colliding hashes (two different lines, one xxh64) take the
-    broadcast-filtered exact path keyed by ``(hash, line)``. Same
-    result as the string-keyed plan, bit for bit, under any collision
-    (pytest-pinned with degenerate forced-collision hashes).
-
-    Election staging (VERDICT r15 #4): the per-hash election table —
-    distinct-line scale, NO text (hash, nd, first, n_occ) — is pinned
-    ONCE (``partitioning.pin``, the connected-components edge pattern)
-    and the collision branch is gated on a driver-side count over the
-    pinned frame (the union-find/dsir size-adaptive strategy switch):
-    with zero colliding hashes — every corpus until ~2^32 distinct
-    lines, and every oracle SF — the exact-path subtree is never even
-    planned, so the corpus is scanned exactly 3× (election, join-back,
-    reassembly) instead of ~7×. When collisions exist the exact path
-    runs broadcast-filtered as before (identical decisions).
-
-    Call-time jobs: NOT lazy. The collision gate is a ``count()`` over
-    the pinned election table (``n_coll``), run when this function is
-    called: it evaluates the whole upstream chain of ``df`` through the
-    election aggregate and materializes the pin, which the returned
-    plan then reads."""
+    Exact under any hash collision (the firsts rule): an occurrence at
+    ``(id, pos)`` survives iff it is the first occurrence of its own
+    line. One position holds one line, so it is among the first
+    positions of the lines behind its hash iff it is the first of its
+    own — the join-back drops an occurrence when its position is not in
+    the hash's list, which decides the same as a string-keyed plan with
+    or without colliding lines (pytest-pinned with degenerate hashes
+    against a pure-Python replay).
+    """
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
     occ = df.select(
         F.col(id_col), F.posexplode(lines).alias("pos", "line")
     ).select(id_col, F.col("pos").cast("long").alias("pos"), "line")
     # _hash_expr is test-only injection: forcing a degenerate hash (all
-    # lines collide) proves the collision path reproduces string-keyed
+    # lines collide) proves the firsts rule reproduces string-keyed
     # semantics exactly (xxh64 collisions can't be fabricated on demand)
     hash_of = (
         (lambda c: F.xxhash64(c)) if _hash_expr is None else _hash_expr
@@ -223,54 +210,25 @@ def line_dedup(
     judged = occ.where(F.trim(F.col("line")) != "").withColumn(
         "__lh__", hash_of(F.col("line"))
     )
-
-    def _per_line(j):
-        return j.groupBy("__lh__", "line").agg(
-            F.min(
-                F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-            ).alias("first"),
-            F.count(F.lit(1)).alias("n_occ"),
-        )
-
-    per_hash = pin(
-        _per_line(judged)
+    at = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
+    # only hashes with a repeated line can drop occurrences
+    firsts = (
+        judged.groupBy("__lh__", "line")
+        .agg(F.min(at).alias("first"), F.count(F.lit(1)).alias("n_occ"))
         .groupBy("__lh__")
         .agg(
-            F.count(F.lit(1)).alias("__nd__"),
-            F.min("first").alias("first"),
-            F.sum("n_occ").alias("n_occ"),
+            F.max("n_occ").alias("n_occ"),
+            F.collect_list("first").alias("firsts"),
         )
+        .where(F.col("n_occ") > 1)
+        .select("__lh__", "firsts")
     )
-    # one bounded driver action over the PINNED election table decides
-    # whether the exact collision branch exists at all (materializes the
-    # pin for the join-back below in the same pass)
-    n_coll = per_hash.where(F.col("__nd__") > 1).count()
-    first_match = (F.col(id_col) == F.col("first.d")) & (
-        F.col("pos") == F.col("first.p")
-    )
-    # only duplicated collision-free lines can drop occurrences: the
-    # join-back ships (id, pos, hash) against that filtered table
-    dec = per_hash.where(
-        (F.col("__nd__") == 1) & (F.col("n_occ") > 1)
-    ).select("__lh__", "first")
     dropped = (
         judged.select(id_col, "pos", "__lh__")
-        .join(dec, "__lh__")
-        .where(~first_match)
+        .join(firsts, "__lh__")
+        .where(~F.array_contains("firsts", at))
         .select(id_col, "pos")
     )
-    if n_coll:
-        # collision path: judge the collided hashes exactly by
-        # (hash, line) — tiny set, broadcast-filtered on both sides,
-        # per-line stats recomputed over the filtered occurrences only
-        collided = per_hash.where(F.col("__nd__") > 1).select("__lh__")
-        judged_c = judged.join(F.broadcast(collided), "__lh__")
-        dropped_c = (
-            judged_c.join(_per_line(judged_c), ["__lh__", "line"])
-            .where((F.col("n_occ") > 1) & ~first_match)
-            .select(id_col, "pos")
-        )
-        dropped = dropped.unionByName(dropped_c)
     # dropped positions collapse to ONE small array per affected doc —
     # blanks were never judged, so they are never in the array (kept)
     drops = dropped.groupBy(id_col).agg(F.collect_set("pos").alias("__dp__"))

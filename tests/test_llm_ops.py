@@ -323,14 +323,21 @@ def test_connected_components_deep_chain_and_nonconvergence(spark, monkeypatch):
     budget raises instead of silently returning split clusters, and a
     non-positive budget is rejected at entry. The distributed loop is
     FORCED here (threshold 0) — small graphs normally short-circuit to
-    driver-side union-find and never consult max_iter."""
+    driver-side union-find and never consult max_iter. Each round checks
+    convergence with one emptiness check: the whole call runs fewer jobs
+    than the 104 of the two-check rounds (count, then exceptAll)."""
+    from test_index_commit import _jobs
+
     from gluestick_spark.llm import dedup
     from gluestick_spark.llm.dedup import connected_components
 
     monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
     chain = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(99)])
-    comps = {r["id"]: r["component"] for r in connected_components(chain).collect()}
+    rows = []
+    jobs = _jobs(spark, lambda: rows.extend(connected_components(chain).collect()))
+    comps = {r["id"]: r["component"] for r in rows}
     assert set(comps.values()) == {0} and len(comps) == 100
+    assert jobs < 104
 
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=1)

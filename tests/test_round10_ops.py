@@ -444,74 +444,6 @@ def test_plan_lsh_geometry_s_curve():
         plan_lsh_geometry(64, 0.7, "yolo")
 
 
-# -------------------------------------- RefinedWeb exact line dedup (L116)
-
-
-def test_line_dedup_first_occurrence_and_blanks(spark):
-    """Duplicated lines survive only at their corpus-first (doc, line)
-    position; blank lines are structure — kept verbatim, never elected."""
-    from gluestick_spark.llm.spans import line_dedup
-
-    rows = [
-        (1, "alpha\nfooter text\n\nbody one"),
-        (2, "beta\nfooter text\n\nbody two"),
-        (3, "footer text"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in line_dedup(df).collect()}
-    assert out[1]["text_clean"] == "alpha\nfooter text\n\nbody one"
-    assert out[1]["n_removed"] == 0
-    # doc 2 loses the shared footer, keeps its blank separator
-    assert out[2]["text_clean"] == "beta\n\nbody two"
-    assert out[2]["n_removed"] == 1
-    assert out[3]["text_clean"] == "" and out[3]["n_removed"] == 1
-    # empty doc: its single empty line is blank -> unjudged, kept
-    assert out[4]["text_clean"] == "" and out[4]["n_removed"] == 0
-    assert out[4]["n_lines"] == 1
-
-
-def test_line_dedup_hash_collision_path_exact(spark):
-    """VERDICT r10 #3: election + join-back run on xxh64(line); the
-    collision branch must reproduce string-keyed semantics EXACTLY.
-    Forced with a degenerate hash (every line collides) — the worst
-    case — and with a parity hash (pairwise collisions)."""
-    from gluestick_spark.llm.spans import line_dedup
-
-    rows = [
-        (1, "alpha\nfooter text\n\nbody one"),
-        (2, "beta\nfooter text\n\nbody two"),
-        (3, "footer text\nalpha\nbeta"),
-        (4, ""),
-        (5, "body two\nbody two\nsolo line"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = sorted(line_dedup(df).collect())
-    for degenerate in (
-        lambda c: F.lit(0).cast("long"),             # ALL lines collide
-        lambda c: F.length(c).cast("long") % 2,      # parity buckets
-    ):
-        got = sorted(line_dedup(df, _hash_expr=degenerate).collect())
-        assert got == want
-
-
-def test_line_dedup_plan_joins_on_hash_not_text(spark):
-    """The join-back exchange carries (id, pos, hash) — never the line
-    string (the shuffle-bytes contract). Election is the only place
-    line text crosses an exchange (exact-verify distinct)."""
-    from gluestick_spark.llm.spans import line_dedup
-
-    df = spark.createDataFrame(
-        [(1, "a\nb"), (2, "b\nc")], "doc_id long, text string"
-    )
-    plan = line_dedup(df)._jdf.queryExecution().executedPlan().toString()
-    assert "xxhash64" in plan
-    # no exchange may partition by the raw line string
-    for ln in plan.splitlines():
-        if "hashpartitioning" in ln:
-            assert "hashpartitioning(line#" not in ln, ln
-
-
 # ------------------------------------------ Gopher rule battery (L115) ----
 
 

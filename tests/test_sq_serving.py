@@ -5,9 +5,11 @@ and the one scoring fold they share.
 
 Every single-query path scores with ``similarity._sq_score_expr``: one
 higher-order fold holding the query literals, so a new query compiles no
-class and no generated method outgrows the JIT limit. The codegen tests
-read Spark's own code-generator metrics; the formula test pins the
-scores to the unrolled form the fold replaced.
+class and no generated method outgrows the JIT limit. The in-query IVF
+paths' probed-cell filter (``ivf_cells.in_probes``) compiles nothing per
+probe set either. The codegen tests read Spark's own code-generator
+metrics; the formula test pins the scores to the unrolled form the fold
+replaced.
 """
 
 from __future__ import annotations
@@ -605,6 +607,35 @@ def test_sq_distinct_queries_compile_nothing(spark, tmp_dir):
     for q in qs[1:]:
         assert len(sq_ivf_topk_indexed(spark, path, q, k=5, nprobe=2).collect()) == 5
         assert len(sq_topk(emb, "embedding", "vec_id", q, k=5).collect()) == 5
+    assert _compiles(spark) == before
+
+
+@pytest.mark.parametrize("op", ["ivf_topk_exact", "sq_ivf_topk"])
+def test_in_query_ivf_new_probe_sets_compile_nothing(spark, op):
+    """The in-query IVF paths filter the probed cells with one array
+    literal, so queries that probe new cell sets compile no class (an
+    ``isin`` filter inlined each probe set into generated code)."""
+    from gluestick_spark.llm import cluster
+
+    emb = _gauss_emb(spark, 300, 16, seed=6)
+    _, state = cluster.kmeans(
+        emb, "embedding", "vec_id", k=8, iters=1, scale=1000,
+        return_state=True,
+    )
+    rng = random.Random(7)
+    sets, qs = set(), []
+    while len(qs) < 4:
+        q = [rng.gauss(0.0, 1.0) for _ in range(16)]
+        probes = tuple(sorted(cluster._select_probes(state, q, 1000, 2)[0]))
+        if probes not in sets:
+            sets.add(probes)
+            qs.append(q)
+    topk = getattr(cluster, op)
+    run = lambda q: topk(emb, "embedding", "vec_id", q, k=5, n_clusters=8).collect()
+    run(qs[0])
+    before = _compiles(spark)
+    for q in qs[1:]:
+        assert len(run(q)) == 5
     assert _compiles(spark) == before
 
 
