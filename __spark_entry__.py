@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from gluestick_spark import (  # noqa: E402
     compress_rows_to_col,
     custom_fields_expr,
+    drop_redundant,
     explode_json_to_cols,
     explode_json_to_rows,
     json_tuple_to_cols,
@@ -34,7 +35,7 @@ from gluestick_spark import (  # noqa: E402
     union_relaxed,
     upsert,
 )
-from gluestick_spark.functions.hashing import row_hash_expr, with_row_hash  # noqa: E402
+from gluestick_spark.functions.hashing import with_row_hash  # noqa: E402
 from gluestick_spark.llm.dedup import (  # noqa: E402
     exact_dedup,
     minhash_dedup,
@@ -416,16 +417,18 @@ FROM customer
 
 
 def q_drop_redundant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateless CDC core: rows whose (pk, hash) was seen before are dropped
-    (here: the even-custkey half simulates the prior run's hash snapshot)."""
+    """Hash CDC through the library's diff: the even-custkey half is the
+    prior run, whose ``drop_redundant`` call seeds the hash state; the
+    second call, over every row, drops the rows whose (pk, hash) that
+    state holds. Runs its jobs at call time; the result reads only the
+    second call's pin, so the state directory goes with the call."""
+    import tempfile
+
     c = _t(spark, sf_dir, "customer").select(*_HASH_COLS)
-    hashed = c.withColumn("hash", row_hash_expr(_HASH_COLS))
-    prior = (
-        c.where(F.col("c_custkey") % 2 == 0)
-        .withColumn("hash", row_hash_expr(_HASH_COLS))
-        .select("c_custkey", "hash")
-    )
-    return hashed.join(F.broadcast(prior), ["c_custkey", "hash"], "left_anti").drop("hash")
+    with tempfile.TemporaryDirectory(prefix="gs_cdc_state_") as state:
+        prior = c.where(F.col("c_custkey") % 2 == 0)
+        drop_redundant(spark, prior, "customer", state, pk="c_custkey")
+        return drop_redundant(spark, c, "customer", state, pk="c_custkey")
 
 
 _Q_DROP_REDUNDANT_SQL = """

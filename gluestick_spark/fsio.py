@@ -385,11 +385,12 @@ def swap_dir(
     new: str, dst: str, old: str | None = None, fs: StateFS = LOCAL_FS
 ) -> None:
     """Publish the directory tree at ``new`` as ``dst`` and delete the
-    tree it replaces; ``new`` is gone afterwards. On the local default
-    this is one ``RENAME_EXCHANGE`` (``dst`` is never absent). Otherwise
-    — no kernel support, or a non-local backend — it is three renames
-    (``dst`` → ``old``, ``new`` → ``dst``, ``old`` → ``new``) whose
-    crash window :func:`heal_swap` closes; it runs on entry here too.
+    tree (or single file) it replaces; ``new`` is gone afterwards. On the
+    local default this is one ``RENAME_EXCHANGE`` (``dst`` is never
+    absent). Otherwise — no kernel support, or a non-local backend — it
+    is three renames (``dst`` → ``old``, ``new`` → ``dst``, ``old`` →
+    ``new``) whose crash window :func:`heal_swap` closes; it runs on
+    entry here too.
     ``old`` defaults to ``dst + ".__old__"``; pass a hidden name when
     ``dst`` sits where a reader lists siblings (partition discovery)."""
     old = _parking(dst, old)
@@ -398,4 +399,7 @@ def swap_dir(
         fs.rename(dst, old)
         fs.rename(new, dst)
         fs.rename(old, new)
-    fs.rmtree(new, ignore_errors=True)
+    if fs.isfile(new):  # dst was one file (a reference-style snapshot)
+        fs.remove(new)
+    else:
+        fs.rmtree(new, ignore_errors=True)

@@ -33,6 +33,13 @@ stable on-disk contracts):
 - versioned table version (``operators/versioned.py:write_versioned``,
   ``delete_where``): ``v=N/_COMMITTED``, one per version; a delta's
   marker also names its ``base`` version and ``keys``
+- parquet snapshot (``operators/snapshot.py:_write_snapshot``, under every
+  ``snapshot_records`` / ``drop_redundant`` state and the snapshot-swap
+  stream handlers): ``_SNAPSHOT.json``, published into the new snapshot
+  directory before ``fsio.swap_dir`` publishes data and marker together.
+  It records only the schema; a marker-less snapshot (written before
+  markers, the reference's single-file ``.snapshot.parquet``, or a
+  ``prepare_snapshot_write`` caller's write) is read by inference
 
 Band and substring indexes written before this layout also carry a
 ``_META.json`` copy of the same JSON; it is ignored.
@@ -40,7 +47,8 @@ Band and substring indexes written before this layout also carry a
 The marker also records, under ``schemas``, the schema of each part
 directory the build wrote (``cells``, ``bands``, ``shingles``,
 ``windows``, ``docs``, ``ref_grams``, ``bloom_words.parquet``,
-``sketch.parquet``, a version's ``data`` or ``deletes.parquet``), as an
+``sketch.parquet``, a version's or a snapshot's ``data``, a version's
+``deletes.parquet``), as an
 inferring read of that directory returns it (:func:`schema_entry`). The
 entry is part of the marker's on-disk contract: :func:`read_store` is
 the one read of a committed store and types the scan from it, so a read
@@ -122,6 +130,7 @@ CORPUS_SKETCH = Store(
     "reference sketch", "_SKETCH_META.json", "materialize_corpus_sketch"
 )
 TABLE_VERSION = Store("versioned table version", "_COMMITTED", "write_versioned")
+SNAPSHOT = Store("snapshot", "_SNAPSHOT.json", "snapshot_records")
 
 
 def load_meta(

@@ -20,7 +20,15 @@ Keep-last ordering contract (SURVEY §4.2.1): snapshot rows get source
 priority 0, incoming rows 1; within the incoming batch, later rows win via
 ``monotonically_increasing_id`` (positional within the batch read order).
 
-Scale notes: the union+window plan shuffles once on PK. Snapshots are stored
+A parquet snapshot is a committed store (``index_commit.SNAPSHOT``): its
+``_SNAPSHOT.json`` marker records the schema, so
+:func:`~gluestick_spark.sources.reader.read_snapshots` reads it with no
+job. ``drop_redundant`` diffs the batch against its hash state in one
+join, which also yields the ``_updated`` flag and the next hash state.
+
+Scale notes: the union+window plan shuffles once on PK. The diff join
+scans and shuffles the whole hash state once per increment, and its pin
+holds every stored (key, hash) pair plus the batch. Snapshots are stored
 partitioned parquet; at cluster scale the swap directory lives on an object
 store and the same rename protocol applies (directory-level atomic commit).
 The id-lookup join broadcasts the deduped snapshot side (naturally small).
@@ -31,13 +39,14 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..fsio import LOCAL_FS, StateFS, heal_swap, swap_dir
 from ..functions.hashing import row_hash_expr
+from ..llm.index_commit import SCHEMAS, SNAPSHOT, publish, schema_entry
 from ..partitioning import pin
 from ..sources.reader import read_snapshots
 from .union import union_relaxed
@@ -53,6 +62,8 @@ __all__ = [
 
 _SRC = "__src_priority__"
 _ORD = "__ord__"
+_KEY = "__key__"  # the PK as one struct column in drop_redundant
+_STATE = "__state__"  # prefix of the hash state's columns in its diff join
 
 
 def _snapshot_path(snapshot_dir: str, stream: str, use_csv: bool = False) -> str:
@@ -70,6 +81,14 @@ def _write_snapshot(
     """Materialize to a temp dir, then publish it with
     :func:`~gluestick_spark.fsio.swap_dir` (a plain rename for the first
     snapshot).
+
+    A parquet snapshot is a committed store: after the data, the temp dir
+    gets its ``_SNAPSHOT.json`` marker (``index_commit.SNAPSHOT``, meta
+    ``{"schemas": {"data": schema_entry(df)}}``), and the swap publishes
+    data and marker together, so :func:`read_snapshots` types its read
+    from the marker and runs no job. A temp dir holding data but no
+    marker is never read: readers only see the swapped-in directory. CSV
+    snapshots carry no marker.
 
     Mirrors the crash-safety intent of the reference's lock-file rename
     protocol (snapshot_lock.py:13-47): a killed job leaves either the old
@@ -89,6 +108,7 @@ def _write_snapshot(
         writer.option("header", "true").option("escape", '"').csv(tmp)
     else:
         writer.option("compression", "zstd").parquet(tmp)
+        publish(SNAPSHOT, tmp, {SCHEMAS: {"data": schema_entry(df)}}, fs)
     heal_swap(final, fs=fs)
     if fs.exists(final):
         swap_dir(tmp, final, fs=fs)
@@ -204,54 +224,115 @@ def drop_redundant(
     """Drop rows whose content hash was seen in a previous run
     (etl_utils.py:299-367).
 
-    Plan shape: hash projection → left-anti join vs hash snapshot on
-    pk+hash (or hash alone) → optional ``_updated`` flag via a left join on
-    the snapshot PKs → hash snapshot upsert.
+    Plan shape: keep-first dedup of the batch on ``pk`` → row hash → one
+    full outer join with the hash state (``dropDuplicates`` on the key) on
+    the key — ``pk``, or ``hash`` when there is no PK — pinned eagerly,
+    because the new state replaces the files it reads. From the pinned
+    join:
+
+    - kept rows: the incoming rows with no stored hash or a different one;
+    - ``_updated`` (``updated_flag`` with a PK): a stored row matched;
+    - the new hash state: the incoming hash where there is one, else the
+      stored hash (distinct on ``hash`` without a PK), written as one
+      narrow job.
+
+    NULL keys: the join is NULL-safe, so the state keeps one row per NULL
+    key group, the incoming hash winning; but a row with a NULL key part
+    is always kept and never ``_updated`` (a NULL key never equals a
+    stored one). A key column the state holds at another type (a CSV
+    state is read by inference) is compared at the two types' common
+    type, as an equi-join compares it.
+
+    The pin holds the state's (key, hash) pairs plus the batch; the state
+    is scanned and shuffled once per increment. The first run (no state)
+    pins the hashed batch and writes it as the state.
     """
     pk_list = [pk] if isinstance(pk, str) else list(pk or [])
-    if pk_list:
-        # PK must be unique: keep first occurrence (reference drop_duplicates)
-        w = Window.partitionBy(*pk_list).orderBy(F.monotonically_increasing_id())
-        df = df.withColumn("__rn__", F.row_number().over(w)).where(F.col("__rn__") == 1).drop("__rn__")
+    data_cols = list(df.columns)
+    key = _KEY if pk_list else "hash"
+    state_name = f"{name}.hash"
+    hash_snap = read_snapshots(spark, state_name, output_dir)
 
-    data_cols = [c for c in df.columns]
+    def col(c: str) -> Column:
+        return F.col(f"`{c}`")
+
+    def key_type(types: dict) -> T.StructType:
+        # every field nullable, so both sides of the join share one type
+        return T.StructType([T.StructField(c, types[c]) for c in pk_list])
+
+    batch_types = {c: df.schema[c].dataType for c in pk_list}
+    if pk_list:
+        # PK must be unique: keep first occurrence (reference drop_duplicates).
+        # The PK travels as one struct column: grouping and equality on a
+        # struct are NULL-safe, and the dedup, the state's dropDuplicates and
+        # the diff join below all hash-partition on it, so the join adds no
+        # exchange.
+        w = Window.partitionBy(_KEY).orderBy(F.monotonically_increasing_id())
+        df = (
+            df.withColumn(_KEY, F.struct(*map(col, pk_list)).cast(key_type(batch_types)))
+            .withColumn("__rn__", F.row_number().over(w))
+            .where(F.col("__rn__") == 1)
+            .drop("__rn__")
+        )
     hashed = df.withColumn("hash", row_hash_expr(data_cols))
 
-    hash_snap = read_snapshots(spark, f"{name}.hash", output_dir)
-    result = hashed
-    if hash_snap is not None:
-        if pk_list:
-            hash_snap = hash_snap.dropDuplicates(pk_list)
-        # No broadcast hint: the hash snapshot has one row per row EVER seen —
-        # at scale it is the same order as the incoming batch, so forcing a
-        # broadcast is an executor OOM. AQE broadcasts it when it measures
-        # genuinely small and shuffle-joins otherwise.
-        join_keys = pk_list + ["hash"] if pk_list else ["hash"]
-        result = hashed.join(hash_snap.select(*join_keys), on=join_keys, how="left_anti")
-        if updated_flag and pk_list:
-            seen = hash_snap.select(*pk_list).dropDuplicates(pk_list).withColumn(
-                "_updated", F.lit(True)
-            )
-            result = result.join(seen, on=pk_list, how="left").withColumn(
-                "_updated", F.coalesce(F.col("_updated"), F.lit(False))
-            )
+    if hash_snap is None:
+        result = pin(hashed.drop(_KEY), eager=True)
+        _write_snapshot(result.select(*pk_list, "hash"), state_name, output_dir, use_csv)
+        return result.drop("hash")
 
-    # Pin eagerly before the hash-snapshot swap: the result plan references
-    # the OLD snapshot files, which the upsert below replaces. Without the
-    # pin, collecting the returned DataFrame later would hit
-    # FAILED_READ_FILE on the swapped-out files.
-    result = pin(result, eager=True)
+    # A key column the state holds at another type (a CSV state is read by
+    # inference, so "007" comes back as 7) is compared at the common type,
+    # as an equi-join of the two columns compares it.
+    cmp_types = {
+        c: _common_type(spark, t, hash_snap.schema[c].dataType) for c, t in batch_types.items()
+    }
+    batch_key = col(_KEY) if cmp_types == batch_types else col(_KEY).cast(key_type(cmp_types))
+    # No broadcast hint: the hash snapshot has one row per row EVER seen —
+    # at scale it is the same order as the incoming batch, so forcing a
+    # broadcast is an executor OOM.
+    stored_key = F.struct(*map(col, pk_list)).cast(key_type(cmp_types))
+    stored = hash_snap.select(
+        *([stored_key.alias(_STATE + _KEY)] if pk_list else []),
+        col("hash").alias(_STATE + "hash"),
+    ).dropDuplicates([_STATE + key])
+    # Pin eagerly before the hash-snapshot swap: the join reads the OLD
+    # snapshot files, which the write below replaces.
+    on = batch_key == col(_STATE + _KEY) if pk_list else col("hash") == col(_STATE + "hash")
+    joined = pin(hashed.join(stored, on, "full_outer"), eager=True)
 
-    snap_cols = pk_list + ["hash"] if pk_list else ["hash"]
-    snapshot_records(
-        spark,
-        result.select(*snap_cols),
-        f"{name}.hash",
-        output_dir,
-        pk=snap_cols if not pk_list else pk_list,
-        use_csv=use_csv,
+    seen = col(_STATE + "hash").isNotNull()
+    null_key = F.lit(False)
+    for c in pk_list:
+        null_key = null_key | col(c).isNull()
+    # the incoming hash is never NULL (md5), so it marks the batch's rows
+    fresh = joined.where(
+        col("hash").isNotNull()
+        & (~seen | (col("hash") != col(_STATE + "hash")) | null_key)
     )
-    return result.drop("hash")
+    # key columns lead, the column order this operator has always returned
+    out = [col(c) for c in pk_list + [c for c in data_cols if c not in pk_list]]
+    if updated_flag and pk_list:
+        out.append((seen & ~null_key).alias("_updated"))
+
+    state = joined.select(
+        *[
+            F.coalesce(col(c), col(_STATE + _KEY).getField(c).cast(t)).alias(c)
+            for c, t in batch_types.items()
+        ],
+        F.coalesce(col("hash"), col(_STATE + "hash")).alias("hash"),
+    )
+    _write_snapshot(state if pk_list else state.distinct(), state_name, output_dir, use_csv)
+    return fresh.select(*out)
+
+
+def _common_type(spark: SparkSession, a: T.DataType, b: T.DataType) -> T.DataType:
+    """The type Spark brings an ``a`` and a ``b`` value to before it
+    compares them (no job: the schema of an empty projection)."""
+    if a == b:
+        return a
+    probe = spark.range(0).select(F.coalesce(F.lit(None).cast(a), F.lit(None).cast(b)))
+    return probe.schema[0].dataType
 
 
 def merge_id_df(df: DataFrame, ids: DataFrame, pk: str) -> DataFrame:

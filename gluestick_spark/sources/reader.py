@@ -359,13 +359,23 @@ def read_snapshots(
 ) -> DataFrame | None:
     """Read `{dir}/{stream}.snapshot.parquet` (preferred) else `.csv`
     (etl_utils.py:152-178). A snapshot left parked by a crashed swap
-    (``snapshot._write_snapshot``) is moved back first."""
+    (``snapshot._write_snapshot``) is moved back first.
+
+    A parquet snapshot is a committed store (``index_commit.SNAPSHOT``):
+    its marker records the schema, so the read runs no job. One without a
+    marker — written before markers, the reference's single-file
+    snapshot, or a ``prepare_snapshot_write`` caller's write — is read by
+    inference (one job). CSV snapshots are always read by inference."""
+    from ..llm.index_commit import SNAPSHOT, load_meta, read_store, recorded_schema
+
     pq_path = os.path.join(snapshot_dir, f"{stream}.snapshot.parquet")
     csv_path = os.path.join(snapshot_dir, f"{stream}.snapshot.csv")
     heal_swap(pq_path)
     heal_swap(csv_path)
     if os.path.exists(pq_path):
-        return spark.read.parquet(pq_path)
+        committed = os.path.isfile(os.path.join(pq_path, SNAPSHOT.marker))
+        meta = load_meta(SNAPSHOT, pq_path) if committed else None
+        return read_store(spark, pq_path, recorded_schema(meta, "data"))
     if os.path.exists(csv_path):
         return (
             spark.read.option("header", "true")

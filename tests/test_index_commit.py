@@ -575,16 +575,14 @@ def test_tombstoned_topk_anti_joins_ids_without_distinct(spark, stores, tmp_dir)
 
 
 # The reads of library stores that keep inference, by (module, function):
-# user input and its catalog coercion, snapshots (their format is to
-# change), the marker-less plain-IVF and materialize_sq families, the
-# public audit of a caller-named cells directory, and the public readers
-# of stream output and sketch logs.
+# user input and its catalog coercion, the marker-less plain-IVF and
+# materialize_sq families, the public audit of a caller-named cells
+# directory, and the public readers of stream output and sketch logs.
 _INFERRING_READS = {
     ("llm/index_commit.py", "read_store"),
     ("sources/reader.py", "get_parquet"),
     ("sources/reader.py", "get"),
     ("sources/reader.py", "read_parquet_folder"),
-    ("sources/reader.py", "read_snapshots"),
     ("llm/similarity.py", "sq_topk_indexed"),
     ("llm/rebalance.py", "ivf_rebalance"),
     ("llm/rebalance.py", "cell_sizes"),

@@ -89,6 +89,55 @@ def timed(fn, warm: int = 1) -> tuple[float, int]:
     return round(time.time() - t0, 3), int(rows)
 
 
+def cdc_state_growth(spark) -> dict:
+    """A warm 200-row increment (``drop_redundant`` + ``snapshot_records``,
+    100 changed rows and 100 new ones) against a hash state of 10k and of
+    1M rows, the state built by a full sync of ``spark.range`` rows. The
+    diff scans and shuffles the whole state, and its pin holds every state
+    (pk, hash) pair, so the step grows with the state until the state is
+    partitioned by key. Prints and returns the JSON record."""
+    import shutil
+    import tempfile
+
+    from gluestick_spark.operators.snapshot import drop_redundant, snapshot_records
+
+    def rows(lo, hi, tag):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("pk"),
+            F.concat(F.lit(tag), (F.col("id") % 97).cast("string")).alias("v"),
+        )
+
+    def sync(df, state):
+        kept = drop_redundant(spark, df, "s", state, pk="pk")
+        snapshot_records(spark, kept, "s", state, pk="pk")
+        return 200
+
+    times = {}
+    for label, n in (("10k", 10_000), ("1M", 1_000_000)):
+        state = tempfile.mkdtemp(prefix="gs_probe_cdc_state_")
+        try:
+            sync(rows(0, n, "a"), state)
+            step = iter(range(2))
+
+            def _incr():
+                i = next(step)
+                lo = n - 100 + 100 * i  # 100 rows the state holds, 100 new ones
+                return sync(rows(lo, lo + 200, f"b{i}"), state)
+
+            times[label], _ = timed(_incr)
+        finally:
+            shutil.rmtree(state, ignore_errors=True)
+    rec = {
+        "op": "cdc_state_growth",
+        "t_state_10k": times["10k"], "t_state_1M": times["1M"],
+        "state_ratio": 100.0,
+        "time_ratio": round(times["1M"] / max(times["10k"], 1e-3), 2),
+        "note": "warm 200-row increment: drop_redundant (one pinned full outer join with the hash state) + snapshot_records; both scan the whole state",
+    }
+    print(json.dumps(rec), flush=True)
+    return rec
+
+
 def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     from gluestick_spark import get_spark
@@ -876,6 +925,9 @@ def main() -> None:
         "time_ratio": round(times["10S"] / max(times["S"], 1e-3), 2),
         "note": "per-batch state read (batch partitions below the batch id, explicit schema) + anti-join; no partition is pruned, so the scan and shuffle grow with the state",
     }), flush=True)
+
+    # (b2) hash-CDC state growth (ROADMAP item 1)
+    cdc_state_growth(spark)
 
     # (c) triangle hub-degree cap (VERDICT r9 #4): banded constant-degree
     # graph (N=30k, deg 8) + an embedded dense community (clique of size
