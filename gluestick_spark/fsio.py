@@ -366,6 +366,15 @@ def _parking(dst: str, old: str | None) -> str:
     return old or dst.rstrip("/") + ".__old__"
 
 
+def _drop(path: str, fs: StateFS) -> None:
+    """Delete the tree or single file (a reference-style snapshot) at
+    ``path``; absent is fine."""
+    if fs.isfile(path):
+        fs.remove(path)
+    else:
+        fs.rmtree(path, ignore_errors=True)
+
+
 def heal_swap(dst: str, old: str | None = None, fs: StateFS = LOCAL_FS) -> None:
     """Undo a :func:`swap_dir` fallback that crashed between its renames.
     ``dst`` absent with the parking dir present means the live tree was
@@ -376,7 +385,7 @@ def heal_swap(dst: str, old: str | None = None, fs: StateFS = LOCAL_FS) -> None:
     if not fs.exists(old):
         return
     if fs.exists(dst):
-        fs.rmtree(old, ignore_errors=True)
+        _drop(old, fs)
     else:
         fs.rename(old, dst)
 
@@ -399,7 +408,4 @@ def swap_dir(
         fs.rename(dst, old)
         fs.rename(new, dst)
         fs.rename(old, new)
-    if fs.isfile(new):  # dst was one file (a reference-style snapshot)
-        fs.remove(new)
-    else:
-        fs.rmtree(new, ignore_errors=True)
+    _drop(new, fs)

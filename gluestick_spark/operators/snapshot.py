@@ -28,7 +28,9 @@ join, which also yields the ``_updated`` flag and the next hash state.
 
 Scale notes: the union+window plan shuffles once on PK. The diff join
 scans and shuffles the whole hash state once per increment, and its pin
-holds every stored (key, hash) pair plus the batch. Snapshots are stored
+holds every stored (key, hash) pair plus the batch (about 164 MB at 1M
+state rows, SCALEPROBE.md ``cdc_state_growth``) for as long as the
+caller holds the kept rows. Snapshots are stored
 partitioned parquet; at cluster scale the swap directory lives on an object
 store and the same rename protocol applies (directory-level atomic commit).
 The id-lookup join broadcasts the deduped snapshot side (naturally small).
@@ -49,7 +51,7 @@ from ..functions.hashing import row_hash_expr
 from ..llm.index_commit import SCHEMAS, SNAPSHOT, publish, schema_entry
 from ..partitioning import pin
 from ..sources.reader import read_snapshots
-from .union import union_relaxed
+from .union import union_relaxed, widest_common_type
 
 __all__ = [
     "snapshot_records",
@@ -241,11 +243,15 @@ def drop_redundant(
     is always kept and never ``_updated`` (a NULL key never equals a
     stored one). A key column the state holds at another type (a CSV
     state is read by inference) is compared at the two types' common
-    type, as an equi-join compares it.
+    type, as an equi-join compares it, and written back at their widest
+    type, as an upsert's union writes it.
 
-    The pin holds the state's (key, hash) pairs plus the batch; the state
-    is scanned and shuffled once per increment. The first run (no state)
-    pins the hashed batch and writes it as the state.
+    The pin holds the state's (key, hash) pairs plus the batch, and the
+    returned frame reads from it, so those blocks stay on the executors
+    while the caller holds the frame (and are lost with an executor, as
+    any ``localCheckpoint``). The state is scanned and shuffled once per
+    increment. The first run (no state) pins the hashed batch and writes
+    it as the state.
     """
     pk_list = [pk] if isinstance(pk, str) else list(pk or [])
     data_cols = list(df.columns)
@@ -283,22 +289,28 @@ def drop_redundant(
 
     # A key column the state holds at another type (a CSV state is read by
     # inference, so "007" comes back as 7) is compared at the common type,
-    # as an equi-join of the two columns compares it.
-    cmp_types = {
-        c: _common_type(spark, t, hash_snap.schema[c].dataType) for c, t in batch_types.items()
-    }
-    batch_key = col(_KEY) if cmp_types == batch_types else col(_KEY).cast(key_type(cmp_types))
+    # as an equi-join of the two columns compares it. The analyzer does
+    # this for plain columns but refuses a struct<k: string> = struct<k:
+    # int> comparison, so the struct sides are cast here.
+    stored_types = {c: hash_snap.schema[c].dataType for c in pk_list}
+    cmp_types = {c: _common_type(spark, t, stored_types[c]) for c, t in batch_types.items()}
+
+    def cmp_key(c: str, types: dict) -> Column:
+        return col(c) if types == cmp_types else col(c).cast(key_type(cmp_types))
+
     # No broadcast hint: the hash snapshot has one row per row EVER seen —
     # at scale it is the same order as the incoming batch, so forcing a
     # broadcast is an executor OOM.
-    stored_key = F.struct(*map(col, pk_list)).cast(key_type(cmp_types))
     stored = hash_snap.select(
-        *([stored_key.alias(_STATE + _KEY)] if pk_list else []),
+        *([F.struct(*map(col, pk_list)).alias(_STATE + _KEY)] if pk_list else []),
         col("hash").alias(_STATE + "hash"),
     ).dropDuplicates([_STATE + key])
     # Pin eagerly before the hash-snapshot swap: the join reads the OLD
     # snapshot files, which the write below replaces.
-    on = batch_key == col(_STATE + _KEY) if pk_list else col("hash") == col(_STATE + "hash")
+    if pk_list:
+        on = cmp_key(_KEY, batch_types) == cmp_key(_STATE + _KEY, stored_types)
+    else:
+        on = col("hash") == col(_STATE + "hash")
     joined = pin(hashed.join(stored, on, "full_outer"), eager=True)
 
     seen = col(_STATE + "hash").isNotNull()
@@ -315,10 +327,13 @@ def drop_redundant(
     if updated_flag and pk_list:
         out.append((seen & ~null_key).alias("_updated"))
 
+    # a key column is written at the widest type of its batch and stored
+    # types, as a union of the two would write it
+    wide = {c: widest_common_type(t, stored_types[c]) for c, t in batch_types.items()}
     state = joined.select(
         *[
-            F.coalesce(col(c), col(_STATE + _KEY).getField(c).cast(t)).alias(c)
-            for c, t in batch_types.items()
+            F.coalesce(col(c).cast(t), col(_STATE + _KEY).getField(c).cast(t)).alias(c)
+            for c, t in wide.items()
         ],
         F.coalesce(col("hash"), col(_STATE + "hash")).alias("hash"),
     )

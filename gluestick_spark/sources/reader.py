@@ -373,8 +373,10 @@ def read_snapshots(
     heal_swap(pq_path)
     heal_swap(csv_path)
     if os.path.exists(pq_path):
-        committed = os.path.isfile(os.path.join(pq_path, SNAPSHOT.marker))
-        meta = load_meta(SNAPSHOT, pq_path) if committed else None
+        try:
+            meta = load_meta(SNAPSHOT, pq_path)
+        except ValueError:  # no marker: read by inference
+            meta = None
         return read_store(spark, pq_path, recorded_schema(meta, "data"))
     if os.path.exists(csv_path):
         return (

@@ -155,6 +155,19 @@ def test_crash_between_swap_renames_keeps_history(spark, tmp_dir):
     assert not any(f.endswith(".__old__") for f in os.listdir(tmp_dir))
 
 
+
+def test_heal_swap_drops_parked_single_file(tmp_dir):
+    """A swap fallback that crashed after its last rename can leave the
+    replaced single-file snapshot parked; healing deletes the file."""
+    from gluestick_spark.fsio import heal_swap
+
+    dst = os.path.join(tmp_dir, "f.snapshot.parquet")
+    os.makedirs(dst)
+    with open(dst + ".__old__", "wb") as f:
+        f.write(b"PAR1")
+    heal_swap(dst)
+    assert os.listdir(tmp_dir) == ["f.snapshot.parquet"]
+
 # ---------------------------------------------------------------------------
 # drop_redundant against a pure-Python replay of its rule
 # ---------------------------------------------------------------------------
@@ -292,6 +305,24 @@ def test_drop_redundant_csv_state_matches_zero_padded_string_pk(spark, tmp_dir):
         pk="k", updated_flag=True, use_csv=True,
     )
     assert [tuple(r) for r in out.collect()] == [("011", "c", False)]
+
+
+def test_drop_redundant_writes_stored_key_at_widest_type(spark, tmp_dir):
+    """A state key stored at a wider type than the batch's PK column (a
+    bigint above 2**31 against an int batch, as CSV-inferred input
+    gives) is written back at the widest type, as an upsert's union
+    writes it: the increment does not overflow, and the state keeps the
+    key."""
+    big = 2**40
+    drop_redundant(spark, spark.createDataFrame([(big, "a"), (1, "b")], "k long, v string"), "wk", tmp_dir, pk="k")
+    out = drop_redundant(
+        spark, spark.createDataFrame([(1, "b"), (2, "c")], "k int, v string"), "wk", tmp_dir,
+        pk="k", updated_flag=True,
+    )
+    assert [tuple(r) for r in out.collect()] == [(2, "c", False)]
+    state = read_snapshots(spark, "wk.hash", tmp_dir)
+    assert state.schema["k"].dataType.typeName() == "long"
+    assert sorted(r["k"] for r in state.collect()) == [1, 2, big]
 
 
 # ---------------------------------------------------------------------------

@@ -95,7 +95,9 @@ def cdc_state_growth(spark) -> dict:
     1M rows, the state built by a full sync of ``spark.range`` rows. The
     diff scans and shuffles the whole state, and its pin holds every state
     (pk, hash) pair, so the step grows with the state until the state is
-    partitioned by key. Prints and returns the JSON record."""
+    partitioned by key. Also records the bytes the increment leaves pinned
+    (``localCheckpoint`` blocks, memory plus disk) while its kept rows are
+    still referenced. Prints and returns the JSON record."""
     import shutil
     import tempfile
 
@@ -107,12 +109,20 @@ def cdc_state_growth(spark) -> dict:
             F.concat(F.lit(tag), (F.col("id") % 97).cast("string")).alias("v"),
         )
 
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored() -> dict:
+        return {i.id(): i.memSize() + i.diskSize() for i in jsc.getRDDStorageInfo()}
+
     def sync(df, state):
+        before = stored()
         kept = drop_redundant(spark, df, "s", state, pk="pk")
         snapshot_records(spark, kept, "s", state, pk="pk")
+        # blocks pinned by this increment, held while `kept` is referenced
+        sync.pinned = sum(b for i, b in stored().items() if i not in before)
         return 200
 
-    times = {}
+    times, pinned = {}, {}
     for label, n in (("10k", 10_000), ("1M", 1_000_000)):
         state = tempfile.mkdtemp(prefix="gs_probe_cdc_state_")
         try:
@@ -125,6 +135,7 @@ def cdc_state_growth(spark) -> dict:
                 return sync(rows(lo, lo + 200, f"b{i}"), state)
 
             times[label], _ = timed(_incr)
+            pinned[label] = sync.pinned
         finally:
             shutil.rmtree(state, ignore_errors=True)
     rec = {
@@ -132,7 +143,8 @@ def cdc_state_growth(spark) -> dict:
         "t_state_10k": times["10k"], "t_state_1M": times["1M"],
         "state_ratio": 100.0,
         "time_ratio": round(times["1M"] / max(times["10k"], 1e-3), 2),
-        "note": "warm 200-row increment: drop_redundant (one pinned full outer join with the hash state) + snapshot_records; both scan the whole state",
+        "pinned_bytes_state_10k": pinned["10k"], "pinned_bytes_state_1M": pinned["1M"],
+        "note": "warm 200-row increment: drop_redundant (one pinned full outer join with the hash state) + snapshot_records; both scan the whole state; pinned_bytes = localCheckpoint blocks the increment holds while its kept rows are referenced",
     }
     print(json.dumps(rec), flush=True)
     return rec
